@@ -3,6 +3,7 @@ package graft.vector
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.Shingling
 import graft.text.TextFunctions
 
 /** Document deduplication operators — the north-star training-data
@@ -36,29 +37,16 @@ object Dedup {
     FROM documents
     GROUP BY 1 HAVING COUNT(*) > 1 ORDER BY fp"""
 
-  /** Word 3-gram shingles of a token array. */
-  def shingles(toks: Column, n: Int = 3): Column =
-    when(size(toks) < n, array(concat_ws(" ", toks)))
-      .otherwise(transform(
-        sequence(lit(1), size(toks) - (n - 1)),
-        i => concat_ws(" ", slice(toks, i, lit(n)))))
-
-  /** MinHash signatures from ONE md5 per shingle: the 32-hex digest is
-    * sliced into `numHashes` disjoint 4-hex sub-hashes (md5's bits are
-    * pairwise independent enough for min-wise hashing), and signature i
-    * is the lexicographic minimum of slice i over all shingles. One
-    * hash invocation per shingle instead of `numHashes` — the md5 stage
-    * dominated the profile 8:1 before this. Portable to the oracle as
-    * MIN(substr(md5(s), 4i+1, 4)). */
-  def minhashSig(md5Col: Column, slot: Int): Column =
-    array_min(transform(md5Col, h => substring(h, slot * 4 + 1, 4)))
+  /** Word n-gram shingles of a token array (native kernel, see
+    * [[graft.functions.Shingling]]). */
+  def shingles(toks: Column, n: Int = 3): Column = Shingling.shingles(toks, n)
 
   /** MinHash + LSH banding: `numHashes` signatures in bands of
     * `bandSize`; docs sharing any band key are near-dup candidates.
     * Emits candidate pairs (id_a < id_b, band).
     *
     * Single-pass plan: signatures are computed ONCE per document
-    * (one projection), bands come from one posexplode (not N union
+    * (one projection), bands come from one explode (not N union
     * branches), and pairs are generated inside each band bucket via
     * groupBy + collect_list instead of a self-join — so the expensive
     * md5 stage is never re-evaluated. One shuffle on the band key.
@@ -82,33 +70,43 @@ object Dedup {
       .distinct()
       .orderBy(col("id_a"), col("id_b"), col("band"))
 
-  /** (doc_id, band, band_key) rows: one md5 per shingle, signatures
-    * from digest slices, bands via one explode. */
   private def bandedDocs(spark: SparkSession, dir: String,
       numHashes: Int, bandSize: Int): DataFrame =
     bandedOf(graft.Tables.documents(spark, dir)
       .transform(graft.Parallelism.ensure(spark)), numHashes, bandSize)
 
-  /** [[bandedDocs]] over an arbitrary (doc_id, text) frame — the form
-    * an INCREMENTAL batch uses (band a day's crawl without touching
-    * the corpus table). */
+  /** (doc_id, band, band_key) rows of any (doc_id, text) frame, also an
+    * INCREMENTAL batch. ONE md5 digest per word 3-gram shingle
+    * ([[graft.functions.MinhashSignatures]]): signature i is the minimum of
+    * digest bytes 2i, 2i+1 as an unsigned 16-bit value, ordered exactly as
+    * the oracle's 4-hex `substr(md5(s), 4i+1, 4)` (fixed-width lowercase
+    * hex sorts in numeric order). md5 stays: it is the only shingle hash
+    * both engines compute identically. 16 digest bytes hold 8 slots, so
+    * numHashes ≤ 8, and bandSize must divide numHashes. */
   private[graft] def bandedOf(docs: DataFrame,
       numHashes: Int = 8, bandSize: Int = 2): DataFrame = {
-    val numBands = numHashes / bandSize
-    val sigs = (0 until numHashes).map(i => minhashSig(col("hs"), i).as(s"h$i"))
-    val withSigs = docs
-      .select(col("doc_id"),
-        shingles(TextFunctions.tokens(lower(col("text")))).as("sh"))
-      .select(col("doc_id"), transform(col("sh"), s => md5(s)).as("hs"))
-      .select(col("doc_id") +: sigs: _*)
-    val bandStructs = (0 until numBands).map { b =>
+    checkBanding(numHashes, bandSize)
+    val bandStructs = (0 until numHashes / bandSize).map { b =>
       val parts = (0 until bandSize).map(j => col(s"h${b * bandSize + j}"))
       struct(lit(b.toLong).as("band"), concat_ws("|", parts: _*).as("band_key"))
     }
-    withSigs
+    // one column per signature: the cost model sizes the banded rows (and
+    // so the verify joins' broadcast side) from this projection's width
+    val sigs = (0 until numHashes).map(i => col("sig").getItem(i).as(s"h$i"))
+    docs
+      .select(col("doc_id"), Shingling.minhashSignatures(
+        TextFunctions.tokens(lower(col("text"))), numHashes).as("sig"))
+      .select(col("doc_id") +: sigs: _*)
       .select(col("doc_id"), explode(array(bandStructs: _*)).as("bk"))
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.band_key").as("band_key"))
   }
+
+  // slot ≥ 8 would read "" for every doc (one giant band the cap drops
+  // silently); an indivisible bandSize would drop trailing signatures
+  private def checkBanding(numHashes: Int, bandSize: Int): Unit =
+    require(numHashes >= 1 && numHashes <= Shingling.MaxHashes &&
+      bandSize >= 1 && numHashes % bandSize == 0,
+      s"need numHashes in 1..${Shingling.MaxHashes} divisible by bandSize, got $numHashes/$bandSize")
 
   /** Monitoring companion to the bucket cap: (band, band_key, n_docs)
     * of every bucket the cap dropped — run it when a dedup pass reports
@@ -133,6 +131,7 @@ object Dedup {
     * definition so the tokenization/signature-slicing rules cannot
     * drift between the batch and incremental gates' oracles. */
   private def bandingCtes(numHashes: Int, bandSize: Int): String = {
+    checkBanding(numHashes, bandSize)
     val numBands = numHashes / bandSize
     val sigExprs = (0 until numHashes).map(i =>
       s"list_min(list_transform(hs, h -> substr(h, ${i * 4 + 1}, 4))) AS h$i").mkString(", ")

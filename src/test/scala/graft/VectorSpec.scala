@@ -56,15 +56,12 @@ class VectorSpec extends SparkSpec {
       (2L, "the quick brown fox jumps over the lazy dog again and again"),
       (3L, "completely different words entirely unrelated content here now"),
     ).toDF("doc_id", "text")
-    docs.createOrReplaceTempView("x")
-    val sigs = (0 until 8).map(i => Dedup.minhashSig(col("hs"), i).as(s"h$i"))
-    val s = docs.select(col("doc_id"),
-      Dedup.shingles(graft.text.TextFunctions.tokens(lower(col("text")))).as("sh"))
-      .select(col("doc_id"), transform(col("sh"), x => md5(x)).as("hs"))
-      .select(col("doc_id") +: sigs: _*)
-      .collect().map(r => r.getLong(0) -> (1 to 8).map(r.getString)).toMap
-    assert(s(1L) == s(2L))
-    assert(s(1L) != s(3L))
+    val bands = Dedup.bandedOf(docs).collect()
+      .groupBy(_.getLong(0))
+      .map { case (id, rs) => id -> rs.map(r => (r.getLong(1), r.getString(2))).toSet }
+    assert(bands(1L).size == 4)
+    assert(bands(1L) == bands(2L))
+    assert((bands(1L) & bands(3L)).isEmpty)
   }
 
   test("bm25: term in fewer docs scores higher (idf ordering)") {
