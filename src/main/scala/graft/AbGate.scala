@@ -1,10 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only INTERLEAVED A/B of one gate's narrow-probe session vs a
   * wide one (`-Dgraft.wideProbe` hook in SparkEntry.narrowProbe).
   * Box throughput swings ±20–50% across minutes on identical plans,
@@ -25,33 +20,18 @@ object AbGate {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val fn = SparkEntry.queries.getOrElse(gate,
       sys.error(s"unknown gate $gate"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val jobs = new AtomicInteger(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    })
-    def flush(): Unit =
-      org.apache.spark.sql.graftbridge.Bridge.flushListenerBus(spark)
+    val spark = DevHarness.session(cpus)
+    val jobs = new JobCounter(spark)
     val scope = new CacheScope
     val (narrow, wide) = CacheScope.withScope(scope) { Scratch.scopedCleanup {
       def once(wideArm: Boolean): (Double, Int) = {
         System.setProperty("graft.wideProbe", wideArm.toString)
         try {
-          flush(); jobs.set(0)
+          jobs.reset()
           val t0 = System.nanoTime()
           fn(spark, sfDir).count()
           val dt = (System.nanoTime() - t0) / 1e9
-          flush()
-          (dt, jobs.get())
+          (dt, jobs.count())
         } finally {
           System.clearProperty("graft.wideProbe")
           scope.drain(); Scratch.drainCleanup(); ()

@@ -1,10 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
-
 /** Census of the ACTION COUNT behind each gate — the round's perf
   * artifact of record since r18. PLANS.md's action-floor analysis says
   * every Spark action on this box pays ~0.1 s of dispatch floor
@@ -39,29 +34,15 @@ object ActionCount {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val only: Option[Set[String]] =
       args.headOption.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same deployment recipe as Bench/Verify so the census measures
-      // the surfaces the driver actually runs
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val jobs = new AtomicInteger(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        // dev flag: name each dispatched job's stages so a gate's
-        // census is attributable line-by-line
-        if (sys.env.contains("SPARK_GRAFT_JOB_TRACE"))
-          Console.err.println(s"[job] ${js.jobId} " + js.stageInfos
-            .map(si => s"${si.name}:${si.numTasks}t").mkString(" | "))
-      }
-    })
-    def flush(): Unit =
-      org.apache.spark.sql.graftbridge.Bridge.flushListenerBus(spark)
+    // same deployment recipe as Bench/Verify, so the census measures
+    // the surfaces they run
+    val spark = DevHarness.session(cpus)
+    val jobs = new JobCounter(spark, js =>
+      // dev flag: name each dispatched job's stages so a gate's
+      // census is attributable line-by-line
+      if (sys.env.contains("SPARK_GRAFT_JOB_TRACE"))
+        Console.err.println(s"[job] ${js.jobId} " + js.stageInfos
+          .map(si => s"${si.name}:${si.numTasks}t").mkString(" | ")))
     val scope = new CacheScope
     val rows = CacheScope.withScope(scope) { Scratch.scopedCleanup {
       SparkEntry.queries.toSeq
@@ -77,15 +58,14 @@ object ActionCount {
           // JobStart events deliver asynchronously — drain the bus on
           // both sides of the counted window or the warm-up's stragglers
           // inflate it (and the run's tail jobs go missing)
-          flush(); jobs.set(0)
+          jobs.reset()
           val t0 = System.nanoTime()
           val (n, sec) =
             try {
               fn(spark, sfDir).count()
               // timing excludes the drains below, like Bench's runs
               val dt = (System.nanoTime() - t0) / 1e9
-              flush()
-              (jobs.get(), dt)
+              (jobs.count(), dt)
             }
             catch { case scala.util.control.NonFatal(e) =>
               Console.err.println(s"[actioncount] $name failed: $e")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic main: time + formatted plan for selected queries.
   * Usage: runMain graft.Explain <sfDir> [queryName ...]
   * With no names, times every query (no plans). */
@@ -10,13 +8,7 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevHarness.session(cpus)
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       if (args.length > 1) df.explain("formatted")

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** Registry of one-time fixture builds that gates amortize across
@@ -19,7 +16,7 @@ import org.apache.spark.sql.SparkSession
   * steady-state jobs — a cached gate's one-time cost stays visible in
   * `ACTIONS_rN.json` instead of silently vanishing from the board.
   *
-  * [[counted]] measures the build with a context-wide job listener;
+  * [[counted]] measures the build with a context-wide [[JobCounter]];
   * gates run sequentially under Bench/Verify/ActionCount, so the
   * window is attributable (the same assumption every per-gate census
   * number already rests on). */
@@ -31,20 +28,13 @@ object FixtureCensus {
   /** Run `build` with the session's job starts counted, and record the
     * count + wall seconds against `gate`. Returns `build`'s result. */
   def counted[A](spark: SparkSession, gate: String)(build: => A): A = {
-    val jobs = new AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
+    val jobs = new JobCounter(spark)
     val t0 = System.nanoTime()
     try build
     finally {
-      // job-start events deliver asynchronously — drain before reading
-      org.apache.spark.sql.graftbridge.Bridge.flushListenerBus(spark)
-      spark.sparkContext.removeSparkListener(l)
-      builds.put(gate, (jobs.get(), (System.nanoTime() - t0) / 1e9))
+      val n = jobs.count()
+      jobs.close()
+      builds.put(gate, (n, (System.nanoTime() - t0) / 1e9))
       ()
     }
   }

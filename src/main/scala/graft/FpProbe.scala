@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic main for the two-dump fingerprint protocol: print ONE
   * query's canonicalized plan text (the exact text [[Bench.planCanon]]
   * hashes) and exit. Run it across many fresh JVMs to catch per-JVM
@@ -16,13 +14,7 @@ object FpProbe {
     val name = args.headOption.getOrElse("q19_disc_revenue")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevHarness.session(cpus)
     val df = SparkEntry.queries(name)(spark, sfDir)
     println("===CANON_BEGIN===")
     println(Bench.planCanon(df))

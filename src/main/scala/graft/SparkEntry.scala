@@ -2171,13 +2171,6 @@ object SparkEntry {
     incrViewFixtureMemo.clear()
 
   private def snapshotIncrViewCycle(s: SparkSession, d: String): DataFrame = {
-    var t0 = System.nanoTime()
-    def lap(tag: String): Unit = {
-      val t1 = System.nanoTime()
-      if (sys.env.contains("SPARK_GRAFT_GATE_TIMING"))
-        Console.err.println(f"[ivtime] $tag%-12s ${(t1 - t0) / 1e9}%.3f s")
-      t0 = t1
-    }
     // lifecycle shuffles here move |groups|-sized frames (~100 rows)
     // and this gate is ~10 ops deep — the wiring passes a narrowProbe
     // session (width 4, AQE off; wide-replayable via -Dgraft.wideProbe)
@@ -2217,12 +2210,9 @@ object SparkEntry {
           base.filter(col("o_orderkey") % 4 =!= 0)
             .repartitionByRange(2, col("o_orderkey")),
           statsKey = Some("o_orderkey"))
-        lap("create")
         graft.meta.IncrementalView.create(s, s"$m/tbl", s"$m/view", "grp", "cents")
-        lap("viewcreate")
         graft.sources.SnapshotTable.append(s, s"$m/tbl",               // v2
           base.filter(col("o_orderkey") % 4 === 0).coalesce(1))
-        lap("append")
         // the merge is RANGE-BOUNDED (a fixed key prefix): the
         // update's whereabouts prune to the files that hold it, so the
         // rewrite and its CDC diff measure the delta machinery, not a
@@ -2232,7 +2222,6 @@ object SparkEntry {
             .withColumn("cents", col("cents") + 777L)
             .coalesce(1),
           key = "o_orderkey")
-        lap("merge")
         m
       }
     })
@@ -2240,12 +2229,10 @@ object SparkEntry {
     copyTree(master, tmp)
     val tbl = s"$tmp/tbl"
     val vw = s"$tmp/view"
-    lap("copy")
     // refresh 1's window mixes file-level inserts (the append) with a
     // content diff (the merge); refresh 2's window is PURE dv deletes —
     // the position-delta fast path in readChanges
     val c1 = graft.meta.IncrementalView.refresh(s, tbl, vw) // (1, 3]
-    lap("refresh1")
     // the delete is a GROUP DROP — inherently table-wide dv, the
     // hardest delete shape (the bounded-predicate shape lives in
     // IncrementalViewSpec / SnapshotDvSpec); deleteWhere returns None
@@ -2255,9 +2242,7 @@ object SparkEntry {
       .deleteWhere(s, tbl, col("grp") === 42L).nonEmpty,              // v4
       "incr-view fixture: grp 42 empty at this SF (needs an o_orderkey " +
         "≡ 1242 mod 2300 in the corpus — dense testdata keys have 1242)")
-    lap("delete")
     val c2 = graft.meta.IncrementalView.refresh(s, tbl, vw) // (3, 4]: dv fast path
-    lap("refresh2")
     val c3 = graft.meta.IncrementalView.refresh(s, tbl, vw) // replay: no-op
     // invariant check as two bounded collects + a driver-side set
     // compare (the view is |groups| rows by construction) — the
@@ -2276,7 +2261,6 @@ object SparkEntry {
     val (_, recomputeRows) = graft.Concurrency.overlap(
       graft.meta.IncrementalView.purgeTombstones(s, vw),
       rows3(recompute))
-    lap("purge")
     val consumedOk = c1 == 2 && c2 == 1 && c3 == 0
     val cursorOk =
       graft.sources.SnapshotTable.lastTxnBatchId(s, vw).contains(4L)
@@ -2288,7 +2272,6 @@ object SparkEntry {
     val viewRows = rawView.filter(_._2 > 0L)
     val ivmOk = viewRows.toSet == recomputeRows.toSet
     val purgedOk = !rawView.exists(_._1 == 42L)
-    lap("ivmOk")
     // the result is the collected view (≤ |groups| rows) + the pinned
     // booleans — a driver-local frame, so the scratch dir needs no
     // localize pass, just deferred cleanup like every sibling gate
@@ -3039,13 +3022,6 @@ object SparkEntry {
     // the cycle's frames are ≤430 rows — the wiring passes a
     // narrowProbe session (width 4, AQE off; wide-replayable via
     // -Dgraft.wideProbe like every narrowed gate)
-    var tLap = System.nanoTime()
-    def lap(tag: String): Unit = {
-      val t1 = System.nanoTime()
-      if (sys.env.contains("SPARK_GRAFT_GATE_TIMING"))
-        Console.err.println(f"[rstime] $tag%-12s ${(t1 - tLap) / 1e9}%.3f s")
-      tLap = t1
-    }
     val snap = graft.sources.SnapshotTable
     val (master, expectedCorrupt) = restoreFixtureMemo.computeIfAbsent(d, { _ =>
       graft.FixtureCensus.counted(s, "meta_snapshot_restore") {
@@ -3056,28 +3032,22 @@ object SparkEntry {
         snap.create(s, m,                                              // v1
           docs.filter(col("doc_id") < 400L).repartitionByRange(4, col("doc_id")),
           statsKey = Some("doc_id"))
-        lap("create")
         snap.append(s, m,                                              // v2: good head
           docs.filter(col("doc_id") >= 400L && col("doc_id") < 430L).coalesce(1))
-        lap("append")
         snap.merge(s, m,                                               // v3: corruption
           docs.filter(col("doc_id") % 61 === 0 && col("doc_id") < 430L)
             .withColumn("n_chars", lit(-999L)), key = "doc_id")
-        lap("merge")
         snap.deleteWhere(s, m, col("doc_id") % 113 === 0)              // v4: bad delete
-        lap("delete")
         // corrupt rows still visible at v4 = merged keys minus the bad
         // delete's hits (exact count from the RAW table: robust to
         // corpora where the modulus hits nothing, e.g. the edge corpus)
         val ec = docs.filter(col("doc_id") % 61 === 0 &&
           col("doc_id") < 430L && col("doc_id") % 113 =!= 0).count()
-        lap("expected")
         (m, ec)
       }
     })
     val root = java.nio.file.Files.createTempDirectory("graft-snaprestore").toString
     copyTree(master, root)
-    lap("copy")
     def dataFiles(): Set[String] = {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(java.nio.file.Paths.get(root, "data"))
@@ -3086,7 +3056,6 @@ object SparkEntry {
     }
     val before = dataFiles()
     snap.restore(s, root, 2)                                           // v5: rollback
-    lap("restore")
     val zeroCopy = dataFiles() == before
     // multiset identity as bounded collects + a driver-side sorted
     // compare (the table is ≤430 rows by construction) — the
@@ -3103,7 +3072,6 @@ object SparkEntry {
     val historyKept = snap.versions(s, root) == Seq(1, 2, 3, 4, 5) &&
       snap.history(s, root).last.op == "restore" &&
       corruptAtV4 == expectedCorrupt
-    lap("history")
     val csRows = snap.readChanges(s, root, 4, Some(5))
       .select(col("_change_type"), col("doc_id"), col("n_chars"))
       .collect().toSeq
@@ -3116,7 +3084,6 @@ object SparkEntry {
       snap.read(s, root).select(col("doc_id"), col("n_chars")), Seq.empty)
     val nowRows = rows2(now)
     val cdcRollback = replayed.sorted == nowRows.sorted
-    lap("cdc")
     graft.Scratch.registerForCleanup(root)
     pinInvariants("meta_snapshot_restore",
       ("zero_copy", zeroCopy, () => s"gained=${dataFiles().diff(before).take(3)} " +
@@ -4041,35 +4008,6 @@ object SparkEntry {
     val s = probeSession(s0,
       "spark.sql.shuffle.partitions" -> "4",
       "spark.sql.adaptive.enabled" -> "false")
-    // dev-only per-statement census (jobs + sec), same env gate as the
-    // rstime/ivtime laps — the r18 cut of this gate targets dispatch
-    // counts, so the evidence prints per step, not per gate
-    var lapT0 = System.nanoTime()
-    val lapJobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val lapOn = sys.env.contains("SPARK_GRAFT_GATE_TIMING")
-    val lapListener: Option[org.apache.spark.scheduler.SparkListener] =
-      if (!lapOn) None
-      else Some(new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          lapJobs.incrementAndGet()
-          if (sys.env.get("SPARK_GRAFT_GATE_TIMING").contains("2"))
-            Console.err.println(s"[sqljob] ${js.jobId} " +
-              js.stageInfos.map(si => s"${si.name}:${si.numTasks}t")
-                .mkString(" | "))
-        }
-      })
-    lapListener.foreach(s.sparkContext.addSparkListener)
-    // the dev listener is context-wide — remove it in a finally or a
-    // multi-run bench with the env set accumulates one per invocation
-    // every time any statement below throws
-    def lap(tag: String): Unit = if (lapOn) {
-      org.apache.spark.sql.graftbridge.Bridge.flushListenerBus(s)
-      Console.err.println(f"[sqltime] $tag%-14s jobs=${lapJobs.get}%3d " +
-        f"${(System.nanoTime() - lapT0) / 1e9}%.3f s")
-      lapJobs.set(0); lapT0 = System.nanoTime()
-    }
-    try {
     val wh = SqlCat.ensure(s)
     val base = uniqName("docs_sql") // two-runner collision guard
     val t = s"${SqlCat.name}.g.$base"
@@ -4077,7 +4015,6 @@ object SparkEntry {
     val root = s"$wh/g/$base"
     s.sql(s"CREATE TABLE $t (doc_id BIGINT, n_chars BIGINT) " +
       "TBLPROPERTIES ('statsKey'='doc_id')")                          // v1
-    lap("create")
     val docs = Tables.documents(s, d).select(col("doc_id"), col("n_chars"))
     docs.filter(col("doc_id") < 400L).repartitionByRange(4, col("doc_id"))
       .createOrReplaceTempView("graft_sql_src")
@@ -4087,10 +4024,8 @@ object SparkEntry {
     docs.filter(col("doc_id") < 400L)
       .createOrReplaceTempView("graft_sql_src_flat")
     s.sql(s"INSERT INTO $t SELECT doc_id, n_chars FROM graft_sql_src") // v2
-    lap("insert")
     val vInsert = snap.versions(s, root).last
     val cInsert = s.sql(s"SELECT count(*) FROM $t").head().getLong(0)
-    lap("count_insert")
     def dataFiles(): Set[String] = {
       import scala.jdk.CollectionConverters._
       val p = java.nio.file.Paths.get(root, "data")
@@ -4103,11 +4038,9 @@ object SparkEntry {
     // commit; no data file may move
     val beforeDelete = dataFiles()
     s.sql(s"DELETE FROM $t WHERE doc_id >= 100 AND doc_id < 150")      // v3 (if any row)
-    lap("delete")
     val dvZeroCopy = dataFiles() == beforeDelete
     val vDelete = snap.versions(s, root).last
     val cDelete = s.sql(s"SELECT count(*) FROM $t").head().getLong(0)
-    lap("count_delete")
     // MERGE INTO: updates touch existing keys, inserts extend the table
     s.sql(
       s"""MERGE INTO $t tgt
@@ -4117,12 +4050,10 @@ object SparkEntry {
          |ON tgt.doc_id = src.doc_id
          |WHEN MATCHED THEN UPDATE SET *
          |WHEN NOT MATCHED THEN INSERT *""".stripMargin)               // v4
-    lap("merge")
     // zero-copy DDL through SQL
     val beforeRename = dataFiles()
     s.sql(s"ALTER TABLE $t RENAME COLUMN doc_id TO document_id")       // v5
     val ddlZeroCopy = dataFiles() == beforeRename
-    lap("rename")
     // time travel reads each version's own state (and, pre-rename, its
     // own column names). The three version reads union into ONE
     // collected plan (the delta-log gate's dispatch trick — three
@@ -4140,7 +4071,6 @@ object SparkEntry {
     val ttOk = tt("vi").getLong(1) == cInsert &&
       tt("vd").getLong(1) == cDelete &&
       tt("vw").getLong(1) == cInsert - cDelete
-    lap("time_travel")
     // executed-plan pruning proof on the RENAMED key through the DSv2
     // scan; degenerate layouts (≤1 file, empty slice) pass trivially
     val minRow = tt("vi")
@@ -4154,7 +4084,6 @@ object SparkEntry {
           .collect { case g: graft.catalog.GraftScan => g }
         gs.nonEmpty && gs.map(_.keptFileCount).max == 1
       }
-    lap("pruned_probe")
     graft.Scratch.registerForCleanup(root)
     pinInvariants("meta_snapshot_sql",
       ("dv_zero_copy", dvZeroCopy, () => "SQL DELETE moved data files"),
@@ -4168,7 +4097,6 @@ object SparkEntry {
       .withColumn("time_travel", lit(ttOk))
       .withColumn("pruned", lit(pruned))
       .orderBy(col("document_id"))
-    } finally lapListener.foreach(s.sparkContext.removeSparkListener)
   }
 
   private def snapshotSqlCycleSql: String = """

@@ -39,13 +39,16 @@ import org.apache.spark.sql.functions.col
   * rewrite. The whole operation is invisible until the single manifest
   * create lands.
   *
-  * All file skipping — [[readRange]], [[readKeys]], [[readIndexed]]'s
-  * planning-time pruning, and merge's touched-file partition — goes
-  * through ONE module, [[ManifestPruning]]: a single implementation of
-  * the range/point-set overlap checks, so the read path, the write
-  * path, and the Catalyst integration can never drift apart.
+  * All file skipping — [[readRange]], [[readKeys]], [[readIndexed]]
+  * and [[deleteWhere]]'s planning-time pruning, the DSv2 scan's
+  * [[SqlSnapshot.keptFiles]], and the touched-file split of [[merge]]
+  * and [[mergeOnRead]] — calls ONE function,
+  * [[ManifestPruning.partition]]: bounds, blooms, buckets and
+  * partition values are judged in one place, so the read path, the
+  * write path, and the Catalyst integration can never drift apart.
   */
 object SnapshotTable {
+  import ManifestFileIndex.KeyBounds
 
   private val SnapshotDir = "_snapshots"
   private val MaxRetries = 20
@@ -167,8 +170,7 @@ object SnapshotTable {
     * format 5; the reference's chunk identity `(filename, chunk_idx)`
     * has the string FIRST, but the flipped layout `(chunk_idx,
     * filename)` is just as legal and must 2D-prune too). The pruning
-    * predicates live in [[ManifestPruning]]; the methods here
-    * delegate. */
+    * decision over these fields lives in [[ManifestPruning]]. */
   private[sources] final case class FileEntry(path: String, minKey: Option[Long],
       maxKey: Option[Long], rows: Option[Long] = None, bytes: Option[Long] = None,
       minStr: Option[Array[Byte]] = None, maxStr: Option[Array[Byte]] = None,
@@ -198,18 +200,6 @@ object SnapshotTable {
       else if (bytes.isEmpty) s"$path\t${s(minKey)}\t${s(maxKey)}\t${s(rows)}"
       else s"$path\t${s(minKey)}\t${s(maxKey)}\t${s(rows)}\t${s(bytes)}"
     }
-    /** Could this file contain any of `keys` (sorted)? No stats → maybe. */
-    def mayContain(keys: Array[Long]): Boolean = ManifestPruning.mayContain(this, keys)
-    /** Could this file hold any key in [lo, hi]? No stats → maybe. */
-    def overlaps(lo: Long, hi: Long): Boolean = ManifestPruning.overlaps(this, lo, hi)
-    /** String-key form of [[mayContain]]: `keys` sorted by
-      * [[SnapshotTable.byteOrder]] (unsigned bytes — Spark's own
-      * string order). No string stats → maybe. */
-    def mayContainStr(keys: Array[Array[Byte]]): Boolean =
-      ManifestPruning.mayContainStr(this, keys)
-    /** String-key form of [[overlaps]]. */
-    def overlapsStr(lo: Array[Byte], hi: Array[Byte]): Boolean =
-      ManifestPruning.overlapsStr(this, lo, hi)
     /** Stats stripped — what a carried-forward entry becomes when a
       * commit changes the stats key: ranges measured on the OLD key
       * must not survive under a header naming the new one. The BLOOM
@@ -2078,15 +2068,7 @@ object SnapshotTable {
       // absent columns null-fill, and NULL passes — SQL CHECK)
       validateConstraints(alignTo(updates, evolved), m.constraints)
       val (_, effKey2, fixCarried) = resolveStatsKeys(m, Some(key), statsKey2)
-      // stats identity check: prune only with ranges measured on `key`
-      val canPrune = sameKey(m.statsKey, key)
-      val (touched, untouched) = (updateKeys, updateStrKeys) match {
-        case (Some(keys), _) if canPrune =>
-          ManifestPruning.partitionByKeys(m.entries, keys, keys.map(bloomHashLong))
-        case (_, Some(ks)) if canPrune =>
-          ManifestPruning.partitionByStrKeys(m.entries, ks, ks.map(bloomHashBytes))
-        case _ => (m.entries, Seq.empty[FileEntry])
-      }
+      val (touched, untouched) = touchedSplit(m, key, updateKeys, updateStrKeys)
       val rewritten =
         if (touched.isEmpty) Seq.empty[FileEntry]
         else {
@@ -3813,12 +3795,15 @@ object SnapshotTable {
     * everywhere: never affects which ROWS exist in the files kept
     * (callers filter rows themselves; this only bounds which files are
     * scanned), so a probe-side join against the pruned frame sees
-    * every key in range. */
+    * every key in range. An inverted range (lo > hi) is judged file by
+    * file like any other: files whose range spans [hi, lo], and files
+    * without stats, are kept. */
   def readRange(spark: SparkSession, root: String, lo: Long, hi: Long,
       version: Option[Int] = None, key: Option[String] = None): DataFrame =
     readPruned(spark, root, version, { m =>
       val verified = m.statsKey.isDefined && key.forall(k => sameKey(m.statsKey, k))
-      if (verified) ManifestPruning.keepForRange(m.entries, lo, hi) else m.entries
+      ManifestPruning.partition(m.entries,
+        Option.when(verified)(KeyBounds(Some((lo, hi)), None, None)))._1
     })
 
   /** [[read]] pruned to the files that MAY contain one of `keys` — the
@@ -3827,34 +3812,32 @@ object SnapshotTable {
     * select/delete-by-filename path is exactly this probe): an IN over
     * two far-apart keys reads two files, not every file between them.
     * Same verification and same conservative contract as readRange;
-    * same [[ManifestPruning.mayContain]] the merge path prunes with.
+    * the same point-set decision the merge path prunes with: range
+    * stats prune clustered files, blooms the fresh unclustered ones.
     * An EMPTY key set reads nothing (an IN () is false everywhere) and
     * returns an empty frame with the version's schema. */
   def readKeys(spark: SparkSession, root: String, key: String, keys: Array[Long],
-      version: Option[Int] = None): DataFrame =
-    readPruned(spark, root, version, { m =>
-      if (keys.isEmpty) Seq.empty
-      else if (!sameKey(m.statsKey, key)) m.entries
-      else {
-        val sorted = keys.clone(); java.util.Arrays.sort(sorted)
-        // per-key bloom hashes, computed once per probe: range stats
-        // prune clustered files, blooms prune the fresh unclustered ones
-        ManifestPruning.keepForKeys(m.entries, sorted, keys.map(bloomHashLong))
-      }
-    })
+      version: Option[Int] = None): DataFrame = {
+    val sorted = keys.clone(); java.util.Arrays.sort(sorted)
+    readPoints(spark, root, key, version, keys.isEmpty,
+      KeyBounds(None, None, None, longPoints = Some(sorted)))
+  }
 
   /** [[readKeys]] for STRING keys (binary manifest stats, unsigned
     * byte order — Spark's own string order). */
   def readKeysStr(spark: SparkSession, root: String, key: String,
-      keys: Array[String], version: Option[Int] = None): DataFrame =
+      keys: Array[String], version: Option[Int] = None): DataFrame = {
+    val bs = keys.map(_.getBytes("UTF-8")); java.util.Arrays.sort(bs, byteOrder)
+    readPoints(spark, root, key, version, keys.isEmpty,
+      KeyBounds(None, None, None, strPoints = Some(bs)))
+  }
+
+  private def readPoints(spark: SparkSession, root: String, key: String,
+      version: Option[Int], empty: Boolean, points: KeyBounds): DataFrame =
     readPruned(spark, root, version, { m =>
-      if (keys.isEmpty) Seq.empty
-      else if (!sameKey(m.statsKey, key)) m.entries
-      else {
-        val bs = keys.map(_.getBytes("UTF-8"))
-        java.util.Arrays.sort(bs, byteOrder)
-        ManifestPruning.keepForStrKeys(m.entries, bs, bs.map(bloomHashBytes))
-      }
+      if (empty) Seq.empty
+      else ManifestPruning.partition(m.entries,
+        Option.when(sameKey(m.statsKey, key))(points))._1
     })
 
   /** The highest `txnBatchId` any live version recorded — the
@@ -4118,7 +4101,19 @@ object SnapshotTable {
     * stays with the engine — the index only bounds which FILES are
     * scanned, so keeping a file never changes results. */
   def readIndexed(spark: SparkSession, root: String, key: String,
-      version: Option[Int] = None): DataFrame = {
+      version: Option[Int] = None): DataFrame =
+    readIndexedBy(spark, root, Some(key), version)
+
+  /** [[readIndexed]] without naming a key: format-4 manifests RECORD
+    * their stats identity, so the natural read just prunes on whatever
+    * the table's own recorded column(s) are — the reader shouldn't
+    * have to know how the table was keyed. Pre-format-4 tables (no
+    * recorded identity) read unpruned. */
+  def readIndexed(spark: SparkSession, root: String): DataFrame =
+    readIndexedBy(spark, root, None, None)
+
+  private def readIndexedBy(spark: SparkSession, root: String, key: Option[String],
+      version: Option[Int]): DataFrame = {
     val vs = versions(spark, root)
     require(vs.nonEmpty, s"no table at $root")
     val v = version.getOrElse(vs.last)
@@ -4128,19 +4123,14 @@ object SnapshotTable {
     // stats identity: the primary prunes only under its recorded name;
     // the secondary always prunes under its own recorded name (it is
     // self-attributed — independent of what the caller asked for)
-    val primary = m.statsKey.filter(r => sameKey(Some(r), key))
+    val primary = m.statsKey.filter(r => key.forall(k => sameKey(Some(r), k)))
     // the scan (and the filters Catalyst pushes through the logical-
     // alias projection) is PHYSICAL: index keys translate, the dv
     // anti-join runs over physical columns, and the logical aliasing
     // is the outermost projection — user predicates on logical names
     // still reach the scan (alias substitution), so pruning survives
     // a rename of the stats-keyed column untouched
-    val index = new ManifestFileIndex(spark, root, m.entries,
-      primary.map(physFor(m.colmap, _)), m.statsKey2.map(physFor(m.colmap, _)),
-      // bucket pruning is keyed on the recorded stats key: valid only
-      // when that IS the key this read was asked to prune on
-      if (primary.isDefined) bucketedFor(m, schema) else None,
-      prunePartTypesOf(m, schema))
+    val index = new ManifestFileIndex(spark, root, pruneScope(m, schema, primary))
     toLogical(applyDvIndexed(spark, root,
       org.apache.spark.sql.graftbridge.Bridge.parquetRelation(spark, index,
         physSchemaOf(m.colmap, schema)),
@@ -4170,25 +4160,6 @@ object SnapshotTable {
           .withColumn("__idx", col("_metadata.row_index")),
         dv, total).select(cols: _*)
     }
-  }
-
-  /** [[readIndexed]] without naming a key: format-4 manifests RECORD
-    * their stats identity, so the natural read just prunes on whatever
-    * the table's own recorded column(s) are — the reader shouldn't
-    * have to know how the table was keyed. Pre-format-4 tables (no
-    * recorded identity) read unpruned. */
-  def readIndexed(spark: SparkSession, root: String): DataFrame = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no table at $root")
-    val m = manifestFull(spark, root, vs.last)
-    val sch = schemaOf(spark, root, m)
-    val index = new ManifestFileIndex(spark, root, m.entries,
-      m.statsKey.map(physFor(m.colmap, _)), m.statsKey2.map(physFor(m.colmap, _)),
-      bucketedFor(m, sch), prunePartTypesOf(m, sch))
-    toLogical(applyDvIndexed(spark, root,
-      org.apache.spark.sql.graftbridge.Bridge.parquetRelation(spark, index,
-        physSchemaOf(m.colmap, sch)),
-      m.entries), sch, m.colmap)
   }
 
   /** Deleted-position sidecar schema: the target data file's
@@ -4440,10 +4411,8 @@ object SnapshotTable {
       // prunes on the stats keys as the FILTERS will spell them after
       // Catalyst pushes them through the logical-alias projection —
       // i.e. physically); `pred` evaluates over the logical aliases
-      val index = new ManifestFileIndex(spark, root, m.entries,
-        m.statsKey.map(physFor(m.colmap, _)), m.statsKey2.map(physFor(m.colmap, _)),
-        // a point DELETE on a bucketed table scans one bucket
-        bucketedFor(m, sch), prunePartTypesOf(m, sch))
+      // (a point DELETE on a bucketed table scans one bucket)
+      val index = new ManifestFileIndex(spark, root, pruneScope(m, sch, m.statsKey))
       val raw = toLogical(org.apache.spark.sql.graftbridge.Bridge
         .parquetRelation(spark, index, physSchemaOf(m.colmap, sch))
         .withColumn("__rel", relPathCol)
@@ -4547,14 +4516,7 @@ object SnapshotTable {
       // the loop, so constraints pay one explicit validation job
       validateConstraints(alignTo(updates, evolved), m.constraints)
       val (_, effKey2, fixCarried) = resolveStatsKeys(m, Some(key), statsKey2)
-      val canPrune = sameKey(m.statsKey, key)
-      val (touched, untouched) = (updateKeys, updateStrKeys) match {
-        case (Some(keys), _) if canPrune =>
-          ManifestPruning.partitionByKeys(m.entries, keys, keys.map(bloomHashLong))
-        case (_, Some(ks)) if canPrune =>
-          ManifestPruning.partitionByStrKeys(m.entries, ks, ks.map(bloomHashBytes))
-        case _ => (m.entries, Seq.empty[FileEntry])
-      }
+      val (touched, untouched) = touchedSplit(m, key, updateKeys, updateStrKeys)
       val touchedOut =
         if (touched.isEmpty) Seq.empty[FileEntry]
         else {
@@ -4601,6 +4563,17 @@ object SnapshotTable {
         colmap = if (effCm.isEmpty) None else Some(effCm))
     }
   }
+
+  /** Merge's `(touched, untouched)` split of `m`'s entries by the
+    * update batch's sorted key set ([[pruneKeySets]]): pruned only
+    * with stats measured on `key` (stats identity); no key set (too
+    * many keys, or an unprunable key type) touches every file. */
+  private[sources] def touchedSplit(m: Manifest, key: String, longs: Option[Array[Long]],
+      strs: Option[Array[Array[Byte]]]): (Seq[FileEntry], Seq[FileEntry]) =
+    ManifestPruning.partition(m.entries,
+      if (!sameKey(m.statsKey, key)) None
+      else longs.map(ks => KeyBounds(None, None, None, longPoints = Some(ks)))
+        .orElse(strs.map(ks => KeyBounds(None, None, None, strPoints = Some(ks)))))
 
   /** The update batch's distinct keys for touched-file pruning —
     * integral or string, capped at `maxPruneKeys` (beyond the cap the
@@ -4838,71 +4811,11 @@ object SnapshotTable {
       }
 
     /** The files kept under `dataFilters` (catalyst conjuncts over
-      * PHYSICAL attribute names) — exactly [[ManifestFileIndex.listFiles]]'s
-      * decision, shared so the DSv2 scan prunes like every other path:
-      * verified stats only, point sets probe blooms, absent stats keep
-      * the file. */
+      * PHYSICAL attribute names), by [[ManifestPruning]]'s decision. */
     def keptFiles(dataFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression]):
         Seq[SqlDataFile] = {
-      val pb = m.statsKey.map(k => ManifestFileIndex.bounds(dataFilters, physFor(m.colmap, k)))
-      val sb = m.statsKey2.map(k => ManifestFileIndex.bounds(dataFilters, physFor(m.colmap, k)))
-      val pbHashes: Option[Array[(Long, Long)]] = pb.flatMap(b =>
-        b.longPoints.map(_.map(bloomHashLong))
-          .orElse(b.strPoints.map(_.map(bloomHashBytes))))
-      // secondary-key point sets probe the format-11 bloom the same way
-      val sbHashes: Option[Array[(Long, Long)]] = sb.flatMap(b =>
-        b.longPoints.map(_.map(bloomHashLong))
-          .orElse(b.strPoints.map(_.map(bloomHashBytes))))
-      val kept0 =
-        if (pb.exists(ManifestPruning.contradictory) ||
-            sb.exists(ManifestPruning.contradictory)) Seq.empty
-        else m.entries.filter { e =>
-          pb.forall(ManifestPruning.keepPrimary(e, _)) &&
-            pbHashes.forall(ManifestPruning.bloomKeeps(e, _)) &&
-            sb.forall(ManifestPruning.keepSecondary(e, _)) &&
-            sbHashes.forall(ManifestPruning.bloomKeeps2(e, _))
-        }
-      // BUCKET PRUNING: a bucketed file's key RANGE is hash-scattered
-      // (nearly table-wide), so stats can't skip it — but a point set
-      // on the bucket key maps each literal to exactly one bucket id
-      // (the writer's hash), and every file of every OTHER bucket
-      // drops. The point read a clustered table answers with ranges,
-      // a bucketed table answers with arithmetic.
-      val kept = (bucketLayout, pb) match {
-        case (Some((n, byPath)), Some(b)) =>
-          val kt = schema.fields.find(f =>
-            m.statsKey.exists(k => norm(k) == norm(f.name))).map(_.dataType)
-          val allowed: Option[Set[Int]] = kt.flatMap {
-            case org.apache.spark.sql.types.IntegerType =>
-              // points arrive widened to Long; an int column's literal
-              // always fits (analysis casts), but guard anyway
-              b.longPoints.filter(_.forall(v =>
-                v >= Int.MinValue && v <= Int.MaxValue)).map(_.map(v =>
-                bucketOfValue(v.toInt, org.apache.spark.sql.types.IntegerType, n)).toSet)
-            case org.apache.spark.sql.types.LongType =>
-              b.longPoints.map(_.map(v =>
-                bucketOfValue(v, org.apache.spark.sql.types.LongType, n)).toSet)
-            case org.apache.spark.sql.types.StringType =>
-              b.strPoints.map(_.map(bs => bucketOfValue(
-                org.apache.spark.unsafe.types.UTF8String.fromBytes(bs),
-                org.apache.spark.sql.types.StringType, n)).toSet)
-            case _ => None
-          }
-          allowed match {
-            case Some(bs) => kept0.filter(e => bs.contains(byPath(e.path)))
-            case None => kept0
-          }
-        case _ => kept0
-      }
-      // HIVE-STYLE PARTITION PRUNING: per-file, conservative — a path
-      // that spells partition values drops when a partition-only
-      // conjunct contradicts them; everything else keeps
-      val partTypes = prunePartTypesOf(m, schema)
-      val keptP =
-        if (partTypes.isEmpty) kept
-        else kept.filter(e => partitionKeeps(e, dataFilters, partTypes))
       lazy val f = fs(spark, root)
-      keptP.map { e =>
+      pruneScope(m, schema, m.statsKey).kept(dataFilters).map { e =>
         val len = e.bytes.getOrElse(f.getFileStatus(new Path(root, e.path)).getLen)
         SqlDataFile(e.path, len, e.rows, e.dv.isDefined)
       }
@@ -4968,8 +4881,8 @@ object SnapshotTable {
     }
   }
 
-  /** [[SqlSnapshot.bucketLayout]]'s static form — shared with the V1
-    * read path's [[ManifestFileIndex]]. */
+  /** [[SqlSnapshot.bucketLayout]]'s static form — shared with
+    * [[pruneScope]]. */
   private[sources] def bucketLayoutOf(entries: Seq[FileEntry],
       statsKey: Option[String]): Option[(Int, Map[String, Int])] =
     if (entries.isEmpty || statsKey.isEmpty) None
@@ -4987,21 +4900,25 @@ object SnapshotTable {
       }
     }
 
-  /** The bucket-pruning context for a V1 [[ManifestFileIndex]] over
-    * `m`'s entries: the live layout plus the bucket key's LOGICAL
-    * type (renames never change it) — None unless the layout holds
-    * and the type is hashable. */
-  private def bucketedFor(m: Manifest,
-      sch: org.apache.spark.sql.types.StructType)
-      : Option[(Int, Map[String, Int], org.apache.spark.sql.types.DataType)] =
-    bucketLayoutOf(m.entries, m.statsKey).flatMap { case (n, byPath) =>
-      m.statsKey.flatMap(k =>
-        sch.fields.find(f => norm(f.name) == norm(k)).map(_.dataType)).collect {
-        case dt @ (org.apache.spark.sql.types.IntegerType |
-                   org.apache.spark.sql.types.LongType |
-                   org.apache.spark.sql.types.StringType) => (n, byPath, dt)
-      }
-    }
+  /** `m`'s filter-driven pruning scope, read with `sch`: the verified
+    * stats keys as pushed filters spell them (physical), the bucket
+    * context and the prunable partition types. `primary` is the
+    * recorded stats key when the read may prune on it. Buckets are
+    * keyed on that key, so they need it, a live layout
+    * ([[bucketLayoutOf]]) and a hashable LOGICAL key type (renames
+    * never change it). */
+  private def pruneScope(m: Manifest, sch: org.apache.spark.sql.types.StructType,
+      primary: Option[String]): ManifestPruning.Scope = {
+    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+    val buckets = primary.flatMap(k => bucketLayoutOf(m.entries, m.statsKey).flatMap {
+      case (n, byPath) =>
+        sch.fields.find(f => norm(f.name) == norm(k)).map(_.dataType).collect {
+          case dt @ (IntegerType | LongType | StringType) => (n, byPath, dt)
+        }
+    })
+    ManifestPruning.Scope(m.entries, primary.map(physFor(m.colmap, _)),
+      m.statsKey2.map(physFor(m.colmap, _)), buckets, prunePartTypesOf(m, sch))
+  }
 
   /** The writer's bucket assignment for one literal —
     * `pmod(murmur3(value), n)` with the hash TYPED like the column
@@ -5314,17 +5231,25 @@ object SnapshotTable {
   }
 }
 
-/** THE file-skipping decision module — every path that turns manifest
-  * stats into "scan this file or not" (merge's touched-file partition,
-  * [[SnapshotTable.readRange]]/[[SnapshotTable.readKeys]], and
-  * [[ManifestFileIndex.listFiles]]'s planning-time pruning) calls
-  * these predicates, so range semantics, point-probe semantics, and
-  * the no-stats-keeps-the-file convention are defined exactly once.
-  * All predicates are CONSERVATIVE: absent stats always keep the file,
-  * and keeping a file never changes results (row filtering is the
-  * engine's job). */
+/** THE file-skipping decision: every path that turns manifest stats
+  * into "scan this file or not" calls [[ManifestPruning.partition]] —
+  * the DSv2 scan's [[SnapshotTable.SqlSnapshot.keptFiles]], the V1
+  * [[ManifestFileIndex.listFiles]] behind [[SnapshotTable.readIndexed]]
+  * and [[SnapshotTable.deleteWhere]], [[SnapshotTable.readRange]]/
+  * [[SnapshotTable.readKeys]]/[[SnapshotTable.readKeysStr]], and the
+  * touched-file split of [[SnapshotTable.merge]] and
+  * [[SnapshotTable.mergeOnRead]]. Callers differ only in what they
+  * pass (bounds extracted from pushed filters, or a requested range /
+  * key set; the bucket context; the partition types) and in how they
+  * wrap the kept entries. Range semantics, point-probe semantics,
+  * bloom probing, bucket and partition pruning, and the
+  * no-stats-keeps-the-file convention are defined here once. Every
+  * check is CONSERVATIVE: absent stats keep the file, and keeping a
+  * file never changes results (row filtering is the engine's job). */
 private[sources] object ManifestPruning {
   import SnapshotTable.FileEntry
+  import ManifestFileIndex.KeyBounds
+  import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
 
   private val ord = SnapshotTable.byteOrder
 
@@ -5334,61 +5259,67 @@ private[sources] object ManifestPruning {
     * probe's 100k-key cap over a thousand fresh files that is ~10^8
     * driver-side operations for a check whose value collapses anyway —
     * with that many uniform keys, virtually every file's bloom reports
-    * a plausible hit. Range pruning stays O(log keys) per file. */
-  private val MaxBloomProbeKeys = 4096
+    * a plausible hit. Range pruning stays O(log keys) per file. Point
+    * sets extracted from filters carry at most 1000 keys
+    * (`ManifestFileIndex.MaxBoundPoints`), under this cap, so on the
+    * filter path every point set probes the blooms. */
+  private[sources] val MaxBloomProbeKeys = 4096
 
-  /** Could this file hold any key in [lo, hi]? No stats → maybe. */
-  def overlaps(e: FileEntry, lo: Long, hi: Long): Boolean =
-    e.minKey.zip(e.maxKey).forall { case (mn, mx) => mx >= lo && mn <= hi }
+  /** Live bucket layout (count, relPath → bucket id, the bucket key's
+    * LOGICAL type): point sets on the primary key prune by the
+    * writer's typed murmur3, where hash-scattered stats ranges keep
+    * every file. */
+  type Buckets = (Int, Map[String, Int], DataType)
 
-  /** Could this file contain any of `keys` (sorted ascending)?
-    * Binary-search of the sorted key array against the file's range —
-    * O(log k) per file, never a scan. No stats → maybe. */
-  def mayContain(e: FileEntry, keys: Array[Long]): Boolean =
-    e.minKey.zip(e.maxKey).forall { case (mn, mx) =>
-      val i = java.util.Arrays.binarySearch(keys, mn)
-      val from = if (i >= 0) i else -i - 1
-      from < keys.length && keys(from) <= mx
+  /** Which manifest entries `primary`/`secondary` (bounds on the
+    * verified stats slots), `buckets` and `filters`' partition-only
+    * conjuncts (over `partTypes`) may skip: `(kept, skipped)`, each in
+    * manifest order. Reads use `_1`; merge's touched-file split uses
+    * both. Bounds the extractor proved [[KeyBounds.contradictory]]
+    * keep nothing, stat-less files included. */
+  def partition(entries: Seq[FileEntry], primary: Option[KeyBounds],
+      secondary: Option[KeyBounds] = None, buckets: Option[Buckets] = None,
+      filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression] = Nil,
+      partTypes: Map[String, DataType] = Map.empty): (Seq[FileEntry], Seq[FileEntry]) =
+    if (primary.exists(_.contradictory) || secondary.exists(_.contradictory))
+      (Seq.empty, entries)
+    else {
+      val inBuckets = bucketFilter(buckets, primary)
+      entries.partition(e =>
+        primary.forall(keeps(e, _)) && secondary.forall(keeps(e, _, secondary = true)) &&
+          inBuckets.forall(_(e.path)) &&
+          SnapshotTable.partitionKeeps(e, filters, partTypes))
     }
 
-  /** String-key form of [[overlaps]] (unsigned byte order). */
-  def overlapsStr(e: FileEntry, lo: Array[Byte], hi: Array[Byte]): Boolean =
-    e.minStr.zip(e.maxStr).forall { case (mn, mx) =>
-      ord.compare(mx, lo) >= 0 && ord.compare(mn, hi) <= 0
-    }
+  /** Do bounds `b` keep `e`, judged on one stats slot (the primary's
+    * min/max, string min/max and bloom, or the secondary's)? Ranges,
+    * point sets (O(log k) binary search against the file's range) and
+    * the bloom compose conjunctively; a slot without stats keeps. */
+  def keeps(e: FileEntry, b: KeyBounds, secondary: Boolean = false): Boolean = {
+    val (long, str, bloom) =
+      if (secondary) (e.min2.zip(e.max2), e.min2Str.zip(e.max2Str), e.bloom2)
+      else (e.minKey.zip(e.maxKey), e.minStr.zip(e.maxStr), e.bloom)
+    long.forall { case (mn, mx) =>
+      b.longBounds.forall { case (lo, hi) => mx >= lo && mn <= hi } &&
+        b.longPoints.forall { ps =>
+          val i = java.util.Arrays.binarySearch(ps, mn)
+          val from = if (i >= 0) i else -i - 1
+          from < ps.length && ps(from) <= mx
+        }
+    } && str.forall { case (mn, mx) =>
+      b.strLo.forall(lo => ord.compare(mx, lo) >= 0) &&
+        b.strHi.forall(hi => ord.compare(mn, hi) <= 0) &&
+        b.strPoints.forall { ps =>
+          val i = java.util.Arrays.binarySearch(ps, mn, ord)
+          val from = if (i >= 0) i else -i - 1
+          from < ps.length && ord.compare(ps(from), mx) <= 0
+        }
+    } && b.bloomHashes.forall(bloomKeeps(bloom, _))
+  }
 
-  /** String-key form of [[mayContain]]: `keys` sorted by unsigned
-    * byte order. No string stats → maybe. */
-  def mayContainStr(e: FileEntry, keys: Array[Array[Byte]]): Boolean =
-    e.minStr.zip(e.maxStr).forall { case (mn, mx) =>
-      val i = java.util.Arrays.binarySearch(keys, mn, ord)
-      val from = if (i >= 0) i else -i - 1
-      from < keys.length && ord.compare(keys(from), mx) <= 0
-    }
-
-  /** [[overlaps]] on the SECONDARY stats column. */
-  def overlaps2(e: FileEntry, lo: Long, hi: Long): Boolean =
-    e.min2.zip(e.max2).forall { case (mn, mx) => mx >= lo && mn <= hi }
-
-  /** [[mayContain]] on the SECONDARY stats column. */
-  def mayContain2(e: FileEntry, keys: Array[Long]): Boolean =
-    e.min2.zip(e.max2).forall { case (mn, mx) =>
-      val i = java.util.Arrays.binarySearch(keys, mn)
-      val from = if (i >= 0) i else -i - 1
-      from < keys.length && keys(from) <= mx
-    }
-
-  /** [[mayContainStr]] on the SECONDARY stats column (format 5). */
-  def mayContain2Str(e: FileEntry, keys: Array[Array[Byte]]): Boolean =
-    e.min2Str.zip(e.max2Str).forall { case (mn, mx) =>
-      val i = java.util.Arrays.binarySearch(keys, mn, ord)
-      val from = if (i >= 0) i else -i - 1
-      from < keys.length && ord.compare(keys(from), mx) <= 0
-    }
-
-  /** Could any of the hashed probe keys be in this file's BLOOM? No
-    * bloom → maybe (blooms only ever tighten range/point verdicts).
-    * `hashes` are the keys' (h1, h2) xxhash64 splits
+  /** Could any of the hashed probe keys be in this BLOOM? No bloom →
+    * maybe (blooms only ever tighten range/point verdicts). `hashes`
+    * are the keys' (h1, h2) xxhash64 splits
     * ([[SnapshotTable.bloomHashLong]]/[[SnapshotTable.bloomHashBytes]]
     * — computed ONCE per probe, not per file); positions derive per
     * file because m is per-file. A false positive keeps a file (scan,
@@ -5396,15 +5327,7 @@ private[sources] object ManifestPruning {
     * actually holds (every held key set its positions at write time).
     * This is what prunes a point probe against fresh UNCLUSTERED files
     * whose [min,max] range spans ~everything. */
-  def bloomKeeps(e: FileEntry, hashes: Array[(Long, Long)]): Boolean =
-    bloomProbe(e.bloom, hashes)
-
-  /** [[bloomKeeps]] over the SECONDARY key's bloom (format 11). */
-  def bloomKeeps2(e: FileEntry, hashes: Array[(Long, Long)]): Boolean =
-    bloomProbe(e.bloom2, hashes)
-
-  private def bloomProbe(bloom: Option[Array[Byte]],
-      hashes: Array[(Long, Long)]): Boolean =
+  def bloomKeeps(bloom: Option[Array[Byte]], hashes: Array[(Long, Long)]): Boolean =
     bloom match {
       case None => true
       case Some(b) =>
@@ -5421,63 +5344,42 @@ private[sources] object ManifestPruning {
         }
     }
 
-  def keepForRange(entries: Seq[FileEntry], lo: Long, hi: Long): Seq[FileEntry] =
-    entries.filter(overlaps(_, lo, hi))
+  /** BUCKET PRUNING: a bucketed file's key RANGE is hash-scattered
+    * (nearly table-wide), so stats can't skip it — but a point set on
+    * the bucket key maps each literal to exactly one bucket id (the
+    * writer's hash), and every file of every OTHER bucket drops. The
+    * point read a clustered table answers with ranges, a bucketed
+    * table answers with arithmetic. None = no bucket constraint;
+    * otherwise, which file paths lie in an allowed bucket. */
+  private def bucketFilter(buckets: Option[Buckets],
+      primary: Option[KeyBounds]): Option[String => Boolean] =
+    for {
+      (n, byPath, dt) <- buckets
+      b <- primary
+      ids <- dt match {
+        case IntegerType =>
+          // points arrive widened to Long; an int column's literal
+          // always fits (analysis casts), but guard anyway
+          b.longPoints.filter(_.forall(v => v >= Int.MinValue && v <= Int.MaxValue))
+            .map(_.map(v => SnapshotTable.bucketOfValue(v.toInt, dt, n)).toSet)
+        case LongType => b.longPoints.map(_.map(v => SnapshotTable.bucketOfValue(v, dt, n)).toSet)
+        case StringType => b.strPoints.map(_.map(bs => SnapshotTable.bucketOfValue(
+          org.apache.spark.unsafe.types.UTF8String.fromBytes(bs), dt, n)).toSet)
+        case _ => None
+      }
+    } yield (path: String) => ids.contains(byPath(path))
 
-  private def bloomEligible(hashes: Array[(Long, Long)]): Boolean =
-    hashes != null && hashes.length <= MaxBloomProbeKeys
-
-  def keepForKeys(entries: Seq[FileEntry], sortedKeys: Array[Long],
-      hashes: Array[(Long, Long)] = null): Seq[FileEntry] =
-    entries.filter(e => mayContain(e, sortedKeys) &&
-      (!bloomEligible(hashes) || bloomKeeps(e, hashes)))
-
-  def keepForStrKeys(entries: Seq[FileEntry], sortedKeys: Array[Array[Byte]],
-      hashes: Array[(Long, Long)] = null): Seq[FileEntry] =
-    entries.filter(e => mayContainStr(e, sortedKeys) &&
-      (!bloomEligible(hashes) || bloomKeeps(e, hashes)))
-
-  def partitionByKeys(entries: Seq[FileEntry], sortedKeys: Array[Long],
-      hashes: Array[(Long, Long)] = null): (Seq[FileEntry], Seq[FileEntry]) =
-    entries.partition(e => mayContain(e, sortedKeys) &&
-      (!bloomEligible(hashes) || bloomKeeps(e, hashes)))
-
-  def partitionByStrKeys(entries: Seq[FileEntry], sortedKeys: Array[Array[Byte]],
-      hashes: Array[(Long, Long)] = null): (Seq[FileEntry], Seq[FileEntry]) =
-    entries.partition(e => mayContainStr(e, sortedKeys) &&
-      (!bloomEligible(hashes) || bloomKeeps(e, hashes)))
-
-  /** Do `bounds` (extracted for the PRIMARY stats column) keep this
-    * file? Range and point-set constraints compose conjunctively. */
-  def keepPrimary(e: FileEntry, b: ManifestFileIndex.KeyBounds): Boolean =
-    b.longBounds.forall { case (lo, hi) => overlaps(e, lo, hi) } &&
-      b.longPoints.forall(mayContain(e, _)) &&
-      e.minStr.zip(e.maxStr).forall { case (mn, mx) =>
-        b.strLo.forall(lo => ord.compare(mx, lo) >= 0) &&
-          b.strHi.forall(hi => ord.compare(mn, hi) <= 0)
-      } &&
-      b.strPoints.forall(mayContainStr(e, _))
-
-  /** Do `bounds` (extracted for the SECONDARY stats column) keep this
-    * file? Same conjunctive composition as [[keepPrimary]], against
-    * the secondary's long (format 4) or binary (format 5) ranges. */
-  def keepSecondary(e: FileEntry, b: ManifestFileIndex.KeyBounds): Boolean =
-    b.longBounds.forall { case (lo, hi) => overlaps2(e, lo, hi) } &&
-      b.longPoints.forall(mayContain2(e, _)) &&
-      e.min2Str.zip(e.max2Str).forall { case (mn, mx) =>
-        b.strLo.forall(lo => ord.compare(mx, lo) >= 0) &&
-          b.strHi.forall(hi => ord.compare(mn, hi) <= 0)
-      } &&
-      b.strPoints.forall(mayContain2Str(e, _))
-
-  /** Bounds that provably keep NOTHING: an inverted range or an empty
-    * point set (an IN () — or two contradictory equalities — is false
-    * for every row, so every file may be skipped). */
-  def contradictory(b: ManifestFileIndex.KeyBounds): Boolean =
-    b.longBounds.exists { case (lo, hi) => lo > hi } ||
-      b.strLo.zip(b.strHi).exists { case (lo, hi) => ord.compare(lo, hi) > 0 } ||
-      b.longPoints.exists(_.isEmpty) ||
-      b.strPoints.exists(_.isEmpty)
+  /** What a filter-driven prune needs besides the filters: the
+    * entries, the VERIFIED stats columns as pushed filters spell them
+    * (physical names), the bucket context and the prunable partition
+    * types. */
+  final case class Scope(entries: Seq[FileEntry], key: Option[String], key2: Option[String],
+      buckets: Option[Buckets], partTypes: Map[String, DataType]) {
+    /** The entries `filters` (catalyst conjuncts) may not skip. */
+    def kept(filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Seq[FileEntry] =
+      partition(entries, key.map(ManifestFileIndex.bounds(filters, _)),
+        key2.map(ManifestFileIndex.bounds(filters, _)), buckets, filters, partTypes)._1
+  }
 }
 
 /** A [[org.apache.spark.sql.execution.datasources.FileIndex]] served
@@ -5486,8 +5388,8 @@ private[sources] object ManifestPruning {
   * scan's pushed data filters against those stats — file-level
   * skipping decided at PLANNING time by the optimizer's own conjuncts,
   * the same integration point log-structured table formats use for
-  * their log-backed indexes. `key`/`key2` name the manifest's VERIFIED
-  * stats columns (primary, secondary) — the caller resolves them
+  * their log-backed indexes. The [[ManifestPruning.Scope]] names the
+  * manifest's VERIFIED stats columns — the caller resolves them
   * against the manifest header, so this index never applies stats to
   * a column they weren't computed for. Conservative by construction:
   * only conjuncts that provably bound a stats column
@@ -5499,17 +5401,7 @@ private[sources] object ManifestPruning {
 private[sources] final class ManifestFileIndex(
     spark: SparkSession,
     root: String,
-    entries: Seq[SnapshotTable.FileEntry],
-    key: Option[String],
-    key2: Option[String] = None,
-    /** Live bucket layout (count, relPath→id, key's LOGICAL type):
-      * point sets on the key prune by bucket arithmetic — the typed
-      * murmur3 the writer used — where hash-scattered stats ranges
-      * keep every file. */
-    bucketed: Option[(Int, Map[String, Int], org.apache.spark.sql.types.DataType)] = None,
-    /** Declared partition-column types (normalized physical name →
-      * type): per-file Hive-style partition pruning, conservative. */
-    partTypes: Map[String, org.apache.spark.sql.types.DataType] = Map.empty)
+    scope: ManifestPruning.Scope)
   extends org.apache.spark.sql.execution.datasources.FileIndex {
 
   import org.apache.hadoop.fs.FileStatus
@@ -5519,79 +5411,31 @@ private[sources] final class ManifestFileIndex(
 
   // FileStatus straight from the manifest (size recorded at write
   // time); only pre-size manifest entries pay a per-file RPC
-  private val fileStatuses: Seq[(FileStatus, SnapshotTable.FileEntry)] = {
+  private val fileStatuses: Seq[FileStatus] = {
     lazy val f = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    entries.map { e =>
+    scope.entries.map { e =>
       val p = new Path(root, e.path)
-      val st = e.bytes match {
+      e.bytes match {
         case Some(len) => new FileStatus(len, false, 1, len, 0L, p)
         case None => f.getFileStatus(p)
       }
-      (st, e)
     }
   }
+  private val statusOf: Map[String, FileStatus] =
+    scope.entries.map(_.path).zip(fileStatuses).toMap
 
   override def rootPaths: Seq[Path] = Seq(new Path(root))
 
   override def listFiles(partitionFilters: Seq[Expression],
-      dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val pb = key.map(k => ManifestFileIndex.bounds(dataFilters, k))
-    val sb = key2.map(k => ManifestFileIndex.bounds(dataFilters, k))
-    // exact point sets (equalities / IN-lists on the verified primary)
-    // also probe the per-file BLOOMS — hashed once here, not per file
-    val pbHashes: Option[Array[(Long, Long)]] = pb.flatMap(b =>
-      b.longPoints.map(_.map(SnapshotTable.bloomHashLong))
-        .orElse(b.strPoints.map(_.map(SnapshotTable.bloomHashBytes))))
-    // secondary-key point sets probe the format-11 bloom the same way
-    val sbHashes: Option[Array[(Long, Long)]] = sb.flatMap(b =>
-      b.longPoints.map(_.map(SnapshotTable.bloomHashLong))
-        .orElse(b.strPoints.map(_.map(SnapshotTable.bloomHashBytes))))
-    val kept0 =
-      if (pb.exists(ManifestPruning.contradictory) ||
-          sb.exists(ManifestPruning.contradictory)) Seq.empty
-      else fileStatuses.filter { case (_, e) =>
-        pb.forall(ManifestPruning.keepPrimary(e, _)) &&
-          pbHashes.forall(ManifestPruning.bloomKeeps(e, _)) &&
-          sb.forall(ManifestPruning.keepSecondary(e, _)) &&
-          sbHashes.forall(ManifestPruning.bloomKeeps2(e, _))
-      }
-    // bucket pruning (the DSv2 scan's keptFiles discipline): each
-    // point literal maps to one bucket id; other buckets' files drop
-    val kept = (bucketed, pb) match {
-      case (Some((n, byPath, dt)), Some(b)) =>
-        val allowed: Option[Set[Int]] = dt match {
-          case org.apache.spark.sql.types.IntegerType =>
-            b.longPoints.filter(_.forall(v =>
-              v >= Int.MinValue && v <= Int.MaxValue)).map(_.map(v =>
-              SnapshotTable.bucketOfValue(v.toInt, dt, n)).toSet)
-          case org.apache.spark.sql.types.LongType =>
-            b.longPoints.map(_.map(v =>
-              SnapshotTable.bucketOfValue(v, dt, n)).toSet)
-          case org.apache.spark.sql.types.StringType =>
-            b.strPoints.map(_.map(bs => SnapshotTable.bucketOfValue(
-              org.apache.spark.unsafe.types.UTF8String.fromBytes(bs), dt, n)).toSet)
-          case _ => None
-        }
-        allowed match {
-          case Some(bs) => kept0.filter { case (_, e) => bs.contains(byPath(e.path)) }
-          case None => kept0
-        }
-      case _ => kept0
-    }
-    // Hive-style partition pruning (per-file, conservative — the same
-    // decision the DSv2 keptFiles makes)
-    val keptP =
-      if (partTypes.isEmpty) kept
-      else kept.filter { case (_, e) =>
-        SnapshotTable.partitionKeeps(e, dataFilters, partTypes) }
-    Seq(PartitionDirectory(InternalRow.empty, keptP.map(_._1).toArray))
-  }
+      dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    Seq(PartitionDirectory(InternalRow.empty,
+      scope.kept(dataFilters).map(e => statusOf(e.path)).toArray))
 
-  override def inputFiles: Array[String] = fileStatuses.map(_._1.getPath.toString).toArray
+  override def inputFiles: Array[String] = fileStatuses.map(_.getPath.toString).toArray
 
   override def refresh(): Unit = ()
 
-  override def sizeInBytes: Long = fileStatuses.map(_._1.getLen).sum
+  override def sizeInBytes: Long = fileStatuses.map(_.getLen).sum
 
   override def partitionSchema: org.apache.spark.sql.types.StructType =
     new org.apache.spark.sql.types.StructType()
@@ -5621,7 +5465,22 @@ private[sources] object ManifestFileIndex {
       strLo: Option[Array[Byte]],
       strHi: Option[Array[Byte]],
       longPoints: Option[Array[Long]] = None,
-      strPoints: Option[Array[Array[Byte]]] = None)
+      strPoints: Option[Array[Array[Byte]]] = None,
+      /** The conjuncts hold for no row (an inverted range, an IN (),
+        * two different equalities), so every file may be skipped —
+        * stat-less ones too. Set only by [[bounds]]: a range or key
+        * set a caller builds directly is judged file by file. */
+      contradictory: Boolean = false) {
+    /** The point set's bloom hashes, computed once per probe — None
+      * without points or beyond [[ManifestPruning.MaxBloomProbeKeys]]. */
+    lazy val bloomHashes: Option[Array[(Long, Long)]] = (longPoints, strPoints) match {
+      case (Some(ps), _) => Option.when(ps.length <= ManifestPruning.MaxBloomProbeKeys)(
+        ps.map(SnapshotTable.bloomHashLong))
+      case (_, Some(ps)) => Option.when(ps.length <= ManifestPruning.MaxBloomProbeKeys)(
+        ps.map(SnapshotTable.bloomHashBytes))
+      case _ => None
+    }
+  }
 
   /** The tightest bounds the conjuncts impose on `key`. Strictly
     * conservative: unrecognized shapes (disjunctions, expressions over
@@ -5722,6 +5581,9 @@ private[sources] object ManifestFileIndex {
       ptsS.map { s =>
         val a = s.map(_.unsafeArray.asInstanceOf[Array[Byte]]).toArray
         java.util.Arrays.sort(a, ord); a
-      })
+      },
+      contradictory = (any && lo > hi) ||
+        (loB != null && hiB != null && ord.compare(loB, hiB) > 0) ||
+        ptsL.exists(_.isEmpty) || ptsS.exists(_.isEmpty))
   }
 }

@@ -87,16 +87,12 @@ object Dedup {
       numHashes: Int = 8, bandSize: Int = 2): DataFrame = {
     checkBanding(numHashes, bandSize)
     val bandStructs = (0 until numHashes / bandSize).map { b =>
-      val parts = (0 until bandSize).map(j => col(s"h${b * bandSize + j}"))
+      val parts = (0 until bandSize).map(j => col("sig").getItem(b * bandSize + j))
       struct(lit(b.toLong).as("band"), concat_ws("|", parts: _*).as("band_key"))
     }
-    // one column per signature: the cost model sizes the banded rows (and
-    // so the verify joins' broadcast side) from this projection's width
-    val sigs = (0 until numHashes).map(i => col("sig").getItem(i).as(s"h$i"))
     docs
       .select(col("doc_id"), Shingling.minhashSignatures(
         TextFunctions.tokens(lower(col("text"))), numHashes).as("sig"))
-      .select(col("doc_id") +: sigs: _*)
       .select(col("doc_id"), explode(array(bandStructs: _*)).as("bk"))
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.band_key").as("band_key"))
   }
@@ -480,7 +476,12 @@ object Dedup {
     * inline comment) so the banding pipeline runs once per job, not
     * once per reference. The candidate id set is tiny, so AQE turns
     * the semi-join into a broadcast and the filter is applied map-side
-    * on the scan. */
+    * on the scan. Both verify joins BROADCAST the cached shingle frame
+    * (size-guarded, [[graft.relational.Relational.broadcastIfSmall]]),
+    * so the second join reuses the first one's broadcast. The choice
+    * is not left to the cost model: its estimate for a cached frame is
+    * taken before the cache fills, and when it ranks the candidate
+    * side smaller, the shingle side is broadcast a second time. */
   def jaccardOnCandidates(spark: SparkSession, dir: String, threshold: Double = 0.5): DataFrame = {
     // The candidate frame fans out three ways (pair spine, a-side id set,
     // b-side id set): without a materialization point each reference
@@ -502,9 +503,11 @@ object Dedup {
         array_distinct(shingles(TextFunctions.tokens(lower(col("text"))))).as("sh"))
       .cache()
       .transform(graft.CacheScope.register)
+    def side(s: String): DataFrame = graft.relational.Relational.broadcastIfSmall(
+      docs.select(col("doc_id").as(s"id_$s"), col("sh").as(s"sh_$s")))
     cand
-      .join(docs.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(docs.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
+      .join(side("a"), Seq("id_a"))
+      .join(side("b"), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
         size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
           .divide(size(array_union(col("sh_a"), col("sh_b")))).as("jaccard"))

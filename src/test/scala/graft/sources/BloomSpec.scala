@@ -94,7 +94,7 @@ class BloomSpec extends SparkSpec {
       val held = spark.read.parquet(s"$root/${e.path}").select("id").as[Long].collect()
       assert(held.length == 200)
       for (k <- held)
-        assert(ManifestPruning.bloomKeeps(e, Array(SnapshotTable.bloomHashLong(k))),
+        assert(ManifestPruning.bloomKeeps(e.bloom, Array(SnapshotTable.bloomHashLong(k))),
           s"FALSE NEGATIVE: key $k is in ${e.path} but its bloom skips the file")
     }
     // end-to-end: a present-key point read returns the row
@@ -118,7 +118,7 @@ class BloomSpec extends SparkSpec {
     for (e <- entries) {
       val held = spark.read.parquet(s"$root/${e.path}").select("fp").as[String].collect()
       for (k <- held)
-        assert(ManifestPruning.bloomKeeps(e,
+        assert(ManifestPruning.bloomKeeps(e.bloom,
           Array(SnapshotTable.bloomHashBytes(k.getBytes("UTF-8")))),
           s"FALSE NEGATIVE: key $k is in ${e.path} but its bloom skips the file")
     }
@@ -141,7 +141,8 @@ class BloomSpec extends SparkSpec {
     // stats — without blooms this probe would scan the whole table
     val absent = 424242L
     assert(!keys.contains(absent))
-    assert(entries.forall(e => ManifestPruning.mayContain(e, Array(absent))),
+    assert(entries.forall(e => ManifestPruning.keeps(e,
+      ManifestFileIndex.KeyBounds(Some((absent, absent)), None, None))),
       "setup must defeat range stats (uniform keys spanning the space)")
     val probe = SnapshotTable.readKeys(spark, root, "id", Array(absent))
     assert(probe.inputFiles.isEmpty,
@@ -217,10 +218,10 @@ class BloomSpec extends SparkSpec {
       val held = spark.read.parquet(s"$root/${e.path}")
         .select("fp", "idx").collect()
       for (r <- held) {
-        assert(ManifestPruning.bloomKeeps(e,
+        assert(ManifestPruning.bloomKeeps(e.bloom,
           Array(SnapshotTable.bloomHashBytes(r.getString(0).getBytes("UTF-8")))),
           s"FALSE NEGATIVE (primary): ${r.getString(0)} in ${e.path}")
-        assert(ManifestPruning.bloomKeeps2(e,
+        assert(ManifestPruning.bloomKeeps(e.bloom2,
           Array(SnapshotTable.bloomHashLong(r.getLong(1)))),
           s"FALSE NEGATIVE (secondary): ${r.getLong(1)} in ${e.path}")
       }
@@ -267,7 +268,7 @@ class BloomSpec extends SparkSpec {
     val big = entriesOf(root)
     assert(big.size == 1 && big.head.bloom.isEmpty,
       "a file above the row cap must not carry an under-sized bloom")
-    assert(ManifestPruning.bloomKeeps(big.head,
+    assert(ManifestPruning.bloomKeeps(big.head.bloom,
       Array(SnapshotTable.bloomHashLong(424242L))), "absent bloom keeps the file")
     // a stats-key change strips the bloom with the ranges: positions
     // hashed from the OLD key's values would wrongly skip under the new

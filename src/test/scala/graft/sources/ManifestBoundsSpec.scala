@@ -191,7 +191,7 @@ class ManifestBoundsSpec extends AnyFunSuite {
     assert(b.longPoints.map(_.toSeq).contains(Seq(2L, 3L)))
     val c = ManifestFileIndex.bounds(Seq(
       EqualTo(id, lit(5L)), EqualTo(id, lit(6L))), "id")
-    assert(ManifestPruning.contradictory(c),
+    assert(c.contradictory,
       "two different equalities on the same key can match no row")
   }
 
@@ -202,7 +202,7 @@ class ManifestBoundsSpec extends AnyFunSuite {
       FileEntry("b", Some(10L), Some(19L)),
       FileEntry("c", Some(20L), Some(29L)))
     val b = ManifestFileIndex.bounds(Seq(In(id, Seq(lit(5L), lit(25L)))), "id")
-    val kept = files.filter(ManifestPruning.keepPrimary(_, b))
+    val kept = files.filter(ManifestPruning.keeps(_, b))
     assert(kept.map(_.path) == Seq("a", "c"),
       "the [5,25] envelope alone would keep 'b'; the point set must not")
   }
@@ -211,8 +211,8 @@ class ManifestBoundsSpec extends AnyFunSuite {
     import SnapshotTable.FileEntry
     val b = ManifestFileIndex.bounds(Seq(EqualTo(id, lit(42L))), "id")
     assert(b.longPoints.map(_.toSeq).contains(Seq(42L)))
-    assert(ManifestPruning.keepPrimary(FileEntry("nostats", None, None), b))
-    assert(!ManifestPruning.keepPrimary(FileEntry("far", Some(100L), Some(200L)), b))
+    assert(ManifestPruning.keeps(FileEntry("nostats", None, None), b))
+    assert(!ManifestPruning.keeps(FileEntry("far", Some(100L), Some(200L)), b))
   }
 
   test("oversized IN lists fall back to the envelope (no point set recorded)") {
@@ -317,9 +317,9 @@ class ManifestBoundsSpec extends AnyFunSuite {
       Some(10L), Some(19L))
     val idx = AttributeReference("chunk_idx", LongType)()
     val b = ManifestFileIndex.bounds(Seq(EqualTo(idx, lit(25L))), "chunk_idx")
-    assert(!ManifestPruning.keepSecondary(e, b),
+    assert(!ManifestPruning.keeps(e, b, secondary = true),
       "secondary range [10,19] excludes chunk_idx = 25")
-    assert(ManifestPruning.keepSecondary(e.withoutKey2Stats, b),
+    assert(ManifestPruning.keeps(e.withoutKey2Stats, b, secondary = true),
       "no secondary stats → always kept")
   }
 
@@ -330,25 +330,28 @@ class ManifestBoundsSpec extends AnyFunSuite {
       None, None, Some(b("c-0010")), Some(b("c-0019")))
     def nb(filters: Seq[Expression]) = ManifestFileIndex.bounds(filters, "name")
     // equality outside the binary range → pruned; inside → kept
-    assert(!ManifestPruning.keepSecondary(e, nb(Seq(EqualTo(name, lit("c-0025"))))))
-    assert(ManifestPruning.keepSecondary(e, nb(Seq(EqualTo(name, lit("c-0015"))))))
+    assert(!ManifestPruning.keeps(e, nb(Seq(EqualTo(name, lit("c-0025")))), secondary = true))
+    assert(ManifestPruning.keeps(e, nb(Seq(EqualTo(name, lit("c-0015")))), secondary = true))
     // range bounds compose: name >= "c-0019" touches the upper edge,
     // name > "c-0019" (strict → non-strict conservative) still keeps
-    assert(ManifestPruning.keepSecondary(e, nb(Seq(GreaterThanOrEqual(name, lit("c-0019"))))))
-    assert(!ManifestPruning.keepSecondary(e, nb(Seq(GreaterThanOrEqual(name, lit("c-0020"))))))
-    assert(!ManifestPruning.keepSecondary(e, nb(Seq(LessThanOrEqual(name, lit("c-0009"))))))
+    assert(ManifestPruning.keeps(e,
+      nb(Seq(GreaterThanOrEqual(name, lit("c-0019")))), secondary = true))
+    assert(!ManifestPruning.keeps(e,
+      nb(Seq(GreaterThanOrEqual(name, lit("c-0020")))), secondary = true))
+    assert(!ManifestPruning.keeps(e,
+      nb(Seq(LessThanOrEqual(name, lit("c-0009")))), secondary = true))
     // IN-list point set: far-apart points that STRADDLE the range but
     // miss it — the envelope alone would keep, the point set prunes
-    assert(!ManifestPruning.keepSecondary(e,
-      nb(Seq(In(name, Seq(lit("c-0005"), lit("c-0025")))))))
-    assert(ManifestPruning.keepSecondary(e,
-      nb(Seq(In(name, Seq(lit("c-0005"), lit("c-0012")))))))
+    assert(!ManifestPruning.keeps(e,
+      nb(Seq(In(name, Seq(lit("c-0005"), lit("c-0025"))))), secondary = true))
+    assert(ManifestPruning.keeps(e,
+      nb(Seq(In(name, Seq(lit("c-0005"), lit("c-0012"))))), secondary = true))
     // no string secondary stats → conservative keep
-    assert(ManifestPruning.keepSecondary(e.withoutKey2Stats,
-      nb(Seq(EqualTo(name, lit("c-0025"))))))
+    assert(ManifestPruning.keeps(e.withoutKey2Stats,
+      nb(Seq(EqualTo(name, lit("c-0025")))), secondary = true))
     // long bounds on a string-statted secondary impose nothing
     val idb = ManifestFileIndex.bounds(Seq(EqualTo(id, lit(5L))), "id")
-    assert(ManifestPruning.keepSecondary(e, idb))
+    assert(ManifestPruning.keeps(e, idb, secondary = true))
   }
 
   test("stats stripping: a stats-key change drops key ranges but keeps rows/bytes") {
@@ -403,7 +406,8 @@ class ManifestBoundsSpec extends AnyFunSuite {
     assert(SnapshotTable.byteOrder.compare(
       "café".getBytes("UTF-8"), "cafz".getBytes("UTF-8")) > 0,
       "unsigned byte order must place multi-byte UTF-8 above ascii")
-    assert(!e.overlapsStr("cafa".getBytes("UTF-8"), "cafz".getBytes("UTF-8")),
+    assert(!ManifestPruning.keeps(e, ManifestFileIndex.KeyBounds(None,
+      Some("cafa".getBytes("UTF-8")), Some("cafz".getBytes("UTF-8")))),
       "a file holding only 'café' must be prunable for an all-ascii range")
   }
 }

@@ -13,14 +13,30 @@ import graft.SparkSpec
   * (`prunePartTypesOf`: pruning keyed by every path-safe column, not
   * the current spec) across a partition-spec EVOLUTION — era-1 files
   * spell only `lang`, era-2 files spell `lang,day`, and the property
-  * must hold on both eras under both keys plus the stats key. */
+  * must hold on both eras under both keys plus the stats key.
+  *
+  * PARITY: every entry point reaches the same file-skipping decision
+  * ([[ManifestPruning.partition]]) — the V1 index behind `readIndexed`
+  * and the catalog's DSv2 scan return the same rows for every generated
+  * predicate and keep the same files for the conjuncts both receive,
+  * and the key/range APIs (`readKeys`, `readKeysStr`,
+  * `readRange`) and merge's touched-file split keep exactly the files
+  * the filter-driven decision keeps for the equivalent conjuncts. */
 class PartitionPruningPropertySpec extends SparkSpec {
   import spark.implicits._
 
   // one fixture for every sample (table builds are the expensive part):
   // a two-era evolved table — the adversarial layout shape
+  // the table lives inside a catalog warehouse (`pprop.main.t`) so the
+  // DSv2 scan can be compared with the V1 index on the same files
+  private lazy val wh: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-pprop").toString
+    spark.conf.set("spark.sql.catalog.pprop", classOf[graft.catalog.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.pprop.warehouse", dir)
+    dir
+  }
   private lazy val root: String = {
-    val r = s"${java.nio.file.Files.createTempDirectory("graft-pprop")}/t"
+    val r = s"$wh/main/t"
     val era1 = (0L until 120L).map(i => (i, s"l${i % 3}", s"d${i % 4}"))
       .toDF("id", "lang", "day").repartition(3)
     SnapshotTable.create(spark, r, era1,
@@ -81,5 +97,109 @@ class PartitionPruningPropertySpec extends SparkSpec {
         s"sample $i: pruning changed the answer for $p\n" +
           s"missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
     }
+  }
+
+  // a STRING-keyed table: range-clustered files plus one unclustered
+  // append whose key range spans the space (only its bloom can skip it)
+  private lazy val sroot: String = {
+    val r = s"${java.nio.file.Files.createTempDirectory("graft-pprop-s")}/t"
+    SnapshotTable.create(spark, r, (0 until 200).map(i => (f"k$i%03d", i.toLong))
+      .toDF("name", "v").repartitionByRange(4, col("name")), statsKey = Some("name"))
+    SnapshotTable.append(spark, r, (0 until 60).map(i => (f"k${(i * 37 + 5) % 300}%03d", i.toLong))
+      .toDF("name", "v").coalesce(1))
+    r
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, String, String)] =
+    df.select("id", "lang", "day").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
+
+  // manifest-relative path of an absolute file path under `under`
+  private def rel(under: String)(p: String): String =
+    p.substring(p.indexOf(under) + under.length + 1)
+
+  test("PARITY: readIndexed (V1) and the catalog scan (DSv2) keep the same files and rows") {
+    import org.apache.spark.sql.catalyst.expressions.{Not, Or}
+    val rnd = new scala.util.Random(7)
+    var orNot = 0
+    (1 to 30).foreach { i =>
+      val p = pred(rnd, 2)
+      val v1 = SnapshotTable.readIndexed(spark, root).filter(p)
+      val v2 = spark.table("pprop.main.t").filter(p)
+      assert(rows(v1) == rows(v2), s"sample $i: rows differ for $p")
+      // the table scan (the dv anti-join scans its sidecars too)
+      val scan = graft.PlanWalk.fileScans(v1)
+        .filter(_.relation.location.isInstanceOf[ManifestFileIndex])
+      assert(scan.size == 1, s"sample $i: ${scan.size} table scans for $p")
+      def v1Kept(filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+        scan.head.relation.location.listFiles(Nil, filters).flatMap(_.files)
+          .map(s => rel(root)(s.getPath.toString)).toSet
+      val v2Files = graft.PlanWalk.batchScans(v2).map(_.scan)
+        .collect { case g: graft.catalog.GraftScan => g.keptRelPaths }.flatten.toSet
+      // the catalog's filter translation carries no OR / NOT conjunct
+      // (graft.catalog.FilterBridge), so the DSv2 scan prunes on the
+      // rest: same decision on the same conjuncts, never fewer files
+      val (withOrNot, plain) = scan.head.dataFilters.partition(_.find {
+        case _: Or | _: Not => true
+        case _ => false
+      }.isDefined)
+      if (withOrNot.nonEmpty) orNot += 1
+      assert(v1Kept(plain) == v2Files, s"sample $i: kept files differ for $p")
+      assert(v1Kept(scan.head.dataFilters).subsetOf(v2Files), s"sample $i: $p")
+    }
+    assert(orNot < 30, "some samples must compare the full predicate")
+  }
+
+  test("PARITY: readKeys / readKeysStr / readRange and merge's split keep the filter decision") {
+    import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Expression,
+      GreaterThanOrEqual, In, LessThanOrEqual, Literal}
+    import org.apache.spark.sql.types.{LongType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    // the filter-driven decision: the V1 index's listFiles over
+    // hand-built conjuncts (no optimizer rewrites in between)
+    def filterKept(r: String, filters: Seq[Expression]): Set[String] =
+      SnapshotTable.readIndexed(spark, r).queryExecution.analyzed.collectFirst {
+        case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
+      }.get.asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
+        .location.listFiles(Nil, filters).flatMap(_.files)
+        .map(s => rel(r)(s.getPath.toString)).toSet
+    def head(r: String) =
+      SnapshotTable.manifestFull(spark, r, SnapshotTable.versions(spark, r).last)
+    // data files only: a dv-carrying read also lists its sidecars
+    def readKept(r: String, df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.inputFiles.map(rel(r)).toSet.intersect(head(r).entries.map(_.path).toSet)
+    val id = AttributeReference("id", LongType)()
+    val name = AttributeReference("name", StringType)()
+    val (m, ms) = (head(root), head(sroot))
+    val rnd = new scala.util.Random(11)
+    var pruned = 0
+    (1 to 25).foreach { i =>
+      // long points (some absent), sorted as merge's key collect sorts them
+      val ks = Array.fill(rnd.nextInt(6) + 1)(rnd.nextInt(280).toLong).distinct.sorted
+      val want = filterKept(root, Seq(In(id, ks.toSeq.map(Literal(_)))))
+      pruned += m.entries.size - want.size
+      assert(readKept(root, SnapshotTable.readKeys(spark, root, "id", ks)) == want,
+        s"readKeys ${ks.toSeq}")
+      assert(SnapshotTable.touchedSplit(m, "id", Some(ks), None)._1.map(_.path).toSet == want,
+        s"merge split ${ks.toSeq}")
+      // string points, through the string stats and blooms
+      val ss = Array.fill(rnd.nextInt(6) + 1)(f"k${rnd.nextInt(300)}%03d").distinct.sorted
+      val sb = ss.map(_.getBytes("UTF-8"))
+      val wantS = filterKept(sroot, Seq(In(name,
+        ss.toSeq.map(s => Literal(UTF8String.fromString(s), StringType)))))
+      pruned += ms.entries.size - wantS.size
+      assert(readKept(sroot, SnapshotTable.readKeysStr(spark, sroot, "name", ss)) == wantS,
+        s"readKeysStr ${ss.toSeq}")
+      assert(SnapshotTable.touchedSplit(ms, "name", None, Some(sb))._1.map(_.path).toSet == wantS,
+        s"merge split ${ss.toSeq}")
+      // a range [lo, hi], lo <= hi
+      val lo = rnd.nextInt(260).toLong
+      val hi = lo + rnd.nextInt(80)
+      val wantR = filterKept(root,
+        Seq(And(GreaterThanOrEqual(id, Literal(lo)), LessThanOrEqual(id, Literal(hi)))))
+      assert(readKept(root, SnapshotTable.readRange(spark, root, lo, hi)) == wantR,
+        s"readRange [$lo, $hi]")
+    }
+    assert(pruned > 0, "the generated probes must exercise skipping, not only keeps")
   }
 }
