@@ -34,19 +34,26 @@ object Chunking {
     )
   }
 
-  /** Chunk-level frame: doc_id, chunk_idx, chunk text, chunk length. */
-  def chunkTable(docs: DataFrame, size: Int = 200, overlap: Int = 50): DataFrame = {
-    val norm = TextFunctions.normalize(col("text"))
+  /** Chunk-level frame: doc_id, chunk_idx, chunk text, chunk length.
+    *
+    * Each document is normalized once: the normalized text is
+    * materialized behind the same Generate barrier [[chunkStats]] uses,
+    * and every chunk slices that one string. Passing the normalize
+    * chain straight into [[fixedStrideChunks]]' `transform` lambda
+    * would re-run its seven regex passes once per chunk slot plus once
+    * for the length — lambdas get no common-subexpression elimination. */
+  def chunkTable(docs: DataFrame, size: Int = 200, overlap: Int = 50): DataFrame =
     docs
       .filter(length(col("text")) > 0)
-      .select(col("doc_id"), posexplode(fixedStrideChunks(norm, size, overlap)).as(Seq("chunk_idx", "chunk")))
+      .select(col("doc_id"), explode(array(TextFunctions.normalize(col("text")))).as("norm"))
+      .select(col("doc_id"),
+        posexplode(fixedStrideChunks(col("norm"), size, overlap)).as(Seq("chunk_idx", "chunk")))
       .select(
         col("doc_id"),
         col("chunk_idx").cast("long").as("chunk_idx"),
         col("chunk"),
         length(col("chunk")).cast("long").as("chunk_len"),
       )
-  }
 
   /** §7.2 flagship slice: normalize → chunk → per-doc stats.
     *

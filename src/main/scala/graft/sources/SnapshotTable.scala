@@ -2037,26 +2037,41 @@ object SnapshotTable {
     // every table format.
     val cmAtStart = evolveColmap(
       mAtStart.map(_.colmap).getOrElse(Map.empty), updates.schema)
-    // the update-batch write and the prune-key collect both consume
-    // `updates` and nothing of each other — two independent jobs,
-    // submitted from two threads so one back-fills the other's tail
-    // (guide §2.6). Every copy-on-write merge pays both before its
-    // commit loop, so the overlap is on the hot path of every
-    // merge-carrying gate.
+    // `updates` is evaluated exactly once: its write. Everything else
+    // the merge needs from the batch — the prune keys, the survivors
+    // anti-join's key set, the constraint check — reads the files just
+    // written (key column only where that is all it needs, the same
+    // trick attachBlooms uses), so an expensive lazy batch (a whole
+    // chunk → embed plan) runs once, and the delete set and the insert
+    // set are the same rows by construction even when `updates` would
+    // not evaluate the same way twice. Read back with the WIDENED
+    // schema: a batch's NOT NULL nested fields do not survive the
+    // parquet round-trip as such, and a cast to them would fail. A
+    // deterministic batch whose optimized plan is a local relation
+    // already holds its rows on the driver: re-reading it is free, its
+    // key collect runs no job, and a file read-back would add one — it
+    // is used as is. (A nondeterministic projection is folded into the
+    // local relation anew by every optimization, so it is read back.)
     //
-    // Prune-key semantics unchanged: gated on the key TYPE (a lossy
-    // cast would yield nulls and wrongly prune everything) — integral
-    // keys prune on the long range, STRING keys on the binary range
-    // (unsigned byte order — the order both parquet's stats and
-    // Spark's string comparisons use); any other type disables
-    // skipping, never correctness. limit(cap+1) inside: the driver
-    // never holds more than cap+1 keys, and one extra row is how "too
-    // many to prune with" is detected.
-    val (updateFiles, (updateKeys, updateStrKeys)) =
-      graft.Concurrency.overlap(
-        writeDataFiles(spark, root, updates, Some(key), key2AtStart,
-          colmap = cmAtStart),
-        pruneKeySets(updates, key, maxPruneKeys))
+    // Prune-key semantics: gated on the key TYPE (a lossy cast would
+    // yield nulls and wrongly prune everything) — integral keys prune
+    // on the long range, STRING keys on the binary range (unsigned
+    // byte order — the order both parquet's stats and Spark's string
+    // comparisons use); any other type disables skipping, never
+    // correctness. The driver never holds more than cap+1 keys: the
+    // written files' footer row counts bound the key count, and
+    // without that bound a limit(cap+1) does, its one extra row being
+    // how "too many to prune with" is detected.
+    val updateFiles = writeDataFiles(spark, root, updates, Some(key), key2AtStart,
+      colmap = cmAtStart)
+    val (batch, rowsAtMost) = updates.queryExecution.optimizedPlan match {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+          if updates.queryExecution.analyzed.deterministic => (updates, None)
+      case _ =>
+        (readEntries(spark, root, widened(updates.schema), updateFiles, cmAtStart),
+          Option.when(updateFiles.forall(_.rows.isDefined))(updateFiles.flatMap(_.rows).sum))
+    }
+    val (updateKeys, updateStrKeys) = pruneKeySets(batch, key, maxPruneKeys, rowsAtMost)
     retrying(spark, root, op = "merge") { (latest: Int) =>
       val m = manifestFull(spark, root, latest)
       val tableSchema = schemaOf(spark, root, m)
@@ -2066,7 +2081,7 @@ object SnapshotTable {
       // the update batch was written before this loop, so constraints
       // are enforced with one explicit validation job (aligned frame:
       // absent columns null-fill, and NULL passes — SQL CHECK)
-      validateConstraints(alignTo(updates, evolved), m.constraints)
+      validateConstraints(alignTo(batch, evolved), m.constraints)
       val (_, effKey2, fixCarried) = resolveStatsKeys(m, Some(key), statsKey2)
       val (touched, untouched) = touchedSplit(m, key, updateKeys, updateStrKeys)
       val rewritten =
@@ -2080,7 +2095,7 @@ object SnapshotTable {
           val current = readEntries(spark, root, tableSchema, touched, m.colmap)
           // alias, not rename: `key` may be a nested path (metadata.doc_id)
           val survivors = current.join(
-            updates.select(updates(key).as("__mk")).distinct(),
+            batch.select(batch(key).as("__mk")).distinct(),
             current(key) === col("__mk"), "left_anti")
           writeDataFiles(spark, root, alignTo(survivors, evolved), Some(key), effKey2,
             colmap = effCm)
@@ -4499,8 +4514,11 @@ object SnapshotTable {
     // same write-ahead column-map capture as copy-on-write merge
     val cmAtStart = evolveColmap(
       mAtStart.map(_.colmap).getOrElse(Map.empty), updates.schema)
-    // same independent-job overlap as copy-on-write merge: the batch
-    // write and the prune-key collect share only `updates`
+    // unlike copy-on-write merge, `updates` is evaluated twice here, by
+    // two overlapped jobs: this path's traffic is small local-relation
+    // upserts, where re-evaluation is free and reading the written
+    // files back would serialize the two jobs (measured: serve's upsert
+    // median 1006 → 1249 ms on a 4-vCPU box)
     val (updateFiles, (updateKeys, updateStrKeys)) =
       graft.Concurrency.overlap(
         writeDataFiles(spark, root, updates, Some(key), key2AtStart,
@@ -4579,18 +4597,22 @@ object SnapshotTable {
     * integral or string, capped at `maxPruneKeys` (beyond the cap the
     * caller rewrites/marks every file rather than collecting a
     * table-sized key set onto the driver). Shared by [[merge]] and
-    * [[mergeOnRead]]. */
-  private def pruneKeySets(updates: DataFrame, key: String, maxPruneKeys: Int):
-      (Option[Array[Long]], Option[Array[Array[Byte]]]) = {
+    * [[mergeOnRead]]. `rowsAtMost`, a known bound on the batch's row
+    * count, drops the cap's `limit` when the batch cannot exceed it: a
+    * limit collects as an incremental take, which runs a second job
+    * whenever the distinct has more than one partition. */
+  private def pruneKeySets(updates: DataFrame, key: String, maxPruneKeys: Int,
+      rowsAtMost: Option[Long] = None): (Option[Array[Long]], Option[Array[Array[Byte]]]) = {
     val keyDt =
       try Some(updates.select(updates(key)).schema.head.dataType)
       catch { case _: Exception => None }
+    def capped(keys: DataFrame): DataFrame =
+      if (rowsAtMost.exists(_ <= maxPruneKeys)) keys else keys.limit(maxPruneKeys + 1)
     val longs: Option[Array[Long]] = keyDt match {
       case Some(org.apache.spark.sql.types.LongType) |
            Some(org.apache.spark.sql.types.IntegerType) =>
-        val ks = updates.select(updates(key).cast("long").as("__k"))
-          .na.drop().distinct()
-          .limit(maxPruneKeys + 1)
+        val ks = capped(updates.select(updates(key).cast("long").as("__k"))
+          .na.drop().distinct())
           .collect().map(_.getLong(0))
         if (ks.length > maxPruneKeys) None
         else { java.util.Arrays.sort(ks); Some(ks) }
@@ -4598,9 +4620,8 @@ object SnapshotTable {
     }
     val strs: Option[Array[Array[Byte]]] = keyDt match {
       case Some(org.apache.spark.sql.types.StringType) =>
-        val ks = updates.select(updates(key).as("__k"))
-          .na.drop().distinct()
-          .limit(maxPruneKeys + 1)
+        val ks = capped(updates.select(updates(key).as("__k"))
+          .na.drop().distinct())
           .collect().map(_.getString(0).getBytes("UTF-8"))
         if (ks.length > maxPruneKeys) None
         else { java.util.Arrays.sort(ks, byteOrder); Some(ks) }
@@ -5495,15 +5516,24 @@ private[sources] object ManifestFileIndex {
         a.name.toLowerCase(java.util.Locale.ROOT) == key.toLowerCase(java.util.Locale.ROOT)
       case _ => false
     }
+    // catalyst values: a Literal's payload, or an InSet member
+    def longOf(v: Any): Option[Long] = v match {
+      case v: Int => Some(v.toLong)
+      case v: Long => Some(v)
+      case v: Short => Some(v.toLong)
+      case v: Byte => Some(v.toLong)
+      case _ => None
+    }
+    def strOf(v: Any): Option[Array[Byte]] = v match {
+      case v: org.apache.spark.unsafe.types.UTF8String => Some(v.getBytes)
+      case _ => None
+    }
     def litVal(e: Expression): Option[Long] = e match {
-      case Literal(v: Int, _) => Some(v.toLong)
-      case Literal(v: Long, _) => Some(v)
-      case Literal(v: Short, _) => Some(v.toLong)
-      case Literal(v: Byte, _) => Some(v.toLong)
+      case Literal(v, _) => longOf(v)
       case _ => None
     }
     def litStr(e: Expression): Option[Array[Byte]] = e match {
-      case Literal(v: org.apache.spark.unsafe.types.UTF8String, _) => Some(v.getBytes)
+      case Literal(v, _) => strOf(v)
       case _ => None
     }
     def conjuncts(e: Expression): Seq[Expression] = e match {
@@ -5547,6 +5577,20 @@ private[sources] object ManifestFileIndex {
       litVal(l).foreach { v => lowerHi(if (strict && v != Long.MinValue) v - 1 else v) }
       litStr(l).foreach(lowerHiB)
     }
+    // an IN list's values: a range envelope plus the point set, when
+    // every value is a non-null integral or every one a non-null string
+    def inList(vs: Seq[Any]): Unit =
+      if (vs.nonEmpty && vs.forall(longOf(_).isDefined)) {
+        val longs = vs.flatMap(longOf)
+        raiseLo(longs.min); lowerHi(longs.max)
+        if (longs.length <= MaxBoundPoints) intersectL(longs.toSet)
+      } else if (vs.nonEmpty && vs.forall(strOf(_).isDefined)) {
+        val bs = vs.flatMap(strOf)
+        raiseLoB(bs.reduce((x, y) => if (ord.compare(x, y) <= 0) x else y))
+        lowerHiB(bs.reduce((x, y) => if (ord.compare(x, y) >= 0) x else y))
+        if (bs.length <= MaxBoundPoints)
+          intersectS(bs.map(scala.collection.immutable.ArraySeq.unsafeWrapArray).toSet)
+      }
     filters.flatMap(conjuncts).foreach {
       case EqualTo(a, l) if isKey(a) => eq(l)
       case EqualTo(l, a) if isKey(a) => eq(l)
@@ -5561,16 +5605,11 @@ private[sources] object ManifestFileIndex {
       case GreaterThanOrEqual(l, a) if isKey(a) => keyLess(l, strict = false)
       case LessThan(l, a) if isKey(a) => keyGreater(l, strict = true)
       case LessThanOrEqual(l, a) if isKey(a) => keyGreater(l, strict = false)
-      case In(a, vs) if isKey(a) && vs.nonEmpty && vs.forall(v => litVal(v).isDefined) =>
-        val longs = vs.flatMap(litVal)
-        raiseLo(longs.min); lowerHi(longs.max)
-        if (longs.length <= MaxBoundPoints) intersectL(longs.toSet)
-      case In(a, vs) if isKey(a) && vs.nonEmpty && vs.forall(v => litStr(v).isDefined) =>
-        val bs = vs.flatMap(litStr)
-        raiseLoB(bs.reduce((x, y) => if (ord.compare(x, y) <= 0) x else y))
-        lowerHiB(bs.reduce((x, y) => if (ord.compare(x, y) >= 0) x else y))
-        if (bs.length <= MaxBoundPoints)
-          intersectS(bs.map(scala.collection.immutable.ArraySeq.unsafeWrapArray).toSet)
+      case In(a, vs) if isKey(a) && vs.forall(_.isInstanceOf[Literal]) =>
+        inList(vs.map(_.asInstanceOf[Literal].value))
+      // OptimizeIn's form of an IN list beyond its conversion threshold
+      // (10 literals by default): same values, held as a hash set
+      case InSet(a, vs) if isKey(a) => inList(vs.toSeq)
       case _ => ()
     }
     KeyBounds(

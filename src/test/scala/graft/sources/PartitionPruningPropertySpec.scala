@@ -51,15 +51,18 @@ class PartitionPruningPropertySpec extends SparkSpec {
   }
 
   // the predicate grammar: equality/IN/range/null-test atoms over all
-  // three columns, composed with AND/OR/NOT to depth 2
-  private def atom(rnd: scala.util.Random): Column = rnd.nextInt(7) match {
+  // three columns, composed with AND/OR/NOT to depth 2. IN lists run to
+  // 30 literals: past 10 distinct ones the optimizer turns them into
+  // InSet, so both forms reach the file index
+  private def atom(rnd: scala.util.Random): Column = rnd.nextInt(8) match {
     case 0 => col("lang") === s"l${rnd.nextInt(4)}" // sometimes absent value
     case 1 => col("day") === s"d${rnd.nextInt(5)}"
-    case 2 => col("lang").isin(Seq.fill(rnd.nextInt(3) + 1)(s"l${rnd.nextInt(4)}"): _*)
+    case 2 => col("lang").isin(Seq.fill(rnd.nextInt(30) + 1)(s"l${rnd.nextInt(4)}"): _*)
     case 3 => col("id") >= rnd.nextInt(260).toLong
     case 4 => col("id") < rnd.nextInt(260).toLong
     case 5 => col("day") =!= s"d${rnd.nextInt(5)}"
     case 6 => col("lang").isNotNull
+    case 7 => col("id").isin(Seq.fill(rnd.nextInt(30) + 1)(rnd.nextInt(260).toLong): _*)
   }
   private def pred(rnd: scala.util.Random, depth: Int): Column =
     if (depth == 0) atom(rnd)
@@ -152,7 +155,7 @@ class PartitionPruningPropertySpec extends SparkSpec {
 
   test("PARITY: readKeys / readKeysStr / readRange and merge's split keep the filter decision") {
     import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Expression,
-      GreaterThanOrEqual, In, LessThanOrEqual, Literal}
+      GreaterThanOrEqual, In, InSet, LessThanOrEqual, Literal}
     import org.apache.spark.sql.types.{LongType, StringType}
     import org.apache.spark.unsafe.types.UTF8String
     // the filter-driven decision: the V1 index's listFiles over
@@ -175,18 +178,22 @@ class PartitionPruningPropertySpec extends SparkSpec {
     var pruned = 0
     (1 to 25).foreach { i =>
       // long points (some absent), sorted as merge's key collect sorts them
-      val ks = Array.fill(rnd.nextInt(6) + 1)(rnd.nextInt(280).toLong).distinct.sorted
+      val ks = Array.fill(rnd.nextInt(30) + 1)(rnd.nextInt(280).toLong).distinct.sorted
       val want = filterKept(root, Seq(In(id, ks.toSeq.map(Literal(_)))))
+      // the optimizer's InSet form of the same list decides the same
+      assert(filterKept(root, Seq(InSet(id, ks.toSet[Any]))) == want, s"InSet ${ks.toSeq}")
       pruned += m.entries.size - want.size
       assert(readKept(root, SnapshotTable.readKeys(spark, root, "id", ks)) == want,
         s"readKeys ${ks.toSeq}")
       assert(SnapshotTable.touchedSplit(m, "id", Some(ks), None)._1.map(_.path).toSet == want,
         s"merge split ${ks.toSeq}")
       // string points, through the string stats and blooms
-      val ss = Array.fill(rnd.nextInt(6) + 1)(f"k${rnd.nextInt(300)}%03d").distinct.sorted
+      val ss = Array.fill(rnd.nextInt(30) + 1)(f"k${rnd.nextInt(300)}%03d").distinct.sorted
       val sb = ss.map(_.getBytes("UTF-8"))
       val wantS = filterKept(sroot, Seq(In(name,
         ss.toSeq.map(s => Literal(UTF8String.fromString(s), StringType)))))
+      assert(filterKept(sroot, Seq(InSet(name, ss.toSet[String].map(UTF8String.fromString(_): Any)))) ==
+        wantS, s"InSet ${ss.toSeq}")
       pruned += ms.entries.size - wantS.size
       assert(readKept(sroot, SnapshotTable.readKeysStr(spark, sroot, "name", ss)) == wantS,
         s"readKeysStr ${ss.toSeq}")
@@ -201,5 +208,64 @@ class PartitionPruningPropertySpec extends SparkSpec {
         s"readRange [$lo, $hi]")
     }
     assert(pruned > 0, "the generated probes must exercise skipping, not only keeps")
+  }
+
+  // eight range-clustered files of 100 keys each, inside the catalog
+  // warehouse so the DSv2 scan reads the same table
+  private lazy val root8: String = {
+    val r = s"$wh/main/t8"
+    SnapshotTable.create(spark, r, spark.range(0, 800).select(col("id"), lit("v").as("v"))
+      .repartitionByRange(8, col("id")), statsKey = Some("id"))
+    r
+  }
+
+  test("PARITY: an IN list past the InSet threshold prunes on every path (readIndexed, deleteWhere, DSv2, readKeys)") {
+    import org.apache.spark.sql.catalyst.expressions.InSet
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val keys = (20L until 40L).toArray // 20 keys, all in the first file
+    assert(SnapshotTable.manifestFull(spark, root8, 1).entries.size == 8)
+    val pred = col("id").isin(keys.toSeq: _*)
+    // V1: the optimizer hands the index an InSet
+    val v1 = SnapshotTable.readIndexed(spark, root8).filter(pred)
+    val scan = graft.PlanWalk.fileScans(v1)
+      .filter(_.relation.location.isInstanceOf[ManifestFileIndex])
+    assert(scan.size == 1)
+    assert(scan.head.dataFilters.exists(_.isInstanceOf[InSet]), scan.head.dataFilters.toString)
+    val v1Kept = scan.head.relation.location.listFiles(Nil, scan.head.dataFilters)
+      .flatMap(_.files).map(s => rel(root8)(s.getPath.toString)).toSet
+    val v2Kept = graft.PlanWalk.batchScans(spark.table("pprop.main.t8").filter(pred)).map(_.scan)
+      .collect { case g: graft.catalog.GraftScan => g.keptRelPaths }.flatten.toSet
+    val keysKept = SnapshotTable.readKeys(spark, root8, "id", keys).inputFiles.map(rel(root8)).toSet
+    assert(v1Kept.size == 1 && v1Kept == v2Kept && v1Kept == keysKept,
+      s"V1 $v1Kept, DSv2 $v2Kept, readKeys $keysKept")
+    assert(v1.count() == 20)
+    // deleteWhere's row-level scan: the same index decision, seen on
+    // the scan its predicate job executed
+    def nodes(p: SparkPlan): Seq[SparkPlan] = graft.PlanWalk.executedNodes(p).flatMap {
+      case i: InMemoryTableScanExec => i +: nodes(i.relation.cachedPlan)
+      case other => Seq(other)
+    }
+    val done = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = done.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def tableScans(): Seq[FileSourceScanExec] = done.toArray(Array.empty[QueryExecution]).toSeq
+      .flatMap(qe => nodes(qe.executedPlan)).collect {
+        case f: FileSourceScanExec if f.relation.location.isInstanceOf[ManifestFileIndex] => f
+      }
+    spark.listenerManager.register(listener)
+    try {
+      assert(SnapshotTable.deleteWhere(spark, root8, pred).isDefined)
+      val deadline = System.currentTimeMillis() + 20000
+      while (tableScans().isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    val delScans = tableScans()
+    assert(delScans.nonEmpty, "deleteWhere ran no scan over the manifest index")
+    assert(delScans.forall(_.metrics("numFiles").value == 1),
+      s"deleteWhere scanned ${delScans.map(_.metrics("numFiles").value)} files")
+    assert(SnapshotTable.read(spark, root8).count() == 780)
   }
 }
