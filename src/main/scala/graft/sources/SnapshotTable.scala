@@ -2046,32 +2046,20 @@ object SnapshotTable {
     // set are the same rows by construction even when `updates` would
     // not evaluate the same way twice. Read back with the WIDENED
     // schema: a batch's NOT NULL nested fields do not survive the
-    // parquet round-trip as such, and a cast to them would fail. A
-    // deterministic batch whose optimized plan is a local relation
-    // already holds its rows on the driver: re-reading it is free, its
-    // key collect runs no job, and a file read-back would add one — it
-    // is used as is. (A nondeterministic projection is folded into the
-    // local relation anew by every optimization, so it is read back.)
+    // parquet round-trip as such, and a cast to them would fail.
     //
-    // Prune-key semantics: gated on the key TYPE (a lossy cast would
-    // yield nulls and wrongly prune everything) — integral keys prune
-    // on the long range, STRING keys on the binary range (unsigned
-    // byte order — the order both parquet's stats and Spark's string
-    // comparisons use); any other type disables skipping, never
-    // correctness. The driver never holds more than cap+1 keys: the
-    // written files' footer row counts bound the key count, and
-    // without that bound a limit(cap+1) does, its one extra row being
-    // how "too many to prune with" is detected.
+    // Prune-key semantics unchanged: gated on the key TYPE (a lossy
+    // cast would yield nulls and wrongly prune everything) — integral
+    // keys prune on the long range, STRING keys on the binary range
+    // (unsigned byte order — the order both parquet's stats and
+    // Spark's string comparisons use); any other type disables
+    // skipping, never correctness. limit(cap+1) inside: the driver
+    // never holds more than cap+1 keys, and one extra row is how "too
+    // many to prune with" is detected.
     val updateFiles = writeDataFiles(spark, root, updates, Some(key), key2AtStart,
       colmap = cmAtStart)
-    val (batch, rowsAtMost) = updates.queryExecution.optimizedPlan match {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-          if updates.queryExecution.analyzed.deterministic => (updates, None)
-      case _ =>
-        (readEntries(spark, root, widened(updates.schema), updateFiles, cmAtStart),
-          Option.when(updateFiles.forall(_.rows.isDefined))(updateFiles.flatMap(_.rows).sum))
-    }
-    val (updateKeys, updateStrKeys) = pruneKeySets(batch, key, maxPruneKeys, rowsAtMost)
+    val batch = readEntries(spark, root, widened(updates.schema), updateFiles, cmAtStart)
+    val (updateKeys, updateStrKeys) = pruneKeySets(batch, key, maxPruneKeys)
     retrying(spark, root, op = "merge") { (latest: Int) =>
       val m = manifestFull(spark, root, latest)
       val tableSchema = schemaOf(spark, root, m)
@@ -4597,22 +4585,18 @@ object SnapshotTable {
     * integral or string, capped at `maxPruneKeys` (beyond the cap the
     * caller rewrites/marks every file rather than collecting a
     * table-sized key set onto the driver). Shared by [[merge]] and
-    * [[mergeOnRead]]. `rowsAtMost`, a known bound on the batch's row
-    * count, drops the cap's `limit` when the batch cannot exceed it: a
-    * limit collects as an incremental take, which runs a second job
-    * whenever the distinct has more than one partition. */
-  private def pruneKeySets(updates: DataFrame, key: String, maxPruneKeys: Int,
-      rowsAtMost: Option[Long] = None): (Option[Array[Long]], Option[Array[Array[Byte]]]) = {
+    * [[mergeOnRead]]. */
+  private def pruneKeySets(updates: DataFrame, key: String, maxPruneKeys: Int):
+      (Option[Array[Long]], Option[Array[Array[Byte]]]) = {
     val keyDt =
       try Some(updates.select(updates(key)).schema.head.dataType)
       catch { case _: Exception => None }
-    def capped(keys: DataFrame): DataFrame =
-      if (rowsAtMost.exists(_ <= maxPruneKeys)) keys else keys.limit(maxPruneKeys + 1)
     val longs: Option[Array[Long]] = keyDt match {
       case Some(org.apache.spark.sql.types.LongType) |
            Some(org.apache.spark.sql.types.IntegerType) =>
-        val ks = capped(updates.select(updates(key).cast("long").as("__k"))
-          .na.drop().distinct())
+        val ks = updates.select(updates(key).cast("long").as("__k"))
+          .na.drop().distinct()
+          .limit(maxPruneKeys + 1)
           .collect().map(_.getLong(0))
         if (ks.length > maxPruneKeys) None
         else { java.util.Arrays.sort(ks); Some(ks) }
@@ -4620,8 +4604,9 @@ object SnapshotTable {
     }
     val strs: Option[Array[Array[Byte]]] = keyDt match {
       case Some(org.apache.spark.sql.types.StringType) =>
-        val ks = capped(updates.select(updates(key).as("__k"))
-          .na.drop().distinct())
+        val ks = updates.select(updates(key).as("__k"))
+          .na.drop().distinct()
+          .limit(maxPruneKeys + 1)
           .collect().map(_.getString(0).getBytes("UTF-8"))
         if (ks.length > maxPruneKeys) None
         else { java.util.Arrays.sort(ks, byteOrder); Some(ks) }
