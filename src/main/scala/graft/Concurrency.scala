@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Shared two-job overlap primitive (guide §2.6: Spark's scheduler
   * happily runs several jobs at once; actions are only sequential
   * because driver code calls them sequentially). `overlap(a, b)` runs
@@ -21,11 +23,15 @@ package graft
   *
   * Contract (same as the inline Future blocks this replaces): the two
   * thunks must be independent jobs — neither may read frames the other
-  * writes. The caller's [[CacheScope]]/[[Scratch]] scopes are carried
-  * onto the pool thread explicitly (pool threads are REUSED, so the
-  * inheritable thread-locals alone would pin whatever scope was live at
-  * pool-thread birth): anything `a` registers lands in the scope the
-  * caller's runner drains. Failure semantics: if `b` throws, `a` is
+  * writes. The caller's [[CacheScope]]/[[Scratch]] scopes and active
+  * `SparkSession` are carried onto the pool thread explicitly (pool
+  * threads are REUSED, so the inheritable thread-locals alone would pin
+  * whatever was live at pool-thread birth): anything `a` registers
+  * lands in the scope the caller's runner drains, and `a` resolves
+  * `SparkSession.active` to the caller's session; the pool thread's own
+  * active session is restored afterwards. SparkContext local
+  * properties (job group, description, scheduler pool) are NOT
+  * carried. Failure semantics: if `b` throws, `a` is
   * still awaited (never left running unobserved against a table the
   * caller is about to clean up) and a pool-side failure is attached as
   * a suppressed exception, then `b`'s propagates; if only `a` throws,
@@ -46,11 +52,22 @@ object Concurrency {
     case other => other
   }
 
+  private def withActiveSession[T](session: Option[SparkSession])(body: => T): T = {
+    def install(s: Option[SparkSession]): Unit =
+      s.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+    val prev = SparkSession.getActiveSession
+    install(session)
+    try body finally install(prev)
+  }
+
   def overlap[A, B](a: => A, b: => B): (A, B) = {
     val cacheScope = CacheScope.currentScope
     val scratchReg = Scratch.currentRegistry
+    val session = SparkSession.getActiveSession
     val fa = new java.util.concurrent.FutureTask[A](() =>
-      CacheScope.withScope(cacheScope) { Scratch.withRegistry(scratchReg) { a } })
+      CacheScope.withScope(cacheScope) { Scratch.withRegistry(scratchReg) {
+        withActiveSession(session) { a }
+      } })
     pool.execute(fa)
     val rb =
       try b

@@ -1,9 +1,11 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.chunk.Chunking
+import graft.geom.ConnectedComponents
 import graft.text.TextFunctions
 import graft.vector.{Dedup, VectorOps}
 
@@ -51,18 +53,39 @@ object Pipeline {
 
   /** Doc ids the dedup pass REMOVES from the corpus: members of exact
     * duplicate groups other than the group's minimum doc_id, plus
-    * non-representative members of near-dup clusters
-    * ([[Dedup.clusterReps]] keep=false). One column `doc_id`. */
+    * non-representative members of near-dup clusters (the ids
+    * [[Dedup.clusterReps]] marks keep=false). One column `doc_id`.
+    *
+    * One corpus pass: the documents are read once into a cached
+    * per-document frame (doc_id, fp = fingerprint, sig = MinHash
+    * signatures), and both halves read that frame.
+    *  - Exact: `doc_id ≠ min(doc_id)` over each `fp`; a null `fp` (null
+    *    text) never groups.
+    *  - Near: the frame's bands feed the same bucket pairs as
+    *    [[Dedup.minhashCandidatePairs]], the [[Dedup.jaccardOnCandidates]]
+    *    verify stage (the only other read of the documents, semi-filtered
+    *    to candidate docs) gives the edges, and a node whose label
+    *    propagation component is not itself is dropped. */
   def droppedDocIds(spark: SparkSession, dir: String,
       cfg: EtlConfig = EtlConfig()): DataFrame = {
-    val exactDrops = Tables.documents(spark, dir)
-      .select(col("doc_id"), TextFunctions.fingerprint(col("text")).as("fp"))
-      .join(Dedup.exactDupGroups(spark, dir), Seq("fp"))
+    val perDoc = Tables.documents(spark, dir)
+      .transform(Parallelism.ensure(spark))
+      .select(col("doc_id"), TextFunctions.fingerprint(col("text")).as("fp"),
+        Dedup.signatures(col("text")).as("sig"))
+      .cache()
+      .transform(CacheScope.register)
+    val exactDrops = perDoc
+      .filter(col("fp").isNotNull)
+      .select(col("doc_id"),
+        min(col("doc_id")).over(Window.partitionBy(col("fp"))).as("keep_doc_id"))
       .filter(col("doc_id") =!= col("keep_doc_id"))
       .select(col("doc_id"))
-    val nearDrops = Dedup.clusterReps(spark, dir, cfg.nearDupThreshold)
-      .filter(!col("keep"))
-      .select(col("doc_id"))
+    val candidates = Dedup.bucketPairs(Dedup.bandsOf(perDoc.select(col("doc_id"), col("sig"))))
+    val edges = Dedup.verifiedPairs(spark, dir, candidates, cfg.nearDupThreshold)
+      .select(col("id_a").as("src"), col("id_b").as("dst"))
+    val nearDrops = ConnectedComponents.labelPropagation(spark, edges)
+      .filter(col("node") =!= col("component"))
+      .select(col("node").as("doc_id"))
     exactDrops.unionByName(nearDrops).distinct()
   }
 

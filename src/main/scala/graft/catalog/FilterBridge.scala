@@ -58,11 +58,15 @@ private[catalog] object FilterBridge {
   }
 
   /** V1 filter → catalyst conjunct over PHYSICAL attribute names, for
-    * the manifest bounds extractor. Only the bound-imposing shapes
-    * translate (equality, comparisons, IN of literals, AND); inside an
-    * AND a lone translatable side stands alone — `A AND unknown`
-    * implies `A`, so pruning with `A` is still conservative. OR/NOT
-    * impose no file bound and translate to None.
+    * the manifest's file-skipping decision (bounds extractor and
+    * partition-value evaluation). Equality, comparisons, IN of
+    * literals, null tests, AND, OR and NOT translate. Inside an AND a
+    * lone translatable side stands alone — `A AND unknown` implies
+    * `A`, so pruning with `A` is still conservative. An OR translates
+    * only when both sides do (`A' OR B'` is implied by `A OR B` when
+    * each side implies its translation). A NOT translates only when
+    * its child translates EXACTLY (strict): `NOT A` does not imply
+    * `NOT A'` for a widened `A'`.
     *
     * `strict = true` flips the AND rule: both sides must translate or
     * the whole conjunct is None. Pruning callers want the lenient
@@ -92,6 +96,8 @@ private[catalog] object FilterBridge {
       case In(a, vs) if vs.nonEmpty && vs.forall(_ != null) =>
         for { x <- attr(a); ys <- traverse(vs.toSeq.map(l)) }
           yield expressions.In(x, ys)
+      case IsNull(a) => attr(a).map(expressions.IsNull(_))
+      case IsNotNull(a) => attr(a).map(expressions.IsNotNull(_))
       case And(lf, rf) =>
         (toCatalystBound(lf, fieldType, phys, strict),
             toCatalystBound(rf, fieldType, phys, strict)) match {
@@ -100,6 +106,13 @@ private[catalog] object FilterBridge {
           case (None, one @ Some(_)) if !strict => one
           case _ => None
         }
+      case Or(lf, rf) =>
+        for {
+          a <- toCatalystBound(lf, fieldType, phys, strict)
+          b <- toCatalystBound(rf, fieldType, phys, strict)
+        } yield expressions.Or(a, b)
+      case Not(c) =>
+        toCatalystBound(c, fieldType, phys, strict = true).map(expressions.Not(_))
       case _ => None
     }
   }

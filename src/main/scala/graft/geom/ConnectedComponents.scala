@@ -21,34 +21,40 @@ object ConnectedComponents {
   /** edges: (src, dst) undirected, long-typed node ids. Returns
     * (node, component) where component = min node id reachable.
     *
-    * Two regimes, picked by MEASURED edge count (the symmetrized frame
-    * is checkpointed anyway, so the count is a cached-block scan):
-    *  - ≤ `localEdgeCap` edges → driver union-find. Dedup pipelines
-    *    cap candidate generation (banded LSH, bucket caps), so their
-    *    verified-pair edge sets are bounded by construction — and
-    *    spending five shuffle rounds of job overhead to label a few
-    *    thousand edges is the wrong trade at ANY scale. The collect is
-    *    bounded by the cap (same contract as the MERGE key-prune cap).
-    *  - above the cap → iterative min-label propagation, rounds =
-    *    graph diameter, driver holds only a changed-count. */
+    * Two regimes, picked by ONE bounded collect of the symmetrized
+    * edges (`limit(localEdgeCap + 1)`): it returns every edge when
+    * there are at most `localEdgeCap` of them, and one more when there
+    * are too many.
+    *  - ≤ `localEdgeCap` edges → driver union-find on the collected
+    *    edges. Dedup pipelines cap candidate generation (banded LSH,
+    *    bucket caps), so their verified-pair edge sets are bounded by
+    *    construction — and spending five shuffle rounds of job
+    *    overhead to label a few thousand edges is the wrong trade at
+    *    ANY scale. The collect is bounded by the cap (same contract as
+    *    the MERGE key-prune cap).
+    *  - above the cap → the edges are checkpointed and labelled by
+    *    iterative min-label propagation, rounds = graph diameter,
+    *    driver holds only a changed-count. */
   def labelPropagation(spark: SparkSession, edges: DataFrame,
       maxIter: Int = 20, localEdgeCap: Long = 200000): DataFrame = {
+    // normalize node ids to long FIRST so both regimes emit the same
+    // (node: long, component: long) schema — without this the output
+    // type would silently depend on which side of the cap the data
+    // landed on
+    val e = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
+    val symmetrized = e.select(col("src"), col("dst"))
+      .unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct()
+    val bounded = symmetrized.limit(math.min(localEdgeCap + 1, Int.MaxValue).toInt).collect()
+    if (bounded.length <= localEdgeCap)
+      return unionFindLocal(spark, bounded.map(r => (r.getLong(0), r.getLong(1))))
     // localCheckpoint, not cache(): the loop re-reads this frame every
     // round, and a cache entry can be EVICTED under storage pressure in a
     // long session — silently re-running the (possibly very expensive)
     // edge-producing lineage once per iteration. Checkpoint blocks are
     // MEMORY_AND_DISK: under pressure they spill instead of dropping, and
     // the truncated lineage caps every round at one join + one aggregate.
-    // normalize node ids to long FIRST so both regimes emit the same
-    // (node: long, component: long) schema — without this the output
-    // type would silently depend on which side of the cap the data
-    // landed on
-    val e = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-    val sym = e.select(col("src"), col("dst"))
-      .unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint()
-    if (sym.count() <= localEdgeCap) return unionFindLocal(spark, sym)
+    val sym = symmetrized.localCheckpoint()
     val nodes = sym.select(col("src").as("node")).distinct()
     var labels = nodes.withColumn("component", col("node")).localCheckpoint()
     var converged = false
@@ -77,13 +83,11 @@ object ConnectedComponents {
     labels
   }
 
-  /** Exact components of a BOUNDED symmetrized edge frame: collect,
-    * union-find with path compression, re-label every root to the min
-    * member (so the representative matches min-label propagation),
-    * return as a local relation. */
-  private def unionFindLocal(spark: SparkSession, sym: DataFrame): DataFrame = {
-    val es = sym.select(col("src").cast("long"), col("dst").cast("long"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+  /** Exact components of a collected edge set: union-find with path
+    * compression, re-label every root to the min member (so the
+    * representative matches min-label propagation), return as a local
+    * relation. */
+  private def unionFindLocal(spark: SparkSession, es: Array[(Long, Long)]): DataFrame = {
     val parent = scala.collection.mutable.LongMap.empty[Long]
     def find(x: Long): Long = {
       var root = x

@@ -61,14 +61,20 @@ object Dedup {
     * at 100 TB ([[droppedBuckets]] reports what was skipped). */
   def minhashCandidatePairs(spark: SparkSession, dir: String,
       numHashes: Int = 8, bandSize: Int = 2, maxBucket: Int = 64): DataFrame =
-    bandedDocs(spark, dir, numHashes, bandSize)
+    bucketPairs(bandedDocs(spark, dir, numHashes, bandSize), maxBucket)
+      .orderBy(col("id_a"), col("id_b"), col("band"))
+
+  /** Distinct (id_a, id_b, band) pairs inside every band bucket of
+    * 2..`maxBucket` docs, from (doc_id, band, band_key) rows — the
+    * pair stage of [[minhashCandidatePairs]], unordered. */
+  private[graft] def bucketPairs(bands: DataFrame, maxBucket: Int = 64): DataFrame =
+    bands
       .groupBy(col("band"), col("band_key"))
       .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
       .filter(size(col("ids")).between(2, maxBucket))
       .select(col("band"), explode(pairsOf(col("ids"))).as("p"))
       .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"), col("band"))
       .distinct()
-      .orderBy(col("id_a"), col("id_b"), col("band"))
 
   private def bandedDocs(spark: SparkSession, dir: String,
       numHashes: Int, bandSize: Int): DataFrame =
@@ -84,15 +90,25 @@ object Dedup {
     * both engines compute identically. 16 digest bytes hold 8 slots, so
     * numHashes ≤ 8, and bandSize must divide numHashes. */
   private[graft] def bandedOf(docs: DataFrame,
+      numHashes: Int = 8, bandSize: Int = 2): DataFrame =
+    bandsOf(docs.select(col("doc_id"), signatures(col("text"), numHashes).as("sig")),
+      numHashes, bandSize)
+
+  /** The `numHashes` MinHash signatures of a text column, the input of
+    * [[bandsOf]]. */
+  private[graft] def signatures(text: Column, numHashes: Int = 8): Column =
+    Shingling.minhashSignatures(TextFunctions.tokens(lower(text)), numHashes)
+
+  /** (doc_id, band, band_key) rows of a (doc_id, sig) frame whose `sig`
+    * is [[signatures]] with the same `numHashes`. */
+  private[graft] def bandsOf(sigs: DataFrame,
       numHashes: Int = 8, bandSize: Int = 2): DataFrame = {
     checkBanding(numHashes, bandSize)
     val bandStructs = (0 until numHashes / bandSize).map { b =>
       val parts = (0 until bandSize).map(j => col("sig").getItem(b * bandSize + j))
       struct(lit(b.toLong).as("band"), concat_ws("|", parts: _*).as("band_key"))
     }
-    docs
-      .select(col("doc_id"), Shingling.minhashSignatures(
-        TextFunctions.tokens(lower(col("text"))), numHashes).as("sig"))
+    sigs
       .select(col("doc_id"), explode(array(bandStructs: _*)).as("bk"))
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.band_key").as("band_key"))
   }
@@ -482,7 +498,15 @@ object Dedup {
     * is not left to the cost model: its estimate for a cached frame is
     * taken before the cache fills, and when it ranks the candidate
     * side smaller, the shingle side is broadcast a second time. */
-  def jaccardOnCandidates(spark: SparkSession, dir: String, threshold: Double = 0.5): DataFrame = {
+  def jaccardOnCandidates(spark: SparkSession, dir: String, threshold: Double = 0.5): DataFrame =
+    verifiedPairs(spark, dir, minhashCandidatePairs(spark, dir), threshold)
+      .orderBy(col("id_a"), col("id_b"))
+
+  /** The verify stage of [[jaccardOnCandidates]] over any candidate
+    * frame with `id_a`, `id_b` columns: (id_a, id_b, jaccard) rows at
+    * or above `threshold`, unordered. */
+  private[graft] def verifiedPairs(spark: SparkSession, dir: String,
+      candidates: DataFrame, threshold: Double): DataFrame = {
     // The candidate frame fans out three ways (pair spine, a-side id set,
     // b-side id set): without a materialization point each reference
     // re-runs the whole minhash→banding pipeline — several extra corpus
@@ -490,7 +514,7 @@ object Dedup {
     // by the per-bucket cap (≤ numBands · C(maxBucket,2) rows per bucket),
     // shingle rows by the candidate id set. cache() is safe in a long
     // session for the same reason.
-    val cand = minhashCandidatePairs(spark, dir)
+    val cand = candidates
       .select(col("id_a"), col("id_b")).distinct()
       .cache()
       .transform(graft.CacheScope.register)
@@ -512,7 +536,6 @@ object Dedup {
         size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
           .divide(size(array_union(col("sh_a"), col("sh_b")))).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-      .orderBy(col("id_a"), col("id_b"))
   }
 
   /** EDIT-DISTANCE verify stage over the MinHash candidates — the

@@ -2,11 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The overlap primitive's two hardening guarantees: the pool-side
-  * thunk runs under the CALLER's CacheScope/Scratch scopes even on a
-  * reused pool thread (inheritable thread-locals alone pin the scope
-  * live at pool-thread birth), and a pool-side failure is never lost
-  * when the caller's half fails too. */
+/** The overlap primitive's hardening guarantees: the pool-side thunk
+  * runs under the CALLER's CacheScope/Scratch scopes and active
+  * SparkSession even on a reused pool thread (inheritable thread-locals
+  * alone pin the values live at pool-thread birth), and a pool-side
+  * failure is never lost when the caller's half fails too. */
 class ConcurrencySpec extends AnyFunSuite {
 
   test("pool-side thunk sees the caller's CacheScope, including on a reused pool thread") {
@@ -35,6 +35,26 @@ class ConcurrencySpec extends AnyFunSuite {
         "the caller's registry must hold the path the pool-side thunk registered")
       assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(ghost)))
     }
+  }
+
+  test("pool-side thunk resolves the caller's active SparkSession, including a second session") {
+    import org.apache.spark.sql.SparkSession
+    val first = SparkSpec.session
+    val second = first.newSession()
+    val before = SparkSession.getActiveSession
+    try {
+      for (s <- Seq(second, first, second)) {
+        SparkSession.setActiveSession(s)
+        val (seen, _) = Concurrency.overlap(SparkSession.active, ())
+        assert(seen eq s, "the pooled thunk must see the caller's active session")
+        assert(SparkSession.active eq s, "the caller's active session must be unchanged")
+      }
+      // a caller with no active session hands none over, whatever the
+      // reused pool thread last ran with
+      SparkSession.clearActiveSession()
+      val (none, _) = Concurrency.overlap(SparkSession.getActiveSession, ())
+      assert(none.isEmpty)
+    } finally before.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
   }
 
   test("double failure: caller-side exception propagates with the pool-side one suppressed") {

@@ -33,6 +33,33 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(fast == dist)
   }
 
+  test("regime boundary: localEdgeCap edges stay local in one collect, one more propagates") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    // 6 undirected edges symmetrize to 12 directed ones: cap 12 holds
+    // exactly the cap (local), cap 11 sees one edge past it (propagation)
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L), (20L, 21L))
+      .toDF("src", "dst")
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+      10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L)
+    // the jobs of ONE bounded collect of the symmetrized edges (AQE
+    // runs the distinct's shuffle map stage as a job of its own)
+    val counter = new JobCounter(spark)
+    try {
+      edges.unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
+        .distinct().limit(13).collect()
+      val oneCollect = counter.count()
+      for ((cap, local) <- Seq(12L -> true, 11L -> false)) {
+        counter.reset()
+        val out = ConnectedComponents.labelPropagation(spark, edges, localEdgeCap = cap)
+        val jobs = counter.count()
+        if (local) assert(jobs == oneCollect, s"cap=$cap: $jobs jobs, one collect runs $oneCollect")
+        else assert(jobs > oneCollect, s"cap=$cap: $jobs jobs")
+        assert(out.queryExecution.logical.isInstanceOf[LocalRelation] == local, s"cap=$cap")
+        assert(out.as[(Long, Long)].collect().toMap == want, s"cap=$cap")
+      }
+    } finally counter.close()
+  }
+
   test("every overlap edge's endpoints land in the same component") {
     val out = ConnectedComponents.componentRects(spark, sf)
     // components partition the rects: member counts sum to total rects

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * untranslatable conjunct, keep more files — safe); the
   * partition-scoped overwrite translation must refuse instead, because
   * a dropped conjunct would widen the REPLACEMENT beyond the scope the
-  * statement named. */
+  * statement named. OR and NOT must never widen into a wrong skip. */
 class FilterBridgeSpec extends AnyFunSuite {
 
   private val types = Map("lang" -> StringType, "doc_id" -> LongType)
@@ -45,5 +45,23 @@ class FilterBridgeSpec extends AnyFunSuite {
     assert(e.isDefined)
     assert(e.get.toString.contains("lang"))
     assert(e.get.toString.contains("doc_id"))
+  }
+
+  test("OR translates only when both sides do; NOT only over an exact child") {
+    val en = EqualTo("lang", "en")
+    val one = EqualTo("doc_id", 1L)
+    // OR of two widened sides is still implied by the original
+    val or = FilterBridge.toCatalystBound(Or(And(en, unknown), one), ft, phys)
+    assert(or.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.Or]))
+    assert(!or.get.toString.contains("ghost"))
+    assert(FilterBridge.toCatalystBound(Or(en, unknown), ft, phys).isEmpty)
+    assert(FilterBridge.toCatalystBound(Or(And(en, unknown), one), ft, phys,
+      strict = true).isEmpty)
+    // NOT of a widened child would prune files the original keeps
+    assert(FilterBridge.toCatalystBound(Not(And(en, unknown)), ft, phys).isEmpty)
+    assert(FilterBridge.toCatalystBound(Not(unknown), ft, phys).isEmpty)
+    val not = FilterBridge.toCatalystBound(Not(Or(en, IsNull("lang"))), ft, phys)
+    assert(not.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.Not]))
+    assert(not.get.toString.contains("isnull"))
   }
 }

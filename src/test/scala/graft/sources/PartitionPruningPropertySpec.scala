@@ -17,11 +17,11 @@ import graft.SparkSpec
   *
   * PARITY: every entry point reaches the same file-skipping decision
   * ([[ManifestPruning.partition]]) — the V1 index behind `readIndexed`
-  * and the catalog's DSv2 scan return the same rows for every generated
-  * predicate and keep the same files for the conjuncts both receive,
-  * and the key/range APIs (`readKeys`, `readKeysStr`,
-  * `readRange`) and merge's touched-file split keep exactly the files
-  * the filter-driven decision keeps for the equivalent conjuncts. */
+  * and the catalog's DSv2 scan return the same rows and keep the same
+  * files for every generated predicate, and the key/range APIs
+  * (`readKeys`, `readKeysStr`, `readRange`) and merge's touched-file
+  * split keep exactly the files the filter-driven decision keeps for
+  * the equivalent conjuncts. */
 class PartitionPruningPropertySpec extends SparkSpec {
   import spark.implicits._
 
@@ -122,9 +122,7 @@ class PartitionPruningPropertySpec extends SparkSpec {
     p.substring(p.indexOf(under) + under.length + 1)
 
   test("PARITY: readIndexed (V1) and the catalog scan (DSv2) keep the same files and rows") {
-    import org.apache.spark.sql.catalyst.expressions.{Not, Or}
     val rnd = new scala.util.Random(7)
-    var orNot = 0
     (1 to 30).foreach { i =>
       val p = pred(rnd, 2)
       val v1 = SnapshotTable.readIndexed(spark, root).filter(p)
@@ -139,18 +137,11 @@ class PartitionPruningPropertySpec extends SparkSpec {
           .map(s => rel(root)(s.getPath.toString)).toSet
       val v2Files = graft.PlanWalk.batchScans(v2).map(_.scan)
         .collect { case g: graft.catalog.GraftScan => g.keptRelPaths }.flatten.toSet
-      // the catalog's filter translation carries no OR / NOT conjunct
-      // (graft.catalog.FilterBridge), so the DSv2 scan prunes on the
-      // rest: same decision on the same conjuncts, never fewer files
-      val (withOrNot, plain) = scan.head.dataFilters.partition(_.find {
-        case _: Or | _: Not => true
-        case _ => false
-      }.isDefined)
-      if (withOrNot.nonEmpty) orNot += 1
-      assert(v1Kept(plain) == v2Files, s"sample $i: kept files differ for $p")
-      assert(v1Kept(scan.head.dataFilters).subsetOf(v2Files), s"sample $i: $p")
+      // the catalog's filter translation (graft.catalog.FilterBridge)
+      // carries OR, NOT and null-test conjuncts too: the same decision
+      // on the full predicate
+      assert(v1Kept(scan.head.dataFilters) == v2Files, s"sample $i: kept files differ for $p")
     }
-    assert(orNot < 30, "some samples must compare the full predicate")
   }
 
   test("PARITY: readKeys / readKeysStr / readRange and merge's split keep the filter decision") {
