@@ -61,7 +61,8 @@ object Pipeline {
     * signatures), and both halves read that frame.
     *  - Exact: `doc_id ≠ min(doc_id)` over each `fp`; a null `fp` (null
     *    text) never groups.
-    *  - Near: the frame's bands feed the same bucket pairs as
+    *  - Near: the frame's bands (`cfg.minhashHashes` signatures in
+    *    bands of `cfg.minhashBandSize`) feed the same bucket pairs as
     *    [[Dedup.minhashCandidatePairs]], the [[Dedup.jaccardOnCandidates]]
     *    verify stage (the only other read of the documents, semi-filtered
     *    to candidate docs) gives the edges, and a node whose label
@@ -71,7 +72,7 @@ object Pipeline {
     val perDoc = Tables.documents(spark, dir)
       .transform(Parallelism.ensure(spark))
       .select(col("doc_id"), TextFunctions.fingerprint(col("text")).as("fp"),
-        Dedup.signatures(col("text")).as("sig"))
+        Dedup.signatures(col("text"), cfg.minhashHashes).as("sig"))
       .cache()
       .transform(CacheScope.register)
     val exactDrops = perDoc
@@ -80,7 +81,8 @@ object Pipeline {
         min(col("doc_id")).over(Window.partitionBy(col("fp"))).as("keep_doc_id"))
       .filter(col("doc_id") =!= col("keep_doc_id"))
       .select(col("doc_id"))
-    val candidates = Dedup.bucketPairs(Dedup.bandsOf(perDoc.select(col("doc_id"), col("sig"))))
+    val candidates = Dedup.bucketPairs(Dedup.bandsOf(perDoc.select(col("doc_id"), col("sig")),
+      cfg.minhashHashes, cfg.minhashBandSize))
     val edges = Dedup.verifiedPairs(spark, dir, candidates, cfg.nearDupThreshold)
       .select(col("id_a").as("src"), col("id_b").as("dst"))
     val nearDrops = ConnectedComponents.labelPropagation(spark, edges)

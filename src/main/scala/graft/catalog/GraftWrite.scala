@@ -5,11 +5,10 @@ import java.io.{IOException, ObjectInputStream, ObjectOutputStream}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetOutputFormat
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetWriteSupport}
 import org.apache.spark.sql.sources.{AlwaysTrue, And, EqualNullSafe, EqualTo, Filter, In, InsertableRelation}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructType}
 
@@ -18,7 +17,7 @@ import graft.sources.SnapshotTable
 /** INSERT INTO / INSERT OVERWRITE / CTAS-append for the snapshot
   * table, as a [[V1Write]]: the engine hands the fully-planned batch
   * frame to [[InsertableRelation.insert]], and the table's own commit
-  * machinery does what it always does — footer-measured stats, CHECK
+  * machinery does what it always does — write-loop stats, CHECK
   * constraints riding the write, column-map translation, schema
   * alignment, optimistic retry. One write path, two front doors.
   * Overwrite commits op "rewrite" (whole-snapshot replace — CDC and
@@ -223,9 +222,66 @@ private[graft] object GraftCommitMessage {
 private[graft] final case class GraftMultiCommitMessage(
     files: Seq[GraftCommitMessage]) extends WriterCommitMessage
 
-/** Which write-schema ordinal feeds which stats slot, and how. */
-private[graft] final case class StatsSpec(ordinal: Int, isString: Boolean,
-    secondary: Boolean)
+/** Which write-schema field feeds which stats slot, and how: `path`
+  * walks struct ordinals from the top level down to the key field,
+  * `widths` holds the field count of each struct on the way. */
+private[graft] final case class StatsSpec(path: IndexedSeq[Int],
+    widths: IndexedSeq[Int], keyType: DataType, secondary: Boolean) {
+  def isString: Boolean = keyType == StringType
+
+  /** The struct that holds the key in `row` (the row itself for a
+    * top-level key), or null when a struct on the way is null. */
+  def holder(row: InternalRow): InternalRow = {
+    var r = row
+    var i = 0
+    while (r != null && i < widths.length) {
+      r = if (r.isNullAt(path(i))) null else r.getStruct(path(i), widths(i))
+      i += 1
+    }
+    r
+  }
+
+  /** The key as a column reference into `schema` (the same shape the
+    * spec was resolved on): each name on the path backtick-quoted. */
+  def columnIn(schema: StructType): String = {
+    var st = schema
+    path.map { i =>
+      val f = st.fields(i)
+      f.dataType match { case s: StructType => st = s; case _ => }
+      "`" + f.name.replace("`", "``") + "`"
+    }.mkString(".")
+  }
+}
+
+private[graft] object StatsSpec {
+  /** The stats specs of `key` (primary slot) and `key2` (secondary) over
+    * `schema`, for every writer. A key names a top-level field, else a
+    * dotted path through structs (`metadata.doc_id`), matched
+    * case-insensitively; it gets a spec only when that field is
+    * integral or a string, the types the manifest prunes on. */
+  def resolve(schema: StructType, key: Option[String],
+      key2: Option[String]): Seq[StatsSpec] = {
+    def walk(st: StructType, segs: List[String], path: Vector[Int],
+        widths: Vector[Int], secondary: Boolean): Option[StatsSpec] = segs match {
+      case seg :: rest =>
+        val i = st.fields.indexWhere(_.name.equalsIgnoreCase(seg))
+        if (i < 0) None
+        else (st.fields(i).dataType, rest) match {
+          case (t @ (LongType | IntegerType | StringType), Nil) =>
+            Some(StatsSpec(path :+ i, widths, t, secondary))
+          case (s: StructType, _ :: _) =>
+            walk(s, rest, path :+ i, widths :+ s.length, secondary)
+          case _ => None
+        }
+      case Nil => None
+    }
+    def spec(k: String, secondary: Boolean): Option[StatsSpec] =
+      walk(schema, List(k), Vector.empty, Vector.empty, secondary).orElse(
+        walk(schema, k.split('.').toList, Vector.empty, Vector.empty, secondary))
+    Seq(key.flatMap(spec(_, secondary = false)),
+      key2.flatMap(spec(_, secondary = true))).flatten
+  }
+}
 
 /** The row-level (group-based copy-on-write) write: MERGE INTO /
   * UPDATE / non-filter DELETE land here. Executor tasks write parquet
@@ -331,24 +387,12 @@ private[catalog] final class GraftFileBatchWrite(spark: SparkSession,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     // files spell physical names (at every struct level); the batch
-    // arrives logical
-    val physWrite = snap.physSchemaFor(writeSchema)
-    def spec(key: Option[String], secondary: Boolean): Option[StatsSpec] =
-      key.flatMap { k =>
-        writeSchema.fields.zipWithIndex.collectFirst {
-          case (f, i) if f.name.equalsIgnoreCase(k) => (f.dataType, i)
-        }.collect {
-          case (LongType | IntegerType, i) => StatsSpec(i, isString = false, secondary)
-          case (StringType, i) => StatsSpec(i, isString = true, secondary)
-        }
-      }
+    // arrives logical, with the same ordinals at every level
     GraftWriterFactory(
       new SerializableHadoopConf(GraftParquetWriter.confWithSessionKeys(
         spark.sparkContext.hadoopConfiguration)),
-      snap.root, batchDir, physWrite,
-      Seq(spec(snap.statsKey, secondary = false),
-        spec(snap.statsKey2, secondary = true)).flatten,
-      split)
+      snap.root, batchDir, snap.physSchemaFor(writeSchema),
+      StatsSpec.resolve(writeSchema, snap.statsKey, snap.statsKey2), split)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -586,8 +630,10 @@ private[catalog] final class GraftSplitDataWriter(conf: Configuration,
   * accumulate in the loop (min/max per configured key — long widened
   * from int, strings as UTF-8 bytes in unsigned order, exactly the
   * manifest's stats semantics). A task that saw no rows writes no file
-  * at all. Speculative duplicates are excluded by Spark's commit
-  * coordinator; the losers' files die in [[DataWriter.abort]]. */
+  * at all; a committed file counts in the task's output metrics (bytes,
+  * records), as `df.write`'s do. Speculative duplicates are excluded
+  * by Spark's commit coordinator; the losers' files die in
+  * [[DataWriter.abort]]. */
 private[graft] final class GraftParquetWriter(conf: Configuration, root: String,
     relPath: String, physSchema: StructType, stats: Seq[StatsSpec])
   extends DataWriter[InternalRow] {
@@ -605,7 +651,7 @@ private[graft] final class GraftParquetWriter(conf: Configuration, root: String,
     ParquetWriteSupport.setSchema(physSchema, c)
     c.set(ParquetOutputFormat.WRITE_SUPPORT_CLASS, classOf[ParquetWriteSupport].getName)
     new ParquetOutputFormat[InternalRow]().getRecordWriter(
-      c, new Path(root, relPath), CompressionCodecName.SNAPPY)
+      c, new Path(root, relPath), ParquetOutputFormat.getCompression(c))
   }
 
   /** Rows arrive either exactly as the write schema, or (group-based
@@ -631,9 +677,11 @@ private[graft] final class GraftParquetWriter(conf: Configuration, root: String,
     val row = if (fieldOffset == 0) row0 else trim(row0)
     if (writer == null) writer = open()
     stats.foreach { s =>
-      if (!row.isNullAt(s.ordinal)) {
+      val r = s.holder(row)
+      val o = s.path.last
+      if (r != null && !r.isNullAt(o)) {
         if (s.isString) {
-          val v = row.getUTF8String(s.ordinal).getBytes.clone()
+          val v = r.getUTF8String(o).getBytes.clone()
           if (s.secondary) {
             if (min2B == null || ord(v, min2B) < 0) min2B = v
             if (max2B == null || ord(v, max2B) > 0) max2B = v
@@ -642,10 +690,7 @@ private[graft] final class GraftParquetWriter(conf: Configuration, root: String,
             if (maxB == null || ord(v, maxB) > 0) maxB = v
           }
         } else {
-          val v = physSchema.fields(s.ordinal).dataType match {
-            case IntegerType => row.getInt(s.ordinal).toLong
-            case _ => row.getLong(s.ordinal)
-          }
+          val v = if (s.keyType == IntegerType) r.getInt(o).toLong else r.getLong(o)
           if (s.secondary) {
             if (min2L == null || v < min2L) min2L = v
             if (max2L == null || v > max2L) max2L = v
@@ -667,6 +712,7 @@ private[graft] final class GraftParquetWriter(conf: Configuration, root: String,
     writer.close(null)
     val p = new Path(root, relPath)
     val len = p.getFileSystem(conf).getFileStatus(p).getLen
+    org.apache.spark.sql.graftbridge.Bridge.addTaskOutput(len, rows)
     GraftCommitMessage(relPath, rows, len,
       Option(minL).map(_.longValue), Option(maxL).map(_.longValue),
       Option(minB), Option(maxB),
@@ -688,11 +734,15 @@ private[graft] object GraftParquetWriter {
   /** [[ParquetWriteSupport]] and its schema converter ASSERT a set of
     * session keys are present in the hadoop conf (the V1 write path
     * plants them in `prepareWrite`); bake the DRIVER session's values
-    * in before the conf ships to writer tasks. */
+    * in before the conf ships to writer tasks, with the session's
+    * compression codec (`spark.sql.parquet.compression.codec`), which
+    * `prepareWrite` also sets. */
   def confWithSessionKeys(base: Configuration): Configuration = {
     import org.apache.spark.sql.internal.SQLConf
     val c = new Configuration(base)
     val sql = SQLConf.get
+    c.set(ParquetOutputFormat.COMPRESSION,
+      new ParquetOptions(Map.empty[String, String], sql).compressionCodecClassName)
     Seq(
       SQLConf.PARQUET_WRITE_LEGACY_FORMAT,
       SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE,

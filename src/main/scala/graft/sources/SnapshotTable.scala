@@ -160,16 +160,16 @@ object SnapshotTable {
 
   /** One manifest data-file line: relative path + optional min/max of
     * the table's primary stats key (long for integral keys, base64
-    * binary for string keys) + optional row count (from the parquet
-    * footer at write time — powers DESCRIBE HISTORY and empty-batch
-    * detection with zero data I/O) + optional file size in bytes (from
-    * the write's own directory listing — what lets [[ManifestFileIndex]]
-    * build its FileStatuses from the manifest alone, no per-file RPCs
-    * at planning time) + optional min/max of the SECONDARY stats key
-    * (long for integral secondaries, base64 binary for string ones —
-    * format 5; the reference's chunk identity `(filename, chunk_idx)`
-    * has the string FIRST, but the flipped layout `(chunk_idx,
-    * filename)` is just as legal and must 2D-prune too). The pruning
+    * binary for string keys) + optional row count (measured in the
+    * write loop — powers DESCRIBE HISTORY with zero data I/O) +
+    * optional file size in bytes (from the writer's commit — what lets
+    * [[ManifestFileIndex]] build its FileStatuses from the manifest
+    * alone, no per-file RPCs at planning time) + optional min/max of
+    * the SECONDARY stats key (long for integral secondaries, base64
+    * binary for string ones — format 5; the reference's chunk identity
+    * `(filename, chunk_idx)` has the string FIRST, but the flipped
+    * layout `(chunk_idx, filename)` is just as legal and must 2D-prune
+    * too). The pruning
     * decision over these fields lives in [[ManifestPruning]]. */
   private[sources] final case class FileEntry(path: String, minKey: Option[Long],
       maxKey: Option[Long], rows: Option[Long] = None, bytes: Option[Long] = None,
@@ -743,21 +743,19 @@ object SnapshotTable {
   def readSchema(spark: SparkSession, root: String, v: Int): Option[org.apache.spark.sql.types.StructType] =
     manifestFull(spark, root, v).schema
 
-  /** Write `df` as immutable data files under root/data/<uuid>/ and
-    * return their entries — with per-file min/max stats of `statsKey`
-    * and optionally `statsKey2` (each integral or string) when they
-    * resolve to prunable columns.
+  /** Write `df0` as immutable data files under
+    * root/data/<batchPrefix>-<uuid>/ and return their entries in task
+    * order, each with its row count, size and min/max of `statsKey`
+    * and optionally `statsKey2` (integral or string, top-level or
+    * nested in structs — [[graft.catalog.StatsSpec.resolve]]).
     *
-    * Stats come from the PARQUET FOOTERS of the just-written files —
-    * zero Spark jobs and zero data I/O. The parquet writer already
-    * computed per-row-group min/max for every column; re-deriving them
-    * with an aggregate (what this replaces) re-read the entire batch on
-    * the write path — at 100 TB that doubled write I/O for numbers
-    * sitting in a few KB of footer metadata. Footer reads are
-    * driver-side, ~KB each, parallelized across a small pool so a
-    * thousands-of-files compaction batch doesn't serialize on
-    * round-trip latency. Any unreadable/statless footer degrades to
-    * no-stats (conservative rewrite), never to a wrong range. */
+    * The executor tasks measure those facts as they write
+    * ([[writeRolled]], one file per task), so an entry costs no footer
+    * read, no listing and no extra job, and a task that saw no rows
+    * writes no file: an empty batch returns no entries. Stats are taken
+    * on the full values, so string bounds are never truncated.
+    * `bloomKey` adds per-file blooms over the stats keys
+    * ([[attachBlooms]]). */
   private def writeDataFiles(spark: SparkSession, root: String, df0: DataFrame,
       statsKey: Option[String] = None,
       statsKey2: Option[String] = None,
@@ -766,78 +764,17 @@ object SnapshotTable {
       batchPrefix: String = "batch"): Seq[FileEntry] = {
     // column mapping (format 9): batches arrive LOGICAL, files store
     // PHYSICAL — one projection here keeps every caller logical-only.
-    // Stats keys translate the same way: the footer reader and the
-    // bloom builder both address the column as the file spells it.
+    // Stats keys resolve on the logical schema; the ordinals are the
+    // same in the physical one.
     val df = toPhysical(df0, colmap)
-    val physKey = statsKey.map(physFor(colmap, _))
-    val physKey2 = statsKey2.map(physFor(colmap, _))
+    val stats = graft.catalog.StatsSpec.resolve(df0.schema, statsKey, statsKey2)
     val batch = s"data/$batchPrefix-${java.util.UUID.randomUUID().toString.take(8)}"
-    df.write.parquet(s"$root/$batch")
-    val f = fs(spark, root)
-    // sizes ride the listing the write already pays for — recorded in
-    // the manifest so planning-time file skipping never stats files
-    val paths = f.listStatus(new Path(root, batch))
-      .filter(s => s.getPath.getName.endsWith(".parquet"))
-      .map(s => (s"$batch/${s.getPath.getName}", s.getLen)).sortBy(_._1).toSeq
-    def colType(k: String): Option[org.apache.spark.sql.types.DataType] =
-      try Some(df.select(df(k)).schema.head.dataType) catch { case _: Exception => None }
-    // keyKind: Some((name, isString)) when the stats key is a type we
-    // can range-prune on — integral (long stats) or string (binary
-    // min/max in unsigned byte order); anything else disables stats
-    val keyKind: Option[(String, Boolean)] = physKey.flatMap { k =>
-      colType(k) match {
-        case Some(org.apache.spark.sql.types.LongType |
-                  org.apache.spark.sql.types.IntegerType) => Some((k, false))
-        case Some(org.apache.spark.sql.types.StringType) => Some((k, true))
-        case _ => None
-      }
-    }
-    // the secondary stats key admits the same types as the primary:
-    // integral (long stats) or string (binary stats, format 5)
-    val key2Kind: Option[(String, Boolean)] = physKey2.flatMap { k =>
-      colType(k) match {
-        case Some(org.apache.spark.sql.types.LongType |
-                  org.apache.spark.sql.types.IntegerType) => Some((k, false))
-        case Some(org.apache.spark.sql.types.StringType) => Some((k, true))
-        case _ => None
-      }
-    }
-    // every file gets one footer read: row counts always (DESCRIBE
-    // HISTORY + empty-batch detection), key min/max when the stats key
-    // is prunable — still zero Spark jobs and zero data I/O
-    if (paths.isEmpty) Seq.empty
-    else {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.max(1, math.min(16, paths.size)))
-      try {
-        val futures = paths.map { case (rel, len) =>
-          pool.submit(new java.util.concurrent.Callable[FileEntry] {
-            override def call(): FileEntry = {
-              val (rows, st, stS, st2, st2S) =
-                try footerInfo(conf, new Path(root, rel), keyKind, key2Kind)
-                catch { case _: Exception => (None, None, None, None, None) }
-              FileEntry(rel, st.map(_._1), st.map(_._2), rows, Some(len),
-                stS.map(_._1), stS.map(_._2), st2.map(_._1), st2.map(_._2),
-                st2S.map(_._1), st2S.map(_._2))
-            }
-          })
-        }
-        val entries = futures.map(_.get())
-        // zero-row parts (empty shuffle partitions — routine under a
-        // skewed or over-partitioned write) are dropped from the
-        // manifest AND from disk: an empty file carries no stats and
-        // no bloom, so every pruning layer conservatively keeps it —
-        // a dead scan on every future point probe — while holding no
-        // rows. rows=None (unreadable footer) stays, conservatively.
-        val (empty, live) = entries.partition(_.rows.contains(0L))
-        if (live.isEmpty) // all-empty batch: no entry will reference the dir
-          try f.delete(new Path(root, batch), true) catch { case _: Exception => () }
-        else empty.foreach(e =>
-          try f.delete(new Path(root, e.path), false) catch { case _: Exception => () })
-        if (bloomKey) attachBlooms(spark, root, live, keyKind, key2Kind) else live
-      } finally pool.shutdown()
-    }
+    val entries = writeRolled(spark, root, batch, df, df.schema, stats, routed = false)
+    // the bloom builder reads the written files, so it addresses the
+    // key as the file spells it
+    def kind(secondary: Boolean): Option[(String, Boolean)] =
+      stats.find(_.secondary == secondary).map(s => (s.columnIn(df.schema), s.isString))
+    if (bloomKey) attachBlooms(spark, root, entries, kind(false), kind(true)) else entries
   }
 
   /** The bucketed layout's file naming: files of a bucketed rewrite
@@ -868,12 +805,8 @@ object SnapshotTable {
     * admits many files per bucket id). Rows sort by key within each
     * file, so row-group stats stay selective.
     *
-    * Executor tasks write through [[graft.catalog.GraftParquetWriter]]
-    * and measure rows + stats-key min/max IN the write loop — the
-    * per-file facts return as the job result, so the manifest entries
-    * cost ZERO post-write footer reads (the r13 path re-read every
-    * footer through a 16-thread driver pool; at thousands of buckets
-    * that was thousands of driver reads per re-layout). */
+    * Executor tasks write through [[writeRolled]], which measures rows
+    * + stats-key min/max in the write loop. */
   private def writeBucketedFiles(spark: SparkSession, root: String,
       df0: DataFrame, buckets: Int, key: String, key2: Option[String],
       colmap: Map[String, String], targetFileBytes: Option[Long] = None,
@@ -888,7 +821,6 @@ object SnapshotTable {
       "bucketed writes reserve the column name _graft_bucket " +
         "(it becomes the bucket directory); rename the column first")
     val physKey = physFor(colmap, key)
-    val physKey2 = key2.map(physFor(colmap, _))
     val physSchema = df.schema
     val batch = s"data/bkt$buckets-${java.util.UUID.randomUUID().toString.take(8).filter(_ != '-')}"
     // salt width: enough extra splits that each (bucket, salt) file
@@ -913,32 +845,11 @@ object SnapshotTable {
           col("_graft_bucket").cast("string")).as("_graft_dir") :+
         col("_graft_salt").as("_graft_roll"): _*)
     writeRolled(spark, root, batch, prepared, physSchema,
-      statsSpecsFor(physSchema, Some(physKey), physKey2))
+      graft.catalog.StatsSpec.resolve(df0.schema, Some(key), key2))
   }
 
-  /** Stats specs over the physical data columns: which write-schema
-    * ordinal feeds which manifest stats slot (same types the manifest
-    * can prune on). */
-  private def statsSpecsFor(physSchema: org.apache.spark.sql.types.StructType,
-      physKey: Option[String], physKey2: Option[String])
-      : Seq[graft.catalog.StatsSpec] = {
-    def spec(k: Option[String], secondary: Boolean): Option[graft.catalog.StatsSpec] =
-      k.flatMap { kk =>
-        physSchema.fields.zipWithIndex.collectFirst {
-          case (fld, i) if fld.name.equalsIgnoreCase(kk) => (fld.dataType, i)
-        }.collect {
-          case (org.apache.spark.sql.types.LongType |
-                org.apache.spark.sql.types.IntegerType, i) =>
-            graft.catalog.StatsSpec(i, isString = false, secondary)
-          case (org.apache.spark.sql.types.StringType, i) =>
-            graft.catalog.StatsSpec(i, isString = true, secondary)
-        }
-      }
-    Seq(spec(physKey, secondary = false), spec(physKey2, secondary = true)).flatten
-  }
-
-  /** Executor-side ROLLED parquet write — the shared core of the
-    * bucketed and Hive-partitioned writers. `prepared` carries the
+  /** Executor-side parquet write — the one core of every snapshot
+    * data-file writer. Unless `routed` is false, `prepared` carries the
     * physical data columns plus TWO trailing routing columns:
     * `_graft_dir` (string — the subdirectory under `batch` this row's
     * file lives in) and `_graft_roll` (int — splits same-dir rows into
@@ -947,15 +858,18 @@ object SnapshotTable {
     * task streams rows through [[graft.catalog.GraftParquetWriter]],
     * opening a new file whenever the routing pair changes, measuring
     * rows + stats-key min/max IN the write loop — per-file facts
-    * return as the job result, so manifest entries cost zero
-    * post-write footer reads. */
+    * return as the job result, so manifest entries cost no post-write
+    * footer read or listing. An unrouted write is one file per
+    * non-empty task, directly under `batch`. Names lead with the
+    * zero-padded partition ordinal, so path order is task order. */
   private def writeRolled(spark: SparkSession, root: String, batch: String,
       prepared: DataFrame, physSchema: org.apache.spark.sql.types.StructType,
-      stats: Seq[graft.catalog.StatsSpec]): Seq[FileEntry] = {
+      stats: Seq[graft.catalog.StatsSpec], routed: Boolean = true): Seq[FileEntry] = {
     val nCols = physSchema.length
-    val shipConf = new graft.catalog.SerializableHadoopConf(
-      graft.catalog.GraftParquetWriter.confWithSessionKeys(
-        spark.sparkContext.hadoopConfiguration))
+    val conf = graft.catalog.GraftParquetWriter.confWithSessionKeys(
+      spark.sparkContext.hadoopConfiguration)
+    val shipConf = new graft.catalog.SerializableHadoopConf(conf)
+    val codecExt = org.apache.parquet.hadoop.ParquetOutputFormat.getCompression(conf).getExtension
     val facts: Array[Seq[graft.catalog.GraftCommitMessage]] =
       spark.sparkContext.runJob(prepared.queryExecution.toRdd,
         (ctx: org.apache.spark.TaskContext,
@@ -970,24 +884,26 @@ object SnapshotTable {
           var curDir: String = null
           var curRoll = -1
           var fileIdx = 0
+          // df.write's file naming (partition ordinal, a UUID, file
+          // counter, codec): a UUID per task ATTEMPT, so a retried or
+          // speculative task never collides with another attempt's
+          // file — losers' files are unreferenced (only the winning
+          // attempt's facts return) and die in the next vacuum
+          val attempt = java.util.UUID.randomUUID()
           try {
             it.foreach { row =>
-              val dir = row.getUTF8String(nCols).toString
-              val roll = row.getInt(nCols + 1)
+              val dir = if (routed) row.getUTF8String(nCols).toString + "/" else ""
+              val roll = if (routed) row.getInt(nCols + 1) else 0
               if (cur == null || roll != curRoll || dir != curDir) {
                 if (cur != null)
                   out += cur.commit().asInstanceOf[graft.catalog.GraftCommitMessage]
                 curDir = dir; curRoll = roll
-                // attempt id in the name: a retried/speculative task can
-                // never collide with another attempt's file — losers'
-                // files are unreferenced (only the winning attempt's
-                // facts return) and die in the next vacuum
                 cur = new graft.catalog.GraftParquetWriter(shipConf.value, root,
-                  s"$batch/$dir/part-${ctx.partitionId}-${ctx.taskAttemptId}-$fileIdx.parquet",
+                  f"$batch/${dir}part-${ctx.partitionId()}%05d-$attempt-c$fileIdx%03d$codecExt.parquet",
                   physSchema, stats)
                 fileIdx += 1
               }
-              cur.write(trim(row))
+              cur.write(if (routed) trim(row) else row)
             }
             if (cur != null)
               out += cur.commit().asInstanceOf[graft.catalog.GraftCommitMessage]
@@ -1025,7 +941,6 @@ object SnapshotTable {
         c.equalsIgnoreCase("_graft_roll")),
       "partitioned writes reserve the column names _graft_dir/_graft_roll")
     val physKey = statsKey.map(physFor(colmap, _))
-    val physKey2 = statsKey2.map(physFor(colmap, _))
     val batch = s"data/pt-${java.util.UUID.randomUUID().toString.take(8).filter(_ != '-')}"
     val segs = partCols.map { c =>
       val v = col(c).cast("string")
@@ -1042,7 +957,7 @@ object SnapshotTable {
       .select(physSchema.fieldNames.map(col).toIndexedSeq :+
         col("_graft_dir") :+ col("_graft_roll"): _*)
     writeRolled(spark, root, batch, prepared, physSchema,
-      statsSpecsFor(physSchema, physKey, physKey2))
+      graft.catalog.StatsSpec.resolve(df0.schema, statsKey, statsKey2))
   }
 
   /** The partition-directory key prefix: a reserved spelling keeps user
@@ -1412,81 +1327,6 @@ object SnapshotTable {
           .map { case (b1, b2) => e.copy(bloom = b1, bloom2 = b2) }.getOrElse(e))
       }
     }
-
-  /** Per-column accumulator for one footer pass: long range, binary
-    * range, and a validity flag (one statless/unknown row group poisons
-    * the whole file's range — conservative, never wrong). */
-  private final class StatsAcc(val isString: Boolean) {
-    var mn: Long = Long.MaxValue
-    var mx: Long = Long.MinValue
-    var mnB: Array[Byte] = null
-    var mxB: Array[Byte] = null
-    var seen = false
-    var valid = true
-    def take(st: org.apache.parquet.column.statistics.Statistics[_]): Unit = {
-      if (st == null || st.isEmpty) { valid = false; return }
-      if (!st.hasNonNullValue) return
-      (st.genericGetMin, st.genericGetMax) match {
-        case (a: java.lang.Integer, b: java.lang.Integer) if !isString =>
-          mn = math.min(mn, a.longValue); mx = math.max(mx, b.longValue); seen = true
-        case (a: java.lang.Long, b: java.lang.Long) if !isString =>
-          mn = math.min(mn, a.longValue); mx = math.max(mx, b.longValue); seen = true
-        case (a: org.apache.parquet.io.api.Binary,
-              b: org.apache.parquet.io.api.Binary) if isString =>
-          val (lo, hi) = (a.getBytes, b.getBytes)
-          if (mnB == null || byteOrder.compare(lo, mnB) < 0) mnB = lo
-          if (mxB == null || byteOrder.compare(hi, mxB) > 0) mxB = hi
-          seen = true
-        case _ => valid = false
-      }
-    }
-    def longRange: Option[(Long, Long)] =
-      if (valid && seen && !isString) Some((mn, mx)) else None
-    def strRange: Option[(Array[Byte], Array[Byte])] =
-      if (valid && seen && isString) Some((mnB, mxB)) else None
-  }
-
-  /** Row count + min/max of the stats column(s) across all row groups
-    * of one parquet file, read from the footer (no data pages touched).
-    * The row count is the footer's authoritative per-block sum.
-    * Integral keys yield the long range; string keys yield the BINARY
-    * min/max (parquet records them in unsigned byte order — the same
-    * order Spark compares strings, so the range is sound for pruning).
-    * Stats are None when the key is absent/statless/all-null or a row
-    * group's statistics are unknown — the caller treats None as "may
-    * contain anything". */
-  private def footerInfo(conf: org.apache.hadoop.conf.Configuration,
-      file: Path, keyKind: Option[(String, Boolean)], key2Kind: Option[(String, Boolean)]):
-      (Option[Long], Option[(Long, Long)], Option[(Array[Byte], Array[Byte])],
-       Option[(Long, Long)], Option[(Array[Byte], Array[Byte])]) = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    try {
-      var nRows = 0L
-      val acc1 = keyKind.map(k => (k._1, new StatsAcc(k._2)))
-      val acc2 = key2Kind.map(k => (k._1, new StatsAcc(k._2)))
-      val blocks = reader.getFooter.getBlocks.iterator()
-      while (blocks.hasNext) {
-        val block = blocks.next()
-        nRows += block.getRowCount
-        if (acc1.exists(_._2.valid) || acc2.exists(_._2.valid)) {
-          val cols = block.getColumns.iterator()
-          while (cols.hasNext) {
-            val c = cols.next()
-            val dot = c.getPath.toDotString
-            acc1.foreach { case (name, a) => if (a.valid && dot == name) a.take(c.getStatistics) }
-            acc2.foreach { case (name, a) => if (a.valid && dot == name) a.take(c.getStatistics) }
-          }
-        }
-      }
-      (Some(nRows),
-        acc1.flatMap(_._2.longRange),
-        acc1.flatMap(_._2.strRange),
-        acc2.flatMap(_._2.longRange),
-        acc2.flatMap(_._2.strRange))
-    } finally reader.close()
-  }
 
   /** Atomically commit `files` as the next version after `expected`.
     * The uniqueness primitive must be truly atomic per filesystem: on
@@ -1921,12 +1761,12 @@ object SnapshotTable {
       skipIfEmpty = false, txnBatchId, bloomKey).get
 
   /** [[append]] that skips the commit when the batch turns out to be
-    * EMPTY: the per-file row counts ride the footer reads the write
-    * already does (zero extra Spark jobs), so callers that would
-    * otherwise run a count/isEmpty action just to avoid committing
-    * no-op versions (a streaming ingest whose micro-batch was all
-    * duplicates) get the check for free. Returns None — with the
-    * just-written empty files removed — instead of committing. */
+    * EMPTY: a task with no rows writes no file, so an empty batch
+    * writes nothing at all (zero extra Spark jobs), and callers that
+    * would otherwise run a count/isEmpty action just to avoid
+    * committing no-op versions (a streaming ingest whose micro-batch
+    * was all duplicates) get the check for free. Returns None instead
+    * of committing. */
   def appendIfNonEmpty(spark: SparkSession, root: String, df: DataFrame,
       statsKey: Option[String] = None, allowWiden: Boolean = false,
       statsKey2: Option[String] = None, txnBatchId: Option[Long] = None,
@@ -1940,7 +1780,6 @@ object SnapshotTable {
       statsKey: Option[String], statsKey2: Option[String], allowWiden: Boolean,
       skipIfEmpty: Boolean, txnBatchId: Option[Long] = None,
       bloomKey: Boolean = false): Option[Int] = {
-    var written: Seq[FileEntry] = Seq.empty
     try Some(retrying(spark, root, op = "append") { (latest: Int) =>
       val m = manifestFull(spark, root, latest)
       val tableSch = schemaOf(spark, root, m)
@@ -1983,20 +1822,12 @@ object SnapshotTable {
           constrained(alignTo(df, evolved), m.constraints), effKey, effKey2,
           bloomKey, effCm)
       }
-      written = newFiles
-      // skip only on POSITIVE evidence of emptiness: every file's
-      // footer row count known and zero (or no files at all) — an
-      // unreadable footer conservatively commits
-      if (skipIfEmpty && newFiles.forall(_.rows.contains(0L))) throw EmptyBatch
+      if (skipIfEmpty && newFiles.isEmpty) throw EmptyBatch
       Pending(fixCarried(m.entries) ++ newFiles, evolved, effKey, effKey2, txnBatchId,
         colmap = if (effCm.isEmpty) None else Some(effCm))
     })
     catch {
-      case EmptyBatch =>
-        val f = fs(spark, root)
-        written.map(e => new Path(root, e.path).getParent).distinct
-          .foreach(dir => try f.delete(dir, true) catch { case _: Exception => () })
-        None
+      case EmptyBatch => None
     }
   }
 
@@ -2627,9 +2458,12 @@ object SnapshotTable {
     * vectors the file-level bounds may be wider than the live rows the
     * rewrite reads, which would shift the normalization and hence the
     * layout. Write-time stats are attained minima/maxima over the
-    * file's actual rows (strings untruncated), and min/max of a
-    * monotone mapping commute with the mapping, so on the accepted
-    * path these domains equal the aggregate's bit for bit. */
+    * file's actual rows, and min/max of a monotone mapping commute with
+    * the mapping, so on the accepted path these domains equal the
+    * aggregate's bit for bit. The write loop measures strings on their
+    * full values, so truncation cannot touch them; only entries written
+    * by the older footer-reading writer rest on parquet's chunk
+    * statistics being untruncated (the default config). */
   private def zBoundsFromStats(m: Manifest): Option[(Long, Long, Long, Long)] =
     if (m.entries.isEmpty || m.entries.exists(_.dv.isDefined)) None
     else {
@@ -2939,7 +2773,7 @@ object SnapshotTable {
     // deletion vectors pay an anti-join on every read until a rewrite
     // purges them, so "dvRows is a meaningful fraction of nRows" is
     // the compact trigger (the same role smallFiles plays for
-    // compactSmall). nRows reports LIVE rows: footer counts minus
+    // compactSmall). nRows reports LIVE rows: recorded counts minus
     // recorded deletions — what a reader actually sees.
     TableDetail(
       version = vs.last,
@@ -3114,7 +2948,7 @@ object SnapshotTable {
   /** Table history — the DESCRIBE HISTORY surface: for every live
     * version, the operation that committed it, its file count, its
     * recorded column count, how many files carry skipping stats, and
-    * its ROW COUNT (summed from the per-file footer counts the write
+    * its ROW COUNT (summed from the per-file row counts the write
     * path recorded — the first thing users reach for in a history).
     * Driver-side metadata reads only (one manifest read per version),
     * no Spark jobs. Versions committed before op tracking report
@@ -3125,7 +2959,7 @@ object SnapshotTable {
       HistoryEntry(v, m.op, m.entries.size,
         m.schema.map(_.fields.length).getOrElse(-1),
         m.entries.count(e => e.minKey.isDefined || e.minStr.isDefined),
-        // live rows: footer counts minus dv-recorded deletions — the
+        // live rows: recorded counts minus dv-recorded deletions — the
         // count a reader of this version actually sees. An entry with
         // a dv but NO recorded count (legal: empty 13th field) makes
         // the live count unknown, not "zero deletions"
@@ -4798,8 +4632,10 @@ object SnapshotTable {
       bucketLayoutOf(m.entries, m.statsKey)
 
     /** String twin of [[exactLongBounds]] (bounds in unsigned byte
-      * order — Spark's own string order; values are the full strings,
-      * parquet chunk statistics are untruncated at default config). */
+      * order — Spark's own string order). Values are the full strings:
+      * the write loop measures them untruncated; only entries written
+      * by the older footer-reading writer rest on parquet's chunk
+      * statistics being untruncated (the default config). */
     def exactStringBounds(logical: String): Option[(Array[Byte], Array[Byte])] =
       keySlot(logical).flatMap { sec =>
         if (m.entries.isEmpty || m.entries.exists(_.dv.isDefined)) None

@@ -193,7 +193,8 @@ object Dedup {
     * computes the same components by recursive-CTE transitive closure,
     * so the component labels are hash-gated end to end. */
   def clusterReps(spark: SparkSession, dir: String, threshold: Double = 0.5): DataFrame = {
-    val edges = jaccardOnCandidates(spark, dir, threshold)
+    // the verified pairs unordered: label propagation reads them as a set
+    val edges = verifiedPairs(spark, dir, minhashCandidatePairs(spark, dir), threshold)
       .select(col("id_a").as("src"), col("id_b").as("dst"))
     val labels = graft.geom.ConnectedComponents.labelPropagation(spark, edges)
     val sizes = labels.groupBy(col("component"))

@@ -40,6 +40,16 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** Count a file the running task wrote in its output metrics, as
+    * Spark's own file writers do (the setters are private[spark]); a
+    * no-op outside a task. */
+  def addTaskOutput(bytes: Long, records: Long): Unit =
+    Option(org.apache.spark.TaskContext.get()).foreach { t =>
+      val m = t.taskMetrics().outputMetrics
+      m.setBytesWritten(m.bytesWritten + bytes)
+      m.setRecordsWritten(m.recordsWritten + records)
+    }
+
   /** Block until the listener bus has delivered all queued events —
     * lets tests COUNT Spark jobs via a SparkListener deterministically
     * (event delivery is asynchronous; listenerBus is private[spark]). */

@@ -4,7 +4,9 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -21,16 +23,29 @@ import graft.vector.Dedup
   * inside a near-dup cluster, and band buckets past the bucket cap. */
 class DroppedDocIdsSpec extends SparkSpec {
 
-  private def reference(dir: String): DataFrame = {
-    val exact = Tables.documents(spark, dir)
+  private def reference(dir: String): DataFrame =
+    exactReference(dir).unionByName(Dedup.clusterReps(spark, dir)
+      .filter(!col("keep"))
+      .select(col("doc_id"))).distinct()
+
+  private def exactReference(dir: String): DataFrame =
+    Tables.documents(spark, dir)
       .select(col("doc_id"), TextFunctions.fingerprint(col("text")).as("fp"))
       .join(Dedup.exactDupGroups(spark, dir), Seq("fp"))
       .filter(col("doc_id") =!= col("keep_doc_id"))
       .select(col("doc_id"))
-    val near = Dedup.clusterReps(spark, dir)
-      .filter(!col("keep"))
-      .select(col("doc_id"))
-    exact.unionByName(near).distinct()
+
+  /** [[reference]] at another banding: the cluster reps' composition
+    * (candidate pairs at that banding, verified, label-propagated)
+    * with its non-representatives read off the labels. */
+  private def referenceAt(dir: String, numHashes: Int, bandSize: Int): DataFrame = {
+    val edges = Dedup.verifiedPairs(spark, dir,
+      Dedup.minhashCandidatePairs(spark, dir, numHashes, bandSize), 0.5)
+      .select(col("id_a").as("src"), col("id_b").as("dst"))
+    exactReference(dir).unionByName(graft.geom.ConnectedComponents
+      .labelPropagation(spark, edges)
+      .filter(col("node") =!= col("component"))
+      .select(col("node").as("doc_id"))).distinct()
   }
 
   /** The ids of `df`, computed under a scope of its own that is drained
@@ -133,32 +148,55 @@ class DroppedDocIdsSpec extends SparkSpec {
     assert(copies.map(_._1).toSet.subsetOf(got))
   }
 
-  test("the pass scans the documents table at most twice") {
-    def nodes(p: SparkPlan): Seq[SparkPlan] = PlanWalk.executedNodes(p).flatMap {
-      case i: InMemoryTableScanExec => i +: nodes(i.relation.cachedPlan)
-      case other => Seq(other)
+  test("a non-default banding drops the ids of that banding") {
+    // bands of 4 find fewer near copies than the default bands of 2
+    // on this corpus, so a pass that ignored the config would differ
+    val cfg = Pipeline.EtlConfig(minhashHashes = 8, minhashBandSize = 4)
+    val want = ids(referenceAt(planted, 8, 4))
+    assert(want != ids(reference(planted)), "the banding must matter on this corpus")
+    val got = ids(Pipeline.droppedDocIds(spark, planted, cfg))
+    assert(got == want, s"missing=${(want -- got).toSeq.sorted.take(10)} " +
+      s"extra=${(got -- want).toSeq.sorted.take(10)}")
+  }
+
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = PlanWalk.executedNodes(p).flatMap {
+    case i: InMemoryTableScanExec => i +: nodes(i.relation.cachedPlan)
+    case other => Seq(other)
+  }
+
+  /** Every executed-plan node of every query `body` runs, cached
+    * frames' plans included. */
+  private def executedNodesOf(body: => Unit): Seq[SparkPlan] = {
+    val done = new ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = done.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.sql.graftbridge.Bridge.flushListenerBus(spark)
+    } finally spark.listenerManager.unregister(listener)
+    done.toArray(Array.empty[QueryExecution]).toSeq.flatMap(qe => nodes(qe.executedPlan))
+  }
+
+  test("cluster reps range-partition only for their doc_id order") {
+    val ranges = executedNodesOf(ids(Dedup.clusterReps(spark, planted)
+      .select(col("doc_id")))).collect {
+      case e: ShuffleExchangeExec => e.outputPartitioning
+    }.collect { case r: RangePartitioning => r.ordering.map(_.child.sql).mkString(",") }
+    assert(ranges.nonEmpty && ranges.forall(_ == "doc_id"), ranges.mkString("; "))
+  }
+
+  test("the pass scans the documents table at most twice") {
     // distinct scan nodes over the documents table in every plan the
     // body executes; a cached frame's scan is one node however many
     // plans read the cache
-    def documentScans(body: => Set[Long]): Int = {
-      val done = new ConcurrentLinkedQueue[QueryExecution]()
-      val listener = new QueryExecutionListener {
-        override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = done.add(qe)
-        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-      }
-      spark.listenerManager.register(listener)
-      try {
-        body
-        org.apache.spark.sql.graftbridge.Bridge.flushListenerBus(spark)
-      } finally spark.listenerManager.unregister(listener)
-      val scans = done.toArray(Array.empty[QueryExecution]).toSeq
-        .flatMap(qe => nodes(qe.executedPlan)).collect {
-          case f: FileSourceScanExec
-              if f.relation.location.rootPaths.exists(_.getName == "documents.parquet") => f
-        }
-      scans.map(System.identityHashCode).distinct.size
-    }
+    def documentScans(body: => Set[Long]): Int =
+      executedNodesOf(body).collect {
+        case f: FileSourceScanExec
+            if f.relation.location.rootPaths.exists(_.getName == "documents.parquet") => f
+      }.map(System.identityHashCode).distinct.size
     // a corpus with exact copies: on one without, AQE drops the empty
     // exact-group join and its scans from the reference's final plan
     val old = documentScans(ids(reference(planted)))

@@ -258,11 +258,44 @@ class SnapshotTableSpec extends SparkSpec {
     assert(SnapshotTable.read(spark, root).head().getString(1) == "b")
   }
 
-  test("file stats cost ZERO Spark jobs: footers only, independent of file count") {
-    // stats come from the parquet footers the write already produced —
-    // enabling them must not add a single job or data-pass (the
-    // aggregate this replaced re-read the whole batch on the write
-    // path; the per-file job loop before THAT was the commit's
+  test("plain, bucketed and partitioned writes count their files in the tasks' output metrics") {
+    // what Spark's own file writers report (and what the UI and any
+    // listener read): the bytes and rows of the written files
+    def outputDuring(body: => Unit): (Long, Long) = {
+      val bytes = new java.util.concurrent.atomic.AtomicLong(0)
+      val records = new java.util.concurrent.atomic.AtomicLong(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          Option(e.taskMetrics).foreach { m =>
+            bytes.addAndGet(m.outputMetrics.bytesWritten)
+            records.addAndGet(m.outputMetrics.recordsWritten)
+          }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try { body; org.apache.spark.sql.graftbridge.Bridge.flushListenerBus(spark) }
+      finally spark.sparkContext.removeSparkListener(listener)
+      (bytes.get, records.get)
+    }
+    val df = (0L until 120L).map(i => (i, s"l${i % 3}")).toDF("id", "lang")
+    Seq[String => Unit](
+      root => SnapshotTable.create(spark, root, df.repartition(4), statsKey = Some("id")),
+      root => SnapshotTable.create(spark, root, df, statsKey = Some("id"), buckets = Some(4)),
+      root => SnapshotTable.create(spark, root, df.repartition(2), statsKey = Some("id"),
+        partitionCols = Seq("lang"))).foreach { write =>
+      val root = tmp()
+      val (bytes, records) = outputDuring(write(root))
+      val files = SnapshotTable.filesDf(spark, root).collect()
+      assert(files.length > 1)
+      assert(bytes == files.map(_.getLong(2)).sum && records == 120L,
+        s"$root: reported $bytes bytes / $records rows")
+    }
+  }
+
+  test("file stats cost ZERO Spark jobs: measured in the write loop, independent of file count") {
+    // the writer tasks measure rows and key ranges as they write —
+    // enabling stats must not add a single job or data-pass (an
+    // aggregate over the batch would re-read it on the write path; a
+    // per-file job loop would put thousands of jobs on the commit's
     // critical path at thousands of files per batch)
     def jobsDuring(body: => Unit): Int = {
       val counter = new java.util.concurrent.atomic.AtomicInteger(0)
