@@ -291,8 +291,9 @@ class SnapshotTableSpec extends SparkSpec {
     }
   }
 
-  test("file stats cost ZERO Spark jobs: measured in the write loop, independent of file count") {
-    // the writer tasks measure rows and key ranges as they write —
+  test("file stats cost ZERO Spark jobs: footers only, independent of file count") {
+    // no data pass and no footer read-back: the writer tasks measure
+    // rows and key ranges as they write —
     // enabling stats must not add a single job or data-pass (an
     // aggregate over the batch would re-read it on the write path; a
     // per-file job loop would put thousands of jobs on the commit's
