@@ -6,9 +6,8 @@ import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFu
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructType}
 
 /** The catalog's `bucket(n, key)` function — `pmod(murmur3_hash(key),
-  * n)`, byte-identical to the expression [[graft.sources.SnapshotTable
-  * .compactBucketed]] assigns files with (`functions.hash` IS
-  * `Murmur3Hash` at seed 42, and the pmod below is SQL `pmod`). The
+  * n)`, the very function the writer's router assigns files with
+  * ([[GraftBucketOf]]). The
   * function exists so Spark's storage-partitioned-join machinery can
   * resolve the `bucket` transform the DSv2 scan reports in its
   * `KeyGroupedPartitioning`: `V2ExpressionUtils` loads it from the
@@ -54,16 +53,27 @@ private[catalog] final class GraftBucketBound(dt: DataType)
     * murmur3(5: int) != murmur3(5L: long). */
   override def canonicalName(): String = s"graft.bucket(${dt.typeName})"
 
-  // the writer's exact hash: functions.hash = Murmur3Hash(seed=42);
-  // null keys hash to the seed, matching SQL hash(NULL)
-  @transient private lazy val hasher =
-    Murmur3Hash(Seq(BoundReference(1, dt, nullable = true)), 42)
+  private val bucketOf = new GraftBucketOf(1, dt)
 
-  override def produceResult(input: InternalRow): Integer = {
-    val n = input.getInt(0)
-    val h = hasher.eval(input).asInstanceOf[Int]
-    Integer.valueOf(((h % n) + n) % n)
-  }
+  override def produceResult(input: InternalRow): Integer =
+    Integer.valueOf(bucketOf(input, input.getInt(0)))
 
   override def toString: String = canonicalName()
+}
+
+/** THE bucket-of-value function: `pmod(murmur3_hash(v), n)` of the
+  * value `v` at `ordinal` of a row, hashed at its own type `dt`
+  * (`functions.hash` is `Murmur3Hash` at seed 42; murmur3(5: int) !=
+  * murmur3(5L), and a null hashes to the seed, matching SQL
+  * `hash(NULL)`). The writer's router, the catalog's `bucket`
+  * function and bucket pruning all call it, so the written layout,
+  * the reported partitioning and the pruned buckets cannot disagree. */
+private[graft] final class GraftBucketOf(ordinal: Int, dt: DataType) extends Serializable {
+  @transient private lazy val hasher =
+    Murmur3Hash(Seq(BoundReference(ordinal, dt, nullable = true)), 42)
+
+  def apply(row: InternalRow, n: Int): Int = {
+    val h = hasher.eval(row).asInstanceOf[Int]
+    ((h % n) + n) % n
+  }
 }

@@ -177,7 +177,9 @@ private[catalog] final class GraftScanBuilder(spark: SparkSession,
       case Some(s) => return s
       case None => ()
     }
-    val fieldType = (n: String) => FilterBridge.fieldOf(snap.schema, n).map(_.dataType)
+    // a pushed name resolves like a stats key (top-level, else a dotted
+    // path through structs), so a filter on a nested key prunes too
+    val fieldType = (n: String) => StatsSpec.locate(snap.schema, n).map(_._3)
     val bounds = pushed.flatMap(
       FilterBridge.toCatalystBound(_, fieldType, snap.physName)).toSeq
     val kept = snap.keptFiles(bounds)
@@ -297,13 +299,18 @@ private[graft] final class GraftScan(spark: SparkSession,
     }
 
   /** Per-partition ordering ([[org.apache.spark.sql.connector.read.SupportsReportOrdering]]):
-    * every bucket file and every identity-partition file in this
-    * format is KEY-SORTED at write time — `writeRolled` sorts by
-    * (bucket, salt, key) / (dir, key), and the DSv2 row-level writer
-    * enforces the same via `requiredOrdering` — so when the scan plans
-    * key-grouped AND each group holds exactly ONE kept file, the rows
-    * a task drains are sorted by the stats key. Reporting that lets
-    * EnsureRequirements drop BOTH sides' SortExec under a co-located
+    * INVARIANT — every bucket file and every identity-partition file
+    * is KEY-SORTED, because every layout-aware write hands the one
+    * task writer ([[GraftTaskWriter]]) input clustered by directory and
+    * sorted by the stats key: programmatic bucketed writes hash-
+    * repartition on the key and sort within tasks, programmatic
+    * partitioned writes sort by (partition columns, key) within
+    * tasks, and the DSv2 row-level, dynamic-overwrite and streaming-
+    * epoch writes require the same via [[GraftLayoutInput]]. So when
+    * the scan plans key-grouped AND each group holds exactly ONE kept
+    * file, the rows a task drains are sorted by the stats key.
+    * Reporting that lets EnsureRequirements drop BOTH sides' SortExec
+    * under a co-located
     * sort-merge join: the storage-partitioned join becomes shuffle-free
     * AND sort-free — at 100 TB the sort of two fact tables is the
     * join's remaining dominant cost once the exchange is gone.

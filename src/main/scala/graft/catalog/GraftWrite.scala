@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetWriteSupport}
 import org.apache.spark.sql.sources.{AlwaysTrue, And, EqualNullSafe, EqualTo, Filter, In, InsertableRelation}
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructType}
+import org.apache.spark.sql.types.{DataType, DateType, IntegerType, LongType, StringType, StructType}
 
 import graft.sources.SnapshotTable
 
@@ -72,7 +72,20 @@ private[catalog] final class GraftWriteBuilder(spark: SparkSession, root: String
     this
   }
 
-  override def build(): Write = new V1Write {
+  override def build(): Write = new V1Write with GraftLayoutInput {
+    private lazy val snap = SnapshotTable.sqlSnapshot(spark, root)
+    @volatile private var streaming = false
+    override protected def writeSchema: StructType = snap.schema
+    override protected def statsKey: Option[String] = snap.statsKey
+    // dynamic overwrite and streaming epochs write through the task
+    // writer, so they ask Spark for input clustered by directory and
+    // sorted by the stats key; the other modes hand the frame to the
+    // table's own writer, which arranges its input itself. Spark calls
+    // `toStreaming` before it reads these requirements (V2Writes).
+    override protected def layout: Option[GraftSplitSpec] =
+      if (dynamicPartitions || streaming) GraftSplitSpec.forSnap(snap, snap.schema)
+      else None
+
     override def toInsertableRelation: InsertableRelation =
       new InsertableRelation {
         override def insert(data: DataFrame, overwrite: Boolean): Unit = {
@@ -99,18 +112,16 @@ private[catalog] final class GraftWriteBuilder(spark: SparkSession, root: String
       }
     // dynamic overwrite has no V1 exec in Spark: it plans through
     // OverwritePartitionsDynamicExec, which drives a real BatchWrite —
-    // executor parquet writers (layout-aware) + either a dynamic
+    // executor task writers (layout-aware) + either a dynamic
     // partition-replace or a whole-snapshot "rewrite" commit
-    override def toBatch: BatchWrite = {
-      val snap = SnapshotTable.sqlSnapshot(spark, root)
+    override def toBatch: BatchWrite =
       new GraftFileBatchWrite(spark, snap, snap.schema, { files =>
-        SnapshotTable.sqlValidateWritten(spark, snap.root, files.map(_.relPath))
+        SnapshotTable.sqlValidateWritten(spark, snap.root, files.map(_.path))
         if (dynamicPartitions && snap.partitionCols.nonEmpty)
           SnapshotTable.sqlOverwriteDynamic(spark, snap.root, files)
         else SnapshotTable.sqlOverwriteFiles(spark, snap.root, files)
         ()
-      }, GraftSplitSpec.forSnap(snap, snap.schema))
-    }
+      }, layout)
 
     /** `writeStream.toTable(name)` — each epoch is one atomic commit
       * carrying the epoch id as the manifest's `txnBatchId`: the same
@@ -121,19 +132,18 @@ private[catalog] final class GraftWriteBuilder(spark: SparkSession, root: String
       * [[SupportsTruncate.truncate]] on this builder) REPLACES the
       * whole snapshot each epoch — every epoch carries the full result
       * by Spark's contract, so re-appending it would silently
-      * duplicate rows. Executor parquet writers measure the stats-key
-      * ranges in the write loop; CHECK constraints validate over just
+      * duplicate rows. Executor task writers measure the stats-key
+      * ranges in the write loop and honor the declared layout (bucket
+      * files keep SPJ through streaming ingest, partition directories
+      * keep the epochs prunable); CHECK constraints validate over just
       * the epoch's files before anything publishes. Contract: one
       * streaming query (one checkpoint) writes a table. */
-    override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite =
+    override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
+      streaming = true
       new org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-        private val snap = SnapshotTable.sqlSnapshot(spark, root)
         private val batch = new GraftFileBatchWrite(spark, snap, snap.schema,
           _ => throw new IllegalStateException("streaming commits go through commit(epoch, ...)"),
-          // epoch appends honor declared layouts: bucket-per-file keeps
-          // SPJ live through streaming ingest, partition dirs keep the
-          // epochs prunable
-          GraftSplitSpec.forSnap(snap, snap.schema))
+          layout)
 
         override def createStreamingWriterFactory(
             info: PhysicalWriteInfo)
@@ -143,35 +153,26 @@ private[catalog] final class GraftWriteBuilder(spark: SparkSession, root: String
 
         override def commit(epochId: Long,
             messages: Array[WriterCommitMessage]): Unit = {
-          val files = GraftCommitMessage.flatten(messages)
-            .filter(_.rows > 0).sortBy(_.relPath).toIndexedSeq
+          val files = GraftCommitMessage.files(messages)
           // replay (crash between table commit and checkpoint commit):
           // recognized by the cursor, dropped; this attempt's files are
           // unreferenced and die in the next vacuum
           if (SnapshotTable.lastTxnBatchId(spark, root).exists(_ >= epochId)) {
-            files.foreach { m =>
-              val p = new Path(root, m.relPath)
-              try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-                .delete(p, false)
-              catch { case _: Exception => () }
-            }
+            deleteFiles(files)
             return
           }
           if (files.nonEmpty)
-            SnapshotTable.sqlValidateWritten(spark, root, files.map(_.relPath))
-          val written = files.map(m => SnapshotTable.SqlWrittenFile(m.relPath,
-            m.rows, m.bytes, m.minL, m.maxL, m.minB, m.maxB, m.min2L, m.max2L,
-            m.min2B, m.max2B))
+            SnapshotTable.sqlValidateWritten(spark, root, files.map(_.path))
           if (overwriteAll) {
             // Complete output mode: this epoch IS the full result —
             // replace the snapshot (op "rewrite"; an empty result
             // honestly empties the table). Appending here would
             // re-deliver every prior epoch's rows.
-            SnapshotTable.sqlOverwriteFiles(spark, root, written,
+            SnapshotTable.sqlOverwriteFiles(spark, root, files,
               txnBatchId = Some(epochId))
             ()
           } else if (files.nonEmpty) {
-            SnapshotTable.sqlAppendFiles(spark, root, written,
+            SnapshotTable.sqlAppendFiles(spark, root, files,
               txnBatchId = epochId)
             ()
           }
@@ -179,48 +180,35 @@ private[catalog] final class GraftWriteBuilder(spark: SparkSession, root: String
 
         override def abort(epochId: Long,
             messages: Array[WriterCommitMessage]): Unit =
-          GraftCommitMessage.flatten(messages).foreach { m =>
-            if (m.relPath != null) {
-              val p = new Path(root, m.relPath)
-              try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-                .delete(p, false)
-              catch { case _: Exception => () }
-            }
+          deleteFiles(GraftCommitMessage.files(messages))
+
+        private def deleteFiles(files: Seq[SnapshotTable.FileEntry]): Unit =
+          files.foreach { e =>
+            val p = new Path(root, e.path)
+            try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+              .delete(p, false)
+            catch { case _: Exception => () }
           }
       }
+    }
   }
 }
 
-/** One written data file, as the executor reported it: path, row
-  * count, byte size, and the min/max it measured over the table's
-  * stats key(s) while writing — a manifest entry's worth of facts with
-  * zero post-write footer reads. */
-private[graft] final case class GraftCommitMessage(relPath: String,
-    rows: Long, bytes: Long,
-    minL: Option[Long], maxL: Option[Long],
-    minB: Option[Array[Byte]], maxB: Option[Array[Byte]],
-    min2L: Option[Long], max2L: Option[Long],
-    min2B: Option[Array[Byte]], max2B: Option[Array[Byte]])
+/** One write task's output: the manifest entry of every file it wrote
+  * — path, rows, bytes and the stats-key min/max measured in the write
+  * loop, so a commit needs no post-write footer read. */
+private[graft] final case class GraftCommitMessage(files: Seq[SnapshotTable.FileEntry])
   extends WriterCommitMessage
 
 private[graft] object GraftCommitMessage {
-  /** Per-file facts from a mixed message array: plain writers report
-    * one file each, bucketed writers report one message carrying
-    * several files. */
-  def flatten(messages: Iterable[WriterCommitMessage]): Seq[GraftCommitMessage] =
+  /** Every file a write's tasks reported, in path order (the
+    * manifest's entry order for one batch). */
+  def files(messages: Iterable[WriterCommitMessage]): Seq[SnapshotTable.FileEntry] =
     messages.toSeq.flatMap {
-      case m: GraftCommitMessage => Seq(m)
-      case GraftMultiCommitMessage(ms) => ms
+      case m: GraftCommitMessage => m.files
       case _ => Seq.empty
-    }
+    }.sortBy(_.path)
 }
-
-/** A bucketed task's commit message: one fact row per file it wrote
-  * (a task usually writes exactly one bucket's file — the write's
-  * required distribution clusters by the bucket key — but correctness
-  * never assumes it). */
-private[graft] final case class GraftMultiCommitMessage(
-    files: Seq[GraftCommitMessage]) extends WriterCommitMessage
 
 /** Which write-schema field feeds which stats slot, and how: `path`
   * walks struct ordinals from the top level down to the key field,
@@ -254,130 +242,137 @@ private[graft] final case class StatsSpec(path: IndexedSeq[Int],
 }
 
 private[graft] object StatsSpec {
-  /** The stats specs of `key` (primary slot) and `key2` (secondary) over
-    * `schema`, for every writer. A key names a top-level field, else a
+  /** The field `name` addresses in `schema` — a top-level field, else a
     * dotted path through structs (`metadata.doc_id`), matched
-    * case-insensitively; it gets a spec only when that field is
-    * integral or a string, the types the manifest prunes on. */
-  def resolve(schema: StructType, key: Option[String],
-      key2: Option[String]): Seq[StatsSpec] = {
+    * case-insensitively — as (struct ordinals from the top level down
+    * to the field, the width of each struct on the way, its type). */
+  def locate(schema: StructType, name: String)
+      : Option[(Vector[Int], Vector[Int], DataType)] = {
     def walk(st: StructType, segs: List[String], path: Vector[Int],
-        widths: Vector[Int], secondary: Boolean): Option[StatsSpec] = segs match {
+        widths: Vector[Int]): Option[(Vector[Int], Vector[Int], DataType)] = segs match {
       case seg :: rest =>
         val i = st.fields.indexWhere(_.name.equalsIgnoreCase(seg))
         if (i < 0) None
         else (st.fields(i).dataType, rest) match {
-          case (t @ (LongType | IntegerType | StringType), Nil) =>
-            Some(StatsSpec(path :+ i, widths, t, secondary))
-          case (s: StructType, _ :: _) =>
-            walk(s, rest, path :+ i, widths :+ s.length, secondary)
+          case (t, Nil) => Some((path :+ i, widths, t))
+          case (s: StructType, _) => walk(s, rest, path :+ i, widths :+ s.length)
           case _ => None
         }
       case Nil => None
     }
+    walk(schema, List(name), Vector.empty, Vector.empty).orElse(
+      walk(schema, name.split('.').toList, Vector.empty, Vector.empty))
+  }
+
+  /** The stats specs of `key` (primary slot) and `key2` (secondary) over
+    * `schema`, for every writer: each key [[locate]]s a field, and gets
+    * a spec only when that field is integral or a string, the types the
+    * manifest prunes on. */
+  def resolve(schema: StructType, key: Option[String],
+      key2: Option[String]): Seq[StatsSpec] = {
     def spec(k: String, secondary: Boolean): Option[StatsSpec] =
-      walk(schema, List(k), Vector.empty, Vector.empty, secondary).orElse(
-        walk(schema, k.split('.').toList, Vector.empty, Vector.empty, secondary))
+      locate(schema, k).collect {
+        case (path, widths, t @ (LongType | IntegerType | StringType)) =>
+          StatsSpec(path, widths, t, secondary)
+      }
     Seq(key.flatMap(spec(_, secondary = false)),
       key2.flatMap(spec(_, secondary = true))).flatten
   }
 }
 
-/** The row-level (group-based copy-on-write) write: MERGE INTO /
-  * UPDATE / non-filter DELETE land here. Executor tasks write parquet
-  * files (Spark's own [[ParquetWriteSupport]] under parquet-hadoop's
-  * writer — the same bytes `df.write.parquet` produces) and report
-  * per-file stats in their commit messages; the driver-side commit
-  * validates CHECK constraints over the written files and publishes
-  * ONE manifest version replacing exactly the files the operation's
-  * scan read ([[SnapshotTable.sqlReplaceFiles]] — carried files, dv
-  * references included, ride verbatim). A concurrent commit between
-  * scan and write REFUSES loudly; the task-commit coordinator
-  * deduplicates speculative attempts before any file reaches the
-  * manifest. */
-private[catalog] final class GraftReplaceWrite(spark: SparkSession,
-    snap: SnapshotTable.SqlSnapshot, scanned: () => Set[String],
-    writeSchema: StructType) extends Write
-    with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
+/** The input a layout-aware DSv2 write asks Spark for, so every task
+  * hands the [[GraftTaskWriter]] each directory's rows contiguous and
+  * sorted by the stats key: a bucket write clusters on the bucket key
+  * into exactly `buckets` tasks (Spark's hash partitioning is
+  * `pmod(murmur3(key), n)`, the bucket function itself, so each task
+  * holds one bucket), a partitioned write clusters on the partition
+  * columns; each task sorts by its directory columns, then the stats
+  * key. No layout, no requirement. */
+private[catalog] trait GraftLayoutInput
+  extends org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
+  import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
+  import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, SortDirection, SortOrder}
 
-  /** DECLARED layouts survive row-level rewrites: on a bucket-declared
-    * table the replacement files are written bucket-per-file at the
-    * declared count (same path shape as [[SnapshotTable
-    * .compactBucketed]]), so a steady-state MERGE/CDC workload never
-    * pays the one remaining O(table) maintenance op a dissolved layout
-    * used to demand; on a PARTITIONED BY table they land under
-    * partition directories, so pruning facts follow the rewrite. Armed
-    * only when the declaration and the write schema line up — the
-    * plain write stays the conservative fallback. */
-  private val split: Option[GraftSplitSpec] =
-    GraftSplitSpec.forSnap(snap, writeSchema)
+  protected def layout: Option[GraftSplitSpec]
+  protected def writeSchema: StructType
+  protected def statsKey: Option[String]
 
-  // cluster the replacement rows so each writer task holds few groups:
-  // for buckets, clustered-by-key into exactly `n` partitions IS the
-  // bucket function (pmod(murmur3(key, seed 42), n)) — one bucket per
-  // task; for partitions, clustered by the partition columns — one
-  // value set per task. The writer still derives each row's directory
-  // itself: the distribution only bounds file count, never correctness.
-  override def requiredDistribution()
-      : org.apache.spark.sql.connector.distributions.Distribution = {
-    import org.apache.spark.sql.connector.distributions.Distributions
-    import org.apache.spark.sql.connector.expressions.Expressions
-    split match {
-      case Some(_: GraftBucketSplit) =>
-        Distributions.clustered(Array(Expressions.column(
-          writeSchema.fields.find(f =>
-            snap.statsKey.exists(f.name.equalsIgnoreCase)).get.name)))
-      case Some(_: GraftPartitionSplit) =>
-        Distributions.clustered(
-          snap.partitionColsLogical.map(Expressions.column).toArray)
-      case None => Distributions.unspecified()
-    }
+  private def columns(ordinals: Seq[Int]): Seq[NamedReference] =
+    ordinals.map(i => Expressions.column(
+      "`" + writeSchema.fields(i).name.replace("`", "``") + "`"))
+
+  override def requiredDistribution(): Distribution = layout match {
+    case Some(s) => Distributions.clustered(columns(s.clusterBy).toArray)
+    case None => Distributions.unspecified()
   }
 
-  override def requiredNumPartitions(): Int = split match {
+  override def requiredNumPartitions(): Int = layout match {
     case Some(b: GraftBucketSplit) => b.buckets
     case _ => 0
   }
 
-  // sort within tasks: by key for bucket files (row-group stats stay
-  // selective), by partition columns for partitioned files (groups
-  // stay contiguous, so the writer rolls instead of interleaving)
-  override def requiredOrdering()
-      : Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
-    import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection}
-    split match {
-      case Some(_: GraftBucketSplit) =>
-        Array(Expressions.sort(Expressions.column(
-          writeSchema.fields.find(f =>
-            snap.statsKey.exists(f.name.equalsIgnoreCase)).get.name),
-          SortDirection.ASCENDING))
-      case Some(_: GraftPartitionSplit) =>
-        snap.partitionColsLogical.map(c => Expressions.sort(
-          Expressions.column(c), SortDirection.ASCENDING)).toArray
-      case None => Array.empty
-    }
+  override def requiredOrdering(): Array[SortOrder] = layout match {
+    case Some(s) =>
+      val dirs = s match {
+        case _: GraftBucketSplit => Nil // one bucket per task
+        case p => columns(p.clusterBy)
+      }
+      val key = StatsSpec.resolve(writeSchema, statsKey, None)
+        .map(k => Expressions.column(k.columnIn(writeSchema)))
+      (dirs ++ key).map(Expressions.sort(_, SortDirection.ASCENDING)).toArray
+    case None => Array.empty
   }
+}
+
+/** The row-level (group-based copy-on-write) write: MERGE INTO /
+  * UPDATE / non-filter DELETE land here. Executor tasks write parquet
+  * files ([[GraftTaskWriter]]) and report per-file stats in their
+  * commit messages; the driver-side commit validates CHECK constraints
+  * over the written files and publishes ONE manifest version replacing
+  * exactly the files the operation's scan read
+  * ([[SnapshotTable.sqlReplaceFiles]] — carried files, dv references
+  * included, ride verbatim). A concurrent commit between scan and
+  * write REFUSES loudly; the task-commit coordinator deduplicates
+  * speculative attempts before any file reaches the manifest.
+  *
+  * DECLARED layouts survive row-level rewrites: on a bucket-declared
+  * table the replacement files are written bucket-per-file at the
+  * declared count (same path shape as [[SnapshotTable
+  * .compactBucketed]]), so a steady-state MERGE/CDC workload never
+  * pays the one remaining O(table) maintenance op a dissolved layout
+  * used to demand; on a PARTITIONED BY table they land under
+  * partition directories, so pruning facts follow the rewrite. Armed
+  * only when the declaration and the write schema line up — the
+  * plain write stays the conservative fallback. */
+private[catalog] final class GraftReplaceWrite(spark: SparkSession,
+    snap: SnapshotTable.SqlSnapshot, scanned: () => Set[String],
+    override protected val writeSchema: StructType) extends Write
+    with GraftLayoutInput {
+
+  override protected val layout: Option[GraftSplitSpec] =
+    GraftSplitSpec.forSnap(snap, writeSchema)
+  override protected def statsKey: Option[String] = snap.statsKey
 
   override def toBatch: BatchWrite =
     new GraftFileBatchWrite(spark, snap, writeSchema, { files =>
       // CHECK constraints: the rows were written by executor tasks, so
       // validation is one explicit job over just the new files —
       // a violation aborts with nothing published
-      SnapshotTable.sqlValidateWritten(spark, snap.root, files.map(_.relPath))
+      SnapshotTable.sqlValidateWritten(spark, snap.root, files.map(_.path))
       SnapshotTable.sqlReplaceFiles(spark, snap.root, snap.version, scanned(), files)
       ()
-    }, split)
+    }, layout)
 }
 
 /** The shared file-producing half of every DSv2 batch write: executor
-  * tasks stream rows into parquet ([[GraftParquetWriter]]) and report
+  * tasks stream rows into parquet ([[GraftTaskWriter]]) and report
   * per-file facts; `commitFiles` decides what manifest commit those
   * files become (replace-scanned for row-level operations, whole
   * snapshot for dynamic overwrite). */
 private[catalog] final class GraftFileBatchWrite(spark: SparkSession,
     snap: SnapshotTable.SqlSnapshot, writeSchema: StructType,
-    commitFiles: Seq[SnapshotTable.SqlWrittenFile] => Unit,
-    split: Option[GraftSplitSpec] = None) extends BatchWrite {
+    commitFiles: Seq[SnapshotTable.FileEntry] => Unit,
+    split: Option[GraftSplitSpec]) extends BatchWrite {
 
   // a layout-aware write spells its layout in the batch path (bucket
   // count for SPJ's BucketPathRe, partition dirs for pruning), so the
@@ -395,13 +390,8 @@ private[catalog] final class GraftFileBatchWrite(spark: SparkSession,
       StatsSpec.resolve(writeSchema, snap.statsKey, snap.statsKey2), split)
   }
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val files = GraftCommitMessage.flatten(messages)
-      .filter(_.rows > 0).sortBy(_.relPath).toIndexedSeq
-    commitFiles(files.map(m => SnapshotTable.SqlWrittenFile(m.relPath, m.rows,
-      m.bytes, m.minL, m.maxL, m.minB, m.maxB, m.min2L, m.max2L, m.min2B, m.max2B)))
-    // zero-row attempts may have left nothing; empty dirs are inert
-  }
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    commitFiles(GraftCommitMessage.files(messages))
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val f = new Path(snap.root).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -427,72 +417,76 @@ private[graft] final class SerializableHadoopConf(@transient var value: Configur
   }
 }
 
-/** HOW a layout-aware executor write routes each row to a
-  * subdirectory of its batch: by bucket hash (declared-bucket tables —
-  * the layout claim survives the write) or by partition value
-  * (PARTITIONED BY tables — the pruning facts follow the rows).
-  * Shipped to writer tasks inside the factory; `dirOf` runs on the
-  * TRIMMED row (physical write-schema ordinals). */
+/** THE routing definition of the snapshot table's layouts: which
+  * subdirectory of its batch a row's file lives in — by bucket hash
+  * (declared-bucket tables; the path carries the SPJ claim) or by
+  * partition value (PARTITIONED BY tables; the path carries the pruning
+  * facts). Every layout-aware write routes through it, programmatic and
+  * SQL alike. `dirOf` runs on the TRIMMED row (physical write-schema
+  * ordinals); `clusterBy` names the ordinals whose values decide the
+  * directory. */
 private[graft] sealed trait GraftSplitSpec extends Serializable {
   def dirOf(row: InternalRow): String
-  /** The batch directory prefix this layout spells in paths. */
+  def clusterBy: Seq[Int]
+  /** A fresh batch directory spelling this layout. */
   def batchDirName: String
 }
 
-private[catalog] object GraftSplitSpec {
-  /** The layout split a DSv2 executor write over `writeSchema` should
-    * honor for this table: buckets when declared (the SPJ layout
-    * survives the write), else partition directories when declared
-    * (the pruning facts follow the rows), else None (plain write). */
-  def forSnap(snap: SnapshotTable.SqlSnapshot,
-      writeSchema: StructType): Option[GraftSplitSpec] = {
-    val bucket: Option[GraftSplitSpec] = for {
-      n <- snap.declaredBuckets
-      key <- snap.statsKey
-      (f, i) <- writeSchema.fields.zipWithIndex
-        .find(_._1.name.equalsIgnoreCase(key))
-      if (f.dataType == IntegerType || f.dataType == LongType ||
-        f.dataType == StringType) &&
-        !writeSchema.fields.exists(_.name.equalsIgnoreCase("_graft_bucket"))
-    } yield GraftBucketSplit(n, i, f.dataType)
-    def partition: Option[GraftSplitSpec] = {
-      val cols = snap.partitionCols.flatMap { phys =>
-        writeSchema.fields.zipWithIndex.collectFirst {
-          case (f, i) if SnapshotTable.normName(snap.physName(f.name)) ==
-            SnapshotTable.normName(phys) => (phys, i, f.dataType)
-        }
-      }
-      if (cols.nonEmpty && cols.size == snap.partitionCols.size &&
-          cols.forall(c => c._3 == IntegerType || c._3 == LongType ||
-            c._3 == StringType || c._3 == org.apache.spark.sql.types.DateType))
-        Some(GraftPartitionSplit(cols))
-      else None
+private[graft] object GraftSplitSpec {
+  /** Bucket-per-file on `key`, a top-level int/bigint/string field of
+    * `schema`. */
+  def buckets(schema: StructType, key: String, n: Int): Option[GraftBucketSplit] =
+    schema.fields.zipWithIndex.find(_._1.name.equalsIgnoreCase(key)).collect {
+      case (f, i) if Seq(IntegerType, LongType, StringType).contains(f.dataType) =>
+        GraftBucketSplit(n, i, f.dataType)
     }
-    bucket.orElse(partition)
+
+  /** One directory level per declared partition column `physCols`
+    * (physical names), matched against `schema`'s fields through
+    * `phys`; None unless every column resolves to an int, bigint,
+    * string or date field. */
+  def partitions(schema: StructType, physCols: Seq[String],
+      phys: String => String): Option[GraftPartitionSplit] = {
+    val cols = physCols.flatMap { pc =>
+      schema.fields.zipWithIndex.collectFirst {
+        case (f, i) if SnapshotTable.normName(phys(f.name)) ==
+          SnapshotTable.normName(pc) => (pc, i, f.dataType)
+      }
+    }
+    if (cols.nonEmpty && cols.size == physCols.size &&
+        cols.forall(c => Seq(IntegerType, LongType, StringType, DateType).contains(c._3)))
+      Some(GraftPartitionSplit(cols))
+    else None
   }
+
+  /** The layout a DSv2 executor write over `writeSchema` should honor
+    * for this table: buckets when declared (the SPJ layout survives
+    * the write), else partition directories when declared (the pruning
+    * facts follow the rows), else None (plain write). */
+  def forSnap(snap: SnapshotTable.SqlSnapshot,
+      writeSchema: StructType): Option[GraftSplitSpec] =
+    (for { n <- snap.declaredBuckets; key <- snap.statsKey; b <- buckets(writeSchema, key, n) }
+      yield b).orElse(
+      if (snap.partitionCols.isEmpty) None
+      else partitions(writeSchema, snap.partitionCols, snap.physName))
 }
 
-/** `pmod(murmur3_hash(key), n)` — the writer's exact typed hash
-  * ([[GraftBucketFunction]]'s twin). */
+/** `_graft_bucket=<pmod(murmur3(key), n)>` ([[GraftBucketOf]]). */
 private[graft] final case class GraftBucketSplit(buckets: Int,
     keyOrdinal: Int, keyType: DataType) extends GraftSplitSpec {
-  @transient private lazy val hasher =
-    org.apache.spark.sql.catalyst.expressions.Murmur3Hash(
-      Seq(org.apache.spark.sql.catalyst.expressions.BoundReference(
-        keyOrdinal, keyType, nullable = true)), 42)
-  override def dirOf(row: InternalRow): String = {
-    val h = hasher.eval(row).asInstanceOf[Int]
-    s"_graft_bucket=${((h % buckets) + buckets) % buckets}"
-  }
+  private val bucketOf = new GraftBucketOf(keyOrdinal, keyType)
+  override def dirOf(row: InternalRow): String =
+    s"_graft_bucket=${bucketOf(row, buckets)}"
+  override def clusterBy: Seq[Int] = Seq(keyOrdinal)
   override def batchDirName: String =
     s"data/bkt$buckets-${java.util.UUID.randomUUID().toString.take(8).filter(_ != '-')}"
 }
 
 /** One `_graft_p_<col>=<url-encoded value>` level per declared
-  * partition column — byte-identical to the V1 partitioned writer's
-  * Spark-side `url_encode(cast(col as string))` fragments (URLEncoder
-  * IS Spark's url_encode). NULL partition values refuse loudly: the
-  * directory is the value. */
+  * partition column, nested in declaration order ([[SnapshotTable
+  * .partValuesOf]] and [[SnapshotTable.partCatalystValue]] read it
+  * back). NULL partition values refuse loudly: the directory is the
+  * value, and a null token would collide with a legal string. */
 private[graft] final case class GraftPartitionSplit(
     cols: Seq[(String, Int, DataType)]) extends GraftSplitSpec {
   override def dirOf(row: InternalRow): String =
@@ -505,160 +499,62 @@ private[graft] final case class GraftPartitionSplit(
         case IntegerType => row.getInt(i).toString
         case LongType => row.getLong(i).toString
         case StringType => row.getUTF8String(i).toString
-        case org.apache.spark.sql.types.DateType =>
+        case DateType =>
           org.apache.spark.sql.catalyst.util.DateTimeUtils
             .toJavaDate(row.getInt(i)).toString
         case other => throw new IllegalStateException(
           s"unsupported partition type ${other.simpleString}")
       }
-      s"_graft_p_$name=" + java.net.URLEncoder.encode(raw, "UTF-8")
+      s"${SnapshotTable.PartDirPrefix}$name=" + java.net.URLEncoder.encode(raw, "UTF-8")
     }.mkString("/")
+  override def clusterBy: Seq[Int] = cols.map(_._2)
   override def batchDirName: String =
     s"data/pt-${java.util.UUID.randomUUID().toString.take(8).filter(_ != '-')}"
 }
 
 private[catalog] final case class GraftWriterFactory(conf: SerializableHadoopConf,
     root: String, batchDir: String, physSchema: StructType, stats: Seq[StatsSpec],
-    split: Option[GraftSplitSpec] = None)
+    split: Option[GraftSplitSpec])
   extends DataWriterFactory
     with org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    split match {
-      case Some(sp) =>
-        new GraftSplitDataWriter(conf.value, root, batchDir, physSchema,
-          stats, sp, partitionId, taskId, nameSuffix = "")
-      case None =>
-        new GraftParquetWriter(conf.value, root,
-          s"$batchDir/part-$partitionId-$taskId.parquet", physSchema, stats)
-    }
-  // streaming twin: the task id is globally unique per attempt, so the
-  // same naming scheme keeps every epoch's files distinct. Epoch
-  // appends are layout-aware too: a declared-bucket table keeps SPJ
-  // through streaming ingest, a partitioned table's epochs land under
-  // pruned directories.
+    new GraftTaskWriter(conf.value, root, batchDir, physSchema, stats, split, partitionId)
+  // streaming twin: every file name carries its attempt's UUID, so
+  // epochs sharing a batch directory never collide
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
-    split match {
-      case Some(sp) =>
-        new GraftSplitDataWriter(conf.value, root, batchDir, physSchema,
-          stats, sp, partitionId, taskId, nameSuffix = s"-e$epochId")
-      case None =>
-        new GraftParquetWriter(conf.value, root,
-          s"$batchDir/part-$partitionId-$taskId-e$epochId.parquet", physSchema, stats)
-    }
+    createWriter(partitionId, taskId)
 }
 
-/** A layout-aware write task: routes each row to its
-  * [[GraftSplitSpec]] subdirectory, measuring stats in the write loop
-  * like the plain writer. Row-level writes on bucketed tables arrive
-  * clustered (one bucket per task — the write's required
-  * distribution), partitioned writes clustered by partition value; if
-  * the engine hands a task more groups anyway, open writers are
-  * capped — the overflow closes them all and reappearing groups start
-  * new files (multiple files per directory are a legal layout). */
-private[catalog] final class GraftSplitDataWriter(conf: Configuration,
-    root: String, batchDir: String, physSchema: StructType,
-    stats: Seq[StatsSpec], split: GraftSplitSpec,
-    partitionId: Int, taskId: Long, nameSuffix: String)
+/** THE task-side writer of every snapshot data file — programmatic
+  * writes ([[SnapshotTable]]'s `writeRolled` job) and every DSv2 batch
+  * and streaming write alike. Input arrives clustered by directory
+  * (one file per task when there is no layout): the writer keeps ONE
+  * parquet file open and rolls to a new one whenever `split` routes a
+  * row to another directory, measuring rows and stats-key min/max in
+  * the write loop ([[GraftParquetWriter]]). Files are named the way
+  * `df.write` names them — `part-<task ordinal>-<attempt uuid>-c<file
+  * counter><codec>.parquet`, so path order is task order and a retried
+  * or speculative attempt never collides with another's files (only
+  * the winning attempt's facts reach the manifest; losers' files die
+  * in the next vacuum). A task that sees no rows writes no file. */
+private[graft] final class GraftTaskWriter(conf: Configuration, root: String,
+    batchDir: String, physSchema: StructType, stats: Seq[StatsSpec],
+    split: Option[GraftSplitSpec], partitionId: Int)
   extends DataWriter[InternalRow] {
 
-  /** Each open parquet writer buffers up to a row group; 16 bounds a
-    * pathological distribution at well under executor memory. */
-  private val MaxOpenWriters = 16
-
-  private val open = new java.util.HashMap[String, GraftParquetWriter]()
-  private val done = scala.collection.mutable.ArrayBuffer.empty[GraftCommitMessage]
-  private var fileSeq = 0
-
-  // rows arrive either exactly as the write schema or with one
-  // operation-marker int prefixed (same contract as GraftParquetWriter)
-  private var fieldOffset = -1
-  private var trim: org.apache.spark.sql.catalyst.expressions.UnsafeProjection = _
-
-  override def write(row0: InternalRow): Unit = {
-    if (fieldOffset < 0) {
-      fieldOffset = row0.numFields - physSchema.length
-      require(fieldOffset == 0 || fieldOffset == 1,
-        s"split writer expected ${physSchema.length} (or +1 marker) fields, " +
-          s"got ${row0.numFields}")
-      if (fieldOffset == 1)
-        trim = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(
-          physSchema.fields.zipWithIndex.map { case (f, i) =>
-            org.apache.spark.sql.catalyst.expressions.BoundReference(
-              i + 1, f.dataType, nullable = true) }.toIndexedSeq)
-    }
-    val row = if (fieldOffset == 0) row0 else trim(row0)
-    val dir = split.dirOf(row)
-    var w = open.get(dir)
-    if (w == null) {
-      if (open.size >= MaxOpenWriters) {
-        open.values.forEach(ww =>
-          done += ww.commit().asInstanceOf[GraftCommitMessage])
-        open.clear()
-      }
-      w = new GraftParquetWriter(conf, root,
-        s"$batchDir/$dir/part-$partitionId-$taskId$nameSuffix-$fileSeq.parquet",
-        physSchema, stats)
-      fileSeq += 1
-      open.put(dir, w)
-    }
-    w.write(row)
-  }
-
-  override def commit(): WriterCommitMessage = {
-    open.values.forEach(w => done += w.commit().asInstanceOf[GraftCommitMessage])
-    open.clear()
-    GraftMultiCommitMessage(done.filter(_.rows > 0).toSeq)
-  }
-
-  override def abort(): Unit = {
-    open.values.forEach(w => try w.abort() catch { case _: Exception => () })
-    open.clear()
-    // files already rolled out of the open set die with the batch dir
-    // (the BatchWrite-level abort removes it)
-    val f = new Path(root).getFileSystem(conf)
-    done.foreach(m =>
-      try f.delete(new Path(root, m.relPath), false)
-      catch { case _: IOException => () })
-  }
-
-  override def close(): Unit = ()
-}
-
-/** One task's parquet writer: rows stream straight into Spark's
-  * [[ParquetWriteSupport]] (no Row conversion, no buffering), stats
-  * accumulate in the loop (min/max per configured key — long widened
-  * from int, strings as UTF-8 bytes in unsigned order, exactly the
-  * manifest's stats semantics). A task that saw no rows writes no file
-  * at all; a committed file counts in the task's output metrics (bytes,
-  * records), as `df.write`'s do. Speculative duplicates are excluded
-  * by Spark's commit coordinator; the losers' files die in
-  * [[DataWriter.abort]]. */
-private[graft] final class GraftParquetWriter(conf: Configuration, root: String,
-    relPath: String, physSchema: StructType, stats: Seq[StatsSpec])
-  extends DataWriter[InternalRow] {
-
-  import org.apache.hadoop.mapreduce.RecordWriter
-
-  private var writer: RecordWriter[Void, InternalRow] = _
-  private var rows = 0L
-  private var minL, maxL, min2L, max2L = null: java.lang.Long
-  private var minB, maxB, min2B, max2B = null: Array[Byte]
-  private val ord = java.util.Arrays.compareUnsigned(_: Array[Byte], _: Array[Byte])
-
-  private def open(): RecordWriter[Void, InternalRow] = {
-    val c = new Configuration(conf)
-    ParquetWriteSupport.setSchema(physSchema, c)
-    c.set(ParquetOutputFormat.WRITE_SUPPORT_CLASS, classOf[ParquetWriteSupport].getName)
-    new ParquetOutputFormat[InternalRow]().getRecordWriter(
-      c, new Path(root, relPath), ParquetOutputFormat.getCompression(c))
-  }
+  private val router = split.orNull
+  private val codecExt = ParquetOutputFormat.getCompression(conf).getExtension
+  private val attempt = java.util.UUID.randomUUID()
+  private val done = scala.collection.mutable.ArrayBuffer.empty[SnapshotTable.FileEntry]
+  private var cur: GraftParquetWriter = _
+  private var curDir: String = _
 
   /** Rows arrive either exactly as the write schema, or (group-based
     * ReplaceData with no metadata projection — Spark hands the raw
     * MergeRows output) prefixed with one int operation-marker column.
     * Detected once from the first row's arity; the marker is projected
-    * away before parquet sees the row. */
+    * away before routing and parquet see the row. */
   private var fieldOffset = -1
   private var trim: org.apache.spark.sql.catalyst.expressions.UnsafeProjection = _
 
@@ -674,8 +570,61 @@ private[graft] final class GraftParquetWriter(conf: Configuration, root: String,
             org.apache.spark.sql.catalyst.expressions.BoundReference(
               i + 1, f.dataType, nullable = true) }.toIndexedSeq)
     }
-    val row = if (fieldOffset == 0) row0 else trim(row0)
-    if (writer == null) writer = open()
+    val row = if (trim == null) row0 else trim(row0)
+    val dir = if (router == null) "" else router.dirOf(row)
+    if (cur == null || dir != curDir) {
+      if (cur != null) done += cur.commit()
+      cur = null
+      val sub = if (dir.isEmpty) "" else s"$dir/"
+      cur = new GraftParquetWriter(conf, root,
+        f"$batchDir/${sub}part-$partitionId%05d-$attempt-c${done.size}%03d$codecExt.parquet",
+        physSchema, stats)
+      curDir = dir
+    }
+    cur.write(row)
+  }
+
+  override def commit(): GraftCommitMessage = {
+    if (cur != null) done += cur.commit()
+    cur = null
+    GraftCommitMessage(done.toSeq)
+  }
+
+  override def abort(): Unit = {
+    if (cur != null) cur.abort()
+    cur = null
+    val f = new Path(root).getFileSystem(conf)
+    done.foreach(e =>
+      try f.delete(new Path(root, e.path), false)
+      catch { case _: IOException => () })
+  }
+
+  override def close(): Unit = ()
+}
+
+/** One parquet data file: rows stream straight into Spark's
+  * [[ParquetWriteSupport]] (no Row conversion, no buffering), stats
+  * accumulate in the loop (min/max per configured key — long widened
+  * from int, strings as UTF-8 bytes in unsigned order, exactly the
+  * manifest's stats semantics). The committed file counts in the
+  * task's output metrics (bytes, records), as `df.write`'s do, and
+  * comes back as its manifest entry. */
+private[graft] final class GraftParquetWriter(conf: Configuration, root: String,
+    relPath: String, physSchema: StructType, stats: Seq[StatsSpec]) {
+
+  private val writer: org.apache.hadoop.mapreduce.RecordWriter[Void, InternalRow] = {
+    val c = new Configuration(conf)
+    ParquetWriteSupport.setSchema(physSchema, c)
+    c.set(ParquetOutputFormat.WRITE_SUPPORT_CLASS, classOf[ParquetWriteSupport].getName)
+    new ParquetOutputFormat[InternalRow]().getRecordWriter(
+      c, new Path(root, relPath), ParquetOutputFormat.getCompression(c))
+  }
+  private var rows = 0L
+  private var minL, maxL, min2L, max2L = null: java.lang.Long
+  private var minB, maxB, min2B, max2B = null: Array[Byte]
+  private val ord = java.util.Arrays.compareUnsigned(_: Array[Byte], _: Array[Byte])
+
+  def write(row: InternalRow): Unit = {
     stats.foreach { s =>
       val r = s.holder(row)
       val o = s.path.last
@@ -705,29 +654,24 @@ private[graft] final class GraftParquetWriter(conf: Configuration, root: String,
     writer.write(null, row)
   }
 
-  override def commit(): WriterCommitMessage = {
-    if (writer == null)
-      return GraftCommitMessage(relPath, 0L, 0L, None, None, None, None,
-        None, None, None, None)
+  def commit(): SnapshotTable.FileEntry = {
     writer.close(null)
     val p = new Path(root, relPath)
     val len = p.getFileSystem(conf).getFileStatus(p).getLen
     org.apache.spark.sql.graftbridge.Bridge.addTaskOutput(len, rows)
-    GraftCommitMessage(relPath, rows, len,
-      Option(minL).map(_.longValue), Option(maxL).map(_.longValue),
+    SnapshotTable.FileEntry(relPath, Option(minL).map(_.longValue),
+      Option(maxL).map(_.longValue), Some(rows), Some(len),
       Option(minB), Option(maxB),
       Option(min2L).map(_.longValue), Option(max2L).map(_.longValue),
       Option(min2B), Option(max2B))
   }
 
-  override def abort(): Unit = {
-    if (writer != null) try writer.close(null) catch { case _: Exception => () }
+  def abort(): Unit = {
+    try writer.close(null) catch { case _: Exception => () }
     val p = new Path(root, relPath)
     try p.getFileSystem(conf).delete(p, false)
     catch { case _: IOException => () }
   }
-
-  override def close(): Unit = ()
 }
 
 private[graft] object GraftParquetWriter {

@@ -171,7 +171,7 @@ object SnapshotTable {
     * layout `(chunk_idx, filename)` is just as legal and must 2D-prune
     * too). The pruning
     * decision over these fields lives in [[ManifestPruning]]. */
-  private[sources] final case class FileEntry(path: String, minKey: Option[Long],
+  private[graft] final case class FileEntry(path: String, minKey: Option[Long],
       maxKey: Option[Long], rows: Option[Long] = None, bytes: Option[Long] = None,
       minStr: Option[Array[Byte]] = None, maxStr: Option[Array[Byte]] = None,
       min2: Option[Long] = None, max2: Option[Long] = None,
@@ -769,7 +769,7 @@ object SnapshotTable {
     val df = toPhysical(df0, colmap)
     val stats = graft.catalog.StatsSpec.resolve(df0.schema, statsKey, statsKey2)
     val batch = s"data/$batchPrefix-${java.util.UUID.randomUUID().toString.take(8)}"
-    val entries = writeRolled(spark, root, batch, df, df.schema, stats, routed = false)
+    val entries = writeRolled(spark, root, batch, df, stats, None)
     // the bloom builder reads the written files, so it addresses the
     // key as the file spells it
     def kind(secondary: Boolean): Option[(String, Boolean)] =
@@ -792,177 +792,106 @@ object SnapshotTable {
     """^data/bkt(\d+)-[A-Za-z0-9]+/_graft_bucket=(\d+)/[^/]+\.parquet$""".r
 
   /** Write `df0` bucket-per-file on the hash of the (physical) stats
-    * key: `pmod(murmur3_hash(key), buckets)` — the same function the
+    * key: `pmod(murmur3_hash(key), buckets)` — the router
+    * ([[graft.catalog.GraftBucketSplit]]) calls the same function the
     * catalog exposes as `bucket(n, key)`
-    * ([[graft.catalog.GraftBucketFunction]]), so the written layout
-    * and the reported partitioning can never disagree. Range-
-    * repartitioning on (bucket, salt) keeps every file single-bucket
-    * (equal values cannot straddle a range boundary) while letting one
-    * bucket span SEVERAL files: `targetFileBytes` + `inputBytes`
-    * derive a salt width, so file size and write parallelism are not
-    * welded to the join-partitioning count (Iceberg's bucketed writes
-    * split within buckets the same way; the scan's layout rule already
-    * admits many files per bucket id). Rows sort by key within each
-    * file, so row-group stats stay selective.
-    *
-    * Executor tasks write through [[writeRolled]], which measures rows
-    * + stats-key min/max in the write loop. */
+    * ([[graft.catalog.GraftBucketOf]]), so the written layout and the
+    * reported partitioning can never disagree. The batch is hash-
+    * repartitioned on the key into `buckets × salts` tasks: since
+    * `pmod(h, b·s) mod b = pmod(h, b)`, each task holds exactly one
+    * bucket and the task itself is the salt, so every file is
+    * single-bucket while one bucket may span SEVERAL files —
+    * `targetFileBytes` + `inputBytes` derive the salt width, so file
+    * size and write parallelism are not welded to the join-partitioning
+    * count (Iceberg's bucketed writes split within buckets the same
+    * way; the scan's layout rule already admits many files per bucket
+    * id). Rows sort by key within each task, so every file is
+    * key-sorted and row-group stats stay selective. */
   private def writeBucketedFiles(spark: SparkSession, root: String,
       df0: DataFrame, buckets: Int, key: String, key2: Option[String],
       colmap: Map[String, String], targetFileBytes: Option[Long] = None,
       inputBytes: Option[Long] = None): Seq[FileEntry] = {
-    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+    import org.apache.spark.sql.functions.col
     val df = toPhysical(df0, colmap)
-    // guarded at the shared choke point (compact, declared appends,
-    // appendBucketed all land here): withColumn REPLACES an existing
-    // column of the same name — a user column literally named
-    // `_graft_bucket` would be silently destroyed
-    require(!df.columns.exists(_.equalsIgnoreCase("_graft_bucket")),
-      "bucketed writes reserve the column name _graft_bucket " +
-        "(it becomes the bucket directory); rename the column first")
     val physKey = physFor(colmap, key)
-    val physSchema = df.schema
-    val batch = s"data/bkt$buckets-${java.util.UUID.randomUUID().toString.take(8).filter(_ != '-')}"
-    // salt width: enough extra splits that each (bucket, salt) file
-    // lands near the target size. Salt is a second hash OF THE KEY, so
-    // a file still holds whole key groups (bucket semantics intact); a
-    // single pathological hot key stays one file — acceptable, the cap
-    // bounds the blast radius either way.
+    val split = graft.catalog.GraftSplitSpec.buckets(df.schema, physKey, buckets)
+      .getOrElse(throw new IllegalArgumentException(
+        s"bucketed write into $root: '$key' is no int/bigint/string column"))
+    // salt width: enough tasks per bucket that each file lands near
+    // the target size. A task holds whole key groups (bucket semantics
+    // intact); a single pathological hot key stays one file —
+    // acceptable, the cap bounds the blast radius either way.
     val saltN: Int = (targetFileBytes, inputBytes) match {
       case (Some(t), Some(b)) if t > 0 && b > 0 =>
         math.min(4096L, (b + t * buckets.toLong - 1) / (t * buckets.toLong)).toInt
       case _ => 1
     }
-    val withBucket = df
-      .withColumn("_graft_bucket", pmod(hash(col(physKey)), lit(buckets)))
-      .withColumn("_graft_salt",
-        if (saltN <= 1) lit(0) else pmod(hash(col(physKey), lit(saltN)), lit(saltN)))
-    val prepared = withBucket
-      .repartitionByRange(buckets * saltN, col("_graft_bucket"), col("_graft_salt"))
-      .sortWithinPartitions(col("_graft_bucket"), col("_graft_salt"), col(physKey))
-      .select(physSchema.fieldNames.map(col).toIndexedSeq :+
-        org.apache.spark.sql.functions.concat(lit("_graft_bucket="),
-          col("_graft_bucket").cast("string")).as("_graft_dir") :+
-        col("_graft_salt").as("_graft_roll"): _*)
-    writeRolled(spark, root, batch, prepared, physSchema,
-      graft.catalog.StatsSpec.resolve(df0.schema, Some(key), key2))
+    writeRolled(spark, root, split.batchDirName,
+      df.repartition(buckets * saltN, col(physKey)).sortWithinPartitions(col(physKey)),
+      graft.catalog.StatsSpec.resolve(df0.schema, Some(key), key2), Some(split))
   }
 
-  /** Executor-side parquet write — the one core of every snapshot
-    * data-file writer. Unless `routed` is false, `prepared` carries the
-    * physical data columns plus TWO trailing routing columns:
-    * `_graft_dir` (string — the subdirectory under `batch` this row's
-    * file lives in) and `_graft_roll` (int — splits same-dir rows into
-    * several files; salt). The caller arranged partitioning and
-    * intra-task order so equal (dir, roll) rows are contiguous; each
-    * task streams rows through [[graft.catalog.GraftParquetWriter]],
-    * opening a new file whenever the routing pair changes, measuring
-    * rows + stats-key min/max IN the write loop — per-file facts
-    * return as the job result, so manifest entries cost no post-write
-    * footer read or listing. An unrouted write is one file per
-    * non-empty task, directly under `batch`. Names lead with the
-    * zero-padded partition ordinal, so path order is task order. */
+  /** Executor-side parquet write — the job of every programmatic
+    * snapshot data-file write: each task streams its rows through
+    * [[graft.catalog.GraftTaskWriter]] (the same task writer every
+    * DSv2 write uses), which routes rows by `split` into
+    * subdirectories of `batch` (the caller arranged each task's input
+    * clustered by directory and sorted by the stats key; no split =
+    * one file per non-empty task, directly under `batch`) and measures
+    * rows + stats-key min/max IN the write loop — per-file entries
+    * return as the job result, so the manifest costs no post-write
+    * footer read or listing. */
   private def writeRolled(spark: SparkSession, root: String, batch: String,
-      prepared: DataFrame, physSchema: org.apache.spark.sql.types.StructType,
-      stats: Seq[graft.catalog.StatsSpec], routed: Boolean = true): Seq[FileEntry] = {
-    val nCols = physSchema.length
-    val conf = graft.catalog.GraftParquetWriter.confWithSessionKeys(
-      spark.sparkContext.hadoopConfiguration)
-    val shipConf = new graft.catalog.SerializableHadoopConf(conf)
-    val codecExt = org.apache.parquet.hadoop.ParquetOutputFormat.getCompression(conf).getExtension
-    val facts: Array[Seq[graft.catalog.GraftCommitMessage]] =
-      spark.sparkContext.runJob(prepared.queryExecution.toRdd,
-        (ctx: org.apache.spark.TaskContext,
-         it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
-          import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
-          val out = scala.collection.mutable.ArrayBuffer.empty[graft.catalog.GraftCommitMessage]
-          // trim the routing columns: files hold only table columns
-          val trim = UnsafeProjection.create(physSchema.fields.zipWithIndex.map {
-            case (fld, i) => BoundReference(i, fld.dataType, nullable = true)
-          }.toIndexedSeq)
-          var cur: graft.catalog.GraftParquetWriter = null
-          var curDir: String = null
-          var curRoll = -1
-          var fileIdx = 0
-          // df.write's file naming (partition ordinal, a UUID, file
-          // counter, codec): a UUID per task ATTEMPT, so a retried or
-          // speculative task never collides with another attempt's
-          // file — losers' files are unreferenced (only the winning
-          // attempt's facts return) and die in the next vacuum
-          val attempt = java.util.UUID.randomUUID()
-          try {
-            it.foreach { row =>
-              val dir = if (routed) row.getUTF8String(nCols).toString + "/" else ""
-              val roll = if (routed) row.getInt(nCols + 1) else 0
-              if (cur == null || roll != curRoll || dir != curDir) {
-                if (cur != null)
-                  out += cur.commit().asInstanceOf[graft.catalog.GraftCommitMessage]
-                curDir = dir; curRoll = roll
-                cur = new graft.catalog.GraftParquetWriter(shipConf.value, root,
-                  f"$batch/${dir}part-${ctx.partitionId()}%05d-$attempt-c$fileIdx%03d$codecExt.parquet",
-                  physSchema, stats)
-                fileIdx += 1
-              }
-              cur.write(if (routed) trim(row) else row)
-            }
-            if (cur != null)
-              out += cur.commit().asInstanceOf[graft.catalog.GraftCommitMessage]
-            out.toSeq
-          } catch {
-            case e: Throwable =>
-              if (cur != null) try cur.abort() catch { case _: Exception => () }
-              throw e
-          }
-        })
-    facts.toSeq.flatten.sortBy(_.relPath).map(m =>
-      FileEntry(m.relPath, m.minL, m.maxL, Some(m.rows), Some(m.bytes),
-        m.minB, m.maxB, m.min2L, m.max2L, m.min2B, m.max2B))
+      df: DataFrame, stats: Seq[graft.catalog.StatsSpec],
+      split: Option[graft.catalog.GraftSplitSpec]): Seq[FileEntry] = {
+    val physSchema = df.schema
+    val conf = new graft.catalog.SerializableHadoopConf(
+      graft.catalog.GraftParquetWriter.confWithSessionKeys(
+        spark.sparkContext.hadoopConfiguration))
+    spark.sparkContext.runJob(df.queryExecution.toRdd,
+      (ctx: org.apache.spark.TaskContext,
+       it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
+        val w = new graft.catalog.GraftTaskWriter(conf.value, root, batch,
+          physSchema, stats, split, ctx.partitionId())
+        try { it.foreach(w.write); w.commit().files }
+        catch {
+          case e: Throwable =>
+            try w.abort() catch { case _: Exception => () }
+            throw e
+        }
+      }).toSeq.flatten.sortBy(_.path)
   }
 
   /** Write `df0` under Hive-style partition directories — one
     * `_graft_p_<col>=<url-encoded value>` path level per DECLARED
-    * partition column, nested in declaration order. The partition
-    * columns STAY in the data files (the directory is a pruning fact,
-    * not the storage of record), so every reader — including one that
-    * ignores the layout entirely — sees full rows; pruning is pure
-    * upside and its absence is never wrong. Rows sort by the dir
-    * fragment within each INPUT partition (no shuffle — Spark's own
-    * dynamic-partition write does the same), then roll into one file
-    * per (task, partition value), stats measured in the write loop.
-    * NULL partition values refuse loudly: the directory IS the value,
-    * and a null token would collide with a legal string. */
+    * partition column, nested in declaration order
+    * ([[graft.catalog.GraftPartitionSplit]] routes each row). The
+    * partition columns STAY in the data files (the directory is a
+    * pruning fact, not the storage of record), so every reader —
+    * including one that ignores the layout entirely — sees full rows;
+    * pruning is pure upside and its absence is never wrong. Rows sort
+    * by the partition columns, then the stats key, within each INPUT
+    * partition (no shuffle — Spark's own dynamic-partition write does
+    * the same), then roll into one file per (task, partition value),
+    * stats measured in the write loop. NULL partition values refuse
+    * loudly: the directory IS the value. */
   private def writePartitionedFiles(spark: SparkSession, root: String,
       df0: DataFrame, partCols: Seq[String], statsKey: Option[String],
       statsKey2: Option[String], colmap: Map[String, String]): Seq[FileEntry] = {
-    import org.apache.spark.sql.functions.{col, concat, concat_ws, lit, url_encode, when, raise_error}
+    import org.apache.spark.sql.functions.col
     val df = toPhysical(df0, colmap)
-    val physSchema = df.schema
-    require(!df.columns.exists(c => c.equalsIgnoreCase("_graft_dir") ||
-        c.equalsIgnoreCase("_graft_roll")),
-      "partitioned writes reserve the column names _graft_dir/_graft_roll")
-    val physKey = statsKey.map(physFor(colmap, _))
-    val batch = s"data/pt-${java.util.UUID.randomUUID().toString.take(8).filter(_ != '-')}"
-    val segs = partCols.map { c =>
-      val v = col(c).cast("string")
-      concat(lit(s"${PartDirPrefix}$c="), url_encode(
-        when(v.isNull, raise_error(lit(s"partitioned write into $root: NULL in " +
-          s"partition column '$c' (the directory is the value; default nulls " +
-          "before writing)")).cast("string")).otherwise(v)))
-    }
-    val sortCols = col("_graft_dir") +: physKey.map(col).toSeq
-    val prepared = df
-      .withColumn("_graft_dir", concat_ws("/", segs: _*))
-      .withColumn("_graft_roll", lit(0))
-      .sortWithinPartitions(sortCols: _*)
-      .select(physSchema.fieldNames.map(col).toIndexedSeq :+
-        col("_graft_dir") :+ col("_graft_roll"): _*)
-    writeRolled(spark, root, batch, prepared, physSchema,
-      graft.catalog.StatsSpec.resolve(df0.schema, statsKey, statsKey2))
+    val split = graft.catalog.GraftSplitSpec.partitions(df.schema, partCols, identity)
+      .getOrElse(throw new IllegalArgumentException(
+        s"partitioned write into $root: partition columns ${partCols.mkString(", ")} " +
+          "must all be int/bigint/string/date columns of the batch"))
+    val sortCols = (partCols ++ statsKey.map(physFor(colmap, _))).map(col)
+    writeRolled(spark, root, split.batchDirName, df.sortWithinPartitions(sortCols: _*),
+      graft.catalog.StatsSpec.resolve(df0.schema, statsKey, statsKey2), Some(split))
   }
 
   /** The partition-directory key prefix: a reserved spelling keeps user
     * column names from colliding with layout facts in paths. */
-  private[sources] val PartDirPrefix = "_graft_p_"
+  private[graft] val PartDirPrefix = "_graft_p_"
 
   private val PartDirRe = """_graft_p_([A-Za-z0-9_]+)=(.*)""".r
 
@@ -4462,15 +4391,6 @@ object SnapshotTable {
   private[graft] final case class SqlDataFile(relPath: String, bytes: Long,
       rows: Option[Long], hasDv: Boolean)
 
-  /** A file the DSv2 [[graft.catalog]] write path produced: enough to
-    * mint a manifest [[FileEntry]] without re-reading footers (the
-    * executor writers measured rows and key ranges as they wrote). */
-  private[graft] final case class SqlWrittenFile(relPath: String, rows: Long,
-      bytes: Long, minL: Option[Long], maxL: Option[Long],
-      minB: Option[Array[Byte]], maxB: Option[Array[Byte]],
-      min2L: Option[Long], max2L: Option[Long],
-      min2B: Option[Array[Byte]], max2B: Option[Array[Byte]])
-
   /** Above this many recorded deleted positions across the files one
     * DSv2 scan keeps, the scan refuses rather than materializing the
     * position sets on the driver (the broadcast the per-file readers
@@ -4762,17 +4682,13 @@ object SnapshotTable {
       m.statsKey2.map(physFor(m.colmap, _)), buckets, prunePartTypesOf(m, sch))
   }
 
-  /** The writer's bucket assignment for one literal —
-    * `pmod(murmur3(value), n)` with the hash TYPED like the column
-    * (the bucket function's own discipline: murmur3(5: int) !=
-    * murmur3(5L)). Driver-side, used by bucket pruning. */
+  /** The writer's bucket assignment for one literal (catalyst value),
+    * hashed TYPED like the column ([[graft.catalog.GraftBucketOf]]).
+    * Driver-side, used by bucket pruning. */
   private[sources] def bucketOfValue(value: Any,
-    dt: org.apache.spark.sql.types.DataType, n: Int): Int = {
-    val h = org.apache.spark.sql.catalyst.expressions.Murmur3Hash(
-      Seq(org.apache.spark.sql.catalyst.expressions.Literal(value, dt)), 42)
-      .eval(null).asInstanceOf[Int]
-    ((h % n) + n) % n
-  }
+    dt: org.apache.spark.sql.types.DataType, n: Int): Int =
+    new graft.catalog.GraftBucketOf(0, dt)(
+      org.apache.spark.sql.catalyst.InternalRow(value), n)
 
   /** Resolve `version` (default latest) for the DSv2 planner. */
   private[graft] def sqlSnapshot(spark: SparkSession, root: String,
@@ -4825,7 +4741,7 @@ object SnapshotTable {
     * the rewrite materialized it. */
   private[graft] def sqlReplaceFiles(spark: SparkSession, root: String,
       expectedVersion: Int, scannedRel: Set[String],
-      written: Seq[SqlWrittenFile]): Int =
+      written: Seq[FileEntry]): Int =
     retrying(spark, root, op = "merge") { (latest: Int) =>
       require(latest == expectedVersion,
         s"concurrent write detected on $root: the row-level operation scanned " +
@@ -4833,11 +4749,7 @@ object SnapshotTable {
           "statement against the new snapshot.")
       val m = manifestFull(spark, root, latest)
       val carried = m.entries.filterNot(e => scannedRel(e.path))
-      val fresh = written.map { w =>
-        FileEntry(w.relPath, w.minL, w.maxL, Some(w.rows), Some(w.bytes),
-          w.minB, w.maxB, w.min2L, w.max2L, w.min2B, w.max2B)
-      }
-      Pending(carried ++ fresh, schemaOf(spark, root, m), m.statsKey, m.statsKey2,
+      Pending(carried ++ written, schemaOf(spark, root, m), m.statsKey, m.statsKey2,
         colmap = if (m.colmap.isEmpty) None else Some(m.colmap))
     }
 
@@ -4930,14 +4842,14 @@ object SnapshotTable {
     * live file that spells no partition tuple (same contract as
     * [[sqlOverwriteWhere]]). */
   private[graft] def sqlOverwriteDynamic(spark: SparkSession, root: String,
-      written: Seq[SqlWrittenFile]): Int =
+      written: Seq[FileEntry]): Int =
     retrying(spark, root, op = "rewrite") { (latest: Int) =>
       val m = manifestFull(spark, root, latest)
       require(m.partitionCols.nonEmpty,
         s"$root declares no partition columns; use sqlOverwriteFiles")
       val n = m.partitionCols.size
       val replaced: Set[Map[String, String]] =
-        written.map(w => partValuesOf(w.relPath)).toSet
+        written.map(w => partValuesOf(w.path)).toSet
       require(replaced.forall(_.size == n),
         s"internal: dynamic overwrite of $root wrote a non-partition path")
       val carried = m.entries.filter { e =>
@@ -4949,11 +4861,7 @@ object SnapshotTable {
             "the whole table")
         !replaced.contains(vals)
       }
-      val fresh = written.map { w =>
-        FileEntry(w.relPath, w.minL, w.maxL, Some(w.rows), Some(w.bytes),
-          w.minB, w.maxB, w.min2L, w.max2L, w.min2B, w.max2B)
-      }
-      Pending(carried ++ fresh, schemaOf(spark, root, m), m.statsKey, m.statsKey2,
+      Pending(carried ++ written, schemaOf(spark, root, m), m.statsKey, m.statsKey2,
         colmap = if (m.colmap.isEmpty) None else Some(m.colmap))
     }
 
@@ -5015,14 +4923,10 @@ object SnapshotTable {
     * new snapshot — op "rewrite"). Schema unchanged by contract
     * (Spark aligned the query to the table before writing). */
   private[graft] def sqlOverwriteFiles(spark: SparkSession, root: String,
-      written: Seq[SqlWrittenFile], txnBatchId: Option[Long] = None): Int =
+      written: Seq[FileEntry], txnBatchId: Option[Long] = None): Int =
     retrying(spark, root, op = "rewrite") { (latest: Int) =>
       val m = manifestFull(spark, root, latest)
-      val fresh = written.map { w =>
-        FileEntry(w.relPath, w.minL, w.maxL, Some(w.rows), Some(w.bytes),
-          w.minB, w.maxB, w.min2L, w.max2L, w.min2B, w.max2B)
-      }
-      Pending(fresh, schemaOf(spark, root, m), m.statsKey, m.statsKey2,
+      Pending(written, schemaOf(spark, root, m), m.statsKey, m.statsKey2,
         txnBatchId = txnBatchId,
         colmap = if (m.colmap.isEmpty) None else Some(m.colmap))
     }
@@ -5033,14 +4937,10 @@ object SnapshotTable {
     * replay cursor the V1 streaming sink uses — the caller checks
     * [[lastTxnBatchId]] before calling). */
   private[graft] def sqlAppendFiles(spark: SparkSession, root: String,
-      written: Seq[SqlWrittenFile], txnBatchId: Long): Int =
+      written: Seq[FileEntry], txnBatchId: Long): Int =
     retrying(spark, root, op = "append") { (latest: Int) =>
       val m = manifestFull(spark, root, latest)
-      val fresh = written.map { w =>
-        FileEntry(w.relPath, w.minL, w.maxL, Some(w.rows), Some(w.bytes),
-          w.minB, w.maxB, w.min2L, w.max2L, w.min2B, w.max2B)
-      }
-      Pending(m.entries ++ fresh, schemaOf(spark, root, m), m.statsKey,
+      Pending(m.entries ++ written, schemaOf(spark, root, m), m.statsKey,
         m.statsKey2, txnBatchId = Some(txnBatchId),
         colmap = if (m.colmap.isEmpty) None else Some(m.colmap))
     }

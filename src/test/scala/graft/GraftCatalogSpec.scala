@@ -1997,4 +1997,47 @@ class GraftCatalogSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSeq
     assert(atV3 == after1, "time travel reads its own version's dv set")
   }
+
+  test("dynamic overwrite and streamed epochs into buckets write key-sorted files: SPJ is exact") {
+    wh
+    val tables = Seq("spj_ow", "spj_st", "spj_dim")
+    (tables :+ "spj_src").foreach(t => sql(s"DROP TABLE IF EXISTS gsql.main.$t"))
+    tables.foreach(t => sql(s"CREATE TABLE gsql.main.$t (id BIGINT, v STRING) " +
+      "TBLPROPERTIES ('statsKey'='id', 'buckets'='4')"))
+    sql("CREATE TABLE gsql.main.spj_src (id BIGINT, v STRING) TBLPROPERTIES ('statsKey'='id')")
+    sql("INSERT INTO gsql.main.spj_dim SELECT id, concat('d', id) FROM range(0, 1000)")
+    // ONE task holding every bucket, keys DESCENDING: only the write's
+    // own clustering and sort can make each bucket file key-sorted
+    val descending = "SELECT /*+ REPARTITION(1) */ id, CAST(id AS STRING) " +
+      "FROM range(0, 1000) ORDER BY id DESC"
+    sql(s"INSERT INTO gsql.main.spj_src $descending")
+    assert(liveFiles("spj_src").size == 1)
+    val keys = Seq("spark.sql.sources.partitionOverwriteMode",
+      "spark.sql.sources.v2.bucketing.enabled", "spark.sql.autoBroadcastJoinThreshold")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      spark.conf.set(keys(0), "dynamic")
+      sql(s"INSERT OVERWRITE gsql.main.spj_ow $descending")
+      val ckpt = java.nio.file.Files.createTempDirectory("graft-spj-st").toString
+      spark.readStream.table("gsql.main.spj_src")
+        .writeStream.option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .toTable("gsql.main.spj_st").awaitTermination()
+      spark.conf.set(keys(1), "true")
+      spark.conf.set(keys(2), "-1")
+      Seq("spj_ow", "spj_st").foreach { t =>
+        assert(graft.sources.SnapshotTable.describeDetail(spark, s"$wh/main/$t")
+          .bucketedLayout.contains(4), s"$t must keep the bucket layout")
+        assert(liveFiles(t).size == 4, s"$t: one file per bucket, got ${liveFiles(t)}")
+        val j = sql(s"SELECT a.id, a.v, b.v FROM gsql.main.$t a " +
+          "JOIN gsql.main.spj_dim b ON a.id = b.id")
+        val rows = j.collect()
+        assert(rows.length == 1000,
+          s"$t: join returned ${rows.length} rows\n${j.queryExecution.executedPlan}")
+        assert(rows.forall(r => r.getString(1) == r.getLong(0).toString &&
+          r.getString(2) == s"d${r.getLong(0)}"))
+      }
+    } finally prev.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
 }
