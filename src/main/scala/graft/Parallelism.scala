@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, FileTable}
 
 /** Small-file parallelism guard.
   *
@@ -19,8 +20,10 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * not from `df.rdd.getNumPartitions`, which would force a full
   * plan→RDD conversion of a QueryExecution that is then thrown away —
   * a wasted second planning pass on the construction path of every
-  * corpus query. Non-file plans (no HadoopFsRelation leaf — not a shape
-  * any current call site produces) keep the old rdd-based check.
+  * corpus query. File leaves are V1 file relations and DSv2 file
+  * tables — the snapshot table's reads are the latter; non-file plans
+  * (not a shape any current call site produces) keep the old
+  * rdd-based check.
   */
 object Parallelism {
   def ensure(spark: SparkSession)(df: DataFrame): DataFrame = {
@@ -50,21 +53,23 @@ object Parallelism {
     * max(openCost, totalBytes/defaultParallelism)); splits then pack
     * into maxSplitBytes bins) — a LOWER bound: real packing respects
     * file boundaries and can only produce more partitions. Uses the
-    * UNFILTERED listing (a pruning index like ManifestFileIndex skips
-    * files at listFiles time with data filters this estimate never
-    * sees), which biases the other way — an overestimate that can only
-    * make the guard skip a repartition, never add one. None when the
-    * plan has no file-relation leaf. */
-  private def scanPartitions(spark: SparkSession, df: DataFrame): Option[Long] = {
-    val rels = df.queryExecution.analyzed.collect {
-      case lr: LogicalRelation => lr.relation
-    }.collect { case fs: HadoopFsRelation => fs }
-    if (rels.isEmpty) None
-    else Some(rels.map { r =>
+    * UNFILTERED listing (the snapshot scan skips files with pushed
+    * filters this estimate never sees), which biases the other way —
+    * an overestimate that can only make the guard skip a repartition,
+    * never add one. None when the plan has no file leaf. */
+  private[graft] def scanPartitions(spark: SparkSession, df: DataFrame): Option[Long] = {
+    val indexes: Seq[FileIndex] = df.queryExecution.analyzed.collect {
+      case lr: LogicalRelation if lr.relation.isInstanceOf[HadoopFsRelation] =>
+        lr.relation.asInstanceOf[HadoopFsRelation].location
+      case r: DataSourceV2Relation if r.table.isInstanceOf[FileTable] =>
+        r.table.asInstanceOf[FileTable].fileIndex
+    }
+    if (indexes.isEmpty) None
+    else Some(indexes.map { index =>
       val openCost = bytesConf(spark, "spark.sql.files.openCostInBytes", 4194304L)
       val maxPart = bytesConf(spark, "spark.sql.files.maxPartitionBytes", 134217728L)
-      val nFiles = r.location.inputFiles.length.toLong
-      val totalBytes = r.location.sizeInBytes + nFiles * openCost
+      val nFiles = index.inputFiles.length.toLong
+      val totalBytes = index.sizeInBytes + nFiles * openCost
       val bytesPerCore = totalBytes / math.max(1, spark.sparkContext.defaultParallelism)
       val maxSplit = math.min(maxPart, math.max(openCost, bytesPerCore))
       math.max(1L, (totalBytes + maxSplit - 1) / math.max(1L, maxSplit))

@@ -27,10 +27,15 @@ object PlanWalk {
     executedNodes(df.queryExecution.executedPlan)
       .collect { case f: FileSourceScanExec => f }
 
-  /** The executed plan's DSv2 scans (the SQL-catalog read path) —
-    * same AQE discipline as [[fileScans]]. */
+  /** The executed plan's DSv2 scans (every snapshot-table read, SQL
+    * and programmatic) — same AQE discipline as [[fileScans]]. */
   def batchScans(df: DataFrame)
       : Seq[org.apache.spark.sql.execution.datasources.v2.BatchScanExec] =
     executedNodes(df.queryExecution.executedPlan)
       .collect { case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b }
+
+  /** How many files each snapshot scan in the executed plan reads:
+    * manifest pruning at planning, then any runtime filter. */
+  def keptFiles(df: DataFrame): Seq[Int] =
+    batchScans(df).map(_.scan).collect { case g: graft.catalog.GraftScan => g.keptFileCount }
 }

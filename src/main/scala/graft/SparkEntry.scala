@@ -1648,8 +1648,7 @@ object SparkEntry {
       val empty = probe.count() == 0
       org.apache.spark.sql.graftbridge.Bridge.flushListenerBus(s)
       // ≤ 1 scanned file: same false-positive allowance as the primary
-      empty && graft.PlanWalk.fileScans(probe)
-        .map(_.metrics("numFiles").value).sum <= 1
+      empty && graft.PlanWalk.keptFiles(probe).sum <= 1
     }
     graft.Scratch.registerForCleanup(root)
     pinInvariants("meta_snapshot_bloom_read",
@@ -2576,7 +2575,7 @@ object SparkEntry {
     * skipping happens at the MANIFEST (driver-side stats ranges — at
     * 100 TB the probe reads the handful of files whose bucket range
     * intersects the 9 probe buckets, not the table), kept files
-    * row-filter on the same IN, and the dv anti-join hides the deleted
+    * row-filter on the same IN, and the scan's dv reader hides the deleted
     * vectors — search-after-delete correctness rides the table's own
     * read path, not a rebuilt index. The blind oracle recomputes the
     * final state (deletes applied), the buckets, and the probe set
@@ -3153,9 +3152,9 @@ object SparkEntry {
         val probe = snap.readIndexed(s, root, "document_id")
           .filter(col("document_id") === minRow.getLong(0))
         probe.collect() // execute THIS QueryExecution (the DPP-gate gotcha)
-        graft.PlanWalk.fileScans(probe) match {
+        graft.PlanWalk.keptFiles(probe) match {
           case Nil => false
-          case ss => ss.map(_.metrics("numFiles").value).max == 1
+          case ss => ss.max == 1
         }
       }
     // each version reads under ITS OWN recorded names
@@ -3253,13 +3252,9 @@ object SparkEntry {
           .filter(col("doc_id") === minRow.getLong(0))
           .select(col("doc_id"), col("info.language"))
         probe.collect() // execute THIS QueryExecution (the DPP-gate gotcha)
-        // the dv anti-join puts a SECOND parquet scan in the plan (the
-        // position sidecar, one file per write partition) — judge only
-        // the TABLE scan, identified by the probed key in its output
-        graft.PlanWalk.fileScans(probe)
-          .filter(_.output.exists(_.name == "doc_id")) match {
+        graft.PlanWalk.keptFiles(probe) match {
           case Nil => false
-          case ss => ss.map(_.metrics("numFiles").value).max == 1
+          case ss => ss.max == 1
         }
       }
     // each version reads under ITS OWN recorded nested names

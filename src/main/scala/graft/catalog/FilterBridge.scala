@@ -15,9 +15,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    scan builder and hands a
   *    [[org.apache.spark.sql.connector.catalog.SupportsDelete]];
   *  - catalyst [[Expression]] conjuncts — what the manifest's shared
-  *    bounds extractor ([[graft.sources]]' `ManifestFileIndex.bounds`)
-  *    reads, so DSv2 scans prune files with EXACTLY the same decision
-  *    procedure as every other read path;
+  *    bounds extractor ([[graft.sources]]' `ManifestPruning.bounds`)
+  *    reads, so the snapshot scan prunes files with EXACTLY the
+  *    decision merge's touched-file split and the key/range reads use;
   *  - [[Column]] — what [[graft.sources.SnapshotTable.deleteWhere]]
   *    takes for the metadata-only (deletion-vector) DELETE.
   *

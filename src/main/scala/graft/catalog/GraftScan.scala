@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow, Literal, UnsafeProjection}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Max, Min}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
@@ -30,8 +30,33 @@ import graft.sources.SnapshotTable
   * over a 100 TB table rewrites only the files that actually hold
   * matches, with a runtime collect bounded by the FILE count, never
   * the key count. */
-private[catalog] object GraftFileColumn {
+private[graft] object GraftFileColumn {
   val Name = "_graft_file"
+}
+
+/** The `_graft_row` metadata column: each row's ordinal in its data
+  * file (parquet's row index; stable, because data files are
+  * immutable). With [[GraftFileColumn]] it names one row of the table
+  * exactly: deletion vectors record these (file, ordinal) pairs, and
+  * the row-level rewrites that write them read them here. */
+private[graft] object GraftRowColumn {
+  val Name = "_graft_row"
+}
+
+/** The metadata columns every snapshot relation exposes. */
+private[catalog] object GraftMetadataColumns {
+  private def column(n: String, dt: org.apache.spark.sql.types.DataType, doc: String) =
+    new org.apache.spark.sql.connector.catalog.MetadataColumn {
+      override def name(): String = n
+      override def dataType(): org.apache.spark.sql.types.DataType = dt
+      override def isNullable: Boolean = false
+      override def comment(): String = doc
+    }
+  val all: Array[org.apache.spark.sql.connector.catalog.MetadataColumn] = Array(
+    column(GraftFileColumn.Name, StringType,
+      "manifest-relative path of the data file this row came from"),
+    column(GraftRowColumn.Name, LongType,
+      "ordinal of this row in its data file"))
 }
 
 /** The snapshot table's DSv2 scan: manifest-pruned file planning in
@@ -56,15 +81,18 @@ private[catalog] object GraftFileColumn {
   *    runtime at all;
   *  - files carrying a deletion vector plan as their own (whole-file)
   *    partitions read row-based with parquet's generated row-index
-  *    column; a per-file sorted position set (broadcast) filters
-  *    deleted ordinals at the READER — the DSv2 form of merge-on-read,
-  *    position-filter-at-the-reader like Delta's DV readers, zero cost
-  *    when the table carries no dv debt;
-  *  - when [[GraftFileColumn]] is requested (a user projection, or a
-  *    row-level operation's required metadata), every file plans as a
-  *    whole-file row partition and the reader tags rows with their
-  *    file's path — which also arms RUNTIME GROUP FILTERING
-  *    ([[GraftScan.filter]]).
+  *    column; the reader loads the file's sorted deleted positions
+  *    from its sidecar ON THE EXECUTOR ([[GraftDvPositions]], memoized
+  *    per JVM) and drops those ordinals — position-filter-at-the-
+  *    reader like Delta's and Iceberg's DV readers: no driver collect,
+  *    no broadcast, no size bound, zero cost when the table carries no
+  *    dv debt;
+  *  - when [[GraftFileColumn]] or [[GraftRowColumn]] is requested (a
+  *    user projection, a row-level operation's required metadata, or
+  *    a programmatic rewrite that records positions), every file plans
+  *    as a whole-file row partition and the reader appends the file's
+  *    path and/or each row's ordinal — the file column also arms
+  *    RUNTIME GROUP FILTERING ([[GraftScan.filter]]).
   *
   * `groupScan = true` is the row-level-operation mode (MERGE/UPDATE
   * copy-on-write): filters still prune FILES (file = replacement
@@ -73,12 +101,14 @@ private[catalog] object GraftFileColumn {
 private[catalog] final class GraftScanBuilder(spark: SparkSession,
     snap: SnapshotTable.SqlSnapshot, groupScan: Boolean,
     onPlan: (Int, Set[String]) => Unit = (_, _) => (),
-    options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty())
+    options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty(),
+    manifestAggregates: Boolean = true)
   extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates {
 
   private var required: StructType = snap.schema
   private var withFileCol: Boolean = false
+  private var withRowCol: Boolean = false
   private var pushed: Array[Filter] = Array.empty
   private var aggScan: Option[GraftManifestAggScan] = None
 
@@ -88,6 +118,8 @@ private[catalog] final class GraftScanBuilder(spark: SparkSession,
     // case; the metadata column is ours, not the files'
     withFileCol = requiredSchema.fields.exists(
       _.name.equalsIgnoreCase(GraftFileColumn.Name))
+    withRowCol = requiredSchema.fields.exists(
+      _.name.equalsIgnoreCase(GraftRowColumn.Name))
     required = StructType(requiredSchema.fields.flatMap(f =>
       FilterBridge.fieldOf(snap.schema, f.name).map(tf => f.copy(name = tf.name))))
   }
@@ -109,7 +141,10 @@ private[catalog] final class GraftScanBuilder(spark: SparkSession,
   // uncounted deletions and possibly the attained extreme), residual
   // filters (Spark itself only pushes aggregates when no post-scan
   // filter remains — belt and braces here), non-stats-key MIN/MAX, or
-  // any entry missing the fact.
+  // any entry missing the fact — and on programmatic reads: their frame
+  // pins a file list, and an aggregate over it reads those files (a
+  // frame held across expire+vacuum then fails loudly instead of
+  // answering from a manifest whose files are gone).
 
   override def supportCompletePushDown(agg: Aggregation): Boolean =
     translateAgg(agg).isDefined
@@ -125,7 +160,8 @@ private[catalog] final class GraftScanBuilder(spark: SparkSession,
 
   private def translateAgg(agg: Aggregation)
       : Option[(StructType, InternalRow)] = {
-    if (groupScan || pushed.nonEmpty || agg.groupByExpressions.nonEmpty)
+    if (!manifestAggregates || groupScan || pushed.nonEmpty ||
+        agg.groupByExpressions.nonEmpty)
       return None
     def colName(e: org.apache.spark.sql.connector.expressions.Expression)
         : Option[String] = e match {
@@ -192,7 +228,7 @@ private[catalog] final class GraftScanBuilder(spark: SparkSession,
       if (groupScan) Array.empty[Filter]
       else pushed.flatMap(FilterBridge.rename(_, snap.physNameOpt))
     new GraftScan(spark, snap, required, kept, parquetFilters, withFileCol,
-      onPlan, options)
+      withRowCol, onPlan, options)
   }
 }
 
@@ -205,7 +241,7 @@ private[catalog] final class GraftScanBuilder(spark: SparkSession,
 private[graft] final class GraftScan(spark: SparkSession,
     snap: SnapshotTable.SqlSnapshot, required: StructType,
     initialKept: Seq[SnapshotTable.SqlDataFile], parquetFilters: Array[Filter],
-    withFileCol: Boolean, onPlan: (Int, Set[String]) => Unit,
+    withFileCol: Boolean, withRowCol: Boolean, onPlan: (Int, Set[String]) => Unit,
     options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty())
   extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeV2Filtering
@@ -214,6 +250,9 @@ private[graft] final class GraftScan(spark: SparkSession,
 
   @volatile private var kept: Seq[SnapshotTable.SqlDataFile] = initialKept
 
+  /** Rows carry metadata columns: every file is its own partition. */
+  private def tagged: Boolean = withFileCol || withRowCol
+
   // ---- storage-partitioned planning (bucketed layout) ----
 
   /** The kept files with their bucket ids, iff this scan can plan
@@ -221,7 +260,7 @@ private[graft] final class GraftScan(spark: SparkSession,
     * ([[SnapshotTable.SqlSnapshot.bucketLayout]] — bucket count and
     * per-file ids ride in the file paths), the bucket key survives in
     * the read schema (the reported transform must resolve against the
-    * relation output), and the scan is not file-tagged. Partitions
+    * relation output), and the scan is not [[tagged]]. Partitions
     * stay ONE PER FILE, each declaring its bucket via
     * [[HasPartitionKey]]: a standalone scan keeps full file-level
     * parallelism, and when `spark.sql.sources.v2.bucketing.enabled`
@@ -237,7 +276,7 @@ private[graft] final class GraftScan(spark: SparkSession,
     * DELETE anywhere downgraded every co-located join to a full
     * shuffle until `materializeDv`. */
   private def bucketedFiles: Option[(Int, String, Seq[(Int, SnapshotTable.SqlDataFile)])] =
-    if (withFileCol) None
+    if (tagged) None
     else snap.bucketLayout.flatMap { case (n, byPath) =>
       val keyName = snap.statsKey.flatMap(k =>
         FilterBridge.fieldOf(required, k).map(_.name))
@@ -259,7 +298,7 @@ private[graft] final class GraftScan(spark: SparkSession,
     * one across partitions). */
   private def identityPartitionedFiles
       : Option[(Seq[String], Seq[(Array[Any], SnapshotTable.SqlDataFile)])] = {
-    if (withFileCol || snap.partitionCols.isEmpty) return None
+    if (tagged || snap.partitionCols.isEmpty) return None
     val logical = snap.partitionColsLogical
     if (logical.size != snap.partitionCols.size) return None
     // the reported references must resolve against the relation output
@@ -352,10 +391,9 @@ private[graft] final class GraftScan(spark: SparkSession,
   private val physRequired = snap.physSchemaFor(required)
   private val dataTypes = physRequired.fields.map(_.dataType)
 
-  override def readSchema(): StructType =
-    if (!withFileCol) required
-    else StructType(required.fields :+
-      StructField(GraftFileColumn.Name, StringType, nullable = false))
+  override def readSchema(): StructType = StructType(required.fields ++
+    Option.when(withFileCol)(StructField(GraftFileColumn.Name, StringType, nullable = false)) ++
+    Option.when(withRowCol)(StructField(GraftRowColumn.Name, LongType, nullable = false)))
 
   override def description(): String =
     s"GraftScan ${snap.root} v${snap.version} files=${kept.size}"
@@ -510,10 +548,6 @@ private[graft] final class GraftScan(spark: SparkSession,
 
   // ---- physical planning (recomputed from the CURRENT kept set) ----
 
-  private def status(f: SnapshotTable.SqlDataFile): FileStatus =
-    new FileStatus(f.bytes, false, 1, math.max(f.bytes, 1L), 0L,
-      new Path(snap.root, f.relPath))
-
   private def parquetScanOver(files: Seq[SnapshotTable.SqlDataFile],
       readSchema: StructType, filters: Array[Filter]): ParquetScan =
     // a PRIVATE conf copy per scan: ParquetScan.createReaderFactory
@@ -525,19 +559,20 @@ private[graft] final class GraftScan(spark: SparkSession,
     new ParquetScan(spark,
       new org.apache.hadoop.conf.Configuration(
         spark.sparkContext.hadoopConfiguration),
-      new StaticFileIndex(spark, new Path(snap.root), files.map(status)),
+      StaticFileIndex.over(spark, new Path(snap.root), files),
       snap.physSchema, readSchema, new StructType(), filters,
       CaseInsensitiveStringMap.empty(), None, Seq.empty, Seq.empty,
       Array.empty)
 
-  /** dv files read with parquet's generated row-index column appended
+  /** Positional reads (dv files, and every file when [[GraftRowColumn]]
+    * is requested) append parquet's generated row-index column
     * (correct ordinals under splits and row-group structure alike) and
-    * NO pushed filters — the reader-level position filter must see the
-    * true ordinal stream, and the residual Filter above re-applies
-    * predicates anyway. The field is nullable: absent from the file by
-    * construction, the reader null-fills it as "missing", then its
-    * row-index generator overwrites the vector with true ordinals. */
-  private def dvReadSchema: StructType =
+    * push NO filters — the reader must see the true ordinal stream,
+    * and the residual Filter above re-applies predicates anyway. The
+    * field is nullable: absent from the file by construction, the
+    * reader null-fills it as "missing", then its row-index generator
+    * overwrites the vector with true ordinals. */
+  private def rowIndexSchema: StructType =
     StructType(physRequired.fields :+ StructField(
       ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType, nullable = true))
 
@@ -556,23 +591,24 @@ private[graft] final class GraftScan(spark: SparkSession,
         // ordinals, so grouping stays sound (a dv never re-buckets a
         // surviving row).
         return bucketed.zipWithIndex.map { case ((b, f), i) =>
-          GraftBucketPartition(wholeFile(f, i), b, f.relPath, f.hasDv): InputPartition
+          GraftBucketPartition(wholeFile(f, i), b, f.relPath, f.dv): InputPartition
         }.toArray
       case None => identityPartitionedFiles match {
         case Some((_, rows)) =>
           // identity-partitioned twin: one whole-file partition per
           // file declaring its partition TUPLE; same dv discipline
           return rows.zipWithIndex.map { case ((key, f), i) =>
-            GraftValuePartition(wholeFile(f, i), key, f.relPath, f.hasDv): InputPartition
+            GraftValuePartition(wholeFile(f, i), key, f.relPath, f.dv): InputPartition
           }.toArray
         case None => ()
       }
     }
-    if (withFileCol) {
-      // file-tagged mode: one whole-file row partition per file — the
-      // reader must know which file it drains (path column + dv set)
+    if (tagged) {
+      // tagged mode: one whole-file row partition per file — the
+      // reader must know which file it drains (path column, ordinals,
+      // dv set)
       files.zipWithIndex.map { case (f, i) =>
-        GraftTaggedPartition(wholeFile(f, i), f.relPath, f.hasDv): InputPartition
+        GraftTaggedPartition(wholeFile(f, i), f.relPath, f.dv): InputPartition
       }.toArray
     } else {
       val (dvFiles, plainFiles) = files.partition(_.hasDv)
@@ -581,7 +617,7 @@ private[graft] final class GraftScan(spark: SparkSession,
         else parquetScanOver(plainFiles, physRequired, parquetFilters)
           .toBatch.planInputPartitions()
       val dv = dvFiles.zipWithIndex.map { case (f, i) =>
-        GraftDvPartition(wholeFile(f, plain.length + i), f.relPath): InputPartition
+        GraftDvPartition(wholeFile(f, plain.length + i), f.relPath, f.dv.get): InputPartition
       }.toArray
       plain ++ dv
     }
@@ -590,22 +626,25 @@ private[graft] final class GraftScan(spark: SparkSession,
   override def createReaderFactory(): PartitionReaderFactory = {
     val files = kept
     val (dvFiles, plainFiles) = files.partition(_.hasDv)
-    val dvPos: Option[Broadcast[Map[String, Array[Long]]]] =
-      if (dvFiles.isEmpty) None
-      else Some(spark.sparkContext.broadcast(
-        snap.dvPositionMap(dvFiles.map(_.relPath))))
     val plainFactory =
-      if (plainFiles.isEmpty && !withFileCol) None
+      if (withRowCol || (plainFiles.isEmpty && !withFileCol)) None
       else Some(parquetScanOver(if (withFileCol) files else plainFiles,
         physRequired, parquetFilters).toBatch.createReaderFactory())
-    val dvFactory =
+    val positional =
+      if (dvFiles.isEmpty && !withRowCol) None
+      else Some(parquetScanOver(if (withRowCol) files else dvFiles, rowIndexSchema,
+        Array.empty).toBatch.createReaderFactory())
+    // the sidecar readers' conf ships once per scan, and only when a
+    // kept file carries a deletion vector
+    val conf =
       if (dvFiles.isEmpty) None
-      else Some(parquetScanOver(dvFiles, dvReadSchema, Array.empty)
-        .toBatch.createReaderFactory())
-    GraftReaderFactory(plainFactory, dvFactory, dvPos, dataTypes,
+      else Some(spark.sparkContext.broadcast(new SerializableHadoopConf(
+        new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration))))
+    GraftReaderFactory(snap.root, plainFactory, positional, conf, dataTypes,
+      withFileCol, withRowCol,
       // BatchScanExec refuses mixed row/columnar partitions: any dv
-      // file (or file tagging) forces the whole scan row-based
-      forceRow = dvFiles.nonEmpty || withFileCol)
+      // file (or any metadata column) forces the whole scan row-based
+      forceRow = dvFiles.nonEmpty || tagged)
   }
 }
 
@@ -625,10 +664,10 @@ private[graft] final class GraftManifestAggScan(schema: StructType,
 }
 
 /** A dv-carrying file's scan unit: the stock [[FilePartition]] the
-  * parquet reader consumes plus the manifest-relative path whose
-  * deleted-position set applies. */
+  * parquet reader consumes, the manifest-relative path whose deleted
+  * positions apply, and the sidecar directory that holds them. */
 private[graft] final case class GraftDvPartition(inner: FilePartition,
-    relPath: String) extends InputPartition
+    relPath: String, dvDir: String) extends InputPartition
 
 /** One BUCKET of a bucketed snapshot as a single scan unit: the stock
   * [[FilePartition]] over the bucket's (whole) files, declaring its
@@ -639,9 +678,10 @@ private[graft] final case class GraftDvPartition(inner: FilePartition,
   * reader filters deleted ordinals row-based under the SAME partition
   * key (dv debt hides rows, it never re-buckets one). */
 private[graft] final case class GraftBucketPartition(inner: FilePartition,
-    bucketId: Int, relPath: String = null, hasDv: Boolean = false)
+    bucketId: Int, relPath: String = null, dv: Option[String] = None)
   extends InputPartition
     with org.apache.spark.sql.connector.read.HasPartitionKey {
+  def hasDv: Boolean = dv.isDefined
   override def partitionKey(): InternalRow =
     new GenericInternalRow(Array[Any](bucketId))
 }
@@ -650,26 +690,30 @@ private[graft] final case class GraftBucketPartition(inner: FilePartition,
   * unit: its partition TUPLE (catalyst values, path-derived) is the
   * partition key the SPJ machinery groups and aligns on. */
 private[graft] final case class GraftValuePartition(inner: FilePartition,
-    keyVals: Array[Any], relPath: String, hasDv: Boolean)
+    keyVals: Array[Any], relPath: String, dv: Option[String])
   extends InputPartition
     with org.apache.spark.sql.connector.read.HasPartitionKey {
   override def partitionKey(): InternalRow = new GenericInternalRow(keyVals)
 }
 
-/** A whole-file partition in file-tagged mode ([[GraftFileColumn]]
-  * requested): rows get the file's path appended, and the dv position
-  * filter applies when the file carries one. */
+/** A whole-file partition in tagged mode (a metadata column
+  * requested): rows get the file's path and/or their ordinal
+  * appended, and the dv position filter applies when the file carries
+  * one. */
 private[graft] final case class GraftTaggedPartition(inner: FilePartition,
-    relPath: String, hasDv: Boolean) extends InputPartition
+    relPath: String, dv: Option[String]) extends InputPartition
 
 /** Routes plain partitions to the stock parquet reader factory
   * (columnar included) and dv/tagged partitions to row-based readers
-  * wrapped with the position filter and/or the file-path tag. */
-private[catalog] final case class GraftReaderFactory(
-    plain: Option[PartitionReaderFactory], dv: Option[PartitionReaderFactory],
-    dvPos: Option[Broadcast[Map[String, Array[Long]]]],
+  * over the row-index read ([[GraftPositionReader]]), or — a tagged
+  * file with neither dv nor ordinals — to the plain reader with the
+  * file-path tag. Deleted positions load on the executor, from the
+  * sidecar under `root` that the partition names. */
+private[catalog] final case class GraftReaderFactory(root: String,
+    plain: Option[PartitionReaderFactory], positional: Option[PartitionReaderFactory],
+    conf: Option[Broadcast[SerializableHadoopConf]],
     dataTypes: Array[org.apache.spark.sql.types.DataType],
-    forceRow: Boolean) extends PartitionReaderFactory {
+    withFile: Boolean, withRow: Boolean, forceRow: Boolean) extends PartitionReaderFactory {
 
   override def supportColumnarReads(partition: InputPartition): Boolean =
     !forceRow && (partition match {
@@ -681,25 +725,23 @@ private[catalog] final case class GraftReaderFactory(
       case other => plain.exists(_.supportColumnarReads(other))
     })
 
-  private def deleted(rel: String): Array[Long] =
-    dvPos.map(_.value.getOrElse(rel, Array.emptyLongArray))
-      .getOrElse(Array.emptyLongArray)
+  private def positions(inner: FilePartition, rel: String, dv: Option[String])
+      : PartitionReader[InternalRow] =
+    new GraftPositionReader(positional.get.createReader(inner), dataTypes,
+      dv.map(GraftDvPositions.of(conf.get.value.value, root, _, rel))
+        .getOrElse(Array.emptyLongArray),
+      Option.when(withFile)(rel), withRow)
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
-      case GraftDvPartition(inner, rel) =>
-        new DvFilteringReader(dv.get.createReader(inner), deleted(rel), dataTypes)
-      case GraftTaggedPartition(inner, rel, hasDv) =>
-        val base: PartitionReader[InternalRow] =
-          if (hasDv) new DvFilteringReader(dv.get.createReader(inner), deleted(rel), dataTypes)
-          else plain.get.createReader(inner)
-        new FileTaggingReader(base, rel)
-      case GraftBucketPartition(inner, _, rel, hasDv) =>
-        if (hasDv) new DvFilteringReader(dv.get.createReader(inner), deleted(rel), dataTypes)
-        else plain.get.createReader(inner)
-      case GraftValuePartition(inner, _, rel, hasDv) =>
-        if (hasDv) new DvFilteringReader(dv.get.createReader(inner), deleted(rel), dataTypes)
-        else plain.get.createReader(inner)
+      case GraftDvPartition(inner, rel, dv) => positions(inner, rel, Some(dv))
+      case GraftTaggedPartition(inner, rel, dv) =>
+        if (dv.isDefined || withRow) positions(inner, rel, dv)
+        else new FileTaggingReader(plain.get.createReader(inner), rel)
+      case GraftBucketPartition(inner, _, rel, dv) =>
+        if (dv.isDefined) positions(inner, rel, dv) else plain.get.createReader(inner)
+      case GraftValuePartition(inner, _, rel, dv) =>
+        if (dv.isDefined) positions(inner, rel, dv) else plain.get.createReader(inner)
       case other => plain.get.createReader(other)
     }
 
@@ -712,27 +754,33 @@ private[catalog] final case class GraftReaderFactory(
     }
 }
 
-/** Drops rows whose parquet row ordinal (the generated row-index
-  * column, LAST in the delegate's schema) appears in `deleted`
-  * (sorted), and trims the ordinal off — emitting exactly the file's
-  * live rows under the scan's declared schema. Rows are copied through
-  * an [[UnsafeProjection]] (the delegate reuses its row object). */
-private[catalog] final class DvFilteringReader(
-    delegate: PartitionReader[InternalRow], deleted: Array[Long],
-    dataTypes: Array[org.apache.spark.sql.types.DataType])
+/** Reads one file positionally: drops rows whose parquet row ordinal
+  * (the generated row-index column, LAST in the delegate's schema)
+  * appears in `deleted` (sorted), and emits the data columns followed
+  * by the file's path (`relPath`, the [[GraftFileColumn]] slot) and
+  * the ordinal itself ([[GraftRowColumn]]) when asked — exactly the
+  * scan's declared schema. The projection's row is reused per call,
+  * like every scan reader's. */
+private[catalog] final class GraftPositionReader(
+    delegate: PartitionReader[InternalRow], dataTypes: Array[org.apache.spark.sql.types.DataType],
+    deleted: Array[Long], relPath: Option[String], withRow: Boolean)
   extends PartitionReader[InternalRow] {
 
   private val idxOrdinal = dataTypes.length
   private lazy val proj = UnsafeProjection.create(
     dataTypes.zipWithIndex.map { case (dt, i) =>
-      BoundReference(i, dt, nullable = true) }.toIndexedSeq)
+      BoundReference(i, dt, nullable = true): org.apache.spark.sql.catalyst.expressions.Expression
+    }.toIndexedSeq ++
+      relPath.map(p => Literal(UTF8String.fromString(p), StringType)) ++
+      Option.when(withRow)(BoundReference(idxOrdinal, LongType, nullable = false)))
   private var current: InternalRow = _
 
   override def next(): Boolean = {
     while (delegate.next()) {
       val r = delegate.get()
-      if (java.util.Arrays.binarySearch(deleted, r.getLong(idxOrdinal)) < 0) {
-        current = proj(r).copy()
+      if (deleted.isEmpty ||
+          java.util.Arrays.binarySearch(deleted, r.getLong(idxOrdinal)) < 0) {
+        current = proj(r)
         return true
       }
     }
@@ -757,6 +805,75 @@ private[catalog] final class FileTaggingReader(
   override def next(): Boolean = delegate.next()
   override def get(): InternalRow = joined(delegate.get(), tag)
   override def close(): Unit = delegate.close()
+}
+
+/** Deleted row positions, loaded where the data file is read. A dv
+  * commit writes a NEW sidecar directory (`deletes/batch-*`) holding
+  * the full effective position set of every file it touched, as
+  * (manifest-relative path, ordinal) rows, and never rewrites one — so
+  * the positions behind (root, sidecar dir, file) are immutable. The
+  * first reader of a sidecar in a JVM reads the whole directory once
+  * and memoizes its per-file sorted sets; every later file of that
+  * sidecar, and every later scan, is a map hit. Retention is bounded
+  * by [[MaxRetained]] positions (LRU by directory); a sidecar larger
+  * than that is served but not kept. No driver collect, no broadcast,
+  * no size bound on what a scan may read. */
+private[graft] object GraftDvPositions {
+  private val MaxRetained = 4L * 1000 * 1000
+
+  private val memo =
+    new java.util.LinkedHashMap[(String, String), Map[String, Array[Long]]](16, 0.75f, true)
+  private var retained = 0L
+
+  private def size(m: Map[String, Array[Long]]): Long = m.valuesIterator.map(_.length.toLong).sum
+
+  /** The sorted deleted ordinals of `relPath` recorded in sidecar
+    * `dvDir` of the table at `root`. */
+  def of(conf: org.apache.hadoop.conf.Configuration, root: String, dvDir: String,
+      relPath: String): Array[Long] = {
+    val key = (root, dvDir)
+    val byFile = memo.synchronized(Option(memo.get(key))).getOrElse {
+      val loaded = load(conf, new Path(root, dvDir))
+      val n = size(loaded)
+      memo.synchronized {
+        if (n <= MaxRetained && !memo.containsKey(key)) {
+          memo.put(key, loaded)
+          retained += n
+          val it = memo.entrySet().iterator()
+          while (retained > MaxRetained && it.hasNext) {
+            retained -= size(it.next().getValue)
+            it.remove()
+          }
+        }
+      }
+      loaded
+    }
+    byFile.getOrElse(relPath, Array.emptyLongArray)
+  }
+
+  private def load(conf: org.apache.hadoop.conf.Configuration, dir: Path)
+      : Map[String, Array[Long]] = {
+    val fs = dir.getFileSystem(conf)
+    val byFile = scala.collection.mutable.HashMap.empty[String, scala.collection.mutable.ArrayBuilder.ofLong]
+    fs.listStatus(dir).iterator
+      .filter { st => val n = st.getPath.getName; !n.startsWith("_") && !n.startsWith(".") }
+      .foreach { st =>
+        val reader = org.apache.parquet.hadoop.ParquetReader.builder(
+          new org.apache.parquet.hadoop.example.GroupReadSupport(), st.getPath)
+          .withConf(conf).build()
+        try {
+          var g = reader.read()
+          while (g != null) {
+            byFile.getOrElseUpdate(g.getString(SnapshotTable.DvPathCol, 0),
+              new scala.collection.mutable.ArrayBuilder.ofLong) += g.getLong(SnapshotTable.DvPosCol, 0)
+            g = reader.read()
+          }
+        } finally reader.close()
+      }
+    byFile.iterator.map { case (f, b) =>
+      val a = b.result(); java.util.Arrays.sort(a); f -> a
+    }.toMap
+  }
 }
 
 /** A [[PartitioningAwareFileIndex]] over a FIXED file list — the
@@ -789,4 +906,13 @@ private[catalog] final class StaticFileIndex(spark: SparkSession,
       InternalRow.empty, statuses.toArray))
   override def allFiles(): Seq[FileStatus] = statuses
   override def inputFiles: Array[String] = statuses.map(_.getPath.toString).toArray
+}
+
+private[catalog] object StaticFileIndex {
+  /** The index over manifest files under `root`, statuses built from
+    * their recorded sizes. */
+  def over(spark: SparkSession, root: Path,
+      files: Seq[SnapshotTable.SqlDataFile]): StaticFileIndex =
+    new StaticFileIndex(spark, root, files.map(f =>
+      new FileStatus(f.bytes, false, 1, math.max(f.bytes, 1L), 0L, new Path(root, f.relPath))))
 }

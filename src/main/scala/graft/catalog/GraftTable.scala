@@ -88,16 +88,8 @@ private[catalog] final class GraftTable(spark: SparkSession, val root: String,
   /** `_graft_file`: each row's manifest-relative data-file path —
     * user-selectable (Delta's `_metadata.file_path` shape) and the
     * group identity runtime group filtering collects for row-level
-    * operations. */
-  override def metadataColumns(): Array[MetadataColumn] = Array(
-    new MetadataColumn {
-      override def name(): String = GraftFileColumn.Name
-      override def dataType(): org.apache.spark.sql.types.DataType =
-        org.apache.spark.sql.types.StringType
-      override def isNullable: Boolean = false
-      override def comment(): String =
-        "manifest-relative path of the data file this row came from"
-    })
+    * operations; `_graft_row`: the row's ordinal in that file. */
+  override def metadataColumns(): Array[MetadataColumn] = GraftMetadataColumns.all
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GraftScanBuilder(spark, snap, groupScan = false, options = options)
@@ -256,4 +248,71 @@ private[catalog] final class GraftRowLevelOperation(spark: SparkSession,
     }
 
   override def description(): String = s"GraftRowLevel($cmd, ${snap.root})"
+}
+
+/** The table behind every PROGRAMMATIC read ([[SnapshotTable.read]],
+  * `readKeys`, `readIndexed`, and the rewrites that read the current
+  * snapshot): one resolved entry list, scanned by [[GraftScanBuilder]]
+  * exactly like a catalog read, so SQL and programmatic reads share
+  * one scan — pruning, deletion vectors at the reader, metadata
+  * columns, statistics.
+  *
+  * It is a read-only [[org.apache.spark.sql.execution.datasources.v2.FileTable]]
+  * shell for one reason: `Dataset.inputFiles` reports a DSv2
+  * relation's files only when its table is a FileTable (through its
+  * `fileIndex`, here the entry list's static index, built from the
+  * manifest — no file-system listing). It declares BATCH_READ only:
+  * `FallBackFileSourceV2` turns an INSERT into a FileTable into a V1
+  * file insert that would bypass the commit, which is why the
+  * catalog's writable [[GraftTable]] is not one. Two reads of the same
+  * entry list under the same schema are equal tables, so a cached
+  * frame serves a later identical read. */
+private[graft] final class GraftReadTable(spark: SparkSession,
+    val snap: SnapshotTable.SqlSnapshot)
+  extends org.apache.spark.sql.execution.datasources.v2.FileTable(spark,
+    CaseInsensitiveStringMap.empty(), Seq(snap.root), Some(snap.schema))
+  with SupportsMetadataColumns {
+
+  override lazy val fileIndex: org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex = {
+    // qualified paths, as a listed relation reports them
+    val root = new org.apache.hadoop.fs.Path(snap.root)
+    StaticFileIndex.over(spark,
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(root),
+      snap.dataFiles)
+  }
+  override lazy val dataSchema: StructType = snap.schema
+  override lazy val schema: StructType = snap.schema
+
+  override def name(): String = s"graft ${snap.root} v${snap.version}"
+  override def capabilities(): JSet[TableCapability] =
+    java.util.EnumSet.of(TableCapability.BATCH_READ)
+  override def metadataColumns(): Array[MetadataColumn] = GraftMetadataColumns.all
+
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new GraftScanBuilder(spark, snap, groupScan = false, options = options,
+      manifestAggregates = false)
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
+    throw new UnsupportedOperationException(s"${name()} is a read of a snapshot, not a table to write")
+
+  override def inferSchema(files: Seq[org.apache.hadoop.fs.FileStatus]): Option[StructType] =
+    Some(snap.schema)
+  override def formatName(): String = "graft"
+  override def fallbackFileFormat()
+      : Class[_ <: org.apache.spark.sql.execution.datasources.FileFormat] =
+    classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat]
+
+  override def equals(o: Any): Boolean = o match {
+    case t: GraftReadTable => t.snap.readKey == snap.readKey
+    case _ => false
+  }
+  override def hashCode(): Int = snap.readKey.hashCode()
+}
+
+private[graft] object GraftReadTable {
+  /** A frame planned by the snapshot scan over exactly `snap`'s
+    * entries. */
+  def frame(spark: SparkSession, snap: SnapshotTable.SqlSnapshot): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.graftbridge.Bridge.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+        new GraftReadTable(spark, snap), None, None, CaseInsensitiveStringMap.empty()))
 }

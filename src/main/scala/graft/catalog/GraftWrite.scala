@@ -116,7 +116,7 @@ private[catalog] final class GraftWriteBuilder(spark: SparkSession, root: String
     // partition-replace or a whole-snapshot "rewrite" commit
     override def toBatch: BatchWrite =
       new GraftFileBatchWrite(spark, snap, snap.schema, { files =>
-        SnapshotTable.sqlValidateWritten(spark, snap.root, files.map(_.path))
+        SnapshotTable.sqlValidateWritten(spark, snap.root, files)
         if (dynamicPartitions && snap.partitionCols.nonEmpty)
           SnapshotTable.sqlOverwriteDynamic(spark, snap.root, files)
         else SnapshotTable.sqlOverwriteFiles(spark, snap.root, files)
@@ -162,7 +162,7 @@ private[catalog] final class GraftWriteBuilder(spark: SparkSession, root: String
             return
           }
           if (files.nonEmpty)
-            SnapshotTable.sqlValidateWritten(spark, root, files.map(_.path))
+            SnapshotTable.sqlValidateWritten(spark, root, files)
           if (overwriteAll) {
             // Complete output mode: this epoch IS the full result —
             // replace the snapshot (op "rewrite"; an empty result
@@ -358,7 +358,7 @@ private[catalog] final class GraftReplaceWrite(spark: SparkSession,
       // CHECK constraints: the rows were written by executor tasks, so
       // validation is one explicit job over just the new files —
       // a violation aborts with nothing published
-      SnapshotTable.sqlValidateWritten(spark, snap.root, files.map(_.path))
+      SnapshotTable.sqlValidateWritten(spark, snap.root, files)
       SnapshotTable.sqlReplaceFiles(spark, snap.root, snap.version, scanned(), files)
       ()
     }, layout)

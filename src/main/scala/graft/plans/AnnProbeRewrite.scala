@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeRef
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, LocalLimit, LogicalPlan, Project, Sort, Union}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2ScanRelation, V2ScanRelationPushDown}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{ArrayType, DoubleType, MetadataBuilder}
 
@@ -33,10 +34,8 @@ import graft.vector.VectorOps
   *   2. find a node below the sort whose output carries BOTH `v` and a
   *      bucket attribute declared on `v` (for a parquet table that is
   *      the relation itself — column pruning only stacks Projects
-  *      above it). A UNION directly under the sort — the shape a
-  *      snapshot table's read takes once some files carry deletion
-  *      vectors (plain leg ∪ dv-anti-join leg) — resolves per leg by
-  *      output ordinal, and rewrites only if EVERY leg has a declared
+  *      above it). A UNION directly under the sort (several indexed
+  *      inputs ranked as one) resolves per leg by output ordinal, and rewrites only if EVERY leg has a declared
   *      index (each leg gets its own probe filter; one undeclared leg
   *      refuses the whole rewrite — a partially-probed union would
   *      let unfiltered legs compete with filtered ones);
@@ -81,7 +80,7 @@ object AnnProbeRewrite extends Rule[LogicalPlan] {
           val newBody = body.transformUp {
             case n if targets.exists(_._1 eq n) =>
               val (_, bucketAttr, probes) = targets.find(_._1 eq n).get
-              Filter(In(bucketAttr, probes.map(Literal(_)).toSeq), n)
+              probed(n, bucketAttr, probes)
           }
           gl.copy(child = ll.copy(child = newBody))
         }
@@ -91,9 +90,8 @@ object AnnProbeRewrite extends Rule[LogicalPlan] {
 
   /** Every (node, bucket attribute, probe set) the rewrite must
     * filter. Single-relation plans yield one target. A UNION directly
-    * under the sort — the shape a snapshot table's read takes once
-    * some files carry deletion vectors (plain leg ∪ dv-anti-join leg)
-    * — is approximable only if EVERY leg resolves to a declared index:
+    * under the sort (several indexed inputs ranked as one) is
+    * approximable only if EVERY leg resolves to a declared index:
     * each leg then gets its own probe filter (probes computed from its
     * OWN declaration), and one undeclared leg refuses the whole
     * rewrite — filtering a strict subset of legs would drop the
@@ -228,21 +226,42 @@ object AnnProbeRewrite extends Rule[LogicalPlan] {
     }
   }
 
-  /** A node below the sort whose output carries BOTH the scored vector
-    * attribute and a bucket attribute declared on it. */
+  /** `n` with the probe filter `bucket IN probes` applied. A DSv2 scan
+    * (the snapshot table's reads) has already pruned its columns —
+    * the bucket among them — by the time this rule runs, so it is
+    * re-planned from its relation with the probe filter PUSHED (the
+    * scan prunes files on it) under a projection back to its output;
+    * filters an earlier push put into the scan stay above it as
+    * residuals, so rows never change. Any other node gets the filter
+    * directly above it. */
+  private def probed(n: LogicalPlan, b: Attribute, probes: Array[Long]): LogicalPlan = {
+    val in = In(b, probes.map(Literal(_)).toSeq)
+    n match {
+      case s: DataSourceV2ScanRelation =>
+        V2ScanRelationPushDown(Project(s.output, Filter(in, s.relation)))
+      case _ => Filter(in, n)
+    }
+  }
+
+  /** A node below the sort whose output carries the scored vector
+    * attribute and whose output — for a DSv2 scan, its relation's —
+    * carries a bucket attribute declared on it. */
   private def declarationFor(v: AttributeReference, child: LogicalPlan)
-      : Option[(Attribute, LogicalPlan, Int, Int, Long)] =
+      : Option[(Attribute, LogicalPlan, Int, Int, Long)] = {
+    def declared(n: LogicalPlan): Seq[Attribute] = (n match {
+      case s: DataSourceV2ScanRelation => s.relation.output
+      case _ => n.output
+    }).filter(a => a.metadata.contains(AnnProbe.MetaOn) &&
+      a.metadata.getString(AnnProbe.MetaOn) == v.name)
     child.collectFirst {
-      case n if n.outputSet.contains(v) &&
-          n.output.exists(a => a.metadata.contains(AnnProbe.MetaOn) &&
-            a.metadata.getString(AnnProbe.MetaOn) == v.name) =>
-        val b = n.output.find(a => a.metadata.contains(AnnProbe.MetaOn) &&
-          a.metadata.getString(AnnProbe.MetaOn) == v.name).get
+      case n if n.outputSet.contains(v) && declared(n).nonEmpty =>
+        val b = declared(n).head
         (b, n,
           b.metadata.getLong(AnnProbe.MetaBits).toInt,
           b.metadata.getLong(AnnProbe.MetaDim).toInt,
           b.metadata.getLong(AnnProbe.MetaSeed))
     }
+  }
 
   /** Idempotence across the fixed-point batch: once the probe filter
     * is in, the plan no longer matches. */

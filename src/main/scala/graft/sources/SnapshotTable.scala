@@ -48,7 +48,7 @@ import org.apache.spark.sql.functions.col
   * write path, and the Catalyst integration can never drift apart.
   */
 object SnapshotTable {
-  import ManifestFileIndex.KeyBounds
+  import ManifestPruning.KeyBounds
 
   private val SnapshotDir = "_snapshots"
   private val MaxRetries = 20
@@ -79,7 +79,7 @@ object SnapshotTable {
     * path of a sidecar directory of deleted row positions, plus the
     * file's deleted-row count): merge-on-read deletes — [[deleteWhere]]
     * and [[mergeOnRead]] commit by marking positions instead of
-    * rewriting data files, readers anti-join the positions out, and
+    * rewriting data files, readers drop the positions as they read, and
     * any rewrite of the file ([[compact]], copy-on-write [[merge]])
     * materializes the deletions and drops the reference;
     * 7 = file lines may carry a per-file BLOOM FILTER over the primary
@@ -163,7 +163,7 @@ object SnapshotTable {
     * binary for string keys) + optional row count (measured in the
     * write loop — powers DESCRIBE HISTORY with zero data I/O) +
     * optional file size in bytes (from the writer's commit — what lets
-    * [[ManifestFileIndex]] build its FileStatuses from the manifest
+    * the snapshot scan build its FileStatuses from the manifest
     * alone, no per-file RPCs at planning time) + optional min/max of
     * the SECONDARY stats key (long for integral secondaries, base64
     * binary for string ones — format 5; the reference's chunk identity
@@ -655,26 +655,11 @@ object SnapshotTable {
     * dots; `Dataset.apply` would otherwise walk them as paths). */
   private def q(n: String): String = "`" + n.replace("`", "``") + "`"
 
-  /** Alias a physically-named frame back to `sch`'s logical names,
-    * KEEPING any extra columns in `keep` (scan-position helpers).
-    * A column whose SUBTREE carries nested renames converts via a
-    * struct cast (positional, null-preserving — a null struct stays
-    * null, which a named_struct rebuild would not honor); plain
-    * top-level renames stay simple aliases so filter pushdown through
-    * the projection is untouched. */
-  private def toLogical(df: DataFrame, sch: org.apache.spark.sql.types.StructType,
-      cm: Map[String, String], keep: Seq[String] = Seq.empty): DataFrame =
-    if (cm.isEmpty) df
-    else df.select((sch.fields.toIndexedSeq.map { f =>
-      val pf = physField(cm, Seq(f.name), f)
-      val c = df(q(pf.name))
-      (if (pf.dataType == f.dataType) c else c.cast(f.dataType)).as(f.name)
-    } ++ keep.map(df(_))): _*)
-
   /** Translate a logically-named batch to physical names for a write
-    * (the inverse of [[toLogical]], same cast discipline for nested
-    * renames). Identity (no projection at all) when the map is
-    * inactive. */
+    * (a column whose subtree carries nested renames converts via a
+    * struct cast — positional, null-preserving). Identity (no
+    * projection at all) when the map is inactive. Reads need no
+    * inverse: the scan reads physical names under logical ones. */
   private def toPhysical(df: DataFrame, cm: Map[String, String]): DataFrame =
     if (cm.isEmpty) df
     else df.select(df.schema.fields.toIndexedSeq.map { f =>
@@ -774,7 +759,8 @@ object SnapshotTable {
     // key as the file spells it
     def kind(secondary: Boolean): Option[(String, Boolean)] =
       stats.find(_.secondary == secondary).map(s => (s.columnIn(df.schema), s.isString))
-    if (bloomKey) attachBlooms(spark, root, entries, kind(false), kind(true)) else entries
+    if (bloomKey) attachBlooms(spark, root, entries, df.schema, kind(false), kind(true))
+    else entries
   }
 
   /** The bucketed layout's file naming: files of a bucketed rewrite
@@ -1143,7 +1129,7 @@ object SnapshotTable {
       require(!schema.fields.exists(f => norm(f.name) == "_graft_bucket") &&
           !m.colmap.valuesIterator.contains("_graft_bucket"),
         "compactBucketed: the table already has a column named _graft_bucket")
-      val current = readEntries(spark, root, schema, m.entries, m.colmap)
+      val current = scanEntries(spark, root, latest, m, schema, m.entries)
       // the live snapshot's recorded bytes approximate the rewrite's
       // input (dv debt shrinks it slightly — salt rounds up anyway)
       val inputBytes = Some(m.entries.flatMap(_.bytes).sum).filter(_ > 0L)
@@ -1205,7 +1191,8 @@ object SnapshotTable {
     * `(filename, chunk_idx)` prune fresh unclustered files when
     * neither key's RANGE is selective yet. */
   private def attachBlooms(spark: SparkSession, root: String,
-      entries: Seq[FileEntry], keyKind: Option[(String, Boolean)],
+      entries: Seq[FileEntry], sch: org.apache.spark.sql.types.StructType,
+      keyKind: Option[(String, Boolean)],
       key2Kind: Option[(String, Boolean)] = None): Seq[FileEntry] =
     if (keyKind.isEmpty && key2Kind.isEmpty) entries
     else {
@@ -1225,9 +1212,9 @@ object SnapshotTable {
             pmod(h1 + lit(i.toLong) * h2, col("__m").cast("long"))): _*)
         }
         val empty = typedLit(Seq.empty[Long])
-        val sets = spark.read
-          .parquet(targets.map(e => s"$root/${e.path}"): _*)
-          .select(relPathCol.as("__f") +:
+        // the files as written: physical names, no column map
+        val sets = scanFiles(spark, root, sch, targets, Map.empty)
+          .select(col(graft.catalog.GraftFileColumn.Name).as("__f") +:
             keyKind.map { case (k, isS) => hashOf(k, isS).as("__h1") }.toSeq ++:
             key2Kind.map { case (k, isS) => hashOf(k, isS).as("__h2") }.toSeq: _*)
           .join(mDf, "__f")
@@ -1818,7 +1805,7 @@ object SnapshotTable {
     // many to prune with" is detected.
     val updateFiles = writeDataFiles(spark, root, updates, Some(key), key2AtStart,
       colmap = cmAtStart)
-    val batch = readEntries(spark, root, widened(updates.schema), updateFiles, cmAtStart)
+    val batch = scanFiles(spark, root, widened(updates.schema), updateFiles, cmAtStart)
     val (updateKeys, updateStrKeys) = pruneKeySets(batch, key, maxPruneKeys)
     retrying(spark, root, op = "merge") { (latest: Int) =>
       val m = manifestFull(spark, root, latest)
@@ -1840,7 +1827,7 @@ object SnapshotTable {
           // and previously dv-deleted rows must not resurrect in the
           // rewrite — which also MATERIALIZES their deletions: the
           // rewritten entries carry no dv reference)
-          val current = readEntries(spark, root, tableSchema, touched, m.colmap)
+          val current = scanEntries(spark, root, latest, m, tableSchema, touched)
           // alias, not rename: `key` may be a nested path (metadata.doc_id)
           val survivors = current.join(
             batch.select(batch(key).as("__mk")).distinct(),
@@ -1950,7 +1937,7 @@ object SnapshotTable {
       // effective read: dv-deleted rows drop out of the rewrite, so a
       // full compaction is also the dv MATERIALIZATION op — the new
       // version's files carry no deletion vectors at all
-      val current = readEntries(spark, root, schema, m.entries, m.colmap)
+      val current = scanEntries(spark, root, latest, m, schema, m.entries)
       // full-table rewrite: the z-normalization domains come from the
       // manifest's attained per-file bounds when exact for the live
       // rows (every entry bounded, zero dv debt, and the resolved keys
@@ -2043,7 +2030,7 @@ object SnapshotTable {
       // effective read: a small file's recorded deletions materialize
       // in the packed output (large dv-bearing files keep theirs —
       // their debt waits for a full compact or a merge that hits them)
-      val current = readEntries(spark, root, schema, small, m.colmap)
+      val current = scanEntries(spark, root, latest, m, schema, small)
       val outFiles = math.max(1, math.ceil(
         small.flatMap(_.bytes).sum.toDouble / smallBytes).toInt)
       Pending(fixCarried(large) ++ rewriteWithDeclaredLayout(spark, root, m,
@@ -2090,7 +2077,7 @@ object SnapshotTable {
         })
       }
       if (debt.isEmpty) throw NothingToCompact
-      val current = readEntries(spark, root, schema, debt, m.colmap)
+      val current = scanEntries(spark, root, latest, m, schema, debt)
       // one output per rewritten input: materialization changes a
       // file's LIVE content, not the table's file granularity
       Pending(fixCarried(carry) ++ rewriteWithDeclaredLayout(spark, root, m,
@@ -2137,7 +2124,7 @@ object SnapshotTable {
         }
       }
       if (hit.size <= 1) throw NothingToCompact
-      val current = readEntries(spark, root, schema, hit, m.colmap)
+      val current = scanEntries(spark, root, latest, m, schema, hit)
       Pending(fixCarried(carry) ++ writeDataFiles(spark, root,
         clusterLayout(current, targetFiles, effKey, effKey2, cluster,
           zorder = false),
@@ -2532,7 +2519,7 @@ object SnapshotTable {
       val (effKey, effKey2, _) = resolveStatsKeys(m, statsKey, statsKey2)
       // effective read: dv-deleted rows stay deleted whatever `keep`
       // says about them, and the rewrite materializes the vectors
-      val kept = readEntries(spark, root, schema, m.entries, m.colmap).filter(keep)
+      val kept = scanEntries(spark, root, latest, m, schema, m.entries).filter(keep)
       Pending(writeDataFiles(spark, root,
         clusterLayout(kept, targetFiles, effKey, effKey2, cluster, zorder),
         effKey, effKey2, colmap = m.colmap,
@@ -2699,8 +2686,8 @@ object SnapshotTable {
     require(vs.nonEmpty, s"no table at $root")
     val m = manifestFull(spark, root, vs.last)
     // dv debt is the scheduler's MATERIALIZE signal: files carrying
-    // deletion vectors pay an anti-join on every read until a rewrite
-    // purges them, so "dvRows is a meaningful fraction of nRows" is
+    // deletion vectors read row-based through a position filter until
+    // a rewrite purges them, so "dvRows is a meaningful fraction of nRows" is
     // the compact trigger (the same role smallFiles plays for
     // compactSmall). nRows reports LIVE rows: recorded counts minus
     // recorded deletions — what a reader actually sees.
@@ -2902,8 +2889,7 @@ object SnapshotTable {
     * field is empty parses legally ([[parseEntry]]); treating it as
     * zero deletions would overstate live rows, so the aggregate
     * surfaces ([[describeDetail]], [[history]]) fall back to the -1
-    * unknown sentinel — the same discipline [[readEntries]] applies to
-    * its broadcast decision. */
+    * unknown sentinel. */
   private def knownDv(e: FileEntry): Boolean = e.dv.isEmpty || e.dvRows.isDefined
 
   /** RESTORE the table to an earlier version's logical state as a NEW
@@ -3341,11 +3327,11 @@ object SnapshotTable {
     * streaming source's file-level batch read ([[addedFiles]] feeds
     * it absolute paths; appended files hold exactly the commit's new
     * rows, so no dv handling is needed — appends never carry one). */
-  private[graft] def readFilesAs(spark: SparkSession,
+  private[graft] def readFilesAs(spark: SparkSession, root: String,
       sch: org.apache.spark.sql.types.StructType,
       colmap: Map[String, String], files: Seq[String]): DataFrame =
-    toLogical(spark.read.schema(physSchemaOf(colmap, sch)).parquet(files: _*),
-      sch, colmap)
+    scanFiles(spark, root, sch,
+      files.map(p => FileEntry(p.stripPrefix(s"$root/"), None, None)), colmap)
 
   /** The manifest as a QUERYABLE DataFrame — the `.files` metadata
     * table (Iceberg's `table.files` / Delta's detail at file
@@ -3419,7 +3405,7 @@ object SnapshotTable {
       val next = m.constraints :+ (name -> exprSql)
       // the new rule must already hold over the live table
       validateConstraints(
-        readEntries(spark, root, schemaOf(spark, root, m), m.entries, m.colmap),
+        scanEntries(spark, root, latest, m, schemaOf(spark, root, m), m.entries),
         Seq(name -> exprSql))
       Pending(m.entries, schemaOf(spark, root, m), m.statsKey, m.statsKey2,
         constraints = Some(next))
@@ -3767,7 +3753,7 @@ object SnapshotTable {
         val dvOnly = changedNew.nonEmpty &&
           m.entries.map(_.path).toSet == prevEntries.map(_.path).toSet
         if (m.op == "append" || m.op == "create")
-          frames += tag(readEntries(spark, root, sch, changedNew, mTo.colmap), v, "insert")
+          frames += tag(scanEntries(spark, root, to, mTo, sch, changedNew), v, "insert")
         else if (dvOnly) {
           // DV-ONLY commit (deleteWhere, streaming TTL eviction, dv
           // restore): the file SET is unchanged and files are
@@ -3782,45 +3768,29 @@ object SnapshotTable {
           // so every position in the delta changes table content.
           val oldPos = dvPositions(spark, root, changedOld)
           val newPos = dvPositions(spark, root, changedNew)
-          def posOrEmpty(p: Option[DataFrame]): DataFrame = p.getOrElse {
-            val s = org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField(DvPathCol,
-                org.apache.spark.sql.types.StringType),
-              org.apache.spark.sql.types.StructField(DvPosCol,
-                org.apache.spark.sql.types.LongType)))
-            spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), s)
-          }
+          def posOrEmpty(p: Option[DataFrame]): DataFrame = p.getOrElse(
+            spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), DvSchema))
           val o = posOrEmpty(oldPos).select(col(DvPathCol), col(DvPosCol))
           val n = posOrEmpty(newPos).select(col(DvPathCol), col(DvPosCol))
           val ctCol = "__graft_ct"
-          val delta0 = n.exceptAll(o)
+          val delta = n.exceptAll(o)
               .withColumn(ctCol, org.apache.spark.sql.functions.lit("delete"))
             .unionAll(o.exceptAll(n)
               .withColumn(ctCol, org.apache.spark.sql.functions.lit("insert")))
-          // broadcast when the recorded deletion counts bound the delta
-          // (same discipline as antiJoinDv); unknown counts → planner
-          val counted = (changedNew ++ changedOld).forall(e =>
-            e.dv.isEmpty || e.dvRows.isDefined)
-          val totalDv = (changedNew ++ changedOld).flatMap(_.dvRows).sum
-          val delta =
-            if (counted && totalDv <= BroadcastDvRows)
-              org.apache.spark.sql.functions.broadcast(delta0)
-            else delta0
-          val raw = spark.read.schema(physSchemaOf(mTo.colmap, sch))
-            .parquet(changedNew.map(e => s"$root/${e.path}"): _*)
-            .withColumn("__rel", relPathCol)
-            .withColumn("__idx", col("_metadata.row_index"))
-          val rows = toLogical(
-            raw.join(delta,
-              raw("__rel") === delta(DvPathCol) && raw("__idx") === delta(DvPosCol)),
-            sch, mTo.colmap, keep = Seq(ctCol))
+          // raw positions: the touched files read WITHOUT their dv —
+          // the rows the delta names are exactly the ones one of the two
+          // dv states hides
+          val raw = withPositions(scanEntries(spark, root, to, mTo, sch,
+            changedNew.map(undeleted)))
+          val rows = raw.join(delta,
+            raw(DvPathCol) === delta(DvPathCol) && raw(DvPosCol) === delta(DvPosCol))
           frames += rows.select(
             org.apache.spark.sql.functions.lit(v).cast("int").as("_commit_version") +:
             col(ctCol).as("_change_type") +:
-            sch.fieldNames.toSeq.map(rows(_)): _*)
+            sch.fieldNames.toSeq.map(raw(_)): _*)
         } else {
-          val a = readEntries(spark, root, sch, changedNew, mTo.colmap)
-          val r = readEntries(spark, root, sch, changedOld, mTo.colmap)
+          val a = scanEntries(spark, root, to, mTo, sch, changedNew)
+          val r = scanEntries(spark, root, to, mTo, sch, changedOld)
           frames += tag(a.exceptAll(r), v, "insert")
           frames += tag(r.exceptAll(a), v, "delete")
         }
@@ -3849,23 +3819,23 @@ object SnapshotTable {
     readChanges(spark, root, versionAsOf(spark, root, tsMs).getOrElse(0))
 
   /** Read the table with manifest-stats file skipping integrated into
-    * CATALYST: the returned frame's scan is backed by a
-    * [[ManifestFileIndex]], so any pushed data filter on `key`
+    * CATALYST: the returned frame is the snapshot scan over every live
+    * file, so any filter Catalyst pushes into it on `key`
     * (`.filter($"doc_id" === 5)`, `BETWEEN`, range predicates, and
     * IN-lists/equalities down to the exact POINT SET) prunes files at
-    * PLANNING time from the manifest's min/max stats — no explicit
-    * range API, no directory listing, no per-file RPCs (sizes ride the
-    * manifest). This is the Spark-idiomatic form of [[readRange]]/
-    * [[readKeys]]: the optimizer decides what reaches the scan and the
-    * index turns those conjuncts into file skips, the same integration
-    * point log-structured table formats use. Stats identity is
-    * verified: `key` conjuncts prune only if the manifest records
-    * `key` as its stats column; conjuncts over the recorded SECONDARY
-    * stats column prune independently (two-key conjunctions prune on
-    * both ranges). A mismatched `key` degrades to no primary pruning —
-    * never to pruning by another column's ranges. Row-level filtering
-    * stays with the engine — the index only bounds which FILES are
-    * scanned, so keeping a file never changes results. */
+    * PLANNING time from the manifest's stats ([[SqlSnapshot.keptFiles]])
+    * — no explicit range API, no directory listing, no per-file RPCs
+    * (sizes ride the manifest). This is the Spark-idiomatic form of
+    * [[readRange]]/[[readKeys]]: the optimizer decides what reaches the
+    * scan and the manifest turns those conjuncts into file skips, the
+    * same integration point log-structured table formats use. Stats
+    * identity is verified: `key` conjuncts prune only if the manifest
+    * records `key` as its stats column; conjuncts over the recorded
+    * SECONDARY stats column prune independently (two-key conjunctions
+    * prune on both ranges). A mismatched `key` degrades to no primary
+    * pruning — never to pruning by another column's ranges. Row-level
+    * filtering stays with the engine — the scan only bounds which
+    * FILES are read, so keeping a file never changes results. */
   def readIndexed(spark: SparkSession, root: String, key: String,
       version: Option[Int] = None): DataFrame =
     readIndexedBy(spark, root, Some(key), version)
@@ -3885,85 +3855,24 @@ object SnapshotTable {
     val v = version.getOrElse(vs.last)
     require(vs.contains(v), s"version $v does not exist (have $vs)")
     val m = manifestFull(spark, root, v)
-    val schema = schemaOf(spark, root, m)
     // stats identity: the primary prunes only under its recorded name;
     // the secondary always prunes under its own recorded name (it is
     // self-attributed — independent of what the caller asked for)
     val primary = m.statsKey.filter(r => key.forall(k => sameKey(Some(r), k)))
-    // the scan (and the filters Catalyst pushes through the logical-
-    // alias projection) is PHYSICAL: index keys translate, the dv
-    // anti-join runs over physical columns, and the logical aliasing
-    // is the outermost projection — user predicates on logical names
-    // still reach the scan (alias substitution), so pruning survives
-    // a rename of the stats-keyed column untouched
-    val index = new ManifestFileIndex(spark, root, pruneScope(m, schema, primary))
-    toLogical(applyDvIndexed(spark, root,
-      org.apache.spark.sql.graftbridge.Bridge.parquetRelation(spark, index,
-        physSchemaOf(m.colmap, schema)),
-      m.entries), schema, m.colmap)
-  }
-
-  /** Deletion vectors over the CATALYST-indexed read: the single
-    * relation [[ManifestFileIndex]] serves can't be split into a
-    * plain/dv union without losing the planning-time pruning, so the
-    * anti-join goes over the whole frame — dv positions only ever
-    * match rows of their own (immutable, uuid-pathed) files, plain
-    * files pass through the hash probe untouched. User predicates
-    * still push THROUGH the join to the scan (left-side filters), so
-    * the index's file skipping is unaffected. */
-  private def applyDvIndexed(spark: SparkSession, root: String,
-      df: DataFrame, entries: Seq[FileEntry]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val withDv = entries.filter(_.dv.isDefined)
-    if (withDv.isEmpty) df
-    else {
-      val cols = df.columns.toIndexedSeq.map(col)
-      val dv = dvPositions(spark, root, withDv).get
-      val total =
-        if (withDv.forall(_.dvRows.isDefined)) withDv.flatMap(_.dvRows).sum else -1L
-      antiJoinDv(
-        df.withColumn("__rel", relPathCol)
-          .withColumn("__idx", col("_metadata.row_index")),
-        dv, total).select(cols: _*)
-    }
+    frameOf(spark, new SqlSnapshot(spark, root, v, m, primary))
   }
 
   /** Deleted-position sidecar schema: the target data file's
     * MANIFEST-relative path + the deleted row's position within it
-    * (parquet row ordinal — `_metadata.row_index`, stable because data
-    * files are immutable). One sidecar DIRECTORY per committing
-    * delete/merge, holding the full effective position set for every
-    * file that commit touched; untouched entries keep pointing at
-    * their older sidecars. Positions for files later REWRITTEN stay in
-    * the sidecar harmlessly: rewrites mint fresh uuid paths, so a
-    * stale (path, pos) can never match a live row. */
-  private val DvPathCol = "__graft_dv_path"
-  private val DvPosCol = "__graft_dv_pos"
-
-  /** Above this many recorded deleted rows across the files being
-    * read, the DV anti-join abandons the broadcast hint and lets the
-    * planner shuffle: a position set that large no longer fits the
-    * "tiny side" contract a broadcast assumes (the same bound-or-
-    * shuffle discipline every driver-side collect in this module
-    * follows — never unbounded, never wrong). */
-  private val BroadcastDvRows = 4L * 1000 * 1000
-
-  /** The manifest-relative path of the file a scanned row came from:
-    * every data file lives under the table's `data/` directory, but at
-    * VARYING depth — `data/<batch>/<file>` plain, `data/<bkt-batch>/
-    * _graft_bucket=<i>/<file>` bucketed — so the suffix is cut at the
-    * LAST `data` segment of `_metadata.file_path` (last, not first: a
-    * table ROOT may itself contain a directory named `data`). No
-    * root-prefix string surgery, scheme-independent (file:// and
-    * hdfs:// alike). A fixed 3-segment slice here once made deletion
-    * vectors silently miss every file of a bucketed table. */
-  private def relPathCol: org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{array_position, col, concat_ws, lit, reverse, slice, split}
-    val parts = split(col("_metadata.file_path"), "/")
-    // 1-based distance of the last "data" segment from the path's end
-    val k = array_position(reverse(parts), lit("data")).cast("int")
-    concat_ws("/", slice(parts, -k, k))
-  }
+    * (its parquet row ordinal — the scan's `_graft_row`, stable
+    * because data files are immutable). One sidecar DIRECTORY per
+    * committing delete/merge, holding the full effective position set
+    * for every file that commit touched; untouched entries keep
+    * pointing at their older sidecars. Positions for files later
+    * REWRITTEN stay in the sidecar harmlessly: rewrites mint fresh
+    * uuid paths, so a stale (path, pos) can never match a live row. */
+  private[graft] val DvPathCol = "__graft_dv_path"
+  private[graft] val DvPosCol = "__graft_dv_pos"
 
   /** The recorded deleted positions of `entries` (those carrying a dv
     * reference), as a (path, pos) frame — None when none carry one.
@@ -3972,97 +3881,68 @@ object SnapshotTable {
     * every file its commit touched, and a file later re-touched
     * repoints to a newer dir that SUPERSETS its old positions — so
     * reading dirs unfiltered would return those positions twice. For
-    * an anti-join that's waste; for a count it's corruption (dvRows
-    * inflated until "fully deleted" fires on a file with live rows —
-    * silent data loss). Filtering by the pointing entries makes the
-    * union duplicate-free by construction. */
+    * a count that is corruption (dvRows inflated until "fully
+    * deleted" fires on a file with live rows — silent data loss).
+    * Filtering by the pointing entries makes the union duplicate-free
+    * by construction. */
   private def dvPositions(spark: SparkSession, root: String,
       entries: Seq[FileEntry]): Option[DataFrame] = {
     import org.apache.spark.sql.functions.col
     // manifest order, deterministic — keeps read plans fingerprint-stable
     val dirs = entries.flatMap(_.dv).distinct
     if (dirs.isEmpty) None
-    else {
-      // sidecar shape is fixed by the writer — an explicit schema
-      // skips a plan-time footer inference per dir (dv-heavy windows
-      // read several dirs; the driver latency adds up)
-      val dvSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(DvPathCol,
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField(DvPosCol,
-          org.apache.spark.sql.types.LongType)))
-      Some(dirs.map { d =>
-        val pointing = entries.collect { case e if e.dv.contains(d) => e.path }
-        spark.read.schema(dvSchema).parquet(s"$root/$d")
-          .filter(col(DvPathCol).isInCollection(pointing))
-      }.reduce(_ unionAll _))
-    }
+    else Some(dirs.map { d =>
+      val pointing = entries.collect { case e if e.dv.contains(d) => e.path }
+      spark.read.schema(DvSchema).parquet(s"$root/$d")
+        .filter(col(DvPathCol).isInCollection(pointing))
+    }.reduce(_ unionAll _))
   }
 
-  /** Drop `df`'s rows whose (file, position) appears in `dv` — the
-    * merge-on-read application. `df` must carry [[relPathCol]] as
-    * `__rel` and the row index as `__idx`; both are dropped. The dv
-    * side broadcasts when its recorded size is within
-    * [[BroadcastDvRows]] (a map-side hash anti-join — no shuffle of
-    * the data side), else the planner shuffles both sides. */
-  private def antiJoinDv(df: DataFrame, dv: DataFrame, totalDvRows: Long): DataFrame = {
-    val dvSide =
-      if (totalDvRows >= 0 && totalDvRows <= BroadcastDvRows)
-        org.apache.spark.sql.functions.broadcast(dv)
-      else dv
-    // left_anti keeps only left columns: `__rel`/`__idx` survive for
-    // callers that need the scan positions after the filter
-    df.join(dvSide,
-      df("__rel") === dvSide(DvPathCol) && df("__idx") === dvSide(DvPosCol),
-      "left_anti")
-  }
+  // sidecar shape is fixed by the writer — an explicit schema skips a
+  // plan-time footer inference per dir
+  private val DvSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField(DvPathCol, org.apache.spark.sql.types.StringType),
+    org.apache.spark.sql.types.StructField(DvPosCol, org.apache.spark.sql.types.LongType)))
 
-  /** Read `entries` under `sch` with deletion vectors APPLIED — the
-    * one effective-row read every consumer of a file list goes
-    * through ([[readPruned]], [[merge]]'s touched-file read,
-    * [[compact]]/[[compactSmall]]/[[retainWhere]]'s current-snapshot
-    * read, [[readChanges]]' per-version diff sides). Files without a
-    * dv reference read plain (no metadata-column overhead); files
-    * with one read with their scan positions and anti-join the
-    * recorded set out. Keeping the split means a table that has never
-    * seen a merge-on-read delete pays zero for the feature. */
-  private def readEntries(spark: SparkSession, root: String,
+  /** THE read of table data files: a frame planned by the snapshot
+    * scan ([[graft.catalog.GraftScan]]) over exactly `entries`, under
+    * `sch` and `m`'s column map, stats keys and layout — every
+    * programmatic read and every rewrite that reads the current
+    * snapshot goes through it. File statuses come from the manifest
+    * (no file-system calls); deletion vectors apply at the reader,
+    * and an entry passed without its dv reference reads every row it
+    * holds (the raw positions a dv rewrite needs). The scan's
+    * `_graft_file`/`_graft_row` metadata columns name each row's
+    * (file, ordinal). An empty list reads as an empty frame. */
+  private def scanEntries(spark: SparkSession, root: String, version: Int, m: Manifest,
+      sch: org.apache.spark.sql.types.StructType, entries: Seq[FileEntry]): DataFrame =
+    frameOf(spark, new SqlSnapshot(spark, root, version,
+      m.copy(schema = Some(sch), entries = entries)))
+
+  /** [[scanEntries]] for files no manifest lists yet (a batch written
+    * ahead of its commit): no stats identity, no layout. */
+  private def scanFiles(spark: SparkSession, root: String,
       sch: org.apache.spark.sql.types.StructType, entries: Seq[FileEntry],
-      colmap: Map[String, String] = Map.empty): DataFrame = {
+      colmap: Map[String, String]): DataFrame =
+    scanEntries(spark, root, -1,
+      Manifest("write", None, Seq.empty, None, None, colmap = colmap), sch, entries)
+
+  private def frameOf(spark: SparkSession, snap: SqlSnapshot): DataFrame =
+    if (snap.dataFiles.isEmpty)
+      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), snap.schema)
+    else graft.catalog.GraftReadTable.frame(spark, snap)
+
+  /** `df` with each row's (file, ordinal) appended as [[DvPathCol]] and
+    * [[DvPosCol]] — `df` must be a [[scanEntries]] frame. */
+  private def withPositions(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.col
-    if (entries.isEmpty)
-      return spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), sch)
-    val (withDv, plain) = entries.partition(_.dv.isDefined)
-    // column mapping: files store PHYSICAL names — read with the
-    // physical twin of the logical schema, alias back after. Files
-    // predating a column's minting simply null-fill its physical name,
-    // exactly like any evolved column.
-    val physSch = physSchemaOf(colmap, sch)
-    val cols = sch.fieldNames.toIndexedSeq.map(col)
-    val plainDf =
-      if (plain.isEmpty) None
-      else Some(toLogical(
-        spark.read.schema(physSch).parquet(plain.map(e => s"$root/${e.path}"): _*),
-        sch, colmap))
-    val effDf =
-      if (withDv.isEmpty) None
-      else {
-        val raw = spark.read.schema(physSch).parquet(withDv.map(e => s"$root/${e.path}"): _*)
-          .withColumn("__rel", relPathCol)
-          .withColumn("__idx", col("_metadata.row_index"))
-        val dv = dvPositions(spark, root, withDv).get
-        // -1 = unknown (a pre-dvRows line): don't broadcast blind
-        val total =
-          if (withDv.forall(_.dvRows.isDefined)) withDv.flatMap(_.dvRows).sum else -1L
-        Some(toLogical(antiJoinDv(raw, dv, total), sch, colmap).select(cols: _*))
-      }
-    (plainDf, effDf) match {
-      case (Some(p), Some(e)) => p.select(cols: _*).unionAll(e)
-      case (Some(p), None) => p
-      case (None, Some(e)) => e
-      case _ => spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), sch)
-    }
+    df.select(col("*"), col(graft.catalog.GraftFileColumn.Name).as(DvPathCol),
+      col(graft.catalog.GraftRowColumn.Name).as(DvPosCol))
   }
+
+  /** `e` without its deletion vector: read, it yields every row the
+    * file holds, at its raw position. */
+  private def undeleted(e: FileEntry): FileEntry = e.copy(dv = None, dvRows = None)
 
   private object NothingToDelete extends Exception
 
@@ -4072,11 +3952,13 @@ object SnapshotTable {
     * pairs the predicate matched, unioned with each touched file's
     * previously-recorded positions so a file always has exactly ONE
     * live sidecar reference) and a manifest whose touched entries
-    * point at it; every reader anti-joins the positions out. This is
+    * point at it; every reader drops those positions as it reads the
+    * file (the scan's dv reader). This is
     * the delete shape a 100 TB table needs for small-to-medium
     * predicates: [[retainWhere]] rewrites the WHOLE table to drop a
     * row; this writes bytes proportional to the rows DELETED. The
-    * trade is read-side work (the anti-join) that accrues until a
+    * trade is read-side work (a row-based, position-filtered read of
+    * each dv file) that accrues until a
     * rewrite materializes it — [[describeDetail]] reports the
     * accumulated dv debt so a maintenance scheduler knows when to
     * [[compact]] (which reads effective rows and emits dv-free files,
@@ -4112,7 +3994,7 @@ object SnapshotTable {
         case Some(kept) =>
           if (kept.size == m.entries.size) throw NothingToDelete
           Pending(kept, sch, m.statsKey, m.statsKey2)
-        case None => rowLevelDelete(spark, root, m, sch, pred)
+        case None => rowLevelDelete(spark, root, latest, m, sch, pred)
       }
     })
     catch { case NothingToDelete => None }
@@ -4160,45 +4042,25 @@ object SnapshotTable {
 
   /** The row-level (deletion-vector) DELETE — [[deleteWhere]]'s body
     * when the whole-partition fast path declines. */
-  private def rowLevelDelete(spark: SparkSession, root: String, m: Manifest,
+  private def rowLevelDelete(spark: SparkSession, root: String, version: Int, m: Manifest,
       sch: org.apache.spark.sql.types.StructType,
       pred: org.apache.spark.sql.Column): Pending = {
     import org.apache.spark.sql.functions.col
     {
       // scan positions ride the predicate scan; already-deleted rows
-      // are excluded so re-deleting is detectably a no-op. The scan
-      // goes through the manifest-backed FileIndex, so conjuncts of
-      // `pred` that bound the table's recorded stats column(s) prune
-      // FILES at planning time — a point delete on a clustered 100 TB
-      // table scans the one file its key lands in, not the table
-      // (conservative exactly like every read: unbounded predicates
-      // keep every file, kept files still row-filter)
-      // the scan is PHYSICAL (files spell physical names; the index
-      // prunes on the stats keys as the FILTERS will spell them after
-      // Catalyst pushes them through the logical-alias projection —
-      // i.e. physically); `pred` evaluates over the logical aliases
-      // (a point DELETE on a bucketed table scans one bucket)
-      val index = new ManifestFileIndex(spark, root, pruneScope(m, sch, m.statsKey))
-      val raw = toLogical(org.apache.spark.sql.graftbridge.Bridge
-        .parquetRelation(spark, index, physSchemaOf(m.colmap, sch))
-        .withColumn("__rel", relPathCol)
-        .withColumn("__idx", col("_metadata.row_index")),
-        sch, m.colmap, keep = Seq("__rel", "__idx"))
-      val live = dvPositions(spark, root, m.entries) match {
-        case Some(dv) =>
-          val total =
-            if (m.entries.forall(e => e.dv.isEmpty || e.dvRows.isDefined))
-              m.entries.flatMap(_.dvRows).sum
-            else -1L
-          antiJoinDv(raw, dv, total)
-        case None => raw
-      }
+      // are dropped at the reader, so re-deleting is detectably a
+      // no-op. Conjuncts of `pred` that bound the table's recorded
+      // stats column(s) reach the scan and prune FILES at planning time
+      // — a point delete on a clustered 100 TB table scans the one file
+      // its key lands in, not the table, and a point DELETE on a
+      // bucketed table scans one bucket (conservative exactly like
+      // every read: unbounded predicates keep every file, kept files
+      // still row-filter)
+      val live = withPositions(scanEntries(spark, root, version, m, sch, m.entries))
       // persisted: the predicate scan runs ONCE — the per-file counts
       // and the sidecar write both reuse it (at 100 TB the scan is the
       // whole cost of a predicate delete; paying it twice is a bug)
-      val newDel = live.filter(pred)
-        .select(col("__rel").as(DvPathCol), col("__idx").as(DvPosCol))
-        .persist()
+      val newDel = live.filter(pred).select(col(DvPathCol), col(DvPosCol)).persist()
       try {
         // per-file deleted counts: bounded by the manifest's file
         // count, which is already driver-resident — not a data collect
@@ -4210,15 +4072,15 @@ object SnapshotTable {
         // positions into the new sidecar so their entries can repoint.
         // dvPositions reads each dir filtered to its OWN pointing
         // entries (no cross-generation duplicates), and the delete
-        // scan anti-joined already-deleted rows out, so old ∪ new is
-        // disjoint — no distinct needed
+        // scan dropped already-deleted rows, so old ∪ new is disjoint
+        // — no distinct needed
         val oldPos = dvPositions(spark, root, touched)
         val all = oldPos.map(_.unionAll(newDel)).getOrElse(newDel)
         val dvDir = s"deletes/batch-${java.util.UUID.randomUUID().toString.take(8)}"
         all.write.parquet(s"$root/$dvDir")
         // effective counts by ARITHMETIC, not by re-reading the sidecar
-        // just written: old ∪ new is disjoint (the scan anti-joined
-        // already-deleted rows out) and every touched entry's old count
+        // just written: old ∪ new is disjoint (the scan dropped
+        // already-deleted rows) and every touched entry's old count
         // is already manifest-resident (dvRows), so eff = old + new —
         // two fewer Spark actions on every predicate delete. A legacy
         // entry carrying a dv reference without its count falls back to
@@ -4289,11 +4151,10 @@ object SnapshotTable {
       val touchedOut =
         if (touched.isEmpty) Seq.empty[FileEntry]
         else {
-          val raw = toLogical(spark.read.schema(physSchemaOf(m.colmap, tableSchema))
-            .parquet(touched.map(e => s"$root/${e.path}"): _*)
-            .withColumn("__rel", relPathCol)
-            .withColumn("__idx", col("_metadata.row_index")),
-            tableSchema, m.colmap, keep = Seq("__rel", "__idx"))
+          // raw positions: touched files read WITHOUT their dv, so a
+          // key deleted earlier and matched again lands in both sides
+          val raw = withPositions(scanEntries(spark, root, latest, m, tableSchema,
+            touched.map(undeleted)))
           // rows whose key the update batch carries → newly deleted
           // positions; a bounded key set broadcasts (map-side semi)
           val keyFrame = updates.select(updates(key).as("__mk")).distinct()
@@ -4304,9 +4165,7 @@ object SnapshotTable {
           val hit = raw.join(
               if (bounded) org.apache.spark.sql.functions.broadcast(keyFrame) else keyFrame,
               raw(key) === col("__mk"), "left_semi")
-            .select(col("__rel").as(DvPathCol), col("__idx").as(DvPosCol))
-          // distinct stays: `raw` is not dv-filtered here, so a key
-          // previously deleted AND matched again lands in both sides
+            .select(col(DvPathCol), col(DvPosCol))
           val oldPos = dvPositions(spark, root, touched)
           val all = oldPos.map(_.unionAll(hit)).getOrElse(hit).distinct().persist()
           try {
@@ -4379,65 +4238,34 @@ object SnapshotTable {
   }
 
   // ------------------------------------------------------------------
-  // DSv2 catalog seams (graft.catalog) — the narrow, read-mostly surface
-  // the SQL layer plans against. Everything here is metadata already in
-  // the manifest; the one collect (dv positions) is bounded and loud.
+  // The snapshot scan's seams (graft.catalog) — the narrow, read-mostly
+  // surface every read plans against. Everything here is metadata
+  // already in the manifest.
   // ------------------------------------------------------------------
 
-  /** A data file of one snapshot version as the DSv2 planner sees it:
+  /** A data file of one snapshot version as the scan sees it:
     * manifest-relative path, recorded size, recorded row count, and
-    * whether a deletion vector applies (the scan must position-filter
-    * its rows). */
+    * the sidecar directory of its deletion vector, if any (the reader
+    * must position-filter its rows). */
   private[graft] final case class SqlDataFile(relPath: String, bytes: Long,
-      rows: Option[Long], hasDv: Boolean)
+      rows: Option[Long], dv: Option[String]) {
+    def hasDv: Boolean = dv.isDefined
+  }
 
-  /** Above this many recorded deleted positions across the files one
-    * DSv2 scan keeps, the scan refuses rather than materializing the
-    * position sets on the driver (the broadcast the per-file readers
-    * filter with). The V1 read path shuffles instead of broadcasting at
-    * this size; for the SQL path the answer is maintenance —
-    * [[compact]]/[[maintain]] rewrite the debt away. Loud, never wrong. */
-  private[graft] val SqlDvCollectCap = 8L * 1000 * 1000
-
-  /** Per-entry retention cap for [[dvMapMemo]]: entries above this
-    * many positions are served but not retained, so the 32-entry LRU
-    * is bounded at ~100 MB of longs worst case instead of 32 × the
-    * collect cap (~2 GB). */
-  private val DvMemoMaxPositions = 400 * 1000
-
-  /** The memo key for one (table root, file → dv-sidecar pointing set).
-    * Every boundary is delimited with a distinct control char — root
-    * from entries (NUL), path from dv dir (SOH), entry from entry
-    * (STX) — so no two distinct pointing sets can serialize to one
-    * key. A collision here would serve another table state's deleted
-    * positions (silent wrong rows), so the format must not rest on
-    * real path shapes never embedding each other; DvMemoKeySpec pins
-    * the classic boundary-ambiguity shapes apart. */
-  private[graft] def dvMemoKeyOf(root: String,
-      pointed: Seq[(String, String)]): String =
-    root + "\u0000" +
-      pointed.iterator.map { case (p, d) => p + "\u0001" + d }
-        .toSeq.sorted.mkString("\u0002")
-
-  /** Backing LRU for [[SqlSnapshot.dvPositionMap]]'s memo — see its
-    * doc for the immutability argument. Access-ordered, bounded; all
-    * access synchronized on the map itself. */
-  private val dvMapMemo =
-    new java.util.LinkedHashMap[String, Map[String, Array[Long]]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Map[String, Array[Long]]]): Boolean =
-        size() > 32
-    }
-
-  /** One resolved snapshot version for the DSv2 planner: schema (its
-    * own recorded one — time travel reads old shapes), column map,
-    * stats identity, and manifest-pruned file listing. Driver-side
-    * metadata only; no Spark jobs. */
+  /** One resolved entry list for the scan: a committed version (the
+    * catalog's tables) or any entry list read under a schema and
+    * column map ([[scanEntries]]). Schema (its own recorded one — time
+    * travel reads old shapes), column map, stats identity, and
+    * manifest-pruned file listing. `pruneKey` is the primary stats
+    * key pushed filters may prune on (the recorded one unless a read
+    * named another column). Driver-side metadata only; no Spark jobs. */
   private[graft] final class SqlSnapshot(spark: SparkSession, val root: String,
-      val version: Int, m: Manifest) {
+      val version: Int, m: Manifest, pruneKey: Option[String]) {
+    def this(spark: SparkSession, root: String, version: Int, m: Manifest) =
+      this(spark, root, version, m, m.statsKey)
     val schema: org.apache.spark.sql.types.StructType = schemaOf(spark, root, m)
     /** Files spell PHYSICAL names; the scan reads physical, aliases
-      * logical (same discipline as [[readEntries]]). */
+      * logical through the column map. */
     val physSchema: org.apache.spark.sql.types.StructType = physSchemaOf(m.colmap, schema)
     def physName(logical: String): String = physFor(m.colmap, logical)
 
@@ -4572,16 +4400,28 @@ object SnapshotTable {
         }
       }
 
+    /** Every file of the entry list. */
+    lazy val dataFiles: Seq[SqlDataFile] = {
+      lazy val f = fs(spark, root)
+      m.entries.map { e =>
+        val len = e.bytes.getOrElse(f.getFileStatus(new Path(root, e.path)).getLen)
+        SqlDataFile(e.path, len, e.rows, e.dv)
+      }
+    }
+
     /** The files kept under `dataFilters` (catalyst conjuncts over
       * PHYSICAL attribute names), by [[ManifestPruning]]'s decision. */
     def keptFiles(dataFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression]):
         Seq[SqlDataFile] = {
-      lazy val f = fs(spark, root)
-      pruneScope(m, schema, m.statsKey).kept(dataFilters).map { e =>
-        val len = e.bytes.getOrElse(f.getFileStatus(new Path(root, e.path)).getLen)
-        SqlDataFile(e.path, len, e.rows, e.dv.isDefined)
-      }
+      val byPath = dataFiles.map(f => f.relPath -> f).toMap
+      pruneScope(m, schema, pruneKey).kept(dataFilters).map(e => byPath(e.path))
     }
+
+    /** What makes two reads the same read: the files and their dv
+      * state, the schema, the column map and the prune key. */
+    lazy val readKey: (String, Int, Seq[(String, Option[String])],
+        org.apache.spark.sql.types.StructType, Map[String, String], Option[String]) =
+      (root, version, m.entries.map(e => (e.path, e.dv)), schema, m.colmap, pruneKey)
 
     /** Declared partition columns (physical names; empty = none). */
     def partitionCols: Seq[String] = m.partitionCols
@@ -4595,52 +4435,6 @@ object SnapshotTable {
     /** Partition-column types keyed by normalized physical name. */
     def partitionTypes: Map[String, org.apache.spark.sql.types.DataType] =
       partTypesOf(m, schema)
-
-    /** Deleted positions of the dv-carrying files among `relPaths`, as
-      * path → sorted ordinals — what the DSv2 readers filter with.
-      * Bounded by [[SqlDvCollectCap]], loudly.
-      *
-      * MEMOIZED per (root, pointing-set): a dv commit always writes a
-      * NEW `deletes/batch-*` dir (never rewrites one in place), so the
-      * positions behind a given (file → sidecar dir) pointing set are
-      * immutable — and one logical operation scans the same dv-carrying
-      * version repeatedly (a MERGE's condition pass, runtime group
-      * filter, and rewrite read each rebuild the scan). Without the
-      * memo each of those pays its own sidecar collect job; with it the
-      * first scan pays and the rest are a driver map hit. Entries are
-      * driver-bounded by [[SqlDvCollectCap]] before they get here and
-      * the memo is a small LRU, so this is O(model)-sized state. */
-    def dvPositionMap(relPaths: Seq[String]): Map[String, Array[Long]] = {
-      val want = relPaths.toSet
-      val withDv = m.entries.filter(e => e.dv.isDefined && want(e.path))
-      if (withDv.isEmpty) Map.empty
-      else {
-        val memoKey = dvMemoKeyOf(root, withDv.map(e => (e.path, e.dv.get)))
-        val hit = dvMapMemo.synchronized(Option(dvMapMemo.get(memoKey)))
-        hit.getOrElse {
-          val known = withDv.flatMap(_.dvRows)
-          require(known.size < withDv.size || known.sum <= SqlDvCollectCap,
-            s"table $root carries ${known.sum} recorded deleted rows across the " +
-              s"scanned files — beyond the SQL scan's driver bound ($SqlDvCollectCap). " +
-              "Run SnapshotTable.maintain/compact to materialize the deletes first.")
-          val rows = dvPositions(spark, root, withDv).get.collect()
-          require(rows.length <= SqlDvCollectCap,
-            s"deletion-vector sidecars of $root hold ${rows.length} positions — beyond " +
-              s"the SQL scan's driver bound ($SqlDvCollectCap); compact the table first.")
-          val built = rows.groupBy(_.getString(0)).map { case (p, rs) =>
-            val a = rs.map(_.getLong(1)); java.util.Arrays.sort(a); p -> a
-          }
-          // retention bound: the LRU holds up to 32 entries, so only
-          // maps small enough that 32 of them stay O(100 MB) are
-          // retained — a huge-dv table re-collects per scan exactly as
-          // before the memo (the transient collect is already bounded
-          // by SqlDvCollectCap and loud)
-          if (rows.length <= DvMemoMaxPositions)
-            dvMapMemo.synchronized { dvMapMemo.put(memoKey, built); () }
-          built
-        }
-      }
-    }
   }
 
   /** [[SqlSnapshot.bucketLayout]]'s static form — shared with
@@ -4911,7 +4705,7 @@ object SnapshotTable {
       require(m.partitionCols.nonEmpty,
         s"$root declares no partition columns (PARTITIONED BY at create)")
       val schema = schemaOf(spark, root, m)
-      val current = readEntries(spark, root, schema, m.entries, m.colmap)
+      val current = scanEntries(spark, root, latest, m, schema, m.entries)
       Pending(writePartitionedFiles(spark, root, current, m.partitionCols,
         m.statsKey, m.statsKey2, m.colmap), schema, m.statsKey, m.statsKey2,
         colmap = if (m.colmap.isEmpty) None else Some(m.colmap))
@@ -4951,15 +4745,11 @@ object SnapshotTable {
     * files. Called BEFORE [[sqlReplaceFiles]] commits — a violation
     * aborts with nothing published. */
   private[graft] def sqlValidateWritten(spark: SparkSession, root: String,
-      written: Seq[String]): Unit = {
+      written: Seq[FileEntry]): Unit = {
     val m = manifestFull(spark, root, versions(spark, root).last)
-    if (m.constraints.nonEmpty && written.nonEmpty) {
-      val sch = schemaOf(spark, root, m)
-      val df = toLogical(
-        spark.read.schema(physSchemaOf(m.colmap, sch))
-          .parquet(written.map(p => s"$root/$p"): _*), sch, m.colmap)
-      validateConstraints(df, m.constraints)
-    }
+    if (m.constraints.nonEmpty && written.nonEmpty)
+      validateConstraints(scanFiles(spark, root, schemaOf(spark, root, m), written, m.colmap),
+        m.constraints)
   }
 
   private def readPruned(spark: SparkSession, root: String, version: Option[Int],
@@ -4969,28 +4759,28 @@ object SnapshotTable {
     val v = version.getOrElse(vs.last)
     require(vs.contains(v), s"version $v does not exist (have $vs)")
     val m = manifestFull(spark, root, v)
-    readEntries(spark, root, schemaOf(spark, root, m), prune(m), m.colmap)
+    scanEntries(spark, root, v, m, schemaOf(spark, root, m), prune(m))
   }
 }
 
 /** THE file-skipping decision: every path that turns manifest stats
   * into "scan this file or not" calls [[ManifestPruning.partition]] —
-  * the DSv2 scan's [[SnapshotTable.SqlSnapshot.keptFiles]], the V1
-  * [[ManifestFileIndex.listFiles]] behind [[SnapshotTable.readIndexed]]
-  * and [[SnapshotTable.deleteWhere]], [[SnapshotTable.readRange]]/
-  * [[SnapshotTable.readKeys]]/[[SnapshotTable.readKeysStr]], and the
-  * touched-file split of [[SnapshotTable.merge]] and
-  * [[SnapshotTable.mergeOnRead]]. Callers differ only in what they
-  * pass (bounds extracted from pushed filters, or a requested range /
-  * key set; the bucket context; the partition types) and in how they
-  * wrap the kept entries. Range semantics, point-probe semantics,
+  * the snapshot scan's [[SnapshotTable.SqlSnapshot.keptFiles]] (behind
+  * SQL, [[SnapshotTable.readIndexed]] and [[SnapshotTable.deleteWhere]],
+  * which push filters into it), [[SnapshotTable.readRange]]/
+  * [[SnapshotTable.readKeys]]/[[SnapshotTable.readKeysStr]] (which
+  * pre-prune the entry list the scan reads), and the touched-file
+  * split of [[SnapshotTable.merge]] and [[SnapshotTable.mergeOnRead]].
+  * Callers differ only in what they pass (bounds extracted from pushed
+  * filters by [[ManifestPruning.bounds]], or a requested range / key
+  * set; the bucket context; the partition types) and in how they wrap
+  * the kept entries. Range semantics, point-probe semantics,
   * bloom probing, bucket and partition pruning, and the
   * no-stats-keeps-the-file convention are defined here once. Every
   * check is CONSERVATIVE: absent stats keep the file, and keeping a
   * file never changes results (row filtering is the engine's job). */
 private[sources] object ManifestPruning {
   import SnapshotTable.FileEntry
-  import ManifestFileIndex.KeyBounds
   import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
 
   private val ord = SnapshotTable.byteOrder
@@ -5003,7 +4793,7 @@ private[sources] object ManifestPruning {
     * with that many uniform keys, virtually every file's bloom reports
     * a plausible hit. Range pruning stays O(log keys) per file. Point
     * sets extracted from filters carry at most 1000 keys
-    * (`ManifestFileIndex.MaxBoundPoints`), under this cap, so on the
+    * ([[MaxBoundPoints]]), under this cap, so on the
     * filter path every point set probes the blooms. */
   private[sources] val MaxBloomProbeKeys = 4096
 
@@ -5119,72 +4909,9 @@ private[sources] object ManifestPruning {
       buckets: Option[Buckets], partTypes: Map[String, DataType]) {
     /** The entries `filters` (catalyst conjuncts) may not skip. */
     def kept(filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Seq[FileEntry] =
-      partition(entries, key.map(ManifestFileIndex.bounds(filters, _)),
-        key2.map(ManifestFileIndex.bounds(filters, _)), buckets, filters, partTypes)._1
+      partition(entries, key.map(bounds(filters, _)),
+        key2.map(bounds(filters, _)), buckets, filters, partTypes)._1
   }
-}
-
-/** A [[org.apache.spark.sql.execution.datasources.FileIndex]] served
-  * from a snapshot manifest: the file list, sizes, AND per-file key
-  * stats all come from one manifest read, and `listFiles` applies the
-  * scan's pushed data filters against those stats — file-level
-  * skipping decided at PLANNING time by the optimizer's own conjuncts,
-  * the same integration point log-structured table formats use for
-  * their log-backed indexes. The [[ManifestPruning.Scope]] names the
-  * manifest's VERIFIED stats columns — the caller resolves them
-  * against the manifest header, so this index never applies stats to
-  * a column they weren't computed for. Conservative by construction:
-  * only conjuncts that provably bound a stats column
-  * ([[ManifestFileIndex.bounds]]) tighten the range, everything else
-  * keeps every file, and kept files still go through the engine's
-  * row-level filtering — so results never depend on how much was
-  * pruned.
-  */
-private[sources] final class ManifestFileIndex(
-    spark: SparkSession,
-    root: String,
-    scope: ManifestPruning.Scope)
-  extends org.apache.spark.sql.execution.datasources.FileIndex {
-
-  import org.apache.hadoop.fs.FileStatus
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.catalyst.expressions.Expression
-  import org.apache.spark.sql.execution.datasources.PartitionDirectory
-
-  // FileStatus straight from the manifest (size recorded at write
-  // time); only pre-size manifest entries pay a per-file RPC
-  private val fileStatuses: Seq[FileStatus] = {
-    lazy val f = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    scope.entries.map { e =>
-      val p = new Path(root, e.path)
-      e.bytes match {
-        case Some(len) => new FileStatus(len, false, 1, len, 0L, p)
-        case None => f.getFileStatus(p)
-      }
-    }
-  }
-  private val statusOf: Map[String, FileStatus] =
-    scope.entries.map(_.path).zip(fileStatuses).toMap
-
-  override def rootPaths: Seq[Path] = Seq(new Path(root))
-
-  override def listFiles(partitionFilters: Seq[Expression],
-      dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
-    Seq(PartitionDirectory(InternalRow.empty,
-      scope.kept(dataFilters).map(e => statusOf(e.path)).toArray))
-
-  override def inputFiles: Array[String] = fileStatuses.map(_.getPath.toString).toArray
-
-  override def refresh(): Unit = ()
-
-  override def sizeInBytes: Long = fileStatuses.map(_.getLen).sum
-
-  override def partitionSchema: org.apache.spark.sql.types.StructType =
-    new org.apache.spark.sql.types.StructType()
-}
-
-private[sources] object ManifestFileIndex {
-  import org.apache.spark.sql.catalyst.expressions._
 
   /** Beyond this many IN-list points the extractor records only the
     * [min,max] envelope: a point set is checked per file (O(log k)
@@ -5202,7 +4929,7 @@ private[sources] object ManifestFileIndex {
     * are what make a clustered table's point lookups minimal: an
     * `IN (k1, k2)` over far-apart keys touches two files, where the
     * [min,max] envelope alone would scan every file between them. */
-  private[sources] final case class KeyBounds(
+  final case class KeyBounds(
       longBounds: Option[(Long, Long)],
       strLo: Option[Array[Byte]],
       strHi: Option[Array[Byte]],
@@ -5230,7 +4957,9 @@ private[sources] object ManifestFileIndex {
     * STRICT string inequalities use their non-strict bound (the
     * byte-successor games a strict byte bound needs aren't worth one
     * extra boundary file). */
-  private[sources] def bounds(filters: Seq[Expression], key: String): KeyBounds = {
+  def bounds(filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+      key: String): KeyBounds = {
+    import org.apache.spark.sql.catalyst.expressions._
     val ord = SnapshotTable.byteOrder
     def isKey(e: Expression): Boolean = e match {
       case a: AttributeReference =>

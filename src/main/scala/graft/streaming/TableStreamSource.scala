@@ -356,7 +356,7 @@ final class SnapshotTableSource(spark: SparkSession, root: String,
     val batch =
       if (files.isEmpty)
         spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-      else SnapshotTable.readFilesAs(spark, schema, colmap, files)
+      else SnapshotTable.readFilesAs(spark, root, schema, colmap, files)
     org.apache.spark.sql.graftbridge.Bridge.asStreaming(spark, batch)
   }
 

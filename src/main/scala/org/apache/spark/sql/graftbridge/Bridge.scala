@@ -56,28 +56,6 @@ object Bridge {
   def flushListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
-  /** A parquet DataFrame over a CUSTOM FileIndex — how a manifest-
-    * backed table surfaces planning-time file skipping through the
-    * ordinary scan machinery (HadoopFsRelation's constructor and
-    * Dataset.ofRows are private[sql]). The index's `listFiles`
-    * receives the scan's pushed data filters; everything downstream
-    * (column pruning, row-level filtering, codegen) is stock
-    * FileSourceScanExec. */
-  def parquetRelation(spark: org.apache.spark.sql.SparkSession,
-      index: org.apache.spark.sql.execution.datasources.FileIndex,
-      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame = {
-    val cls = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val relation = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-      location = index,
-      partitionSchema = new org.apache.spark.sql.types.StructType(),
-      dataSchema = schema,
-      bucketSpec = None,
-      fileFormat = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
-      options = Map.empty)(cls)
-    org.apache.spark.sql.classic.Dataset.ofRows(cls,
-      org.apache.spark.sql.execution.datasources.LogicalRelation(relation))
-  }
-
   /** Re-flag a batch DataFrame as STREAMING — what a V1
     * [[org.apache.spark.sql.execution.streaming.Source]]'s `getBatch`
     * must return (MicroBatchExecution asserts `isStreaming` on the

@@ -792,9 +792,7 @@ class GraftCatalogSpec extends SparkSpec {
       .filter(org.apache.spark.sql.functions.col("id") === 1234L)
     assert(v1.collect().length == 1)
     org.apache.spark.sql.graftbridge.Bridge.flushListenerBus(spark)
-    val v1Files = v1.queryExecution.executedPlan.collectFirst {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.map(_.metrics("numFiles").value).getOrElse(-1L)
+    val v1Files = PlanWalk.keptFiles(v1).headOption.map(_.toLong).getOrElse(-1L)
     assert(v1Files == 1, s"V1 point probe scanned $v1Files files")
   }
 
@@ -1025,9 +1023,7 @@ class GraftCatalogSpec extends SparkSpec {
       .filter(col("lang") === "en")
     assert(v1.collect().length == enExpected) // executes THIS plan (metrics live here)
     org.apache.spark.sql.graftbridge.Bridge.flushListenerBus(spark)
-    val v1Files = v1.queryExecution.executedPlan.collectFirst {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.map(_.metrics("numFiles").value).getOrElse(-1L)
+    val v1Files = PlanWalk.keptFiles(v1).headOption.map(_.toLong).getOrElse(-1L)
     assert(v1Files == enFiles, s"V1 scanned $v1Files of $total files")
     // a row-level rewrite (MERGE) is layout-agnostic: its files carry
     // no partition dirs, pruning keeps them conservatively, rows stay
@@ -1965,8 +1961,8 @@ class GraftCatalogSpec extends SparkSpec {
   }
 
   test("dv-position memo: repeated reads reuse positions, a new delete invalidates") {
-    // the r18 memo (SnapshotTable.dvPositionMap) keys on the pointing
-    // set (file -> sidecar dir). The failure this pins: a STALE HIT —
+    // the reader's position memo (GraftDvPositions) keys on the
+    // sidecar dir a file's entry points at. The failure this pins: a STALE HIT —
     // a second delete repoints files to a NEW sidecar dir; if the
     // memo served the old positions, the first read after the second
     // delete would resurrect the newly-deleted rows (silent data

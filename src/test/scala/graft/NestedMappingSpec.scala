@@ -198,10 +198,9 @@ class NestedMappingSpec extends SparkSpec {
       .filter(col("id") === 250L).selectExpr("id", "meta.fname")
     val got = probe.collect()
     assert(got.length == 1 && got.head.getString(1) == "f250")
-    val scans = graft.PlanWalk.fileScans(probe)
+    val scans = graft.PlanWalk.keptFiles(probe)
     assert(scans.nonEmpty)
-    val files = scans.map(s =>
-      s.metrics.get("numFiles").map(_.value).getOrElse(0L)).sum
+    val files = scans.sum.toLong
     assert(files == 1L,
       s"point probe under a nested map must keep 1 of 4 files, kept $files")
   }

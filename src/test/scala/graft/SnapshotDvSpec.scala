@@ -174,23 +174,12 @@ class SnapshotDvSpec extends SparkSpec {
     // df's execution (a count() would execute a different plan)
     assert(probe.collect().isEmpty, "the indexed read must apply the deletion")
     org.apache.spark.sql.graftbridge.Bridge.flushListenerBus(spark)
-    // the DATA scan (the one carrying the table's columns — the dv
-    // sidecar scan reads only the position columns) still prunes to
-    // the single file the pushed predicate allows; the dv anti-join
-    // makes the plan adaptive, so descend through AQE query stages
-    def scans(p: org.apache.spark.sql.execution.SparkPlan):
-        Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        scans(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => scans(q.plan)
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
-      case other => other.children.flatMap(scans)
-    }
-    val dataScans = scans(probe.queryExecution.executedPlan)
-      .filter(_.schema.fieldNames.contains("v"))
+    // the table scan still prunes to the single file the pushed
+    // predicate allows; its reader drops the deleted position
+    val dataScans = graft.PlanWalk.keptFiles(probe)
     assert(dataScans.nonEmpty, "plan must contain the table's file scan")
-    assert(dataScans.map(_.metrics("numFiles").value).max == 1,
-      "pushed point predicate must still prune to 1 of 4 files under the dv join")
+    assert(dataScans.max == 1,
+      "pushed point predicate must still prune to 1 of 4 files under the dv")
     // a neighbouring live key reads through the same path
     val live = SnapshotTable.readIndexed(spark, root, "id").filter(col("id") === 126L)
     assert(live.collect().map(r => (r.getLong(0), r.getString(1))).toSeq == Seq((126L, "r126")))

@@ -662,10 +662,9 @@ class SnapshotTableSpec extends SparkSpec {
     def runAndCountFiles(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
       val n = df.collect().length.toLong
       org.apache.spark.sql.graftbridge.Bridge.flushListenerBus(spark)
-      val scan = df.queryExecution.executedPlan.collectFirst {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-      }.getOrElse(fail("plan must contain a FileSourceScanExec"))
-      (n, scan.metrics("numFiles").value)
+      val scan = graft.PlanWalk.keptFiles(df).headOption
+        .getOrElse(fail("plan must contain a snapshot scan"))
+      (n, scan.toLong)
     }
     val (eqRows, eqFiles) = runAndCountFiles(
       SnapshotTable.readIndexed(spark, root, "name")
@@ -693,10 +692,9 @@ class SnapshotTableSpec extends SparkSpec {
     def runAndCountFiles(df: org.apache.spark.sql.DataFrame): (Seq[(Long, String)], Long) = {
       val rows = df.collect().map(r => (r.getLong(0), r.getString(1))).toSeq
       org.apache.spark.sql.graftbridge.Bridge.flushListenerBus(spark)
-      val scan = df.queryExecution.executedPlan.collectFirst {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-      }.getOrElse(fail("plan must contain a FileSourceScanExec"))
-      (rows, scan.metrics("numFiles").value)
+      val scan = graft.PlanWalk.keptFiles(df).headOption
+        .getOrElse(fail("plan must contain a snapshot scan"))
+      (rows, scan.toLong)
     }
     // point lookup: exactly the one file whose range holds the key
     val (eqRows, eqFiles) = runAndCountFiles(
@@ -755,10 +753,9 @@ class SnapshotTableSpec extends SparkSpec {
     def runAndCountFiles(df: org.apache.spark.sql.DataFrame): (Seq[Long], Long) = {
       val rows = df.collect().map(_.getLong(0)).toSeq.sorted
       org.apache.spark.sql.graftbridge.Bridge.flushListenerBus(spark)
-      val scan = df.queryExecution.executedPlan.collectFirst {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-      }.getOrElse(fail("plan must contain a FileSourceScanExec"))
-      (rows, scan.metrics("numFiles").value)
+      val scan = graft.PlanWalk.keptFiles(df).headOption
+        .getOrElse(fail("plan must contain a snapshot scan"))
+      (rows, scan.toLong)
     }
     // the verdict's own acceptance shape: a 2-point IN over a clustered
     // table reads the 2 point files, where the [min,max] envelope alone
@@ -781,12 +778,11 @@ class SnapshotTableSpec extends SparkSpec {
       .filter(col("name").isin("doc-0005", "doc-0395"))
     val sRows = sIn.collect().map(_.getString(0)).toSeq.sorted
     org.apache.spark.sql.graftbridge.Bridge.flushListenerBus(spark)
-    val sScan = sIn.queryExecution.executedPlan.collectFirst {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.getOrElse(fail("plan must contain a FileSourceScanExec"))
+    val sScan = graft.PlanWalk.keptFiles(sIn).headOption
+        .getOrElse(fail("plan must contain a snapshot scan"))
     assert(sRows == Seq("doc-0005", "doc-0395"))
-    assert(sScan.metrics("numFiles").value == 2,
-      s"string 2-point IN must scan 2 files, scanned ${sScan.metrics("numFiles").value}")
+    assert(sScan.toLong == 2,
+      s"string 2-point IN must scan 2 files, scanned ${sScan.toLong}")
   }
 
   test("stats identity: a key the stats were NOT computed for never prunes (no lost rows)") {
@@ -829,10 +825,9 @@ class SnapshotTableSpec extends SparkSpec {
     def countFiles(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
       val n = df.collect().length.toLong
       org.apache.spark.sql.graftbridge.Bridge.flushListenerBus(spark)
-      val scan = df.queryExecution.executedPlan.collectFirst {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-      }.getOrElse(fail("plan must contain a FileSourceScanExec"))
-      (n, scan.metrics("numFiles").value)
+      val scan = graft.PlanWalk.keptFiles(df).headOption
+        .getOrElse(fail("plan must contain a snapshot scan"))
+      (n, scan.toLong)
     }
     // primary alone: both halves of doc 2
     val (pRows, pFiles) = countFiles(
@@ -871,10 +866,9 @@ class SnapshotTableSpec extends SparkSpec {
     def countFiles(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
       val n = df.collect().length.toLong
       org.apache.spark.sql.graftbridge.Bridge.flushListenerBus(spark)
-      val scan = df.queryExecution.executedPlan.collectFirst {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-      }.getOrElse(fail("plan must contain a FileSourceScanExec"))
-      (n, scan.metrics("numFiles").value)
+      val scan = graft.PlanWalk.keptFiles(df).headOption
+        .getOrElse(fail("plan must contain a snapshot scan"))
+      (n, scan.toLong)
     }
     // primary alone: both halves of doc 2
     val (pRows, pFiles) = countFiles(
@@ -911,10 +905,9 @@ class SnapshotTableSpec extends SparkSpec {
     def countFiles(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
       val n = df.collect().length.toLong
       org.apache.spark.sql.graftbridge.Bridge.flushListenerBus(spark)
-      val scan = df.queryExecution.executedPlan.collectFirst {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-      }.getOrElse(fail("plan must contain a FileSourceScanExec"))
-      (n, scan.metrics("numFiles").value)
+      val scan = graft.PlanWalk.keptFiles(df).headOption
+        .getOrElse(fail("plan must contain a snapshot scan"))
+      (n, scan.toLong)
     }
     // hierarchical: chunk-only predicate scans everything
     SnapshotTable.compact(spark, root, targetFiles = 8, cluster = true)

@@ -142,7 +142,7 @@ class BloomSpec extends SparkSpec {
     val absent = 424242L
     assert(!keys.contains(absent))
     assert(entries.forall(e => ManifestPruning.keeps(e,
-      ManifestFileIndex.KeyBounds(Some((absent, absent)), None, None))),
+      ManifestPruning.KeyBounds(Some((absent, absent)), None, None))),
       "setup must defeat range stats (uniform keys spanning the space)")
     val probe = SnapshotTable.readKeys(spark, root, "id", Array(absent))
     assert(probe.inputFiles.isEmpty,
@@ -168,23 +168,14 @@ class BloomSpec extends SparkSpec {
     batches.tail.foreach(b => SnapshotTable.append(spark, root,
       b.map(k => (k, s"v$k")).toDF("id", "v").coalesce(1), bloomKey = true))
     // the CATALYST path: the optimizer's own pushed equality reaches
-    // ManifestFileIndex.listFiles, whose point-set extraction probes
-    // the blooms — zero files planned for an absent in-range key
+    // the snapshot scan, whose point-set extraction probes the blooms — zero files planned for an absent in-range key
     val probe = SnapshotTable.readIndexed(spark, root, "id")
       .filter(col("id") === 424242L)
     assert(probe.count() == 0)
     org.apache.spark.sql.graftbridge.Bridge.flushListenerBus(spark)
-    def scans(p: org.apache.spark.sql.execution.SparkPlan):
-        Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        scans(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => scans(q.plan)
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
-      case other => other.children.flatMap(scans)
-    }
-    val dataScans = scans(probe.queryExecution.executedPlan)
+    val dataScans = graft.PlanWalk.keptFiles(probe)
     assert(dataScans.nonEmpty, "plan must contain the table's file scan")
-    assert(dataScans.map(_.metrics("numFiles").value).sum == 0,
+    assert(dataScans.sum == 0,
       "the absent-key equality must bloom-prune every fresh file at planning time")
     // a present key still reads through the same path
     val k = keys(11)
@@ -235,17 +226,9 @@ class BloomSpec extends SparkSpec {
       .filter(col("idx") === absent)
     assert(probe.count() == 0)
     org.apache.spark.sql.graftbridge.Bridge.flushListenerBus(spark)
-    def scans(p: org.apache.spark.sql.execution.SparkPlan):
-        Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        scans(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => scans(q.plan)
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
-      case other => other.children.flatMap(scans)
-    }
-    val dataScans = scans(probe.queryExecution.executedPlan)
+    val dataScans = graft.PlanWalk.keptFiles(probe)
     assert(dataScans.nonEmpty)
-    assert(dataScans.map(_.metrics("numFiles").value).sum == 0,
+    assert(dataScans.sum == 0,
       "an absent secondary key must bloom-prune every fresh file")
     // a present secondary key still finds its row (kept by its bloom)
     val (pfp, pidx) = rows(7)

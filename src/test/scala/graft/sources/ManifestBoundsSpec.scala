@@ -6,7 +6,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Unit coverage of the planning-time pruning machinery the integration
-  * specs exercise end to end: [[ManifestFileIndex.bounds]] (pushed-
+  * specs exercise end to end: [[ManifestPruning.bounds]] (pushed-
   * filter → key-range extraction, the part whose SOUNDNESS every file
   * skip rests on) and [[SnapshotTable.FileEntry]] manifest-line
   * round-trips across every format arity a reader can meet. */
@@ -136,7 +136,7 @@ class ManifestBoundsSpec extends AnyFunSuite {
   private def lit(s: String): Literal = Literal(UTF8String.fromString(s), StringType)
 
   test("long conjuncts tighten to the intersection; strict bounds shift by one") {
-    val b = ManifestFileIndex.bounds(Seq(
+    val b = ManifestPruning.bounds(Seq(
       GreaterThan(id, lit(10L)),           // id > 10  → lo 11
       LessThanOrEqual(id, lit(99L)),       // id <= 99 → hi 99
       GreaterThanOrEqual(id, lit(5L))),    // weaker lower bound: no effect
@@ -147,49 +147,49 @@ class ManifestBoundsSpec extends AnyFunSuite {
 
   test("literal-on-the-left comparisons mirror correctly") {
     // 50 >= id → id <= 50; 7 < id → id > 7 → lo 8
-    val b = ManifestFileIndex.bounds(Seq(
+    val b = ManifestPruning.bounds(Seq(
       GreaterThanOrEqual(lit(50L), id),
       LessThan(lit(7L), id)), "id")
     assert(b.longBounds.contains((8L, 50L)))
   }
 
   test("equality pins both ends; an And tree splits into conjuncts") {
-    val b = ManifestFileIndex.bounds(Seq(
+    val b = ManifestPruning.bounds(Seq(
       And(EqualTo(id, lit(42L)), EqualTo(name, lit("x")))), "id")
     assert(b.longBounds.contains((42L, 42L)))
   }
 
   test("contradictory conjuncts surface as an inverted range (caller prunes everything)") {
-    val b = ManifestFileIndex.bounds(Seq(
+    val b = ManifestPruning.bounds(Seq(
       GreaterThan(id, lit(100L)), LessThan(id, lit(50L))), "id")
     assert(b.longBounds.exists { case (lo, hi) => lo > hi })
   }
 
   test("IN lists bound by min/max; long and string forms") {
-    val bl = ManifestFileIndex.bounds(Seq(
+    val bl = ManifestPruning.bounds(Seq(
       In(id, Seq(lit(30L), lit(7L), lit(19L)))), "id")
     assert(bl.longBounds.contains((7L, 30L)))
-    val bs = ManifestFileIndex.bounds(Seq(
+    val bs = ManifestPruning.bounds(Seq(
       In(name, Seq(lit("m"), lit("c"), lit("k")))), "name")
     assert(bs.strLo.map(new String(_, "UTF-8")).contains("c"))
     assert(bs.strHi.map(new String(_, "UTF-8")).contains("m"))
   }
 
   test("IN lists keep the exact POINT SET, not just the envelope") {
-    val b = ManifestFileIndex.bounds(Seq(
+    val b = ManifestPruning.bounds(Seq(
       In(id, Seq(lit(30L), lit(7L), lit(19L)))), "id")
     assert(b.longPoints.map(_.toSeq).contains(Seq(7L, 19L, 30L)))
-    val bs = ManifestFileIndex.bounds(Seq(
+    val bs = ManifestPruning.bounds(Seq(
       In(name, Seq(lit("m"), lit("c")))), "name")
     assert(bs.strPoints.map(_.map(new String(_, "UTF-8")).toSeq).contains(Seq("c", "m")))
   }
 
   test("two point-imposing conjuncts intersect; a disjoint intersection is a contradiction") {
-    val b = ManifestFileIndex.bounds(Seq(
+    val b = ManifestPruning.bounds(Seq(
       In(id, Seq(lit(1L), lit(2L), lit(3L))),
       In(id, Seq(lit(2L), lit(3L), lit(4L)))), "id")
     assert(b.longPoints.map(_.toSeq).contains(Seq(2L, 3L)))
-    val c = ManifestFileIndex.bounds(Seq(
+    val c = ManifestPruning.bounds(Seq(
       EqualTo(id, lit(5L)), EqualTo(id, lit(6L))), "id")
     assert(c.contradictory,
       "two different equalities on the same key can match no row")
@@ -201,7 +201,7 @@ class ManifestBoundsSpec extends AnyFunSuite {
       FileEntry("a", Some(0L), Some(9L)),
       FileEntry("b", Some(10L), Some(19L)),
       FileEntry("c", Some(20L), Some(29L)))
-    val b = ManifestFileIndex.bounds(Seq(In(id, Seq(lit(5L), lit(25L)))), "id")
+    val b = ManifestPruning.bounds(Seq(In(id, Seq(lit(5L), lit(25L)))), "id")
     val kept = files.filter(ManifestPruning.keeps(_, b))
     assert(kept.map(_.path) == Seq("a", "c"),
       "the [5,25] envelope alone would keep 'b'; the point set must not")
@@ -209,7 +209,7 @@ class ManifestBoundsSpec extends AnyFunSuite {
 
   test("an equality pins a single point; a statless file is always kept") {
     import SnapshotTable.FileEntry
-    val b = ManifestFileIndex.bounds(Seq(EqualTo(id, lit(42L))), "id")
+    val b = ManifestPruning.bounds(Seq(EqualTo(id, lit(42L))), "id")
     assert(b.longPoints.map(_.toSeq).contains(Seq(42L)))
     assert(ManifestPruning.keeps(FileEntry("nostats", None, None), b))
     assert(!ManifestPruning.keeps(FileEntry("far", Some(100L), Some(200L)), b))
@@ -217,13 +217,13 @@ class ManifestBoundsSpec extends AnyFunSuite {
 
   test("oversized IN lists fall back to the envelope (no point set recorded)") {
     val big = (0L until 1500L).map(lit)
-    val b = ManifestFileIndex.bounds(Seq(In(id, big)), "id")
+    val b = ManifestPruning.bounds(Seq(In(id, big)), "id")
     assert(b.longPoints.isEmpty, "beyond MaxBoundPoints only the range survives")
     assert(b.longBounds.contains((0L, 1499L)))
   }
 
   test("string bounds: strict inequalities conservatively keep the non-strict endpoint") {
-    val b = ManifestFileIndex.bounds(Seq(
+    val b = ManifestPruning.bounds(Seq(
       GreaterThan(name, lit("doc-0100")),
       LessThan(name, lit("doc-0200"))), "name")
     assert(b.strLo.map(new String(_, "UTF-8")).contains("doc-0100"))
@@ -232,14 +232,14 @@ class ManifestBoundsSpec extends AnyFunSuite {
   }
 
   test("one-sided string bounds survive alone") {
-    val b = ManifestFileIndex.bounds(Seq(
+    val b = ManifestPruning.bounds(Seq(
       GreaterThanOrEqual(name, lit("doc-0390"))), "name")
     assert(b.strLo.map(new String(_, "UTF-8")).contains("doc-0390"))
     assert(b.strHi.isEmpty)
   }
 
   test("unrecognized shapes impose nothing: disjunctions, expressions over the key, other columns") {
-    val b = ManifestFileIndex.bounds(Seq(
+    val b = ManifestPruning.bounds(Seq(
       Or(EqualTo(id, lit(1L)), EqualTo(id, lit(2L))), // disjunction
       EqualTo(Add(id, lit(1L)), lit(5L)),             // expression over key
       EqualTo(name, lit("x"))),                       // different column
@@ -249,7 +249,7 @@ class ManifestBoundsSpec extends AnyFunSuite {
 
   test("key matching is case-insensitive, like Spark's resolution") {
     val upper = AttributeReference("ID", LongType)()
-    val b = ManifestFileIndex.bounds(Seq(EqualTo(upper, lit(9L))), "id")
+    val b = ManifestPruning.bounds(Seq(EqualTo(upper, lit(9L))), "id")
     assert(b.longBounds.contains((9L, 9L)))
   }
 
@@ -316,7 +316,7 @@ class ManifestBoundsSpec extends AnyFunSuite {
     val e = FileEntry("p", Some(0L), Some(100L), None, None, None, None,
       Some(10L), Some(19L))
     val idx = AttributeReference("chunk_idx", LongType)()
-    val b = ManifestFileIndex.bounds(Seq(EqualTo(idx, lit(25L))), "chunk_idx")
+    val b = ManifestPruning.bounds(Seq(EqualTo(idx, lit(25L))), "chunk_idx")
     assert(!ManifestPruning.keeps(e, b, secondary = true),
       "secondary range [10,19] excludes chunk_idx = 25")
     assert(ManifestPruning.keeps(e.withoutKey2Stats, b, secondary = true),
@@ -328,7 +328,7 @@ class ManifestBoundsSpec extends AnyFunSuite {
     def b(s: String): Array[Byte] = s.getBytes("UTF-8")
     val e = FileEntry("p", Some(0L), Some(100L), None, None, None, None,
       None, None, Some(b("c-0010")), Some(b("c-0019")))
-    def nb(filters: Seq[Expression]) = ManifestFileIndex.bounds(filters, "name")
+    def nb(filters: Seq[Expression]) = ManifestPruning.bounds(filters, "name")
     // equality outside the binary range → pruned; inside → kept
     assert(!ManifestPruning.keeps(e, nb(Seq(EqualTo(name, lit("c-0025")))), secondary = true))
     assert(ManifestPruning.keeps(e, nb(Seq(EqualTo(name, lit("c-0015")))), secondary = true))
@@ -350,7 +350,7 @@ class ManifestBoundsSpec extends AnyFunSuite {
     assert(ManifestPruning.keeps(e.withoutKey2Stats,
       nb(Seq(EqualTo(name, lit("c-0025")))), secondary = true))
     // long bounds on a string-statted secondary impose nothing
-    val idb = ManifestFileIndex.bounds(Seq(EqualTo(id, lit(5L))), "id")
+    val idb = ManifestPruning.bounds(Seq(EqualTo(id, lit(5L))), "id")
     assert(ManifestPruning.keeps(e, idb, secondary = true))
   }
 
@@ -406,7 +406,7 @@ class ManifestBoundsSpec extends AnyFunSuite {
     assert(SnapshotTable.byteOrder.compare(
       "café".getBytes("UTF-8"), "cafz".getBytes("UTF-8")) > 0,
       "unsigned byte order must place multi-byte UTF-8 above ascii")
-    assert(!ManifestPruning.keeps(e, ManifestFileIndex.KeyBounds(None,
+    assert(!ManifestPruning.keeps(e, ManifestPruning.KeyBounds(None,
       Some("cafa".getBytes("UTF-8")), Some("cafz".getBytes("UTF-8")))),
       "a file holding only 'café' must be prunable for an all-ascii range")
   }

@@ -16,19 +16,19 @@ import graft.SparkSpec
   * must hold on both eras under both keys plus the stats key.
   *
   * PARITY: every entry point reaches the same file-skipping decision
-  * ([[ManifestPruning.partition]]) — the V1 index behind `readIndexed`
-  * and the catalog's DSv2 scan return the same rows and keep the same
-  * files for every generated predicate, and the key/range APIs
-  * (`readKeys`, `readKeysStr`, `readRange`) and merge's touched-file
-  * split keep exactly the files the filter-driven decision keeps for
-  * the equivalent conjuncts. */
+  * ([[ManifestPruning.partition]], called directly as the reference)
+  * — `readIndexed` and the catalog read return the same rows and keep
+  * the same files for every generated predicate, and the key/range
+  * APIs (`readKeys`, `readKeysStr`, `readRange`) and merge's
+  * touched-file split keep exactly the files the filter-driven
+  * decision keeps for the equivalent conjuncts. */
 class PartitionPruningPropertySpec extends SparkSpec {
   import spark.implicits._
 
   // one fixture for every sample (table builds are the expensive part):
   // a two-era evolved table — the adversarial layout shape
   // the table lives inside a catalog warehouse (`pprop.main.t`) so the
-  // DSv2 scan can be compared with the V1 index on the same files
+  // catalog read and the programmatic read scan the same files
   private lazy val wh: String = {
     val dir = java.nio.file.Files.createTempDirectory("graft-pprop").toString
     spark.conf.set("spark.sql.catalog.pprop", classOf[graft.catalog.GraftCatalog].getName)
@@ -84,7 +84,7 @@ class PartitionPruningPropertySpec extends SparkSpec {
     (1 to 40).foreach { i =>
       val p = pred(rnd, 2)
       // pruned path: the Catalyst-indexed read pushes the filter into
-      // ManifestFileIndex (ranges, blooms, partitionKeeps)
+      // the snapshot scan (ranges, blooms, partitionKeeps)
       val got = SnapshotTable.readIndexed(spark, root).filter(p)
         .select("id", "lang", "day").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
@@ -121,45 +121,65 @@ class PartitionPruningPropertySpec extends SparkSpec {
   private def rel(under: String)(p: String): String =
     p.substring(p.indexOf(under) + under.length + 1)
 
-  test("PARITY: readIndexed (V1) and the catalog scan (DSv2) keep the same files and rows") {
+  private def head(r: String) =
+    SnapshotTable.manifestFull(spark, r, SnapshotTable.versions(spark, r).last)
+
+  /** THE reference: [[ManifestPruning.partition]] called directly on
+    * the head manifest with catalyst conjuncts over stats key `key`
+    * (these tables carry no column map, so logical names are the
+    * physical ones the manifest prunes on; every path-safe column may
+    * prune through partition directories). */
+  private def reference(r: String, key: String,
+      filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Set[String] = {
+    import org.apache.spark.sql.types.{LongType, StringType}
+    val partTypes = head(r).schema.get.fields.collect {
+      case f if f.dataType == LongType || f.dataType == StringType => f.name -> f.dataType
+    }.toMap
+    ManifestPruning.partition(head(r).entries, Some(ManifestPruning.bounds(filters, key)),
+      None, None, filters, partTypes)._1.map(_.path).toSet
+  }
+
+  /** The files the snapshot scans of `df`'s plan keep. */
+  private def scanKept(df: org.apache.spark.sql.DataFrame): Set[String] =
+    graft.PlanWalk.batchScans(df).map(_.scan)
+      .collect { case g: graft.catalog.GraftScan => g.keptRelPaths }.flatten.toSet
+
+  /** The conjuncts of the filter Catalyst plans above the scan. */
+  private def conjuncts(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
+    def split(e: org.apache.spark.sql.catalyst.expressions.Expression)
+        : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = e match {
+      case org.apache.spark.sql.catalyst.expressions.And(l, r) => split(l) ++ split(r)
+      case other => Seq(other)
+    }
+    df.queryExecution.optimizedPlan.collect {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => split(f.condition)
+    }.flatten
+  }
+
+  test("PARITY: readIndexed and the catalog read keep the reference's files and the same rows") {
     val rnd = new scala.util.Random(7)
     (1 to 30).foreach { i =>
       val p = pred(rnd, 2)
       val v1 = SnapshotTable.readIndexed(spark, root).filter(p)
       val v2 = spark.table("pprop.main.t").filter(p)
       assert(rows(v1) == rows(v2), s"sample $i: rows differ for $p")
-      // the table scan (the dv anti-join scans its sidecars too)
-      val scan = graft.PlanWalk.fileScans(v1)
-        .filter(_.relation.location.isInstanceOf[ManifestFileIndex])
-      assert(scan.size == 1, s"sample $i: ${scan.size} table scans for $p")
-      def v1Kept(filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
-        scan.head.relation.location.listFiles(Nil, filters).flatMap(_.files)
-          .map(s => rel(root)(s.getPath.toString)).toSet
-      val v2Files = graft.PlanWalk.batchScans(v2).map(_.scan)
-        .collect { case g: graft.catalog.GraftScan => g.keptRelPaths }.flatten.toSet
+      assert(graft.PlanWalk.batchScans(v1).size == 1, s"sample $i: one table scan for $p")
       // the catalog's filter translation (graft.catalog.FilterBridge)
       // carries OR, NOT and null-test conjuncts too: the same decision
       // on the full predicate
-      assert(v1Kept(scan.head.dataFilters) == v2Files, s"sample $i: kept files differ for $p")
+      val want = reference(root, "id", conjuncts(v1))
+      assert(scanKept(v1) == want, s"sample $i: readIndexed kept files differ for $p")
+      assert(scanKept(v2) == want, s"sample $i: catalog kept files differ for $p")
     }
   }
 
   test("PARITY: readKeys / readKeysStr / readRange and merge's split keep the filter decision") {
-    import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Expression,
+    import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
       GreaterThanOrEqual, In, InSet, LessThanOrEqual, Literal}
     import org.apache.spark.sql.types.{LongType, StringType}
     import org.apache.spark.unsafe.types.UTF8String
-    // the filter-driven decision: the V1 index's listFiles over
-    // hand-built conjuncts (no optimizer rewrites in between)
-    def filterKept(r: String, filters: Seq[Expression]): Set[String] =
-      SnapshotTable.readIndexed(spark, r).queryExecution.analyzed.collectFirst {
-        case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
-      }.get.asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-        .location.listFiles(Nil, filters).flatMap(_.files)
-        .map(s => rel(r)(s.getPath.toString)).toSet
-    def head(r: String) =
-      SnapshotTable.manifestFull(spark, r, SnapshotTable.versions(spark, r).last)
-    // data files only: a dv-carrying read also lists its sidecars
+    // data files only: a read lists exactly the entries it reads
     def readKept(r: String, df: org.apache.spark.sql.DataFrame): Set[String] =
       df.inputFiles.map(rel(r)).toSet.intersect(head(r).entries.map(_.path).toSet)
     val id = AttributeReference("id", LongType)()
@@ -170,9 +190,9 @@ class PartitionPruningPropertySpec extends SparkSpec {
     (1 to 25).foreach { i =>
       // long points (some absent), sorted as merge's key collect sorts them
       val ks = Array.fill(rnd.nextInt(30) + 1)(rnd.nextInt(280).toLong).distinct.sorted
-      val want = filterKept(root, Seq(In(id, ks.toSeq.map(Literal(_)))))
+      val want = reference(root, "id", Seq(In(id, ks.toSeq.map(Literal(_)))))
       // the optimizer's InSet form of the same list decides the same
-      assert(filterKept(root, Seq(InSet(id, ks.toSet[Any]))) == want, s"InSet ${ks.toSeq}")
+      assert(reference(root, "id", Seq(InSet(id, ks.toSet[Any]))) == want, s"InSet ${ks.toSeq}")
       pruned += m.entries.size - want.size
       assert(readKept(root, SnapshotTable.readKeys(spark, root, "id", ks)) == want,
         s"readKeys ${ks.toSeq}")
@@ -181,10 +201,11 @@ class PartitionPruningPropertySpec extends SparkSpec {
       // string points, through the string stats and blooms
       val ss = Array.fill(rnd.nextInt(30) + 1)(f"k${rnd.nextInt(300)}%03d").distinct.sorted
       val sb = ss.map(_.getBytes("UTF-8"))
-      val wantS = filterKept(sroot, Seq(In(name,
+      val wantS = reference(sroot, "name", Seq(In(name,
         ss.toSeq.map(s => Literal(UTF8String.fromString(s), StringType)))))
-      assert(filterKept(sroot, Seq(InSet(name, ss.toSet[String].map(UTF8String.fromString(_): Any)))) ==
-        wantS, s"InSet ${ss.toSeq}")
+      assert(reference(sroot, "name",
+        Seq(InSet(name, ss.toSet[String].map(UTF8String.fromString(_): Any)))) == wantS,
+        s"InSet ${ss.toSeq}")
       pruned += ms.entries.size - wantS.size
       assert(readKept(sroot, SnapshotTable.readKeysStr(spark, sroot, "name", ss)) == wantS,
         s"readKeysStr ${ss.toSeq}")
@@ -193,7 +214,7 @@ class PartitionPruningPropertySpec extends SparkSpec {
       // a range [lo, hi], lo <= hi
       val lo = rnd.nextInt(260).toLong
       val hi = lo + rnd.nextInt(80)
-      val wantR = filterKept(root,
+      val wantR = reference(root, "id",
         Seq(And(GreaterThanOrEqual(id, Literal(lo)), LessThanOrEqual(id, Literal(hi)))))
       assert(readKept(root, SnapshotTable.readRange(spark, root, lo, hi)) == wantR,
         s"readRange [$lo, $hi]")
@@ -212,28 +233,25 @@ class PartitionPruningPropertySpec extends SparkSpec {
 
   test("PARITY: an IN list past the InSet threshold prunes on every path (readIndexed, deleteWhere, DSv2, readKeys)") {
     import org.apache.spark.sql.catalyst.expressions.InSet
-    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.util.QueryExecutionListener
     val keys = (20L until 40L).toArray // 20 keys, all in the first file
     assert(SnapshotTable.manifestFull(spark, root8, 1).entries.size == 8)
     val pred = col("id").isin(keys.toSeq: _*)
-    // V1: the optimizer hands the index an InSet
+    // the optimizer hands the scan an InSet
     val v1 = SnapshotTable.readIndexed(spark, root8).filter(pred)
-    val scan = graft.PlanWalk.fileScans(v1)
-      .filter(_.relation.location.isInstanceOf[ManifestFileIndex])
-    assert(scan.size == 1)
-    assert(scan.head.dataFilters.exists(_.isInstanceOf[InSet]), scan.head.dataFilters.toString)
-    val v1Kept = scan.head.relation.location.listFiles(Nil, scan.head.dataFilters)
-      .flatMap(_.files).map(s => rel(root8)(s.getPath.toString)).toSet
-    val v2Kept = graft.PlanWalk.batchScans(spark.table("pprop.main.t8").filter(pred)).map(_.scan)
-      .collect { case g: graft.catalog.GraftScan => g.keptRelPaths }.flatten.toSet
+    assert(conjuncts(v1).exists(_.isInstanceOf[InSet]), conjuncts(v1).toString)
+    val want = reference(root8, "id", conjuncts(v1))
+    val v1Kept = scanKept(v1)
+    val v2Kept = scanKept(spark.table("pprop.main.t8").filter(pred))
     val keysKept = SnapshotTable.readKeys(spark, root8, "id", keys).inputFiles.map(rel(root8)).toSet
-    assert(v1Kept.size == 1 && v1Kept == v2Kept && v1Kept == keysKept,
-      s"V1 $v1Kept, DSv2 $v2Kept, readKeys $keysKept")
+    assert(want.size == 1 && v1Kept == want && v2Kept == want && keysKept == want,
+      s"reference $want, readIndexed $v1Kept, catalog $v2Kept, readKeys $keysKept")
     assert(v1.count() == 20)
-    // deleteWhere's row-level scan: the same index decision, seen on
-    // the scan its predicate job executed
+    // deleteWhere's row-level scan: the same decision, seen on the scan
+    // its predicate job executed
     def nodes(p: SparkPlan): Seq[SparkPlan] = graft.PlanWalk.executedNodes(p).flatMap {
       case i: InMemoryTableScanExec => i +: nodes(i.relation.cachedPlan)
       case other => Seq(other)
@@ -243,9 +261,10 @@ class PartitionPruningPropertySpec extends SparkSpec {
       override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = done.add(qe)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    def tableScans(): Seq[FileSourceScanExec] = done.toArray(Array.empty[QueryExecution]).toSeq
+    def tableScans(): Seq[graft.catalog.GraftScan] = done.toArray(Array.empty[QueryExecution]).toSeq
       .flatMap(qe => nodes(qe.executedPlan)).collect {
-        case f: FileSourceScanExec if f.relation.location.isInstanceOf[ManifestFileIndex] => f
+        case b: BatchScanExec if b.scan.isInstanceOf[graft.catalog.GraftScan] =>
+          b.scan.asInstanceOf[graft.catalog.GraftScan]
       }
     spark.listenerManager.register(listener)
     try {
@@ -254,9 +273,9 @@ class PartitionPruningPropertySpec extends SparkSpec {
       while (tableScans().isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(50)
     } finally spark.listenerManager.unregister(listener)
     val delScans = tableScans()
-    assert(delScans.nonEmpty, "deleteWhere ran no scan over the manifest index")
-    assert(delScans.forall(_.metrics("numFiles").value == 1),
-      s"deleteWhere scanned ${delScans.map(_.metrics("numFiles").value)} files")
+    assert(delScans.nonEmpty, "deleteWhere ran no snapshot scan")
+    assert(delScans.forall(_.keptFileCount == 1),
+      s"deleteWhere scanned ${delScans.map(_.keptFileCount)} files")
     assert(SnapshotTable.read(spark, root8).count() == 780)
   }
 }
