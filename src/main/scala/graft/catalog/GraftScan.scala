@@ -1,10 +1,9 @@
 package graft.catalog
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow, Literal, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, Literal, UnsafeProjection}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Max, Min}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
@@ -564,8 +563,8 @@ private[graft] final class GraftScan(spark: SparkSession,
       CaseInsensitiveStringMap.empty(), None, Seq.empty, Seq.empty,
       Array.empty)
 
-  /** Positional reads (dv files, and every file when [[GraftRowColumn]]
-    * is requested) append parquet's generated row-index column
+  /** Positional reads (dv files, and every file of a [[tagged]] scan)
+    * append parquet's generated row-index column
     * (correct ordinals under splits and row-group structure alike) and
     * push NO filters — the reader must see the true ordinal stream,
     * and the residual Filter above re-applies predicates anyway. The
@@ -627,20 +626,14 @@ private[graft] final class GraftScan(spark: SparkSession,
     val files = kept
     val (dvFiles, plainFiles) = files.partition(_.hasDv)
     val plainFactory =
-      if (withRowCol || (plainFiles.isEmpty && !withFileCol)) None
-      else Some(parquetScanOver(if (withFileCol) files else plainFiles,
-        physRequired, parquetFilters).toBatch.createReaderFactory())
+      if (tagged || plainFiles.isEmpty) None
+      else Some(parquetScanOver(plainFiles, physRequired, parquetFilters)
+        .toBatch.createReaderFactory())
     val positional =
-      if (dvFiles.isEmpty && !withRowCol) None
-      else Some(parquetScanOver(if (withRowCol) files else dvFiles, rowIndexSchema,
+      if (dvFiles.isEmpty && !tagged) None
+      else Some(parquetScanOver(if (tagged) files else dvFiles, rowIndexSchema,
         Array.empty).toBatch.createReaderFactory())
-    // the sidecar readers' conf ships once per scan, and only when a
-    // kept file carries a deletion vector
-    val conf =
-      if (dvFiles.isEmpty) None
-      else Some(spark.sparkContext.broadcast(new SerializableHadoopConf(
-        new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration))))
-    GraftReaderFactory(snap.root, plainFactory, positional, conf, dataTypes,
+    GraftReaderFactory(snap.root, plainFactory, positional, dataTypes,
       withFileCol, withRowCol,
       // BatchScanExec refuses mixed row/columnar partitions: any dv
       // file (or any metadata column) forces the whole scan row-based
@@ -705,13 +698,12 @@ private[graft] final case class GraftTaggedPartition(inner: FilePartition,
 
 /** Routes plain partitions to the stock parquet reader factory
   * (columnar included) and dv/tagged partitions to row-based readers
-  * over the row-index read ([[GraftPositionReader]]), or — a tagged
-  * file with neither dv nor ordinals — to the plain reader with the
-  * file-path tag. Deleted positions load on the executor, from the
-  * sidecar under `root` that the partition names. */
+  * over the row-index read ([[GraftPositionReader]]). Deleted
+  * positions load on the executor, from the
+  * sidecar under `root` that the partition names, with the conf the
+  * positional parquet reader already ships. */
 private[catalog] final case class GraftReaderFactory(root: String,
     plain: Option[PartitionReaderFactory], positional: Option[PartitionReaderFactory],
-    conf: Option[Broadcast[SerializableHadoopConf]],
     dataTypes: Array[org.apache.spark.sql.types.DataType],
     withFile: Boolean, withRow: Boolean, forceRow: Boolean) extends PartitionReaderFactory {
 
@@ -728,16 +720,15 @@ private[catalog] final case class GraftReaderFactory(root: String,
   private def positions(inner: FilePartition, rel: String, dv: Option[String])
       : PartitionReader[InternalRow] =
     new GraftPositionReader(positional.get.createReader(inner), dataTypes,
-      dv.map(GraftDvPositions.of(conf.get.value.value, root, _, rel))
+      dv.map(GraftDvPositions.of(
+        org.apache.spark.sql.graftbridge.Bridge.hadoopConfOf(positional.get).get, root, _, rel))
         .getOrElse(Array.emptyLongArray),
       Option.when(withFile)(rel), withRow)
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
       case GraftDvPartition(inner, rel, dv) => positions(inner, rel, Some(dv))
-      case GraftTaggedPartition(inner, rel, dv) =>
-        if (dv.isDefined || withRow) positions(inner, rel, dv)
-        else new FileTaggingReader(plain.get.createReader(inner), rel)
+      case GraftTaggedPartition(inner, rel, dv) => positions(inner, rel, dv)
       case GraftBucketPartition(inner, _, rel, dv) =>
         if (dv.isDefined) positions(inner, rel, dv) else plain.get.createReader(inner)
       case GraftValuePartition(inner, _, rel, dv) =>
@@ -788,22 +779,6 @@ private[catalog] final class GraftPositionReader(
   }
 
   override def get(): InternalRow = current
-  override def close(): Unit = delegate.close()
-}
-
-/** Appends the partition's constant file path as the LAST column
-  * (the [[GraftFileColumn]] slot). The joined view is consumed
-  * immediately by the scan exec's unsafe projection. */
-private[catalog] final class FileTaggingReader(
-    delegate: PartitionReader[InternalRow], relPath: String)
-  extends PartitionReader[InternalRow] {
-
-  private val tag = new GenericInternalRow(
-    Array[Any](UTF8String.fromString(relPath)))
-  private val joined = new JoinedRow
-
-  override def next(): Boolean = delegate.next()
-  override def get(): InternalRow = joined(delegate.get(), tag)
   override def close(): Unit = delegate.close()
 }
 

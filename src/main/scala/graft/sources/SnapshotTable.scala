@@ -2687,8 +2687,8 @@ object SnapshotTable {
     val m = manifestFull(spark, root, vs.last)
     // dv debt is the scheduler's MATERIALIZE signal: files carrying
     // deletion vectors read row-based through a position filter until
-    // a rewrite purges them, so "dvRows is a meaningful fraction of nRows" is
-    // the compact trigger (the same role smallFiles plays for
+    // a rewrite purges them, so "dvRows is a meaningful fraction of
+    // nRows" is the compact trigger (the same role smallFiles plays for
     // compactSmall). nRows reports LIVE rows: recorded counts minus
     // recorded deletions — what a reader actually sees.
     TableDetail(

@@ -56,6 +56,16 @@ object Bridge {
   def flushListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
+  /** The Hadoop configuration a parquet scan's reader factory already
+    * ships to its tasks (its broadcast holder is private[spark]) — so
+    * a reader that opens side files with it ships no conf of its own. */
+  def hadoopConfOf(f: org.apache.spark.sql.connector.read.PartitionReaderFactory)
+      : Option[org.apache.hadoop.conf.Configuration] = f match {
+    case p: org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory =>
+      Some(p.broadcastedConf.value.value)
+    case _ => None
+  }
+
   /** Re-flag a batch DataFrame as STREAMING — what a V1
     * [[org.apache.spark.sql.execution.streaming.Source]]'s `getBatch`
     * must return (MicroBatchExecution asserts `isStreaming` on the

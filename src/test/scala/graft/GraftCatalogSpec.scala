@@ -8,8 +8,8 @@ import graft.catalog.{GraftBucketPartition, GraftCatalog, GraftDvPartition, Graf
   * conf pair): name-addressed CREATE/INSERT/SELECT, time travel,
   * metadata-only DELETE, group-based MERGE/UPDATE, column-mapping
   * ALTERs, and the executed-plan proof that the DSv2 scan prunes
-  * through the manifest (the same numFiles discipline as
-  * ColumnMappingSpec on the V1 path). */
+  * through the manifest (the same kept-file discipline as
+  * ColumnMappingSpec on programmatic reads). */
 class GraftCatalogSpec extends SparkSpec {
 
   private lazy val wh: String = {
@@ -785,8 +785,8 @@ class GraftCatalogSpec extends SparkSpec {
     // int-keyed point probe prunes with the INT hash
     val p2 = sql("SELECT v FROM gsql.main.t_bprune_i WHERE id = 2")
     assert(p2.collect().map(_.getString(0)).toSeq == Seq("b"))
-    // the V1 path prunes with the same arithmetic: point reads and
-    // point DELETEs through the path API scan one bucket
+    // the path API prunes with the same arithmetic: point reads and
+    // point DELETEs through it scan one bucket
     val root = s"$wh/main/t_bprune"
     val v1 = graft.sources.SnapshotTable.readIndexed(spark, root)
       .filter(org.apache.spark.sql.functions.col("id") === 1234L)
@@ -1018,7 +1018,7 @@ class GraftCatalogSpec extends SparkSpec {
       Seq(("en", enExpected)))
     assert(keptOf(dpp) == enFiles,
       s"DPP kept ${keptOf(dpp)} files; only en's $enFiles may survive")
-    // V1 path prunes through the same per-file decision
+    // the programmatic read prunes through the same per-file decision
     val v1 = graft.sources.SnapshotTable.readIndexed(spark, s"$wh/main/t_part")
       .filter(col("lang") === "en")
     assert(v1.collect().length == enExpected) // executes THIS plan (metrics live here)
@@ -1389,10 +1389,10 @@ class GraftCatalogSpec extends SparkSpec {
       assert(parts.nonEmpty && parts.forall(_.isInstanceOf[GraftBucketPartition]))
       assert(parts.collect { case p: GraftBucketPartition if p.hasDv => p }.size == 2,
         "both dv-bearing files must plan as bucket partitions")
-      // the V1 path applies the dv too: bucketed files live one level
-      // deeper than plain batches, and the rel-path derivation must
-      // still line the sidecar up with the manifest entry (a fixed
-      // 3-segment slice silently resurrected deleted rows here)
+      // the programmatic read applies the dv too: bucketed files live
+      // one level deeper than plain batches, and the sidecar's paths
+      // must still line up with the manifest entry (a fixed 3-segment
+      // path slice once silently resurrected deleted rows here)
       val v1 = graft.sources.SnapshotTable.readIndexed(spark, s"$wh/main/t_spjd_a")
       assert(v1.count() == 999L, "V1 read must apply the deletion vector")
       assert(v1.filter(org.apache.spark.sql.functions.col("id") === 7L).count() == 0L)

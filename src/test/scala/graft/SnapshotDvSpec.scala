@@ -9,7 +9,7 @@ import graft.sources.SnapshotTable
 /** Deletion vectors (manifest format 6): merge-on-read deletes.
   * [[SnapshotTable.deleteWhere]] / [[SnapshotTable.mergeOnRead]] commit
   * by recording (file, row-position) sidecars instead of rewriting data
-  * files; every read path anti-joins the positions out; any rewrite of
+  * files; every read drops the positions at its reader; any rewrite of
   * a file (compact, copy-on-write merge, retainWhere) MATERIALIZES its
   * deletions. The contract under test: delete cost ∝ rows deleted (no
   * data file rewritten), reads exact on every path (read / readRange /

@@ -157,7 +157,9 @@ class PartitionPruningPropertySpec extends SparkSpec {
     }.flatten
   }
 
-  test("PARITY: readIndexed and the catalog read keep the reference's files and the same rows") {
+  // (name kept from when readIndexed planned through a V1 index: both
+  // sides are now the one snapshot scan, checked against the reference)
+  test("PARITY: readIndexed (V1) and the catalog scan (DSv2) keep the same files and rows") {
     val rnd = new scala.util.Random(7)
     (1 to 30).foreach { i =>
       val p = pred(rnd, 2)
